@@ -122,7 +122,7 @@ object PlanAudit {
   def start(spark: SparkSession, label: () => String): Collector =
     new Collector(spark, label)
 
-  // --- budget file IO (flat JSON, no deps — same style as Bench) ---
+  // --- budget file IO (flat JSON, no deps) ---
 
   def write(path: String, counts: Map[String, Counts]): Unit = {
     val body = counts.toSeq.sortBy(_._1).map { case (q, c) =>

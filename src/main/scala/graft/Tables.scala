@@ -16,28 +16,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Shared-scan mode (opt-in): every load of the same (dir, table) returns
-  // ONE cached DataFrame, so a family of queries over the same base
-  // relation shares a single columnar scan + decode instead of re-reading
-  // parquet per query. This is the bench seam for the "materialize the hot
-  // relation once" experiment (BENCH_NOTES); in production the equivalent
-  // is a cluster cache / Delta caching layer over the hot table.
-  private val sharedScan = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private val cachedLoads =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  def enableSharedScan(): Unit = sharedScan.set(true)
-  def disableSharedScan(): Unit = {
-    sharedScan.set(false)
-    cachedLoads.values.foreach(df => try df.unpersist() catch { case _: Throwable => })
-    cachedLoads.clear()
-  }
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (sharedScan.get)
-      cachedLoads.getOrElseUpdate((dir, name),
-        spark.read.parquet(s"$dir/$name.parquet").cache())
-    else spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -47,7 +27,7 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark only reads as a
-    * long under `spark.sql.legacy.parquet.nanosAsLong` (set in Verify/Bench/
+    * long under `spark.sql.legacy.parquet.nanosAsLong` (set in Verify and
     * test sessions). Convert ns → µs timestamps here (integer div — a double
     * division would lose precision at 1e18 ns). */
   def events(s: SparkSession, d: String): DataFrame = {

@@ -109,14 +109,6 @@ object Fixtures {
     (worksAt ++ assigned ++ belongs).toSeq.toDS()
   }
 
-  def nodeProperties(spark: SparkSession, ns: Seq[Node]): Dataset[NodeProperty] = {
-    import spark.implicits._
-    ns.map { n =>
-      NodeProperty(s"np_${n.node_id}", n.node_id, n.label, "name", n.name,
-        embedder.embed(n.name), n.user_id)
-    }.toDS()
-  }
-
   def accessEvents(spark: SparkSession, n: Int = 200, memCount: Int = 60): Dataset[AccessEvent] = {
     import spark.implicits._
     (0 until n).map { i =>

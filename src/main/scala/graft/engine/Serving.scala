@@ -159,10 +159,10 @@ object Serving {
       // post-build check, cheapest first: the retired-root probe is one
       // existence check and short-circuits the per-path marker re-reads
       // when a rewrite is in flight (the build is torn either way, so the
-      // marker values would not be consulted). Measured (ProfileServing):
-      // both probes are < 1 ms against a local FS — this ordering is
-      // hygiene, not the q347 fix; the per-request cost lives in the
-      // probe job itself.
+      // marker values would not be consulted). Both probes are single
+      // driver-side filesystem calls (under 1 ms on a local FS in a
+      // one-off measurement; no test pins it), so this ordering is
+      // hygiene: the per-request cost lives in the probe job itself.
       if ((!midFlight() && gens() == g0) || System.nanoTime() >= deadline)
         return (g0, t)
     }

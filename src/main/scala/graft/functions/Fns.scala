@@ -32,10 +32,6 @@ object Fns {
   def simhashSig(toks: Column, bits: Int): Column =
     ColumnBridge.column(Simhash(ColumnBridge.expression(toks), bits))
 
-  /** Seeded variant for minhash families: h_i(s) = hash60(s || '#' || i). */
-  def hash60Seeded(c: Column, seed: Int): Column =
-    hash60(concat(c, lit("#"), lit(seed.toString)))
-
   /** Lowercased whitespace tokens. Definition: `split(lower(text), " ")` —
     * computed by the native [[SpaceTokens]] kernel (one lowercase + byte
     * scan, no per-row regex; TextHashSpec pins the parity). */

@@ -115,10 +115,6 @@ object TextHash {
     new GenericArrayData(out)
   }
 
-  /** Shared empty `array<string>` result (static so generated code can
-    * reference it). */
-  def emptyStringArray(): ArrayData = EMPTY_STRING_ARRAY
-
   /** The k-shingle STRINGS of `toks` — byte-identical to
     * `transform(sequence(...), i -> concat_ws(" ", element_at...))` (it
     * delegates to the same `UTF8String.concatWs` kernel Spark's ConcatWs

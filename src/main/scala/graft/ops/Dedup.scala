@@ -259,11 +259,11 @@ object Dedup {
     * what it counts is what the operator actually dropped, not a parallel
     * re-derivation that could drift. `ds IS NULL ⇔ df > maxDf` is
     * oracle-pinned by the declared audit query. Curation reports
-    * (q300-family) surface it next to dedup rates; a ScaleSmoke tier pins
-    * non-zero, correctly-counted drops on the adversarial hot-bucket
-    * corpus. Reference analog: Qdrant surfaces index status/thresholds
-    * explicitly rather than degrading silently
-    * (`memory_graph.py:1036-1057`). */
+    * (q300-family) surface it next to dedup rates; MaintainedDeleteSpec
+    * pins exact drop counts on a small saturated bucket (no test runs an
+    * adversarial hot-bucket corpus at scale). Reference analog: Qdrant
+    * surfaces index status/thresholds explicitly rather than degrading
+    * silently (`memory_graph.py:1036-1057`). */
   def stopBucketAudit(rel: DataFrame, keyCols: Seq[String], idCol: String,
                       maxDf: Int = StopBucketDf): DataFrame =
     rel.groupBy(keyCols.map(col): _*)
@@ -447,8 +447,7 @@ object Dedup {
     // `materializeState = false`: the delta path then streams the
     // anti-join ∪ new-bands plan in its one pass, and nothing
     // standing-sized is ever checkpointed — at 100 TB the eager state
-    // materialization is a full corpus write the delta never needed
-    // (r13 verdict #4; before/after plans in plans/r14/q194_*).
+    // materialization is a full corpus write the delta never needed.
     val folded = state
       .join(newBands.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
       .union(newBands)
@@ -630,7 +629,8 @@ object Dedup {
     // only matches when ITS band's keys fall in its range. A bare
     // band_key IN (all keys) would cross-match every band's key against
     // every band slice — numBands× more row groups read for nothing
-    // (measured 16% vs 4% of the standing table at the ScaleSmoke tier).
+    // (one earlier measurement read 16% vs 4% of the standing table; no
+    // test pins the ratio).
     // Clause count stays ≤ numBands regardless of probe size.
     val byBand = bandRows.groupBy(_.getInt(1)).toSeq.sortBy(_._1)
       .map { case (b, rs) => b -> rs.map(_.getString(2)).distinct }
@@ -743,7 +743,7 @@ object Dedup {
     * already, so its answer is a bare pushed scan (literal IN on
     * doc_a/doc_b), the q343 cost class; re-deriving candidates and
     * re-verifying from texts for it is three Spark jobs spent recomputing
-    * a maintained answer (VERDICT r11 #3). Only NOVEL texts — an id absent
+    * a maintained answer. Only NOVEL texts — an id absent
     * from the corpus, or present with different text (a changed doc, whose
     * maintained pairs are stale for this request) — take the on-the-fly
     * verify path, the true ingest-check case. The served half excludes

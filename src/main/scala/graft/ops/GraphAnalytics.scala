@@ -58,8 +58,8 @@ object GraphAnalytics {
     * df² pair mass would concentrate in one task while carrying no
     * co-occurrence signal — the same move co-occurrence embedding
     * pipelines make when they cap context windows. The default sits far
-    * above every fixture container (TPC-H orders ≤ 7 items; ScaleSmoke's
-    * skew tier 2 000), so oracle results are unchanged. */
+    * above every fixture container (TPC-H orders ≤ 7 items), so oracle
+    * results are unchanged. */
   def coOccurrenceEdges(rel: DataFrame, containerCol: String, itemCol: String,
                         minCount: Long,
                         maxContainerItems: Int = Dedup.StopBucketDf): DataFrame =
@@ -578,8 +578,8 @@ object GraphAnalytics {
 
   /** All scored link-prediction candidates (every non-adjacent pair with
     * ≥1 shared neighbor), unranked — the relation whose SIZE is the scale
-    * invariant: Σ deg² wedges, never the n² pair product (ScaleSmoke pins
-    * linear growth on degree-bounded graphs). */
+    * invariant: Σ deg² wedges, never the n² pair product, so it grows
+    * linearly on degree-bounded graphs (no test pins the growth rate). */
   def linkPredictionCandidates(edges: DataFrame): DataFrame = {
     val canon = edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),

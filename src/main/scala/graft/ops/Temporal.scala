@@ -102,8 +102,10 @@ object Temporal {
     * at bin == max(first bin of either side), so duplicated input rows
     * survive faithfully and no pair-wide shuffle is spent de-duping.
     * Column names of the two inputs must not collide (beyond `keys`).
-    * Bin width is a physical knob only — results are invariant to it
-    * (the rangeJoin ScaleSmoke contract). */
+    * Bin width is a physical knob only — results are invariant to it,
+    * because the positional dedup and the overlap filter decide every pair
+    * (the declared interval-overlap query checks one width against the
+    * oracle; no test compares two widths). */
   def intervalOverlapJoin(left: DataFrame, lStart: String, lEnd: String,
                           right: DataFrame, rStart: String, rEnd: String,
                           binWidthSec: Long, keys: Seq[String] = Nil,

@@ -1304,8 +1304,8 @@ object PipelineQueries {
 
     // IVF-routed hubness — q247's SCALE PATH: every vector probes only its
     // 2 nearest IVF lists instead of the full corpus, so scored candidate
-    // pairs grow with list size, not corpus² (the ScaleSmoke IVF
-    // sub-linearity argument applied to an all-pairs diagnostic). Same
+    // pairs grow with list size, not corpus² (the IVF sub-linearity
+    // argument applied to an all-pairs diagnostic). Same
     // bounded-TopK aggregation per query; hub counts then roll up
     // map-side. Run next to q247 to read the routing's effect on the hub
     // list directly.

@@ -11,7 +11,7 @@ import graft.ops.{Dedup, TextAnalysis}
   */
 object TextQueries {
 
-  // DuckDB twin of Fns.hash60 / hash60Seeded.
+  // DuckDB twin of Fns.hash60.
   private def h60(expr: String): String =
     s"CAST(('0x' || substr(md5($expr), 1, 15)) AS BIGINT)"
 

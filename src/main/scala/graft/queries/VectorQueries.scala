@@ -341,8 +341,8 @@ object VectorQueries {
     // (ServingSpec parity pins), so a warm request costs ZERO jobs beyond
     // the pushed scan of the probed clusters. Under the maintenance
     // sink's centroid-clustered layout that scan skips every file/row
-    // group outside the probed clusters (ScaleSmoke pins the fraction at
-    // 2M rows) — the reference bar: the point lookup never scans the
+    // group outside the probed clusters (no test pins the skipped
+    // fraction) — the reference bar: the point lookup never scans the
     // collection (memory_graph.py:1015-1057, full_scan_threshold).
     // Oracle identical to q336's: same probe selection, same top-10.
     Entry("q342_ivf_point_probe",

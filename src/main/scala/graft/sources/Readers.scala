@@ -52,7 +52,7 @@ object Readers {
       Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)))
 
   /** Same contract for CSV lines (no header handling — headers are metadata,
-    * strip the first line upstream or pass real files to `csvFiles`). */
+    * strip the first line upstream). */
   def parseCsvLines(lines: DataFrame, schema: StructType, sep: String = ","): (DataFrame, DataFrame) =
     split(lines, schema, (c, s) => from_csv(c, s,
       Map("mode" -> "PERMISSIVE", "sep" -> sep,
@@ -61,10 +61,6 @@ object Readers {
   /** File-path entry points: text scan → parse. Splittable parallel read. */
   def jsonlFiles(spark: SparkSession, path: String, schema: StructType): (DataFrame, DataFrame) =
     parseJsonLines(spark.read.text(path), schema)
-
-  def csvFiles(spark: SparkSession, path: String, schema: StructType,
-               sep: String = ","): (DataFrame, DataFrame) =
-    parseCsvLines(spark.read.text(path), schema, sep)
 
   /** Read a table maintained by the partition-scoped write path
     * ([[Writers.upsertPartitioned]] / [[Writers.deletePartitioned]] and

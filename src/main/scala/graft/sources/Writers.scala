@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Sinks (SURVEY §2.1 S4/S5/S7) over plain parquet. The reference upserts
@@ -8,12 +8,11 @@ import org.apache.spark.sql.functions._
   * (`memory_graph.py:13763-13814`, `:12244`, `:9200-9459`); on Spark the
   * write paths are table-level:
   *
-  *  - append — `mode(Append)`, partitioned by a tenant/date column so a
-  *    100 TB table prunes on read;
   *  - upsert — compute the merged snapshot (anti-join + union: the
-  *    `MERGE WHEN MATCHED` shape) and atomically swap directories;
-  *  - delete — anti-join rewrite of `DELETE WHERE` (S7's delete-by-id and
-  *    delete-all collapse to predicates).
+  *    `MERGE WHEN MATCHED` shape) and atomically swap directories, or
+  *    merge only the touched Hive partitions ([[upsertPartitioned]]);
+  *  - delete — anti-join rewrite by id (S7's delete-by-id), whole-table
+  *    or partition-scoped ([[deletePartitioned]]).
   *
   * Plain parquet has no transaction log; `swapWrite` gives
   * write-new-then-rename atomicity, the usual pattern when a table format
@@ -24,7 +23,7 @@ object Writers {
   /** Table GENERATION marker — the invalidation signal long-lived serving
     * handles need. A cached DataFrame (or a compiled serving-session
     * template, [[graft.engine.Serving]]) pins the table's FILE LISTING at
-    * construction; every maintenance mutation here (append, merge, delete,
+    * construction; every maintenance mutation here (merge, delete,
     * compaction, swap rewrite) replaces or adds files, so a pinned handle
     * either throws FileNotFound or — worse, after a GDPR purge — keeps
     * serving retired data. The reference's stores version their
@@ -35,33 +34,41 @@ object Writers {
     * in place, and the parquet reader never lists it. Writers bump it
     * AFTER a mutation completes (so a reader refreshing on a bump always
     * sees the promoted state); readers poll it with one driver-side
-    * existence/read probe — no Spark job. A table never written through
+    * file read — no Spark job. A table never written through
     * these writers simply has no marker (generation 0 forever), which
     * degrades to the old pin-at-construction behavior. */
   object Generation {
     private def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    /** Every marker read and write goes through the RAW filesystem: the
+      * checksummed local view keeps a `.crc` sidecar that a replacing
+      * rename does not swap atomically with the data, so a read beside a
+      * bump could pair an old handle with the new checksum. */
     private def fs(spark: org.apache.spark.sql.SparkSession, path: String) =
-      p(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      p(path).getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+        case f => f
+      }
 
     /** Current generation; 0 when the marker is absent. */
     def read(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-      val f = fs(spark, path)
-      val m = p(path + ".generation")
-      if (!f.exists(m)) 0L
-      else {
-        val in = f.open(m)
-        try {
-          val buf = new Array[Byte](32)
-          val n = in.read(buf)
-          new String(buf, 0, math.max(n, 0),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        } finally in.close()
-      }
+      val in =
+        try fs(spark, path).open(p(path + ".generation"))
+        catch { case _: java.io.FileNotFoundException => return 0L }
+      try {
+        val buf = new Array[Byte](32)
+        val n = in.read(buf)
+        new String(buf, 0, math.max(n, 0),
+          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
+      } finally in.close()
     }
 
-    /** Bump after a completed mutation (write-temp + rename — a reader
-      * polling mid-bump sees either the old or the new value, never a
-      * partial file). Single-writer, like every mutation here. */
+    /** Bump after a completed mutation: write a temp file, then publish it
+      * with ONE replacing rename — the marker never disappears, so a reader
+      * polling mid-bump sees either the old or the new value, never 0 or a
+      * partial file. POSIX rename replaces the target atomically; a
+      * filesystem whose plain rename refuses an existing target (HDFS) gets
+      * the same atomic replace through `Rename.OVERWRITE`. Single-writer,
+      * like every mutation here. */
     def bump(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
       val f = fs(spark, path)
       val next = read(spark, path) + 1L
@@ -71,21 +78,12 @@ object Writers {
         java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       val m = p(path + ".generation")
-      if (f.exists(m)) f.delete(m, false)
-      require(f.rename(tmp, m), s"Generation.bump: rename $tmp -> $m failed")
+      if (!f.rename(tmp, m))
+        org.apache.hadoop.fs.FileContext.getFileContext(f.getUri, f.getConf)
+          .rename(tmp, m, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
       next
     }
   }
-
-  def append(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Append)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-    Generation.bump(df.sparkSession, path)
-  }
-
-  /** DELETE WHERE predicate → the surviving snapshot. */
-  def deleteWhere(table: DataFrame, predicate: Column): DataFrame =
-    table.filter(!coalesce(predicate, lit(false)))
 
   /** Delete by id list (S7 `delete_memory_item` / parallel chunk deletes):
     * anti-join — no row-at-a-time round trips. */
@@ -181,17 +179,17 @@ object Writers {
     * window would promote the retired copy back under the writer.
     * Crash-then-heal (no live writer) and concurrent healers are safe.
     *
-    * `sortCols` — CLUSTERED rewrite layout (the partition-scoped twin of
-    * [[clusteredWrite]]): the merged output is range-partitioned and
-    * sorted by `partitionCols ++ sortCols` before the partitioned write,
-    * so every rewritten file covers a compact `sortCols` range and
-    * parquet min/max stats (row-group and page-level column indexes)
-    * turn a pushed point predicate into file/row-group SKIPPING. This is
-    * what makes the maintained serving tables (LSH bands by band_key,
-    * IVF assignment by centroid_id) answer point probes without scanning
-    * the collection — the touched partitions are fully rewritten anyway,
-    * so sorting them rides the rewrite's existing shuffle budget (one
-    * range exchange of batch-touched rows, never table-sized).
+    * `sortCols` — CLUSTERED rewrite layout: the merged output is
+    * range-partitioned and sorted by `partitionCols ++ sortCols` before
+    * the partitioned write, so every rewritten file covers a compact
+    * `sortCols` range and parquet min/max stats (row-group and page-level
+    * column indexes) turn a pushed point predicate into file/row-group
+    * SKIPPING. This is what makes the maintained serving tables (LSH
+    * bands by band_key, IVF assignment by centroid_id) answer point
+    * probes without scanning the collection — the touched partitions are
+    * fully rewritten anyway, so sorting them rides the rewrite's existing
+    * shuffle budget (one range exchange of batch-touched rows, never
+    * table-sized).
     * `repartitionByRange` (not `repartition(partitionCols)`) keeps
     * intra-partition write parallelism: a huge touched partition splits
     * across tasks into files with DISJOINT sort ranges, each individually
@@ -411,55 +409,6 @@ object Writers {
     }
   }
 
-  /** Clustered layout: partition directories by low-cardinality tenant/date
-    * columns, sort within files by high-cardinality keys (the Z-ORDER-lite
-    * that makes parquet min/max stats selective — SURVEY §7.4.6's "Z-ORDER
-    * by tenant" layout decision). */
-  def clusteredWrite(df: DataFrame, path: String, partitionCols: Seq[String],
-                     sortCols: Seq[String]): Unit = {
-    val sorted =
-      if (sortCols.isEmpty) df
-      else df.repartition(partitionCols.map(col): _*)
-        .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-    val w = sorted.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-  }
-
-  /** True Z-ORDER layout (the full version of `clusteredWrite`'s
-    * sort-lite): rows are range-partitioned and sorted by the Morton
-    * interleave of two filter columns, giving every output file a compact
-    * bounding box in BOTH dimensions. Parquet min/max stats then prune
-    * scans for predicates on either column alone — the multi-tenant 100 TB
-    * case (`user_id` × `created_day`) where queries filter sometimes by
-    * tenant, sometimes by time, and a linear sort only serves one of them.
-    * `bits` must cover the columns' value range (values ≥ 2^bits share the
-    * top bucket — still correct, just less selective there). */
-  def zorderWrite(df: DataFrame, path: String, colA: String, colB: String,
-                  bits: Int, nFiles: Int): Unit = {
-    df.withColumn("__z", graft.functions.Fns.zorder2(col(colA), col(colB), bits))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Bucketed layout for co-located joins: both fact tables hash-bucketed
-    * on the join key with the SAME bucket count join with NO shuffle on
-    * either side (and no per-task sort when `sortCols` covers the key) —
-    * the ONE join strategy whose cost doesn't grow with a 100×
-    * re-partitioning of the cluster. Bucketing requires the session
-    * catalog, hence `saveAsTable` rather than a bare path; at production
-    * scale this is the layout for chunk↔memory and edge↔node co-location
-    * (SURVEY §4's "partitioned/Z-ordered by user_id" as a join strategy). */
-  def bucketedWrite(df: DataFrame, table: String, bucketCol: String,
-                    nBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(nBuckets, bucketCol)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(table)
-  }
-
   /** Write `df` to `path` atomically: materialize to `path.tmp`, retire the
     * current snapshot to `path.swap.old`, promote tmp, then drop the
     * retired copy. Readers see the old or the new snapshot, never a
@@ -533,82 +482,23 @@ object Writers {
         s"healSwap: rename ${path}.swap.old -> $path failed")
   }
 
-  /** Small-file compaction — the operational pass a 100 TB table needs
-    * after high-cardinality partitioned appends or many small streaming
-    * micro-batches: thousands of KB-sized parquet files turn every scan
-    * into an open/footer-read storm and defeat row-group statistics.
-    * Rewrites `path` into `ceil(totalBytes / targetFileBytes)` files via
-    * the atomic [[swapWrite]] (readers never see a partial rewrite).
-    *
-    * Hive-partitioned layouts are handled, not destroyed: data files are
-    * sized by a RECURSIVE listing (a top-level-only listing sees 0 bytes
-    * under `k=v/` dirs and would collapse the table to one unpartitioned
-    * file in one task), the partition columns are inferred from the
-    * directory chain, and the rewrite repartitions ON those columns and
-    * re-writes `partitionBy` them — layout preserved, write parallel.
-    * Returns (filesBefore, filesAfter). */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024,
-              sortCols: Seq[String] = Nil): (Int, Int) = {
-    require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val buf = scala.collection.mutable.ListBuffer.empty[org.apache.hadoop.fs.FileStatus]
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) buf += st
-      }
-      buf.toList
-    }
-    // partition columns = the `k=v` directory chain (walk one branch; a
-    // valid Hive layout repeats the same chain under every branch)
-    def partitionChain(dir: org.apache.hadoop.fs.Path): Seq[String] = {
-      val sub = fs.listStatus(dir)
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      if (sub.isEmpty) Nil
-      else sub.head.getPath.getName.split("=", 2)(0) +: partitionChain(sub.head.getPath)
-    }
-
-    val before = dataFiles()
-    val totalBytes = before.map(_.getLen).sum
-    val nOut = math.max(math.ceil(totalBytes.toDouble / targetFileBytes).toInt, 1)
-    val partCols = partitionChain(root)
-    val df = spark.read.parquet(path)
-    val rewritten =
-      if (sortCols.nonEmpty)
-        // preserve a clustered serving layout through the global rewrite
-        // (range split keeps ~nOut files with disjoint sort ranges)
-        df.repartitionByRange(nOut, (partCols ++ sortCols).map(col): _*)
-          .sortWithinPartitions((partCols ++ sortCols).map(col): _*)
-      else if (partCols.isEmpty) df.repartition(nOut)
-      // hash-repartition on the partition columns so each task writes
-      // whole partition dirs (≈1 file per partition per holding task)
-      else df.repartition(nOut, partCols.map(col): _*)
-    swapWrite(rewritten, path, partitionBy = partCols)
-    (before.length, dataFiles().length)
-  }
-
   /** Partition-scoped compaction — the maintenance pass that pairs with
     * [[upsertPartitioned]]/[[deletePartitioned]]: every scoped merge lands
     * at least one new file in each touched partition, so a streaming
-    * cadence accretes per-partition small files. [[compact]] fixes that by
-    * rewriting the WHOLE table; here only partitions holding more than
-    * `maxFilesPerPartition` data files are rewritten (each collapsing to
-    * one file — the hash-repartition on the partition columns puts a
-    * partition's rows in exactly one task), everything else stays
-    * byte-identical on disk. Candidates are found with one column-pruned
-    * scan grouped by the partition columns counting distinct
+    * cadence accretes per-partition small files. Only partitions holding
+    * more than `maxFilesPerPartition` data files are rewritten (each
+    * collapsing to one file — the hash-repartition on the partition
+    * columns puts a partition's rows in exactly one task), everything
+    * else stays byte-identical on disk. Candidates are found with one
+    * column-pruned scan grouped by the partition columns counting distinct
     * `input_file_name()` — typed partition tuples straight from the data,
     * never parsed back out of directory names. Atomicity and crash healing
     * are [[mergePartitioned]]'s. Partitions whose data exceeds a sane
-    * single file (many GB) should use [[compact]]'s size-targeted global
-    * rewrite instead. `sortCols` re-establishes a clustered serving
-    * layout while compacting (the maintenance cadence for the maintained
-    * band/assignment tables passes the same columns their sinks cluster
-    * by). Returns the rewritten partition directories. */
+    * single file (many GB) need a size-targeted rewrite instead (a
+    * repartitioned [[swapWrite]]). `sortCols` re-establishes a clustered
+    * serving layout while compacting (the maintenance cadence for the
+    * maintained band/assignment tables passes the same columns their
+    * sinks cluster by). Returns the rewritten partition directories. */
   def compactPartitions(spark: org.apache.spark.sql.SparkSession, path: String,
                         partitionCols: Seq[String],
                         maxFilesPerPartition: Int = 1,

@@ -113,36 +113,6 @@ object Sinks {
     Writers.swapWrite(Writers.upsert(existing, incoming, key), path)
   }
 
-  /** [[keyedUpsert]] for a Hive-partitioned snapshot: merges the
-    * micro-batch via `Writers.upsertPartitioned`, so each batch reads and
-    * rewrites ONLY the partition directories it touches — write
-    * amplification per micro-batch scales with the batch, not the standing
-    * table. This is the variant to wire when the snapshot is the big one
-    * (the 100 TB ingest target): `keyedUpsert`'s full-snapshot swap costs
-    * |table| per micro-batch, which a streaming cadence multiplies.
-    *
-    * Same idempotence argument as `keyedUpsert` (replaying a batch
-    * re-merges identical rows onto the same keys — a no-op — and
-    * `versionCol` makes the per-key pick deterministic), plus
-    * `upsertPartitioned`'s per-partition retire→promote discipline: a crash
-    * mid-swap leaves every partition at either its old or new complete
-    * contents, and the next call heals orphans before merging.
-    *
-    * Inherits `upsertPartitioned`'s contract: a key must never migrate
-    * across partitions (partition columns are immutable attributes of the
-    * key — tenant, creation day). The batch must carry `partitionCols`.
-    * `sortCols` clusters the rewritten partitions' files (see
-    * `Writers.mergePartitioned`) — the serving-layout knob. */
-  def keyedUpsertPartitioned(path: String, key: String,
-                             partitionCols: Seq[String],
-                             versionCol: Option[String] = None,
-                             sortCols: Seq[String] = Nil)
-                            (batch: DataFrame, batchId: Long): Unit = {
-    Writers.upsertPartitioned(batch.sparkSession, path,
-      dedupBatch(batch, key, versionCol), key, partitionCols, sortCols)
-    ()
-  }
-
   /** One row per key from a micro-batch, deterministically: the highest
     * `versionCol` wins with a content-hash tiebreaker, so a post-failure
     * replay of the same rows always picks the same row — two rows sharing
@@ -203,29 +173,6 @@ object Sinks {
     graft.ops.IncrementalAgg.refreshPartial(spark, path, fresh, keys)
   }
 
-  /** [[rollupRefresh]] for a Hive-partitioned rollup (partitioned by a key
-    * subset with bounded churn — day, tenant×day): both the replay
-    * anti-join and the monoid merge read ONLY the partitions the batch
-    * touches, and only those directories are swapped. `rollupRefresh`
-    * re-reads and rewrites the whole rollup every micro-batch — O(|rollup|)
-    * per batch, where a watermarked stream's batches only ever touch
-    * windows near the watermark. Same idempotence argument (append mode
-    * emits each (window, keys) row exactly once, so a key already in the
-    * snapshot is a replay — and a replayed key is necessarily in a touched
-    * partition, so the SCOPED anti-join sees it). */
-  def rollupRefreshPartitioned(path: String, keys: Seq[String],
-                               partitionCols: Seq[String])
-                              (batch: DataFrame, batchId: Long): Unit = {
-    graft.sources.Writers.mergePartitioned(
-      batch.sparkSession, path, batch, partitionCols, batch.schema) { scoped =>
-      val fresh = batch.join(
-        scoped.select(keys.map(org.apache.spark.sql.functions.col): _*),
-        keys, "left_anti")
-      graft.ops.IncrementalAgg.merge(scoped, fresh, keys)
-    }
-    ()
-  }
-
   /** foreachBatch body: fold newly-ingested embedding rows into the
     * standing IVF assignment snapshot at `path` — ANN index MAINTENANCE as
     * a stream sink (the reference's ingest adds points to its live vector
@@ -281,8 +228,9 @@ object Sinks {
     // would re-run the centroid argmin over the whole batch
     val assigned = graft.ops.Similarity
       .ivfAssign(batch, centroids, idCol, vecCol).localCheckpoint(true)
-    keyedUpsertPartitioned(path, idCol, partitionCols,
-      sortCols = Seq("centroid_id"))(assigned, batchId)
+    Writers.upsertPartitioned(batch.sparkSession, path,
+      assigned.dropDuplicates(Seq(idCol)), idCol, partitionCols,
+      sortCols = Seq("centroid_id"))
     refreshStats(batch.sparkSession, path, statsPath)
     maintenance.foreach(_.maybeRun(batch.sparkSession, batchId))
   }

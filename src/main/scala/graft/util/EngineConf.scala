@@ -3,8 +3,8 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** Session defaults the engine's operators are tuned for — applied by every
-  * entry point that executes declared queries (Bench, Verify, PlanBudget,
-  * the test harness), so library users get the same behavior by calling
+  * entry point that executes declared queries (Verify, PlanBudget, the
+  * test harness), so library users get the same behavior by calling
   * [[tuned]] on their own builder. */
 object EngineConf {
 

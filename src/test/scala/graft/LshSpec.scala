@@ -41,16 +41,4 @@ class LshSpec extends SparkSpec {
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.tabulate(8)(_.toFloat)))
     assert(interpreted === s1)
   }
-
-  test("clusteredWrite produces partition dirs with sorted files") {
-    import graft.sources.Writers
-    val dir = java.nio.file.Files.createTempDirectory("clustered").toString + "/t"
-    val df = Seq(("u1", 5, "e"), ("u0", 3, "c"), ("u0", 1, "a"), ("u1", 4, "d"), ("u0", 2, "b"))
-      .toDF("user_id", "k", "v")
-    Writers.clusteredWrite(df, dir, Seq("user_id"), Seq("k"))
-    assert(new java.io.File(dir, "user_id=u0").exists())
-    // within-file order follows the sort key
-    val u0 = spark.read.parquet(dir + "/user_id=u0").collect().map(_.getInt(0))
-    assert(u0.toSeq === u0.sorted.toSeq)
-  }
 }

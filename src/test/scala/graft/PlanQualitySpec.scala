@@ -98,10 +98,11 @@ class PlanQualitySpec extends SparkSpec {
     val memories = (0L until 400L).map(i => (i, s"memory_$i")).toDF("mem_id", "title")
     // one writer task → one file per bucket; Spark only trusts the sortBy
     // order (and skips the per-task sort) for single-file buckets
-    graft.sources.Writers.bucketedWrite(chunks.repartition(1), "bq_chunks",
-      "memory_id", 8, sortCols = Seq("memory_id"))
-    graft.sources.Writers.bucketedWrite(memories.repartition(1), "bq_memories",
-      "mem_id", 8, sortCols = Seq("mem_id"))
+    def bucketed(df: org.apache.spark.sql.DataFrame, table: String, key: String): Unit =
+      df.repartition(1).write.mode("overwrite").format("parquet")
+        .bucketBy(8, key).sortBy(key).saveAsTable(table)
+    bucketed(chunks, "bq_chunks", "memory_id")
+    bucketed(memories, "bq_memories", "mem_id")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the merge path
     // since 3.0 Spark ignores the buckets' sortBy order unless told to trust
@@ -176,14 +177,15 @@ class PlanQualitySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // the 100 TB fact⋈dim posture: the fact table is laid out partitioned
-    // (Writers.clusteredWrite's date/tenant layout); a filter that lives on
+    // by date and sorted by id within files; a filter that lives on
     // the DIM side must still prune fact PARTITIONS — statically invisible,
     // so Spark must inject a runtime (dynamicpruning) subquery into the
     // fact scan. If this plan feature is lost, every dim-filtered join
     // degrades to a full fact scan.
     val dir = java.nio.file.Files.createTempDirectory("dpp_fact").toString
     val fact = (0 until 10000).map(i => (i.toLong, i % 20, i * 1.0)).toDF("id", "day", "v")
-    graft.sources.Writers.clusteredWrite(fact, dir, Seq("day"), Seq("id"))
+    fact.repartition(col("day")).sortWithinPartitions("day", "id")
+      .write.mode("overwrite").partitionBy("day").parquet(dir)
     val dimDir = java.nio.file.Files.createTempDirectory("dpp_dim").toString
     (0 until 20).map(i => (i, if (i < 2) "keep" else "drop")).toDF("d_day", "tag")
       .write.mode("overwrite").parquet(dimDir)

@@ -301,38 +301,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("partitioned rollup refresh: folds scope to touched day partitions; " +
-    "replay anti-join works against the scoped snapshot") {
-    val path = java.nio.file.Files.createTempDirectory("rollupp").toString + "/agg"
-    val keys = Seq("day", "user_id")
-    val sink = graft.streaming.Sinks.rollupRefreshPartitioned(
-      path, keys, Seq("day")) _
-    // partial-state batches as an append-mode watermarked agg would emit
-    val b1 = Seq(("d1", "u0", 2L, 1.0, 0.2, 0.8), ("d2", "u1", 1L, 0.5, 0.5, 0.5))
-      .toDF("day", "user_id", "cnt", "sm", "mn", "mx")
-    val b2 = Seq(("d3", "u0", 1L, 0.4, 0.4, 0.4))
-      .toDF("day", "user_id", "cnt", "sm", "mn", "mx")
-    sink(b1, 0L)
-    def files(rel: String) = new java.io.File(path, rel).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.length(), f.lastModified())).toSet
-    val d1Before = files("day=d1")
-    sink(b2, 1L)
-    def snap() = spark.read.parquet(path)
-      .select(col("day").cast("string"), col("user_id"), col("cnt"), col("sm"))
-      .collect().map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getDouble(3)))).toMap
-    val expected = Map(("d1", "u0") -> ((2L, 1.0)), ("d2", "u1") -> ((1L, 0.5)),
-      ("d3", "u0") -> ((1L, 0.4)))
-    assert(snap() === expected)
-    assert(files("day=d1") === d1Before, "untouched day=d1 was rewritten")
-    // at-least-once: replaying b2 must not double-count (scoped anti-join
-    // sees the already-folded keys inside the touched partition)
-    sink(b2, 1L)
-    assert(snap() === expected, "replayed batch double-counted")
-    assert(files("day=d1") === d1Before)
-  }
-
   test("LSH band sink: streamed batches equal the one-shot build; replay is a no-op") {
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("lsh").toString
@@ -531,44 +499,6 @@ class StreamingSpec extends SparkSpec {
       val replay = Seq(("b", 20L), ("c", 3L)).toDF("k", "v")
       graft.streaming.Sinks.keyedUpsert(path, "k")(replay, batchId = 1L)
       assert(snap() === afterTwo)
-    } finally {
-      query.stop()
-      org.apache.commons.io.FileUtils.deleteDirectory(dir)
-    }
-  }
-
-  test("foreachBatch partition-scoped upsert sink: merges like keyedUpsert, " +
-    "leaves untouched partition files byte-identical, replay is a no-op") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sinkp").toFile
-    val path = new java.io.File(dir, "snapshot").getPath
-    val input = MemoryStream[(String, String, Long)]
-    val query = input.toDS().toDF("tenant", "k", "v")
-      .writeStream
-      .foreachBatch(
-        graft.streaming.Sinks.keyedUpsertPartitioned(path, "k", Seq("tenant")) _)
-      .outputMode(OutputMode.Append).start()
-    def snap() = spark.read.parquet(path).select("k", "v").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    def files(rel: String) = new java.io.File(path, rel).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.length(), f.lastModified())).toSet
-    try {
-      input.addData(("t0", "a", 1L), ("t1", "b", 2L))
-      query.processAllAvailable()
-      val t0Before = files("tenant=t0")
-      // second micro-batch touches ONLY tenant=t1: b updated, c inserted
-      input.addData(("t1", "b", 20L), ("t1", "c", 3L))
-      query.processAllAvailable()
-      assert(snap() === Map("a" -> 1L, "b" -> 20L, "c" -> 3L))
-      assert(files("tenant=t0") === t0Before,
-        "micro-batch that never touched tenant=t0 rewrote its files")
-      // at-least-once redelivery of the last micro-batch converges
-      val replay = Seq(("t1", "b", 20L), ("t1", "c", 3L)).toDF("tenant", "k", "v")
-      graft.streaming.Sinks.keyedUpsertPartitioned(path, "k", Seq("tenant"))(
-        replay, batchId = 1L)
-      assert(snap() === Map("a" -> 1L, "b" -> 20L, "c" -> 3L))
-      assert(files("tenant=t0") === t0Before)
     } finally {
       query.stop()
       org.apache.commons.io.FileUtils.deleteDirectory(dir)

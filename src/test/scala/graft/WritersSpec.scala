@@ -6,15 +6,6 @@ import graft.sources.Writers
 class WritersSpec extends SparkSpec {
   import spark.implicits._
 
-  test("deleteWhere keeps non-matching rows, null predicate rows survive") {
-    val t = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("id", "v")
-    val out = Writers.deleteWhere(t, col("v") > 2).collect().map(_.getString(0))
-    assert(out.toSet === Set("a", "b"))
-    val withNull = Seq(("a", Some(1)), ("b", None)).toDF("id", "v")
-    val out2 = Writers.deleteWhere(withNull, col("v") > 0).collect().map(_.getString(0))
-    assert(out2.toSet === Set("b")) // null predicate → not deleted
-  }
-
   test("deleteByIds anti-joins the id list") {
     val t = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("id", "v")
     val ids = Seq("b", "zz").toDF("id")
@@ -440,55 +431,6 @@ class WritersSpec extends SparkSpec {
     assert(Writers.Versioned.read(spark, path).collect().head.getLong(0) === 9L)
   }
 
-  test("append with partitioning writes prunable layout") {
-    val dir = java.nio.file.Files.createTempDirectory("part").toString + "/t"
-    Writers.append(Seq(("u0", 1), ("u1", 2)).toDF("user_id", "v"), dir, Seq("user_id"))
-    Writers.append(Seq(("u0", 3)).toDF("user_id", "v"), dir, Seq("user_id"))
-    assert(spark.read.parquet(dir).filter(col("user_id") === "u0").count() === 2)
-    assert(new java.io.File(dir, "user_id=u0").exists())
-  }
-
-  test("compact: many small files rewrite into few, data byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
-    // 64 one-row-ish files — the streaming-micro-batch pathology
-    spark.range(0, 1000).select(col("id"), (col("id") * 7).as("v"))
-      .repartition(64).write.parquet(dir)
-    val before = spark.read.parquet(dir).collect().map(_.toSeq).toSet
-    val (nBefore, nAfter) = Writers.compact(spark, dir, targetFileBytes = 64L * 1024 * 1024)
-    assert(nBefore === 64)
-    assert(nAfter <= 2, s"expected <=2 compacted files, got $nAfter")
-    assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet === before)
-    // idempotent: compacting a compacted table is a cheap no-op-shaped pass
-    val (b2, a2) = Writers.compact(spark, dir, targetFileBytes = 64L * 1024 * 1024)
-    assert(b2 === nAfter && a2 <= nAfter)
-  }
-
-  test("compact preserves a Hive-partitioned layout and sizes it recursively") {
-    val dir = java.nio.file.Files.createTempDirectory("compactp").toString + "/t"
-    // 3 partitions × 8 appends of small files — the partitioned-append
-    // pathology; a top-level-only listing sees 0 bytes here
-    (0 until 8).foreach { i =>
-      Writers.append(
-        spark.range(i * 30, i * 30 + 30)
-          .select((col("id") % 3).cast("string").as("tenant"), col("id").as("v"))
-          .repartition(4),
-        dir, partitionBy = Seq("tenant"))
-    }
-    val before = spark.read.parquet(dir).collect()
-      .map(r => (r.getAs[String]("tenant"), r.getAs[Long]("v"))).toSet
-    val (nBefore, nAfter) = Writers.compact(spark, dir, targetFileBytes = 64L * 1024 * 1024)
-    assert(nBefore > 20, s"fixture should start fragmented, got $nBefore files")
-    assert(nAfter < nBefore, s"no compaction: $nBefore -> $nAfter")
-    // partition directories survive the rewrite
-    (0 until 3).foreach(t =>
-      assert(new java.io.File(dir, s"tenant=$t").isDirectory,
-        s"partition dir tenant=$t destroyed by compact"))
-    // and the data round-trips with the partition column intact
-    val after = spark.read.parquet(dir).collect()
-      .map(r => (r.getAs[String]("tenant"), r.getAs[Long]("v"))).toSet
-    assert(after === before)
-  }
-
   test("upsertPartitioned sortCols: every rewritten file is sorted and " +
     "files in one partition dir cover disjoint key ranges") {
     import org.apache.spark.sql.functions.{col, concat, lit, lpad, pmod, xxhash64}
@@ -530,24 +472,6 @@ class WritersSpec extends SparkSpec {
         .select("key").collect().map(_.getString(0)).toSeq
       assert(keys == keys.sorted, s"delete rewrite unsorted ${f.getName}")
     }
-    // the GLOBAL compaction path preserves it too
-    // partition-value inference reads the string part "0" back as int on
-    // a fresh scan — normalize through a cast for the comparison
-    def snapshot(): Set[(String, Long, String)] =
-      spark.read.parquet(dir)
-        .select(col("part").cast("string"), col("k"), col("key")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    val before = snapshot()
-    Writers.compact(spark, dir, targetFileBytes = 64L * 1024,
-      sortCols = Seq("key"))
-    Seq("part=0", "part=1").foreach { part =>
-      files(s"$dir/$part").foreach { f =>
-        val keys = spark.read.parquet(f.getPath)
-          .select("key").collect().map(_.getString(0)).toSeq
-        assert(keys == keys.sorted, s"compact rewrite unsorted ${f.getName}")
-      }
-    }
-    assert(snapshot() === before, "compact with sortCols changed the data")
   }
 
   test("Generation marker: absent reads 0; every mutation path bumps it " +
@@ -556,9 +480,9 @@ class WritersSpec extends SparkSpec {
     assert(Writers.Generation.read(spark, dir) === 0L)
 
     val rows = Seq(("a", 1, "p0"), ("b", 2, "p1")).toDF("id", "v", "part")
-    Writers.append(rows, dir, partitionBy = Seq("part"))
+    Writers.upsertPartitioned(spark, dir, rows, "id", Seq("part"))
     val g1 = Writers.Generation.read(spark, dir)
-    assert(g1 === 1L, "append must bump the generation")
+    assert(g1 === 1L, "a first partitioned write must bump the generation")
 
     Writers.upsertPartitioned(spark, dir,
       Seq(("a", 9, "p0")).toDF("id", "v", "part"), "id", Seq("part"))
@@ -583,5 +507,31 @@ class WritersSpec extends SparkSpec {
       "id", Seq("part"))
     assert(Writers.Generation.read(spark, dir) === g4,
       "no-op merge must not bump the generation")
+  }
+
+  test("Generation marker: a poll beside a bumping writer never throws, " +
+    "never reads 0 after the first bump and never goes backwards") {
+    val dir = java.nio.file.Files.createTempDirectory("genrace").toString + "/t"
+    Writers.Generation.bump(spark, dir)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writerError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val writer = new Thread(() =>
+      try while (!stop.get) Writers.Generation.bump(spark, dir)
+      catch { case t: Throwable => writerError.set(t) })
+    writer.start()
+    var last = 1L
+    var polls = 0
+    val deadline = System.nanoTime() + 2000L * 1000 * 1000
+    try while (System.nanoTime() < deadline) {
+      val g = Writers.Generation.read(spark, dir)
+      assert(g >= last, s"poll $polls read $g after $last")
+      last = g
+      polls += 1
+    } finally {
+      stop.set(true)
+      writer.join()
+    }
+    assert(writerError.get == null, s"writer failed: ${writerError.get}")
+    assert(last > 1L, s"no bump observed in $polls polls")
   }
 }

@@ -4,7 +4,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
-import graft.sources.Writers
 
 class ZorderSpec extends SparkSpec {
   import spark.implicits._
@@ -50,7 +49,9 @@ class ZorderSpec extends SparkSpec {
     val dir = Files.createTempDirectory("zorder").toString
     val zPath = s"$dir/z"
     val linPath = s"$dir/lin"
-    Writers.zorderWrite(grid, zPath, "x", "y", bits = 10, nFiles = 16)
+    grid.withColumn("__z", Fns.zorder2(col("x"), col("y"), 10))
+      .repartitionByRange(16, col("__z")).sortWithinPartitions(col("__z"))
+      .drop("__z").write.parquet(zPath)
     grid.repartitionByRange(16, col("x"), col("y"))
       .sortWithinPartitions(col("x"), col("y"))
       .write.parquet(linPath)

@@ -61,9 +61,9 @@ final class HashEmbedder(val dim: Int = 64) extends Embedder {
   * production the map is the broadcast top-V vocabulary (rare tails need
   * no entry — their weight rounds to 1 anyway).
   *
-  * Arithmetic contract (keeps the DuckDB oracle bit-exact, mirrored by
-  * `OracleSql.sifEmbedCtes`): weight in double, per-element product cast
-  * to float32, float32 adds in token order, double L2 norm, float32 emit —
+  * Arithmetic contract (keeps a SQL mirror bit-exact, as
+  * `OracleSql.embedCtes` is for `HashEmbedder`): weight in double,
+  * per-element product cast to float32, float32 adds in token order, double L2 norm, float32 emit —
   * exactly `HashEmbedder`'s discipline plus one weighted multiply. */
 final class SifEmbedder(val dim: Int, val a: Double,
                         freq: Map[String, Double]) extends Embedder {

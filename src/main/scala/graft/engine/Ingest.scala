@@ -105,7 +105,7 @@ object Ingest {
     *   1. exact unique-identifier match: same (label, unique-id tuple)
     *      (`_merge_node_with_unique_identifiers`, memory_graph.py:10542) —
     *      `exactKeyCols` selects the identifier columns (default `name`;
-    *      a schema's `unique_identifiers` via [[SchemaRegistry]] otherwise).
+    *      a schema's `unique_identifiers` otherwise).
     *      A NULL in any identifier skips the exact stage for that row and
     *      falls through the cascade, matching the reference's "MERGE skips
     *      on null unique identifiers" behavior (memory_graph.py:10573).

@@ -257,8 +257,8 @@ object SchemaRegistry {
     *   enum_violation    — value outside the declared enum
     *   extra_property    — undeclared property (pydantic `extra='forbid'`)
     *   duplicate_unique  — >1 node sharing the full unique-identifier tuple
-    * Output (node_id, label, violation, property) — SQL-expressible, so the
-    * whole operator sits behind a DuckDB oracle (q114).
+    * Output (node_id, label, violation, property) — SQL-expressible; no
+    * declared query pins it, SchemaRegistrySpec does.
     *
     * Scale shape: each check is a filter/projection over one scan (the
     * per-type plans union; Catalyst collapses shared scans); the only

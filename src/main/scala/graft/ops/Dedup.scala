@@ -258,8 +258,7 @@ object Dedup {
     * bounded aggregation (the [[exactJaccardPairs]] gate's device), so
     * what it counts is what the operator actually dropped, not a parallel
     * re-derivation that could drift. `ds IS NULL ⇔ df > maxDf` is
-    * oracle-pinned by the declared audit query. Curation reports
-    * (q300-family) surface it next to dedup rates; MaintainedDeleteSpec
+    * oracle-pinned by the declared audit query (q339); MaintainedDeleteSpec
     * pins exact drop counts on a small saturated bucket (no test runs an
     * adversarial hot-bucket corpus at scale). Reference analog: Qdrant
     * surfaces index status/thresholds explicitly rather than degrading
@@ -276,35 +275,15 @@ object Dedup {
           .as("dropped_rows"),
         coalesce(sum(col("df")), lit(0L)).as("total_rows"))
 
-  /** Exact Jaccard for given candidate pairs. The intersection is computed
-    * by expanding the CANDIDATE pairs through the shingle index (two joins
-    * keyed on the pair's doc ids) — |pairs|·|shingles-per-doc| intermediate
-    * rows, NOT the full co-occurrence blow-up. This is what makes LSH pay
-    * off: the quadratic step only touches pairs a band already vouched for. */
-  def jaccardVerify(pairs: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-      // unrounded: a single division of identical integers is bit-identical
-      // across engines; round() itself can disagree at decimal boundaries.
-      .withColumn("jaccard", col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** [[jaccardVerify]] over a SIZED shingle relation
-    * ([[shingleSetsSized]]): the per-doc set sizes ride the join legs and
-    * become extra (functionally dependent) grouping keys, so the separate
-    * `sizes` aggregation over the shingle relation and BOTH size joins
-    * disappear — three exchanges and one substrate pass fewer per
-    * verification, identical rows out (the sizes were inner-joined for
-    * every doc present in `sh`, which is every doc a pair touches). */
+  /** Exact Jaccard for given candidate pairs over a SIZED shingle relation
+    * ([[shingleSetsSized]]). The intersection is computed by expanding the
+    * CANDIDATE pairs through the shingle index (two joins keyed on the
+    * pair's doc ids) — |pairs|·|shingles-per-doc| intermediate rows, NOT
+    * the full co-occurrence blow-up. This is what makes LSH pay off: the
+    * quadratic step only touches pairs a band already vouched for. The
+    * per-doc set sizes ride the join legs and become extra (functionally
+    * dependent) grouping keys, so no separate `sizes` aggregation or size
+    * join is needed. */
   def jaccardVerifySized(pairs: DataFrame, shSized: DataFrame,
                          threshold: Double): DataFrame =
     pairs
@@ -314,7 +293,8 @@ object Dedup {
         col("shingle")), Seq("doc_b", "shingle"))
       .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
-      // unrounded single division of identical integers — see jaccardVerify
+      // unrounded: a single division of identical integers is bit-identical
+      // across engines; round() itself can disagree at decimal boundaries.
       .withColumn("jaccard", col("inter") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
@@ -428,7 +408,7 @@ object Dedup {
     *
     * Returns (updated band table, delta candidate pairs (doc_a < doc_b)
     * touching the new batch). Verification (exact Jaccard on the delta)
-    * composes via [[jaccardVerify]], as in [[minhashLsh]]. The state fold
+    * composes via [[jaccardVerifySized]], as in [[minhashLsh]]. The state fold
     * is a doc-keyed UPSERT (existing rows for the batch's doc ids are
     * dropped first), so re-delivering a batch is a no-op on the state and
     * re-ingesting a doc with changed text replaces its stale bands instead
@@ -907,8 +887,8 @@ object Dedup {
     * The gate reads the exact blowup ratio Σ df² / |shingle rows| from
     * one map-side-combined aggregate over the already-persisted shingle
     * relation (a single-row driver read — bounded by construction) and
-    * routes accordingly. Embedded ground-truth call sites (q190/q191/
-    * q267 family) use THIS entry point; q21 and q189 stay pinned to
+    * routes accordingly. Embedded ground-truth call sites (q190/q267
+    * family) use THIS entry point; q21 and q189 stay pinned to
     * their pure shapes as the documented baselines. */
   /** Max estimated INPUT bytes (the docs relation, from catalyst stats)
     * below which [[exactJaccardPairs]] may PERSIST its posting-list

@@ -228,10 +228,9 @@ object Similarity {
     * upsert anti-join).
     *
     * Small centroid tables (≤ [[InlineCentroidMax]] — every IVF/k-means
-    * shape in this engine) are collected (k rows, the same bounded-collect
-    * discipline as the PrefixSum partition offsets) and inlined as literal
-    * vectors, making assignment a ZERO-SHUFFLE map: `array_min` over
-    * k (dist, centroid_id) structs — built from the very same
+    * shape in this engine) are collected (k rows, a bounded collect) and
+    * inlined as literal vectors, making assignment a ZERO-SHUFFLE map:
+    * `array_min` over k (dist, centroid_id) structs — built from the very same
     * `round(l2sq, 6)` expressions as the join formulation, so every
     * distance, tie-break, and therefore every downstream oracle hash is
     * unchanged, while the N×k crossJoin rows and the id-partitioned

@@ -94,47 +94,6 @@ object Temporal {
       .drop(bin)
   }
 
-  /** Interval×interval overlap join (half-open [start, end)): all pairs
-    * whose intervals intersect, equi-joined per key. Same bin-bucketing
-    * scheme as [[rangeJoin]] — each interval explodes onto its covered
-    * bins, candidates meet only inside a shared (key, bin) — but pair
-    * DEDUPLICATION is positional, not a distinct: a pair is emitted only
-    * at bin == max(first bin of either side), so duplicated input rows
-    * survive faithfully and no pair-wide shuffle is spent de-duping.
-    * Column names of the two inputs must not collide (beyond `keys`).
-    * Bin width is a physical knob only — results are invariant to it,
-    * because the positional dedup and the overlap filter decide every pair
-    * (the declared interval-overlap query checks one width against the
-    * oracle; no test compares two widths). */
-  def intervalOverlapJoin(left: DataFrame, lStart: String, lEnd: String,
-                          right: DataFrame, rStart: String, rEnd: String,
-                          binWidthSec: Long, keys: Seq[String] = Nil,
-                          maxBinsPerInterval: Long = 100000L): DataFrame = {
-    require(binWidthSec > 0, s"binWidthSec must be positive, got $binWidthSec")
-    val bin = "__graft_bin"
-    val lb0 = "__graft_lb0"
-    val rb0 = "__graft_rb0"
-    def explodeBins(df: DataFrame, s: String, e: String, b0: String) = {
-      val startBin = floor(unix_timestamp(col(s)) / binWidthSec)
-      val endBin = floor(unix_timestamp(col(e)) / binWidthSec)
-      val guarded = when(endBin - startBin >= maxBinsPerInterval,
-        raise_error(concat(
-          lit(s"intervalOverlapJoin: interval spans >= $maxBinsPerInterval " +
-            s"bins of ${binWidthSec}s (start="), col(s).cast("string"),
-          lit(", end="), col(e).cast("string"),
-          lit("); raise maxBinsPerInterval or pre-filter"))).cast("long"))
-        .otherwise(startBin)
-      df.filter(col(e) > col(s))
-        .withColumn(b0, startBin)
-        .withColumn(bin, explode(sequence(guarded, endBin)))
-    }
-    explodeBins(left, lStart, lEnd, lb0)
-      .join(explodeBins(right, rStart, rEnd, rb0), (keys :+ bin).toSeq)
-      .filter(col(lStart) < col(rEnd) && col(rStart) < col(lEnd))
-      .filter(col(bin) === greatest(col(lb0), col(rb0)))
-      .drop(bin, lb0, rb0)
-  }
-
   /** SCD Type-2 dimension build from a change log: one versioned row per
     * ATTRIBUTE CHANGE per key, with `[valid_from, valid_to)` validity and
     * an `is_current` flag on the open version. No-op updates (consecutive

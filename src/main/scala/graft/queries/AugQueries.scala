@@ -2,14 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Fns
 
-/** Round-5 continuation: experiment-infrastructure variance tools (CUPED,
-  * covariate balance), dedup planning curves, and arrival-process
-  * diagnostics. Same disciplines as DriftQueries: exact integers/decimals
-  * until the final closed-form; engine-ordered double sums and
-  * transcendentals emit float32; md5 is the only hash that reaches an
-  * oracle-compared value.
+/** Dedup planning curves over the exact-Jaccard pair set (threshold sweep,
+  * duplicate-mass curve) and co-purchase graph diagnostics (transitivity,
+  * rich-club coefficient). Exact integers/decimals until the final closed
+  * form; engine-ordered double sums and transcendentals emit float32; md5
+  * is the only hash that reaches an oracle-compared value.
   */
 object AugQueries {
 
@@ -31,90 +29,6 @@ object AugQueries {
   }
 
   def entries: Seq[Entry] = Seq(
-
-    // CUPED variance reduction for the A/B activity metric: use each
-    // user's FIRST-half event count as the pre-exposure covariate for
-    // their second-half count, θ = cov(X,Y)/var(X), Y* = Y − θ(X − x̄).
-    // The readout is the variance-reduction ratio — how much smaller an
-    // experiment could have been. All power sums are exact integers, so
-    // the whole closed form is bit-identical doubles.
-    Entry("q324_cuped",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("us"))
-        val mid = ev.agg(((min(col("us")) + max(col("us"))) / 2).as("mid_us"))
-        val users = ev.crossJoin(broadcast(mid))
-          .groupBy(col("user_id"))
-          .agg(sum(when(col("us") < col("mid_us"), 1L).otherwise(0L)).as("x"),
-            sum(when(col("us") >= col("mid_us"), 1L).otherwise(0L)).as("y"))
-          .withColumn("arm",
-            pmod(ascii(substring(md5(col("user_id").cast("string")), 1, 1)),
-              lit(2)))
-        val a = users.agg(count(lit(1)).as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("y") * col("y")).as("syy"),
-          sum(when(col("arm") === 0, col("y")).otherwise(0L)).as("y0"),
-          sum(when(col("arm") === 0, col("x")).otherwise(0L)).as("x0"),
-          sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
-          sum(when(col("arm") === 1, col("y")).otherwise(0L)).as("y1"),
-          sum(when(col("arm") === 1, col("x")).otherwise(0L)).as("x1"),
-          sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
-        val n = col("n").cast("double")
-        val cxy = col("sxy") - col("sx").cast("double") * col("sy") / n
-        val cxx = col("sxx") - col("sx").cast("double") * col("sx") / n
-        val cyy = col("syy") - col("sy").cast("double") * col("sy") / n
-        val theta = cxy / cxx
-        // var(Y*) = var(Y) − θ²·var(X) (= var(Y)(1 − ρ²) at the OLS θ)
-        val varRatio = (cyy - theta * theta * cxx) / cyy
-        val rawLift = col("y0").cast("double") / col("n0") -
-          col("y1").cast("double") / col("n1")
-        val adjLift = rawLift - theta *
-          (col("x0").cast("double") / col("n0") -
-            col("x1").cast("double") / col("n1"))
-        a.select(col("n"), col("n0").as("n_a"), col("n1").as("n_b"),
-          theta.as("theta"), rawLift.as("raw_lift"),
-          adjLift.as("cuped_lift"), varRatio.as("var_ratio"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-             |  FROM events),
-             |mid AS (SELECT (min(us) + max(us)) / 2 AS mid_us FROM ev),
-             |users AS (
-             |  SELECT user_id,
-             |    CAST(sum(CASE WHEN us < mid_us THEN 1 ELSE 0 END) AS BIGINT)
-             |      AS x,
-             |    CAST(sum(CASE WHEN us >= mid_us THEN 1 ELSE 0 END) AS BIGINT)
-             |      AS y,
-             |    ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) % 2 AS arm
-             |  FROM ev CROSS JOIN mid GROUP BY user_id),
-             |a AS (
-             |  SELECT CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-             |    CAST(sum(x * x) AS BIGINT) AS sxx,
-             |    CAST(sum(x * y) AS BIGINT) AS sxy,
-             |    CAST(sum(y * y) AS BIGINT) AS syy,
-             |    CAST(sum(CASE WHEN arm = 0 THEN y ELSE 0 END) AS BIGINT) AS y0,
-             |    CAST(sum(CASE WHEN arm = 0 THEN x ELSE 0 END) AS BIGINT) AS x0,
-             |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-             |    CAST(sum(CASE WHEN arm = 1 THEN y ELSE 0 END) AS BIGINT) AS y1,
-             |    CAST(sum(CASE WHEN arm = 1 THEN x ELSE 0 END) AS BIGINT) AS x1,
-             |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1
-             |  FROM users)
-             |SELECT n, n0 AS n_a, n1 AS n_b,
-             |  (sxy - sx::DOUBLE * sy / n) / (sxx - sx::DOUBLE * sx / n)
-             |    AS theta,
-             |  y0::DOUBLE / n0 - y1::DOUBLE / n1 AS raw_lift,
-             |  (y0::DOUBLE / n0 - y1::DOUBLE / n1)
-             |    - ((sxy - sx::DOUBLE * sy / n) / (sxx - sx::DOUBLE * sx / n))
-             |      * (x0::DOUBLE / n0 - x1::DOUBLE / n1) AS cuped_lift,
-             |  ((syy - sy::DOUBLE * sy / n)
-             |    - ((sxy - sx::DOUBLE * sy / n) / (sxx - sx::DOUBLE * sx / n))
-             |      * ((sxy - sx::DOUBLE * sy / n) / (sxx - sx::DOUBLE * sx / n))
-             |      * (sxx - sx::DOUBLE * sx / n))
-             |    / (syy - sy::DOUBLE * sy / n) AS var_ratio
-             |FROM a""".stripMargin)),
 
     // Near-dup threshold sensitivity sweep: pair counts surviving each
     // Jaccard threshold from one low-threshold pair pass — the curve that
@@ -172,84 +86,6 @@ object AugQueries {
              |LEFT JOIN buckets b ON b.bucket >= g.i
              |GROUP BY g.i ORDER BY threshold""".stripMargin)),
 
-    // Covariate balance check for the md5 arm assignment: standardized
-    // mean difference (SMD) of pre-exposure activity and of document...
-    // of user value-sum between arms — |SMD| < 0.1 is the conventional
-    // "balanced" bar; larger means the assignment (or a filter upstream)
-    // biased the arms. Integer/decimal power sums → bit-identical
-    // doubles.
-    Entry("q326_covariate_balance",
-      (s, d) => {
-        val users = Tables.events(s, d)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("acts"),
-            sum(col("value").cast("decimal(12,6)")).as("vsum"))
-          .withColumn("arm",
-            pmod(ascii(substring(md5(col("user_id").cast("string")), 1, 1)),
-              lit(2)))
-        def smd(x: org.apache.spark.sql.Column, cov: String) = {
-          val g = users.groupBy(col("arm"))
-            .agg(count(lit(1)).as("n"),
-              sum(x.cast("decimal(28,6)")).as("s1"),
-              sum((x * x).cast("decimal(38,6)")).as("s2"))
-          val m = col("s1").cast("double") / col("n")
-          val v = (col("s2").cast("double") -
-            col("s1").cast("double") * col("s1").cast("double") / col("n")) /
-            (col("n") - 1)
-          val w = g.select(col("arm"), col("n"), m.as("m"), v.as("v"))
-          w.filter(col("arm") === 0)
-            .select(col("n").as("n_a"), col("m").as("m_a"), col("v").as("v_a"))
-            .crossJoin(w.filter(col("arm") === 1)
-              .select(col("n").as("n_b"), col("m").as("m_b"), col("v").as("v_b")))
-            // float32 emits: the decimal sums convert to double with
-            // engine-specific last-bit rounding (int128/scale vs BigDecimal)
-            .select(lit(cov).as("covariate"), col("n_a"), col("n_b"),
-              col("m_a").cast("float").as("m_a"),
-              col("m_b").cast("float").as("m_b"),
-              ((col("m_a") - col("m_b")) /
-                sqrt((col("v_a") + col("v_b")) / 2)).cast("float").as("smd"))
-        }
-        smd(col("acts"), "activity")
-          .unionAll(smd(col("vsum").cast("double"), "value_sum"))
-          .orderBy(col("covariate"))
-      },
-      Some("""WITH users AS (
-             |  SELECT user_id, CAST(count(*) AS BIGINT) AS acts,
-             |    sum(CAST(value AS DECIMAL(12,6))) AS vsum,
-             |    ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) % 2 AS arm
-             |  FROM events GROUP BY user_id),
-             |g1 AS (
-             |  SELECT arm, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(acts) AS DECIMAL(28,6)) AS s1,
-             |    CAST(sum(acts * acts) AS DECIMAL(38,6)) AS s2
-             |  FROM users GROUP BY arm),
-             |g2 AS (
-             |  SELECT arm, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(vsum::DOUBLE) AS DECIMAL(28,6)) AS s1,
-             |    CAST(sum(vsum::DOUBLE * vsum::DOUBLE) AS DECIMAL(38,6)) AS s2
-             |  FROM users GROUP BY arm),
-             |w1 AS (
-             |  SELECT arm, n, s1::DOUBLE / n AS m,
-             |    (s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / n) / (n - 1) AS v
-             |  FROM g1),
-             |w2 AS (
-             |  SELECT arm, n, s1::DOUBLE / n AS m,
-             |    (s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / n) / (n - 1) AS v
-             |  FROM g2)
-             |SELECT * FROM (
-             |  SELECT 'activity' AS covariate, a.n AS n_a, b.n AS n_b,
-             |    CAST(a.m AS REAL) AS m_a, CAST(b.m AS REAL) AS m_b,
-             |    CAST((a.m - b.m) / sqrt((a.v + b.v) / 2) AS REAL) AS smd
-             |  FROM (SELECT * FROM w1 WHERE arm = 0) a
-             |  CROSS JOIN (SELECT * FROM w1 WHERE arm = 1) b
-             |  UNION ALL
-             |  SELECT 'value_sum', a.n, b.n, CAST(a.m AS REAL),
-             |    CAST(b.m AS REAL),
-             |    CAST((a.m - b.m) / sqrt((a.v + b.v) / 2) AS REAL)
-             |  FROM (SELECT * FROM w2 WHERE arm = 0) a
-             |  CROSS JOIN (SELECT * FROM w2 WHERE arm = 1) b)
-             |ORDER BY covariate""".stripMargin)),
-
     // Duplication-mass curve: the share of corpus shingle occurrences
     // living in shingles with document frequency ≥ k, for k = 2..10 —
     // the dedup-potential curve (how much of the corpus is re-typed
@@ -289,55 +125,6 @@ object AugQueries {
              |    AS dup_mass
              |FROM unnest(generate_series(2, 10)) AS g(k), dfc CROSS JOIN tot t
              |GROUP BY k ORDER BY k""".stripMargin)),
-
-    // Inter-arrival coefficient of variation per event type: CV = 1 is
-    // the Poisson line (the renewal-process view of q276's count-based
-    // Fano factor — the two triangulate burstiness from different
-    // angles). Gaps from a type-partitioned lag window; squared-gap sums
-    // carry DECIMAL (µs² would overflow long); CV emits float32 (sqrt of
-    // a decimal→double conversion that rounds differently per engine).
-    Entry("q328_interarrival_cv",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("event_type"))
-          .orderBy(col("us"), col("event_id"))
-        val gaps = Tables.events(s, d)
-          .select(col("event_type"), col("event_id"),
-            unix_micros(col("ts").cast("timestamp")).as("us"))
-          .withColumn("prev", lag(col("us"), 1).over(w))
-          .filter(col("prev").isNotNull)
-          .withColumn("g", col("us") - col("prev"))
-        gaps.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("g")).as("s1"),
-            sum(col("g").cast("decimal(13,0)") * col("g")).as("s2"))
-          .filter(col("n") > 1)
-          .select(col("event_type"), col("n"),
-            (col("s1").cast("double") / col("n") / 1000000.0)
-              .as("mean_gap_s"),
-            (sqrt((col("s2").cast("double") -
-              col("s1").cast("double") * col("s1").cast("double") / col("n")) /
-              (col("n") - 1)) /
-              (col("s1").cast("double") / col("n"))).cast("float").as("cv"))
-          .orderBy(col("event_type"))
-      },
-      Some("""WITH gaps AS (
-             |  SELECT event_type,
-             |    us - lag(us) OVER (PARTITION BY event_type
-             |      ORDER BY us, event_id) AS g
-             |  FROM (SELECT event_type, event_id,
-             |          epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events)),
-             |f AS (SELECT event_type, g FROM gaps WHERE g IS NOT NULL),
-             |a AS (
-             |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(g) AS BIGINT) AS s1,
-             |    sum(CAST(g AS DECIMAL(13,0)) * g) AS s2
-             |  FROM f GROUP BY event_type HAVING count(*) > 1)
-             |SELECT event_type, n,
-             |  s1::DOUBLE / n / 1000000.0 AS mean_gap_s,
-             |  CAST(sqrt((s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / n) / (n - 1))
-             |    / (s1::DOUBLE / n) AS REAL) AS cv
-             |FROM a ORDER BY event_type""".stripMargin)),
 
     // Global transitivity summary of the co-purchase graph: wedges from
     // the degree profile, triangles from the degree-ordered orientation
@@ -452,87 +239,7 @@ object AugQueries {
              |    coalesce(e_club, 0)::DOUBLE * 2
              |      / (n_club::DOUBLE * (n_club - 1)) END AS phi
              |FROM club LEFT JOIN ed ON ed.k = club.k
-             |ORDER BY club.k""".stripMargin)),
+             |ORDER BY club.k""".stripMargin))
 
-    // Post-hoc minimum detectable effect for the A/B activity metric at
-    // α = 0.05 / 80% power: MDE = (z_{α/2} + z_{power})·SE with the
-    // standard 2.8016 multiplier — "was this experiment even capable of
-    // seeing the lift we hoped for?". Integer power sums → bit-identical
-    // doubles end to end.
-    Entry("q331_posthoc_mde",
-      (s, d) => {
-        val users = Tables.events(s, d)
-          .groupBy(col("user_id")).agg(count(lit(1)).as("y"))
-          .withColumn("arm",
-            pmod(ascii(substring(md5(col("user_id").cast("string")), 1, 1)),
-              lit(2)))
-        val g = users.groupBy(col("arm"))
-          .agg(count(lit(1)).as("n"), sum(col("y")).as("s1"),
-            sum(col("y") * col("y")).as("s2"))
-        val v = (col("s2").cast("double") -
-          col("s1").cast("double") * col("s1").cast("double") / col("n")) /
-          (col("n") - 1)
-        val w = g.select(col("arm"), col("n"), col("s1"), v.as("v"))
-        val a = w.filter(col("arm") === 0)
-          .select(col("n").as("n_a"), col("s1").as("s_a"), col("v").as("v_a"))
-        val b = w.filter(col("arm") === 1)
-          .select(col("n").as("n_b"), col("v").as("v_b"))
-        a.crossJoin(b)
-          .withColumn("se", sqrt(col("v_a") / col("n_a") + col("v_b") / col("n_b")))
-          .withColumn("baseline_mean", col("s_a").cast("double") / col("n_a"))
-          .select(col("n_a"), col("n_b"), col("baseline_mean"), col("se"),
-            (lit(2.8015852186) * col("se")).as("mde_abs"),
-            (lit(2.8015852186) * col("se") /
-              (col("s_a").cast("double") / col("n_a"))).as("mde_rel"))
-      },
-      Some("""WITH users AS (
-             |  SELECT user_id, CAST(count(*) AS BIGINT) AS y,
-             |    ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) % 2 AS arm
-             |  FROM events GROUP BY user_id),
-             |g AS (
-             |  SELECT arm, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(y) AS BIGINT) AS s1,
-             |    CAST(sum(y * y) AS BIGINT) AS s2
-             |  FROM users GROUP BY arm),
-             |w AS (
-             |  SELECT arm, n, s1,
-             |    (s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / n) / (n - 1) AS v
-             |  FROM g)
-             |SELECT a.n AS n_a, b.n AS n_b,
-             |  a.s1::DOUBLE / a.n AS baseline_mean,
-             |  sqrt(a.v / a.n + b.v / b.n) AS se,
-             |  2.8015852186 * sqrt(a.v / a.n + b.v / b.n) AS mde_abs,
-             |  2.8015852186 * sqrt(a.v / a.n + b.v / b.n)
-             |    / (a.s1::DOUBLE / a.n) AS mde_rel
-             |FROM (SELECT * FROM w WHERE arm = 0) a
-             |CROSS JOIN (SELECT * FROM w WHERE arm = 1) b""".stripMargin)),
-
-    // New-vs-returning split per day: each day's actives partitioned by
-    // whether this is their FIRST day ever — the acquisition/retention
-    // decomposition of the q297 DAU series. First-seen via one min-day
-    // agg; exact counts and one division.
-    Entry("q332_new_user_rate",
-      (s, d) => {
-        val du = Tables.events(s, d)
-          .select(to_date(col("ts")).as("day"), col("user_id"))
-          .distinct().localCheckpoint(true) // first-seen agg + the day join
-        val first = du.groupBy(col("user_id")).agg(min(col("day")).as("fday"))
-        du.join(first, "user_id")
-          .groupBy(col("day"))
-          .agg(count(lit(1)).as("dau"),
-            sum(when(col("day") === col("fday"), 1L).otherwise(0L)).as("n_new"))
-          .withColumn("new_rate", col("n_new").cast("double") / col("dau"))
-          .orderBy(col("day"))
-      },
-      Some("""WITH du AS (
-             |  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-             |f AS (SELECT user_id, min(day) AS fday FROM du GROUP BY 1)
-             |SELECT day, CAST(count(*) AS BIGINT) AS dau,
-             |  CAST(sum(CASE WHEN day = fday THEN 1 ELSE 0 END) AS BIGINT)
-             |    AS n_new,
-             |  sum(CASE WHEN day = fday THEN 1 ELSE 0 END)::DOUBLE / count(*)
-             |    AS new_rate
-             |FROM du JOIN f USING (user_id)
-             |GROUP BY day ORDER BY day""".stripMargin))
   )
 }

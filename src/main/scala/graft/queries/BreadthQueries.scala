@@ -4,17 +4,12 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.{GraphAnalytics, Pruning}
 
-/** Breadth batch 3: graph-analytic and relational operators that round out
-  * the engine beyond the reference's own surface —
-  *
-  *  - triangle counting and multi-source BFS (SURVEY §7.5's "batch graph
-  *    analytics" capability, alongside CC and PageRank);
-  *  - Bloom-filter runtime-pruned semi joins (the shuffle-reduction workhorse
-  *    for 0.1%-selective fact⋈dim joins at 100 TB);
-  *  - GROUPING SETS, PIVOT, null-aware NOT IN, and time-series gap-fill
-  *    (Catalyst-native SQL breadth a reference user would expect from a
-  *    general engine: subtotal reports, wide-format exports, 3VL-correct
-  *    exclusion, dense calendars for downstream window math).
+/** Graph-analytic operators of [[graft.ops.GraphAnalytics]] (triangle
+  * counting, multi-source BFS, k-core, label propagation, PageRank and its
+  * personalized form, functional SCCs, link prediction, random walks,
+  * modularity, node features — SURVEY §7.5's "batch graph analytics"), plus
+  * the bounded per-group top-k aggregator, collocation scoring and
+  * fixed-window chunking.
   */
 object BreadthQueries {
 
@@ -152,106 +147,6 @@ object BreadthQueries {
              |  WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 300000)
              |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
-    // Explicit GROUPING SETS (the subtotal shapes between q53's ROLLUP and
-    // q59's CUBE) — one Expand, one aggregation.
-    Entry("q83_grouping_sets",
-      (s, d) => {
-        Tables.events(s, d)
-          .withColumn("day", dayofmonth(col("ts")))
-          .filter(col("day") <= 4)
-          .createOrReplaceTempView("ev_gs")
-        s.sql("""SELECT event_type, day, count(*) AS n, round(sum(value), 2) AS sum_value
-                |FROM ev_gs
-                |GROUP BY GROUPING SETS ((event_type), (day), (event_type, day))
-                |ORDER BY event_type ASC NULLS FIRST, day ASC NULLS FIRST""".stripMargin)
-      },
-      Some("""SELECT event_type, day, count(*) AS n, round(sum(value), 2) AS sum_value
-             |FROM (SELECT event_type,
-             |        CAST(date_part('day', CAST(ts AS TIMESTAMP)) AS INT) AS day, value
-             |      FROM events)
-             |WHERE day <= 4
-             |GROUP BY GROUPING SETS ((event_type), (day), (event_type, day))
-             |ORDER BY event_type ASC NULLS FIRST, day ASC NULLS FIRST""".stripMargin)),
-
-    // PIVOT to wide format with an explicit value list (no extra
-    // distinct-values pass) — one aggregation, conditional sums.
-    Entry("q84_pivot",
-      (s, d) => Tables.orders(s, d)
-        .groupBy(col("o_orderstatus"))
-        .pivot("o_orderpriority",
-          Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))
-        .agg(round(sum(col("o_totalprice")), 2))
-        .withColumnRenamed("1-URGENT", "p_urgent")
-        .withColumnRenamed("2-HIGH", "p_high")
-        .withColumnRenamed("3-MEDIUM", "p_medium")
-        .withColumnRenamed("4-NOT SPECIFIED", "p_notspec")
-        .withColumnRenamed("5-LOW", "p_low")
-        .orderBy(col("o_orderstatus")),
-      Some("""SELECT o_orderstatus,
-             |  round(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice END), 2) AS p_urgent,
-             |  round(sum(CASE WHEN o_orderpriority = '2-HIGH' THEN o_totalprice END), 2) AS p_high,
-             |  round(sum(CASE WHEN o_orderpriority = '3-MEDIUM' THEN o_totalprice END), 2) AS p_medium,
-             |  round(sum(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN o_totalprice END), 2) AS p_notspec,
-             |  round(sum(CASE WHEN o_orderpriority = '5-LOW' THEN o_totalprice END), 2) AS p_low
-             |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
-
-    // Null-aware NOT IN (3VL): outer rows with a NULL key can never satisfy
-    // NOT IN — Catalyst plans a null-aware anti join, not a plain anti join.
-    Entry("q85_not_in",
-      (s, d) => {
-        Tables.customer(s, d)
-          .select(when(col("c_custkey") % 97 === 0, lit(null))
-            .otherwise(col("c_custkey")).as("k"), col("c_name"))
-          .createOrReplaceTempView("cust_nullable")
-        Tables.orders(s, d).createOrReplaceTempView("orders_ni")
-        s.sql("""SELECT k, c_name FROM cust_nullable
-                |WHERE k NOT IN (
-                |  SELECT o_custkey FROM orders_ni WHERE o_totalprice > 400000)
-                |ORDER BY k""".stripMargin)
-      },
-      Some("""SELECT k, c_name FROM (
-             |  SELECT CASE WHEN c_custkey % 97 = 0 THEN NULL ELSE c_custkey END AS k,
-             |         c_name
-             |  FROM customer)
-             |WHERE k NOT IN (
-             |  SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
-             |ORDER BY k""".stripMargin)),
-
-    // Time-series gap-fill: dense (event_type × day) calendar from the
-    // observed bounds, sparse daily aggregates joined in, missing days
-    // emitted as zero — the step that makes window math (moving averages,
-    // lag deltas) correct on sparse series.
-    Entry("q86_gapfill",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-          .select(col("event_type"), to_date(col("ts")).as("day"), col("value"))
-        val daily = ev.filter(col("value") > 280)
-          .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
-        val days = ev.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-          .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-        ev.select(col("event_type")).distinct()
-          .crossJoin(days)
-          .join(daily, Seq("event_type", "day"), "left")
-          .select(col("event_type"), col("day"),
-            coalesce(col("n"), lit(0L)).as("n"))
-          .orderBy(col("event_type"), col("day"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, value
-             |  FROM events),
-             |daily AS (
-             |  SELECT event_type, day, count(*) AS n FROM ev
-             |  WHERE value > 280 GROUP BY 1, 2),
-             |days AS (
-             |  SELECT CAST(unnest(generate_series(CAST(min(day) AS TIMESTAMP),
-             |    CAST(max(day) AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day
-             |  FROM ev)
-             |SELECT t.event_type, days.day, coalesce(daily.n, 0) AS n
-             |FROM (SELECT DISTINCT event_type FROM ev) t
-             |CROSS JOIN days
-             |LEFT JOIN daily ON daily.event_type = t.event_type AND daily.day = days.day
-             |ORDER BY t.event_type, days.day""".stripMargin)),
-
     // Bounded-heap top-k per group: partial aggregation reduces every map
     // partition to ≤ k rows per group BEFORE the shuffle (vs the window
     // form, which shuffles all rows). Ties broken by id — deterministic.
@@ -273,87 +168,6 @@ object BreadthQueries {
              |      ORDER BY o_totalprice DESC, o_orderkey) AS rank
              |  FROM orders)
              |WHERE rank <= 3 ORDER BY o_orderpriority, rank""".stripMargin)),
-
-    // Conversion funnel view→click→purchase per user in ONE shuffle: three
-    // stacked window aggregates over the same user partition (Catalyst
-    // plans one Exchange + one Sort for all three), then a per-user stage
-    // verdict and stage population counts.
-    Entry("q88_funnel",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("user_id"))
-        Tables.events(s, d)
-          .select(col("user_id"), col("event_type"), col("ts"))
-          .filter(col("ts") < lit("2024-01-03").cast("timestamp"))
-          .withColumn("t_view",
-            min(when(col("event_type") === "view", col("ts"))).over(w))
-          .withColumn("t_click",
-            min(when(col("event_type") === "click" && col("ts") > col("t_view"), col("ts"))).over(w))
-          .withColumn("t_purchase",
-            min(when(col("event_type") === "purchase" && col("ts") > col("t_click"), col("ts"))).over(w))
-          .groupBy(col("user_id"))
-          .agg(max(col("t_view")).as("t_view"),
-            max(col("t_click")).as("t_click"),
-            max(col("t_purchase")).as("t_purchase"))
-          .select(when(col("t_purchase").isNotNull, 3)
-            .when(col("t_click").isNotNull, 2)
-            .when(col("t_view").isNotNull, 1)
-            .otherwise(0).as("stage"))
-          .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
-          .orderBy(col("stage"))
-      },
-      Some("""WITH staged AS (
-             |  SELECT user_id,
-             |    min(CASE WHEN event_type = 'view' THEN CAST(ts AS TIMESTAMP) END)
-             |      OVER (PARTITION BY user_id) AS t_view,
-             |    CAST(ts AS TIMESTAMP) AS tts, event_type
-             |  FROM events
-             |  WHERE CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-03'),
-             |staged2 AS (
-             |  SELECT user_id, t_view,
-             |    min(CASE WHEN event_type = 'click' AND tts > t_view THEN tts END)
-             |      OVER (PARTITION BY user_id) AS t_click, tts, event_type
-             |  FROM staged),
-             |staged3 AS (
-             |  SELECT user_id, t_view, t_click,
-             |    min(CASE WHEN event_type = 'purchase' AND tts > t_click THEN tts END)
-             |      OVER (PARTITION BY user_id) AS t_purchase
-             |  FROM staged2),
-             |per_user AS (
-             |  SELECT user_id, max(t_view) AS t_view, max(t_click) AS t_click,
-             |    max(t_purchase) AS t_purchase
-             |  FROM staged3 GROUP BY user_id)
-             |SELECT CASE WHEN t_purchase IS NOT NULL THEN 3
-             |            WHEN t_click IS NOT NULL THEN 2
-             |            WHEN t_view IS NOT NULL THEN 1 ELSE 0 END AS stage,
-             |  count(*) AS n_users
-             |FROM per_user GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    // Cohort retention: users grouped by first-activity day, distinct-user
-    // counts at day offsets 0..6 — the classic triangle table, flat format.
-    Entry("q89_cohort",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), to_date(col("ts")).as("day"))
-        val cohorts = ev.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
-        ev.join(cohorts, "user_id")
-          .withColumn("offset", datediff(col("day"), col("cohort_day")))
-          .filter(col("offset").between(0, 6))
-          .select(col("cohort_day"), col("offset"), col("user_id")).distinct()
-          .groupBy(col("cohort_day"), col("offset"))
-          .agg(countDistinct(col("user_id")).as("n_active"))
-          .orderBy(col("cohort_day"), col("offset"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day FROM events),
-             |cohorts AS (
-             |  SELECT user_id, min(day) AS cohort_day FROM ev GROUP BY user_id)
-             |SELECT cohort_day,
-             |  CAST(date_diff('day', cohort_day, day) AS INT) AS offset,
-             |  count(DISTINCT ev.user_id) AS n_active
-             |FROM ev JOIN cohorts ON ev.user_id = cohorts.user_id
-             |WHERE date_diff('day', cohort_day, day) BETWEEN 0 AND 6
-             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // Collocation mining by lift (= exp(PMI)) on presence counts, bounded
     // to the top-40 vocabulary — the pair aggregation has ≤ C(40,2) keys
@@ -384,131 +198,6 @@ object BreadthQueries {
              |ORDER BY lift DESC, token_a, token_b
              |LIMIT 30""".stripMargin)),
 
-    // Equi-width histogram — fixed bucket arithmetic, one map-side-combined
-    // aggregation (the data-profiling companion to q78's column stats).
-    Entry("q91_histogram",
-      (s, d) => Tables.orders(s, d)
-        .groupBy((floor(col("o_totalprice") / 50000) * 50000).cast("long")
-          .as("bucket_lo"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("bucket_lo")),
-      Some("""SELECT CAST(floor(o_totalprice / 50000) * 50000 AS BIGINT) AS bucket_lo,
-             |  count(*) AS n
-             |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    // Full analytic-window suite in one pass: offset functions, ntile
-    // bucketing, distribution ranks — one Exchange + one Sort serves all
-    // seven functions (same-partition windows coalesce).
-    Entry("q94_window_suite",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("o_orderpriority")).orderBy(col("o_orderkey"))
-        val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        Tables.orders(s, d)
-          .filter(col("o_totalprice") > 450000)
-          .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("prev_price", lag(col("o_totalprice"), 1).over(w))
-          .withColumn("next_price", lead(col("o_totalprice"), 1).over(w))
-          .withColumn("quartile", ntile(4).over(w))
-          .withColumn("pct_rank", percent_rank().over(w))
-          .withColumn("cume", cume_dist().over(w))
-          .withColumn("first_key", first(col("o_orderkey")).over(wf))
-          .withColumn("last_key", last(col("o_orderkey")).over(wf))
-          .orderBy(col("o_orderpriority"), col("o_orderkey"))
-      },
-      Some("""SELECT o_orderpriority, o_orderkey, o_totalprice,
-             |  lag(o_totalprice, 1) OVER w AS prev_price,
-             |  lead(o_totalprice, 1) OVER w AS next_price,
-             |  ntile(4) OVER w AS quartile,
-             |  percent_rank() OVER w AS pct_rank,
-             |  cume_dist() OVER w AS cume,
-             |  first_value(o_orderkey) OVER wf AS first_key,
-             |  last_value(o_orderkey) OVER wf AS last_key
-             |FROM orders WHERE o_totalprice > 450000
-             |WINDOW
-             |  w AS (PARTITION BY o_orderpriority ORDER BY o_orderkey),
-             |  wf AS (PARTITION BY o_orderpriority ORDER BY o_orderkey
-             |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-             |ORDER BY o_orderpriority, o_orderkey""".stripMargin)),
-
-    // Sliding event-time windows (12h length, 6h hop): every event lands in
-    // exactly length/hop = 2 windows — Spark's window() explodes them
-    // natively; the oracle reproduces the assignment as a union of two
-    // 6h-staggered tumbling bucketings.
-    Entry("q95_sliding_window",
-      (s, d) => Tables.events(s, d)
-        .groupBy(window(col("ts"), "12 hours", "6 hours").as("w"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-        .select(col("w.start").as("ws"), col("n"), col("sum_value"))
-        .orderBy(col("ws")),
-      Some("""SELECT ws, count(*) AS n, round(sum(value), 2) AS sum_value
-             |FROM (
-             |  SELECT time_bucket(INTERVAL 6 HOUR, CAST(ts AS TIMESTAMP))
-             |           - k * INTERVAL 6 HOUR AS ws, value
-             |  FROM events CROSS JOIN (SELECT unnest([0, 1]) AS k))
-             |GROUP BY ws ORDER BY ws""".stripMargin)),
-
-    // Trailing 7-day RANGE window per (type, day): frame membership by day
-    // VALUE, not row position — days missing from the data contribute
-    // nothing and the frame still spans exactly 7 calendar days.
-    Entry("q96_trailing_window",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"), dayofmonth(col("ts")).as("day"))
-          .agg(count(lit(1)).as("n"))
-        val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-          .rangeBetween(-6, Window.currentRow)
-        daily.withColumn("trailing_7d", sum(col("n")).over(w))
-          .orderBy(col("event_type"), col("day"))
-      },
-      Some("""WITH daily AS (
-             |  SELECT event_type,
-             |    CAST(date_part('day', CAST(ts AS TIMESTAMP)) AS INT) AS day,
-             |    count(*) AS n
-             |  FROM events GROUP BY 1, 2)
-             |SELECT event_type, day, n,
-             |  CAST(sum(n) OVER (PARTITION BY event_type ORDER BY day
-             |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS trailing_7d
-             |FROM daily ORDER BY event_type, day""".stripMargin)),
-
-    // Schema-evolution union: two relations with partially-overlapping
-    // columns align BY NAME, absent columns fill with NULL — the read-side
-    // posture when a 100 TB table's schema grew a column mid-history.
-    Entry("q97_union_by_name",
-      (s, d) => {
-        val old = Tables.part(s, d).filter(col("p_partkey") <= 200)
-          .select(col("p_partkey").as("key"), col("p_name").as("name"),
-            col("p_size").as("size"))
-        val grown = Tables.part(s, d)
-          .filter(col("p_partkey") > 200 && col("p_partkey") <= 400)
-          .select(col("p_partkey").as("key"), col("p_name").as("name"),
-            col("p_size").as("size"), col("p_brand").as("brand"))
-        old.unionByName(grown, allowMissingColumns = true)
-          .orderBy(col("key"))
-      },
-      Some("""SELECT p_partkey AS key, p_name AS name, p_size AS size,
-             |  CAST(NULL AS VARCHAR) AS brand
-             |FROM part WHERE p_partkey <= 200
-             |UNION ALL BY NAME
-             |SELECT p_partkey AS key, p_name AS name, p_size AS size, p_brand AS brand
-             |FROM part WHERE p_partkey > 200 AND p_partkey <= 400
-             |ORDER BY key""".stripMargin)),
-
-    // Two-phase heavy hitters: Misra-Gries candidates (one pass, k-bounded
-    // summary, no full-vocabulary shuffle) → exact counts for candidates
-    // only. With k=50 > |vocab| the summary retains everything, so the
-    // result provably equals the plain top-10 — the oracle.
-    Entry("q99_heavy_hitters",
-      (s, d) => graft.ops.HeavyHitters.exactTop(
-        Tables.documents(s, d)
-          .select(explode(graft.functions.Fns.tokens(col("text"))).as("tok")),
-        "tok", k = 50, topN = 10),
-      Some("""SELECT token AS item, count(*) AS n FROM (
-             |  SELECT unnest(string_split(lower(text), ' ')) AS token
-             |  FROM documents)
-             |GROUP BY 1 ORDER BY n DESC, item LIMIT 10""".stripMargin)),
-
     // Ingest chunking parity: the reference's default splitter (fixed
     // token window with overlap) reproduced in SQL via list slicing — the
     // chunker that feeds every downstream embed/index step is itself
@@ -538,282 +227,6 @@ object BreadthQueries {
              |  CAST(least(start + 15, len(toks)) - start + 1 AS INT) AS n_toks
              |FROM starts
              |ORDER BY doc_id, seq""".stripMargin)),
-
-    // Null-safe equi-join (<=> / IS NOT DISTINCT FROM): NULL keys MATCH
-    // each other — the semantics metadata/SCD pipelines need when "absent"
-    // is a legitimate join value (a plain = silently drops those rows).
-    Entry("q101_null_safe_join",
-      (s, d) => {
-        val a = Tables.customer(s, d).select(
-          when(col("c_custkey") % 11 === 0, lit(null)).otherwise(col("c_nationkey"))
-            .as("nk"),
-          col("c_custkey"))
-        val b = Tables.nation(s, d).select(
-          when(col("n_nationkey") === 0, lit(null)).otherwise(col("n_nationkey"))
-            .as("nk2"),
-          col("n_name"))
-        a.join(b, col("nk") <=> col("nk2"))
-          .groupBy(col("n_name"))
-          .agg(count(lit(1)).as("n"), countDistinct(col("c_custkey")).as("n_cust"))
-          .orderBy(col("n_name"))
-      },
-      Some("""SELECT n_name, count(*) AS n, count(DISTINCT c_custkey) AS n_cust
-             |FROM (SELECT CASE WHEN c_custkey % 11 = 0 THEN NULL
-             |               ELSE c_nationkey END AS nk, c_custkey
-             |      FROM customer) a
-             |JOIN (SELECT CASE WHEN n_nationkey = 0 THEN NULL
-             |               ELSE n_nationkey END AS nk2, n_name
-             |      FROM nation) b
-             |ON a.nk IS NOT DISTINCT FROM b.nk2
-             |GROUP BY n_name ORDER BY n_name""".stripMargin)),
-
-    // GROUPING() disambiguation: subtotal rows vs genuine NULL group keys —
-    // without the flag a ROLLUP over nullable keys is unreadable.
-    Entry("q102_grouping_fn",
-      (s, d) => {
-        Tables.orders(s, d)
-          .select(when(col("o_orderkey") % 7 === 0, lit(null))
-            .otherwise(col("o_orderstatus")).as("status"),
-            col("o_orderpriority").as("prio"), col("o_totalprice"))
-          .createOrReplaceTempView("ord_gf")
-        s.sql("""SELECT status, prio,
-                |  CAST(grouping(status) AS INT) AS g_status,
-                |  CAST(grouping(prio) AS INT) AS g_prio,
-                |  count(*) AS n
-                |FROM ord_gf
-                |GROUP BY ROLLUP (status, prio)
-                |ORDER BY g_status, g_prio, status ASC NULLS FIRST, prio ASC NULLS FIRST""".stripMargin)
-      },
-      Some("""SELECT status, prio,
-             |  CAST(grouping(status) AS INT) AS g_status,
-             |  CAST(grouping(prio) AS INT) AS g_prio,
-             |  count(*) AS n
-             |FROM (SELECT CASE WHEN o_orderkey % 7 = 0 THEN NULL
-             |               ELSE o_orderstatus END AS status,
-             |        o_orderpriority AS prio, o_totalprice
-             |      FROM orders)
-             |GROUP BY ROLLUP (status, prio)
-             |ORDER BY g_status, g_prio, status ASC NULLS FIRST, prio ASC NULLS FIRST""".stripMargin)),
-
-    // Higher-order array functions end-to-end: per-order quantity vectors
-    // (sorted for determinism) → transform → filter → aggregate, entirely
-    // inside codegen'd HOFs — the §2.9 functional surface on collections.
-    Entry("q104_hof_pipeline",
-      (s, d) => Tables.lineitem(s, d)
-        .filter(col("l_orderkey") % 100 === 0)
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_list(col("l_quantity").cast("int"))).as("qtys"))
-        .select(
-          col("l_orderkey"),
-          size(col("qtys")).as("n_items"),
-          expr("transform(qtys, x -> x * 2)").as("doubled"),
-          size(expr("filter(qtys, x -> x > 25)")).as("n_large"),
-          expr("aggregate(qtys, 0, (acc, x) -> acc + x)").as("total_qty"))
-        .select(col("l_orderkey"), col("n_items"),
-          element_at(col("doubled"), 1).as("first_doubled"),
-          col("n_large"), col("total_qty"))
-        .orderBy(col("l_orderkey")),
-      Some("""SELECT l_orderkey, n_items, doubled[1] AS first_doubled, n_large, total_qty
-             |FROM (
-             |  SELECT l_orderkey,
-             |    CAST(len(qtys) AS INT) AS n_items,
-             |    list_transform(qtys, x -> x * 2) AS doubled,
-             |    CAST(len(list_filter(qtys, x -> x > 25)) AS INT) AS n_large,
-             |    list_sum(qtys)::INT AS total_qty
-             |  FROM (
-             |    SELECT l_orderkey,
-             |      list_sort(list(CAST(l_quantity AS INT))) AS qtys
-             |    FROM lineitem WHERE l_orderkey % 100 = 0
-             |    GROUP BY l_orderkey))
-             |ORDER BY l_orderkey""".stripMargin)),
-
-    // Datetime scalar surface: truncation, month boundaries, day-of-week
-    // (numbering aligned across engines), epoch round trips.
-    Entry("q105_datetime_funcs",
-      (s, d) => Tables.events(s, d)
-        .filter(col("event_id") % 97 === 0)
-        .select(
-          col("event_id"),
-          date_trunc("month", col("ts")).cast("date").as("month_start"),
-          last_day(col("ts")).as("month_end"),
-          // Spark: 1=Sunday..7=Saturday; DuckDB dow: 0=Sunday..6 → +1
-          dayofweek(col("ts")).as("dow"),
-          dayofyear(col("ts")).as("doy"),
-          unix_timestamp(col("ts")).as("epoch_s"))
-        .orderBy(col("event_id")),
-      Some("""SELECT event_id,
-             |  CAST(date_trunc('month', CAST(ts AS TIMESTAMP)) AS DATE) AS month_start,
-             |  CAST(last_day(CAST(ts AS TIMESTAMP)) AS DATE) AS month_end,
-             |  CAST(date_part('dow', CAST(ts AS TIMESTAMP)) + 1 AS INT) AS dow,
-             |  CAST(date_part('doy', CAST(ts AS TIMESTAMP)) AS INT) AS doy,
-             |  CAST(epoch(date_trunc('second', CAST(ts AS TIMESTAMP))) AS BIGINT) AS epoch_s
-             |FROM events WHERE event_id % 97 = 0
-             |ORDER BY event_id""".stripMargin)),
-
-    // String scalar surface beyond q13: padding, translation, repetition,
-    // reversal, part extraction — the cleanup toolkit of text ingest.
-    Entry("q106_string_funcs",
-      (s, d) => Tables.part(s, d)
-        .filter(col("p_partkey") <= 300)
-        .select(
-          col("p_partkey"),
-          lpad(col("p_brand"), 12, "*").as("padded"),
-          translate(col("p_name"), "aeiou", "AEIOU").as("vowels_up"),
-          expr("repeat(p_type, 2)").as("doubled"),
-          reverse(col("p_brand")).as("reversed"),
-          substring_index(col("p_name"), " ", 2).as("first_two_words"),
-          length(trim(col("p_name"))).cast("int").as("trimmed_len"))
-        .orderBy(col("p_partkey")),
-      Some("""SELECT p_partkey,
-             |  lpad(p_brand, 12, '*') AS padded,
-             |  translate(p_name, 'aeiou', 'AEIOU') AS vowels_up,
-             |  repeat(p_type, 2) AS doubled,
-             |  reverse(p_brand) AS reversed,
-             |  array_to_string((string_split(p_name, ' '))[1:2], ' ') AS first_two_words,
-             |  CAST(length(trim(p_name)) AS INT) AS trimmed_len
-             |FROM part WHERE p_partkey <= 300
-             |ORDER BY p_partkey""".stripMargin)),
-
-    // Conditional-expression surface: nullif/ifnull/nvl2-style three-valued
-    // branches plus null-tolerant least/greatest (both engines skip nulls).
-    Entry("q107_conditionals",
-      (s, d) => Tables.orders(s, d)
-        .filter(col("o_orderkey") % 50 === 0)
-        .select(
-          col("o_orderkey"),
-          nullif(col("o_orderstatus"), lit("O")).as("status_or_null"),
-          coalesce(nullif(col("o_orderpriority"), lit("5-LOW")), lit("LOWEST"))
-            .as("prio_mapped"),
-          when(col("o_orderdate").isNotNull, lit("has_date"))
-            .otherwise(lit("none")).as("nvl2_date"),
-          least(col("o_totalprice"), lit(100000.0)).as("capped"),
-          greatest(col("o_custkey").cast("long"), lit(100L)).as("cust_floor"))
-        .orderBy(col("o_orderkey")),
-      Some("""SELECT o_orderkey,
-             |  nullif(o_orderstatus, 'O') AS status_or_null,
-             |  coalesce(nullif(o_orderpriority, '5-LOW'), 'LOWEST') AS prio_mapped,
-             |  CASE WHEN o_orderdate IS NOT NULL THEN 'has_date'
-             |       ELSE 'none' END AS nvl2_date,
-             |  least(o_totalprice, 100000.0) AS capped,
-             |  greatest(CAST(o_custkey AS BIGINT), 100) AS cust_floor
-             |FROM orders WHERE o_orderkey % 50 = 0
-             |ORDER BY o_orderkey""".stripMargin)),
-
-    // UNPIVOT (melt): wide → long reshape, the inverse of q84's pivot —
-    // Spark's unpivot operator vs DuckDB's UNPIVOT clause.
-    Entry("q108_unpivot",
-      (s, d) => Tables.part(s, d)
-        .filter(col("p_partkey") <= 200)
-        .select(col("p_partkey"), col("p_name").as("name"),
-          col("p_brand").as("brand"), col("p_type").as("type"))
-        .unpivot(
-          ids = Array(col("p_partkey")),
-          values = Array(col("name"), col("brand"), col("type")),
-          variableColumnName = "attr", valueColumnName = "val")
-        .orderBy(col("p_partkey"), col("attr")),
-      Some("""SELECT p_partkey, attr, val FROM (
-             |  SELECT p_partkey, p_name AS name, p_brand AS brand, p_type AS type
-             |  FROM part WHERE p_partkey <= 200)
-             |UNPIVOT (val FOR attr IN (name, brand, type))
-             |ORDER BY p_partkey, attr""".stripMargin)),
-
-    // Islands-and-gaps: detect missing ranges in a key sequence (the data-
-    // quality check for "did the ingest drop a batch"). Bucketed: the
-    // lead() runs PARTITIONED (parallel); only the per-bucket min/max
-    // summary sorts globally — never a single-task pass over all keys.
-    // Small bucketSize here deliberately exercises the boundary path.
-    Entry("q109_sequence_gaps",
-      (s, d) => graft.ops.Profiling.sequenceGaps(
-        Tables.orders(s, d)
-          .filter(col("o_orderkey") % 7 =!= 3) // punch deterministic holes
-          .select(col("o_orderkey")),
-        "o_orderkey", bucketSize = 500L),
-      Some("""SELECT k + 1 AS gap_start, next_k - 1 AS gap_end,
-             |  next_k - k - 1 AS gap_len
-             |FROM (
-             |  SELECT k, lead(k, 1) OVER (ORDER BY k) AS next_k
-             |  FROM (SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 7 <> 3))
-             |WHERE next_k > k + 1
-             |ORDER BY gap_start""".stripMargin)),
-
-    // Statistical aggregates: correlation / covariance / spread per group —
-    // both engines run the same streaming co-moment recurrences; rounded to
-    // 4dp for cross-engine stability.
-    Entry("q110_stats_aggs",
-      (s, d) => Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qty_price"),
-          round(covar_samp(col("l_quantity"), col("l_extendedprice")), 2).as("covar_qp"),
-          round(stddev_samp(col("l_quantity")), 4).as("sd_qty"),
-          round(var_samp(col("l_quantity")), 4).as("var_qty"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag")),
-      Some("""SELECT l_returnflag,
-             |  round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price,
-             |  round(covar_samp(l_quantity, l_extendedprice), 2) AS covar_qp,
-             |  round(stddev_samp(l_quantity), 4) AS sd_qty,
-             |  round(var_samp(l_quantity), 4) AS var_qty,
-             |  count(*) AS n
-             |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
-
-    // FILTER-clause aggregation: per-group conditional aggregates without
-    // CASE scaffolding — one pass, every aggregate sees its own predicate.
-    Entry("q111_filtered_aggs",
-      (s, d) => {
-        Tables.orders(s, d).createOrReplaceTempView("ord_fa")
-        s.sql("""SELECT o_orderstatus,
-                |  count(*) AS n_all,
-                |  count(*) FILTER (WHERE o_totalprice > 200000) AS n_big,
-                |  round(sum(o_totalprice) FILTER (WHERE o_orderpriority = '1-URGENT'), 2)
-                |    AS urgent_total,
-                |  round(avg(o_totalprice) FILTER (WHERE o_orderpriority = '5-LOW'), 2)
-                |    AS low_avg
-                |FROM ord_fa GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-      },
-      Some("""SELECT o_orderstatus,
-             |  count(*) AS n_all,
-             |  count(*) FILTER (WHERE o_totalprice > 200000) AS n_big,
-             |  round(sum(o_totalprice) FILTER (WHERE o_orderpriority = '1-URGENT'), 2)
-             |    AS urgent_total,
-             |  round(avg(o_totalprice) FILTER (WHERE o_orderpriority = '5-LOW'), 2)
-             |    AS low_avg
-             |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
-
-    // Correlated EXISTS (decorrelates to a semi join — the SQL surface of
-    // q04's DataFrame form).
-    Entry("q112_exists",
-      (s, d) => {
-        Tables.customer(s, d).createOrReplaceTempView("cust_ex")
-        Tables.orders(s, d).createOrReplaceTempView("ord_ex")
-        s.sql("""SELECT c_custkey, c_name FROM cust_ex c
-                |WHERE EXISTS (
-                |  SELECT 1 FROM ord_ex o
-                |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000)
-                |ORDER BY c_custkey""".stripMargin)
-      },
-      Some("""SELECT c_custkey, c_name FROM customer c
-             |WHERE EXISTS (
-             |  SELECT 1 FROM orders o
-             |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000)
-             |ORDER BY c_custkey""".stripMargin)),
-
-    // Uncorrelated scalar subquery in the projection (one broadcast scalar
-    // shared by every row — no per-row re-evaluation).
-    Entry("q113_scalar_subquery",
-      (s, d) => {
-        Tables.orders(s, d).createOrReplaceTempView("ord_ss")
-        s.sql("""SELECT o_orderkey,
-                |  round(o_totalprice / (SELECT avg(o_totalprice) FROM ord_ss), 4)
-                |    AS rel_price
-                |FROM ord_ss WHERE o_orderkey % 40 = 0
-                |ORDER BY o_orderkey""".stripMargin)
-      },
-      Some("""SELECT o_orderkey,
-             |  round(o_totalprice / (SELECT avg(o_totalprice) FROM orders), 4)
-             |    AS rel_price
-             |FROM orders WHERE o_orderkey % 40 = 0
-             |ORDER BY o_orderkey""".stripMargin)),
 
     // Dense-core extraction: the 3-core of the co-purchase graph (iterative
     // peeling — not SQL-expressible, so no DuckDB oracle; correctness is
@@ -1004,41 +417,6 @@ object BreadthQueries {
              |  GROUP BY v.id)
              |SELECT id, scc FROM scc ORDER BY id""".stripMargin)),
 
-    // Markov transition matrix over user event streams: per user, events in
-    // (ts, event_id) order; count (from → to) adjacent pairs and the
-    // per-from-state transition probability. One window + two aggregations,
-    // all partitioned by small keys — behavioral analytics for the A6/A7
-    // query-pattern family.
-    Entry("q138_transitions",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        Tables.events(s, d)
-          .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-          .withColumn("next_type", lead(col("event_type"), 1).over(w))
-          .filter(col("next_type").isNotNull)
-          .groupBy(col("event_type").as("from_type"),
-            col("next_type").as("to_type"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("p", col("n") /
-            sum(col("n")).over(Window.partitionBy(col("from_type"))))
-          .orderBy(col("from_type"), col("to_type"))
-      },
-      Some("""WITH seq AS (
-             |  SELECT event_type,
-             |    lead(event_type) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS next_type
-             |  FROM events),
-             |cnt AS (
-             |  SELECT event_type AS from_type, next_type AS to_type,
-             |    count(*) AS n
-             |  FROM seq WHERE next_type IS NOT NULL
-             |  GROUP BY 1, 2)
-             |SELECT from_type, to_type, n,
-             |  n / (sum(n) OVER (PARTITION BY from_type)) AS p
-             |FROM cnt ORDER BY from_type, to_type""".stripMargin)),
-
     // Personalized PageRank: teleport mass restricted to 10 seed
     // vertices — "importance relative to THESE entities", the graph leg
     // of seeded retrieval (reference: graph expansion from matched
@@ -1106,38 +484,6 @@ object BreadthQueries {
            |$steps
            |SELECT id, rank FROM r$iters WHERE rank > 0.0 ORDER BY id""".stripMargin
       }),
-
-    // Behavioral trigram motifs: the most frequent 3-step event-type
-    // sequences across all user streams (the sequence-mining upgrade of
-    // q138's first-order transitions). Two leads over one user-partitioned
-    // window — sequences never leave their user's partition, counts are
-    // map-side combinable, top-25 is a heap.
-    Entry("q161_event_motifs",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        Tables.events(s, d)
-          .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-          .withColumn("t2", lead(col("event_type"), 1).over(w))
-          .withColumn("t3", lead(col("event_type"), 2).over(w))
-          .filter(col("t3").isNotNull)
-          .groupBy(col("event_type").as("t1"), col("t2"), col("t3"))
-          .agg(count(lit(1)).as("n"))
-          .orderBy(desc("n"), col("t1"), col("t2"), col("t3"))
-          .limit(25)
-      },
-      Some("""WITH seq AS (
-             |  SELECT event_type AS t1,
-             |    lead(event_type, 1) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS t2,
-             |    lead(event_type, 2) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS t3
-             |  FROM events)
-             |SELECT t1, t2, t3, count(*) AS n
-             |FROM seq WHERE t3 IS NOT NULL
-             |GROUP BY 1, 2, 3
-             |ORDER BY n DESC, t1, t2, t3 LIMIT 25""".stripMargin)),
 
     // Common-neighbor link prediction over the co-purchase graph: top 25
     // non-adjacent pairs by shared-neighbor count with the Jaccard

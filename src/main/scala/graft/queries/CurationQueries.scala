@@ -1,15 +1,12 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.VectorFunctions.cosineSim
-import graft.ops.{Curation, GraphAnalytics, Similarity, TextAnalysis}
+import graft.ops.{GraphAnalytics, Similarity}
 
-/** Corpus-curation and analytics breadth: Gopher-style rule gates,
-  * repetition and boilerplate signals, winnowing fingerprints, graph
-  * centrality, series autocorrelation, and SemDeDup-style cluster-scoped
-  * embedding dedup. Every entry is DuckDB-oracle-checked.
+/** Harmonic centrality, SemDeDup-style cluster-scoped embedding dedup and
+  * token-distribution divergence. Every entry is DuckDB-oracle-checked.
   */
 object CurationQueries {
 
@@ -18,91 +15,7 @@ object CurationQueries {
   private val tokSql =
     "list_filter(string_split(lower(text), ' '), x -> length(x) > 0)"
 
-  private def stopListSql: String =
-    TextAnalysis.langMarkers.values.flatten.toSeq
-      .distinct.sorted.map(m => s"'$m'").mkString("[", ", ", "]")
-
   def entries: Seq[Entry] = Seq(
-
-    // Gopher-style hard-rule quality gate (token-count band, mean word
-    // length band, stop-word floor, distinct-token floor). All gate inputs
-    // are single divisions of exact integer sums — bit-identical across
-    // engines, so the boolean can never flip; float32 only at the emit
-    // boundary. One shuffle-free projection over the corpus scan.
-    Entry("q175_gopher_gate",
-      (s, d) => Curation.gopherGate(Tables.documents(s, d), "doc_id", "text",
-          minTokens = 20, maxTokens = 80,
-          minMeanWordLen = 3.8, maxMeanWordLen = 4.6,
-          minStopHits = 2, minDistinctRatio = 0.45)
-        .orderBy(col("doc_id")),
-      Some(s"""WITH t AS (
-              |  SELECT doc_id, $tokSql AS tk FROM documents),
-              |m AS (
-              |  SELECT doc_id,
-              |    len(tk)::BIGINT AS n_tokens,
-              |    list_sum(list_transform(tk, x -> length(x)))::DOUBLE
-              |      / len(tk) AS mean_wlen,
-              |    len(list_filter(tk,
-              |      x -> list_contains($stopListSql, x)))::BIGINT AS stop_hits,
-              |    len(list_distinct(tk))::DOUBLE / len(tk) AS distinct_ratio
-              |  FROM t WHERE len(tk) > 0)
-              |SELECT doc_id, n_tokens, CAST(mean_wlen AS REAL) AS mean_wlen,
-              |  stop_hits, CAST(distinct_ratio AS REAL) AS distinct_ratio,
-              |  (n_tokens BETWEEN 20 AND 80
-              |    AND mean_wlen >= 3.8 AND mean_wlen <= 4.6
-              |    AND stop_hits >= 2 AND distinct_ratio >= 0.45) AS passed
-              |FROM m ORDER BY doc_id""".stripMargin)),
-
-    // Dominant-bigram coverage (Gopher's "fraction in most common n-gram"
-    // repetition signal): per doc, the most frequent word bigram and the
-    // share of bigram positions it occupies. Ties break lexicographically.
-    Entry("q176_top_ngram_fraction",
-      (s, d) => Curation.topNgramFraction(
-          Tables.documents(s, d), "doc_id", "text", n = 2)
-        .orderBy(col("doc_id")),
-      Some(s"""WITH t AS (
-              |  SELECT doc_id, $tokSql AS tk FROM documents
-              |  WHERE len($tokSql) >= 2),
-              |g AS (
-              |  SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS gram
-              |  FROM t, unnest(generate_series(1, len(tk) - 1)) AS u(i)),
-              |c AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-              |tot AS (SELECT doc_id, count(*) AS n_grams FROM g GROUP BY 1),
-              |top AS (
-              |  SELECT doc_id, gram, c FROM (
-              |    SELECT doc_id, gram, c, row_number() OVER (
-              |      PARTITION BY doc_id ORDER BY c DESC, gram) AS rn
-              |    FROM c) WHERE rn = 1)
-              |SELECT top.doc_id, gram AS top_gram, c AS top_count, n_grams,
-              |  CAST(c::DOUBLE / n_grams AS REAL) AS frac
-              |FROM top JOIN tot USING (doc_id)
-              |ORDER BY doc_id""".stripMargin)),
-
-    // Corpus-duplicated 3-token segments: the CCNet line-dedup signal for
-    // unstructured text — per doc, the fraction of non-overlapping
-    // segments whose text occurs in ≥ 2 distinct documents (template /
-    // boilerplate chrome). Shuffle keys are segment strings only.
-    Entry("q177_segment_boilerplate",
-      (s, d) => Curation.segmentBoilerplate(
-          Tables.documents(s, d), "doc_id", "text", segLen = 3)
-        .orderBy(col("doc_id")),
-      Some(s"""WITH t AS (
-              |  SELECT doc_id, $tokSql AS tk FROM documents
-              |  WHERE len($tokSql) >= 3),
-              |s AS (
-              |  SELECT doc_id,
-              |    array_to_string(tk[i * 3 + 1 : i * 3 + 3], ' ') AS seg
-              |  FROM t, unnest(generate_series(0,
-              |    CAST(len(tk) // 3 AS INT) - 1)) AS u(i)),
-              |df AS (
-              |  SELECT seg, count(*) AS seg_df
-              |  FROM (SELECT DISTINCT doc_id, seg FROM s) GROUP BY seg)
-              |SELECT s.doc_id, count(*) AS n_segments,
-              |  sum(CASE WHEN seg_df >= 2 THEN 1 ELSE 0 END)::BIGINT AS n_dup,
-              |  CAST(sum(CASE WHEN seg_df >= 2 THEN 1 ELSE 0 END)::DOUBLE
-              |    / count(*) AS REAL) AS dup_frac
-              |FROM s JOIN df USING (seg)
-              |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin)),
 
     // Harmonic centrality of three seed vertices on the deterministic
     // functional graph from q81 (k -> 2k mod m, k -> k+7 mod m):
@@ -151,54 +64,6 @@ object CurationQueries {
              |  CAST(sum(1.0 / dist) AS REAL) AS harmonic
              |FROM d WHERE dist > 0
              |GROUP BY seed ORDER BY seed""".stripMargin)),
-
-    // Lag-1 autocorrelation of the daily event-count series per type —
-    // the seasonality/trend-persistence probe of ingest monitoring.
-    // Pearson r from the five sums over (c_{t-1}, c_t) pairs; the sums are
-    // over INTEGER counts, hence exact in any order — r is bit-identical
-    // across engines before the float32 emit cast.
-    Entry("q179_autocorr",
-      (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("c"))
-        val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-        val pairs = daily
-          .withColumn("prev", lag(col("c"), 1).over(w))
-          .filter(col("prev").isNotNull)
-        pairs.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(col("prev")).as("sx"), sum(col("c")).as("sy"),
-            sum(col("prev") * col("c")).as("sxy"),
-            sum(col("prev") * col("prev")).as("sxx"),
-            sum(col("c") * col("c")).as("syy"))
-          .select(col("event_type"), col("n_pairs"),
-            ((col("n_pairs") * col("sxy") - col("sx") * col("sy"))
-              .cast("double") /
-              sqrt((col("n_pairs") * col("sxx") - col("sx") * col("sx"))
-                .cast("double") *
-                (col("n_pairs") * col("syy") - col("sy") * col("sy"))
-                  .cast("double")))
-              .cast("float").as("r1"))
-          .orderBy(col("event_type"))
-      },
-      Some("""WITH daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS c
-             |  FROM events GROUP BY 1, 2),
-             |p AS (
-             |  SELECT event_type, c,
-             |    lag(c, 1) OVER (PARTITION BY event_type ORDER BY day) AS prev
-             |  FROM daily),
-             |s AS (
-             |  SELECT event_type, count(*) AS n_pairs,
-             |    sum(prev) AS sx, sum(c) AS sy, sum(prev * c) AS sxy,
-             |    sum(prev * prev) AS sxx, sum(c * c) AS syy
-             |  FROM p WHERE prev IS NOT NULL GROUP BY 1)
-             |SELECT event_type, n_pairs,
-             |  CAST((n_pairs * sxy - sx * sy)::DOUBLE
-             |    / sqrt((n_pairs * sxx - sx * sx)::DOUBLE
-             |         * (n_pairs * syy - sy * sy)::DOUBLE) AS REAL) AS r1
-             |FROM s ORDER BY event_type""".stripMargin)),
 
     // SemDeDup (Abbas et al. 2023 shape): embedding dedup scoped to IVF
     // cells — assign every vector to its nearest centroid, then find
@@ -249,38 +114,6 @@ object CurationQueries {
              |   * sqrt(list_sum(list_transform(b.embedding,
              |       x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.35
              |ORDER BY vec_id""".stripMargin)),
-
-    // Winnowing fingerprint overlap (Schleimer et al., SIGMOD 2003): word
-    // 3-shingle hashes, window w=4 minima, distinct fingerprints per doc,
-    // then pairs sharing ≥ 2 informative fingerprints (df-capped inverted
-    // index — the stop-fingerprint cap is what bounds the self-join).
-    Entry("q181_winnowing_pairs",
-      (s, d) => {
-        val fps = Curation.winnowingFingerprints(
-          Tables.documents(s, d), "doc_id", "text", k = 3, w = 4)
-        Curation.winnowingPairs(fps, minShared = 2, maxFpDf = 20)
-          .orderBy(col("doc_a"), col("doc_b"))
-      },
-      Some(s"""WITH t AS (
-              |  SELECT doc_id, $tokSql AS tk FROM documents),
-              |sh AS (
-              |  SELECT doc_id, i - 1 AS pos,
-              |    ('0x' || substr(md5(tk[i] || ' ' || tk[i + 1] || ' '
-              |      || tk[i + 2]), 1, 15))::BIGINT AS h
-              |  FROM t, unnest(generate_series(1, len(tk) - 2)) AS u(i)
-              |  WHERE len(tk) >= 3),
-              |w AS (
-              |  SELECT doc_id, pos, min(h) OVER (PARTITION BY doc_id
-              |    ORDER BY pos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS minh
-              |  FROM sh),
-              |f AS (SELECT DISTINCT doc_id, minh AS fp FROM w WHERE pos >= 3),
-              |inf AS (SELECT fp FROM (
-              |  SELECT fp, count(*) AS df FROM f GROUP BY 1) WHERE df <= 20),
-              |k AS (SELECT f.doc_id, f.fp FROM f JOIN inf USING (fp))
-              |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-              |FROM k a JOIN k b ON a.fp = b.fp AND a.doc_id < b.doc_id
-              |GROUP BY 1, 2 HAVING count(*) >= 2
-              |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // Pairwise Jensen–Shannon divergence between source-domain token
     // distributions — the corpus-drift monitor ("did crawl batch B change
@@ -357,58 +190,7 @@ object CurationQueries {
               |       THEN 0.5 * qq * ln(2.0 * qq / (pp + qq)) ELSE 0.0 END))
               |    AS REAL) AS js
               |FROM grid GROUP BY 1, 2
-              |ORDER BY source_a, source_b""".stripMargin)),
+              |ORDER BY source_a, source_b""".stripMargin))
 
-    // SIF-weighted retrieval (V5 pooling upgrade): token vectors scaled by
-    // a/(a + p(token)) before the fold (Arora et al. 2017), so frequent
-    // tokens stop drowning informative ones — then exact cosine top-20
-    // against a SIF-embedded query. The frequency map is a vocabulary-
-    // bounded collect (top-10k cap — the IVF-centroid pattern: broadcast
-    // side is capped, never corpus-sized); the oracle recomputes the
-    // corpus frequencies, BOTH embeddings (bit-exact float32 fold via
-    // sifEmbedCtes), and the ranked cut in SQL.
-    Entry("q188_sif_knn",
-      (s, d) => {
-        import s.implicits._
-        val qtext = "fast hash join merge"
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val tokCol = filter(split(lower(col("text")), "\\s+"),
-          w => length(w) > 0)
-        val tok = docs.select(explode(tokCol).as("tk"))
-        val total = tok.count()
-        val freq = tok.groupBy(col("tk")).agg(count(lit(1)).as("c"))
-          .orderBy(desc("c"), asc("tk")).limit(10000)
-          .collect().map(r => r.getString(0) -> r.getLong(1).toDouble / total)
-          .toMap
-        val embedder = new graft.engine.SifEmbedder(64, 0.01, freq)
-        val emb = docs.as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) => (id, embedder.embed(t)) })
-          .toDF("doc_id", "emb")
-        val query = Seq(Tuple1(embedder.embed(qtext))).toDF("qvec")
-        Similarity.knnCosine(emb, query, "doc_id", "emb",
-          k = 20, threshold = 0.15)
-      },
-      Some {
-        val qtext = "fast hash join merge"
-        s"""WITH tokall AS (
-           |  SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-           |    x -> x <> '')) AS tk
-           |  FROM documents),
-           |tot AS (SELECT count(*) AS n FROM tokall),
-           |freq AS (
-           |  SELECT tk, count(*)::DOUBLE / (SELECT n FROM tot) AS p
-           |  FROM tokall GROUP BY tk
-           |  ORDER BY count(*) DESC, tk LIMIT 10000),
-           |dsrc AS (SELECT doc_id AS id, text AS txt FROM documents),
-           |qsrc AS (SELECT 0 AS id, '$qtext' AS txt),
-           |${OracleSql.sifEmbedCtes("dsrc", 64, "demb", "0.01", "freq")},
-           |${OracleSql.sifEmbedCtes("qsrc", 64, "qemb", "0.01", "freq")},
-           |scored AS (
-           |  SELECT d.id AS doc_id,
-           |    round(${OracleSql.cosine("d.emb", "q.emb")}, 4) AS score
-           |  FROM demb d CROSS JOIN qemb q)
-           |SELECT doc_id, score FROM scored WHERE score >= 0.15
-           |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
-      })
   )
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables
@@ -9,13 +9,12 @@ import graft.ast._
 import graft.domain.Schemas.{Memory, Message}
 import graft.engine.{HashEmbedder, Ingest, Search}
 import graft.engine.Search.SearchRequest
-import graft.multimodal.Multimodal
 import graft.ops.Retrieval.Principal
 import graft.streaming.Sessions
 
 /** End-to-end domain-pipeline queries over the driver tables: the flagship
   * search composition, session batch analysis, the entity-resolution
-  * cascade, multimodal feature extraction, and the AST compiler. The AST
+  * cascade, and the AST compiler. The AST
   * query is DuckDB-oracle-checked; the rest are deterministic but not
   * SQL-expressible (hash embeddings, stateful folds) → rows-only checks.
   */
@@ -238,35 +237,6 @@ object DomainPipelineQueries {
               |  JOIN fz ON fz.name = b.name)
               |GROUP BY resolution ORDER BY resolution""".stripMargin)),
 
-    // Multimodal: documents bytes as opaque blobs → partition-wise feature
-    // extraction (decode stub, real batch plumbing).
-    Entry("q50_multimodal_features",
-      (s, d) => {
-        import s.implicits._
-        val media = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .map { case (id, text) =>
-            Multimodal.MediaRow(s"media$id", Seq("image", "audio", "video")((id % 3).toInt),
-              text.getBytes("UTF-8"),
-              Multimodal.MediaMeta("application/octet-stream", 64, 48, 1000L * (id % 10 + 1), 0))
-          }
-        Multimodal.extractFeatures(s, media)
-          .toDF()
-          .select(col("media_id"), col("kind"), col("feature_dim"), col("decode_ok"))
-          .orderBy(col("media_id"))
-      },
-      // The decode stub is deterministic on the byte payload: decode_ok ⇔
-      // non-empty bytes, feature_dim is the decoder's fixed 32 either way —
-      // so the plumbing contract (schema, per-kind routing, failure rows
-      // kept) is oracle-checkable even with the codec stubbed.
-      Some("""SELECT 'media' || CAST(doc_id AS VARCHAR) AS media_id,
-             |  CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
-             |       WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-             |  CAST(32 AS INT) AS feature_dim,
-             |  octet_length(CAST(text AS BLOB)) > 0 AS decode_ok
-             |FROM documents ORDER BY media_id""".stripMargin)),
-
     // §2.11: the constrained query AST compiled to a DataFrame plan —
     // (m:Customer)-[r:PLACED]->(n:Order) WHERE n.status='O' RETURN ids.
     // Oracle = the equivalent relational join, so the COMPILER itself is
@@ -299,106 +269,6 @@ object DomainPipelineQueries {
              |FROM orders JOIN customer ON c_custkey = o_custkey
              |WHERE o_orderstatus = 'O' AND c_mktsegment IN ('BUILDING', 'MACHINERY')
              |ORDER BY m_id, n_id""".stripMargin)),
-
-    // V4: property-vector search — semantic entity lookup over the secondary
-    // node_properties space (property_indexing_service.py:61-1279). The
-    // corpus is built THROUGH the indexability classifier: the schema half
-    // admits required enum-free string properties (name/size/retired; the
-    // enum'd category is schema-excluded), the value half then drops
-    // deterministic values (numeric sizes, boolean 'retired') — so only
-    // semantic names get vectors, exactly the reference's guard against
-    // embedding every integer at corpus scale. Embedding runs as a
-    // mapPartitions batch stage (one embedder per partition, the
-    // production batch shape) and the oracle reproduces classifier +
-    // HashEmbedder bit-exactly in SQL.
-    Entry("q52_property_search",
-      (s, d) => {
-        import graft.engine.SchemaRegistry
-        import graft.engine.SchemaRegistry.{NodeTypeDef, PropertyDef, UserSchema}
-        import graft.functions.VectorFunctions._
-        import s.implicits._
-        val schema = SchemaRegistry.transition(SchemaRegistry.register(
-          UserSchema("s-prop", "prop-index", nodeTypes = Map("Part" -> NodeTypeDef(
-            properties = Map(
-              "name"     -> PropertyDef("string", required = true),
-              "size"     -> PropertyDef("string", required = true),
-              "retired"  -> PropertyDef("string", required = true),
-              "category" -> PropertyDef("string", required = true,
-                enumValues = Seq("SM CASE", "MED BOX"))),
-            requiredProperties = Seq("name", "size", "retired", "category"))))),
-          SchemaRegistry.Status.Active)
-        // the REAL pipeline operator: nodes -> schema+value classifier ->
-        // mapPartitions-embedded node_properties corpus (one embedder per
-        // partition), then dedup values and score
-        val nodes = Tables.part(s, d).select(
-          concat(lit("pt"), col("p_partkey")).as("node_id"),
-          lit("Part").as("label"),
-          map(
-            lit("name"), col("p_name"),
-            lit("size"), col("p_size").cast("string"),
-            lit("retired"), lit("false"),
-            lit("category"), col("p_type")).as("properties"))
-        val corpus = graft.engine.PropertyIndexing.buildPropertyCorpus(
-          s, nodes, Seq(schema), new HashEmbedder(32))
-
-        val qvec = typedLit(new HashEmbedder(32).embed("small shiny widget"))
-        corpus
-          .dropDuplicates("property_name", "property_value")
-          .withColumn("score", cosineSim(col("embedding"), qvec))
-          .select(col("property_name"), col("property_value"), col("score"))
-          .orderBy(desc("score"), col("property_value"))
-          .limit(10)
-      },
-      Some {
-        val q = OracleSql.vecLit(new HashEmbedder(32).embed("small shiny widget"))
-        s"""WITH pv0 AS (
-           |  SELECT DISTINCT property_name, property_value FROM (
-           |    SELECT 'name' AS property_name, p_name AS property_value FROM part
-           |    UNION ALL SELECT 'size', CAST(p_size AS VARCHAR) FROM part
-           |    UNION ALL SELECT 'retired', 'false' FROM part
-           |    UNION ALL SELECT 'category', p_type FROM part)
-           |  WHERE property_name IN ('name', 'size', 'retired')
-           |    AND ${OracleSql.shouldIndexValue("property_value")}),
-           |pv AS (
-           |  SELECT row_number() OVER (ORDER BY property_name, property_value) AS id,
-           |    property_name, property_value, property_value AS txt
-           |  FROM pv0),
-           |${OracleSql.embedCtes("pv", 32, "pve")}
-           |SELECT property_name, property_value,
-           |  ${OracleSql.cosine("emb", q)} AS score
-           |FROM pve JOIN pv USING (id)
-           |ORDER BY score DESC, property_value LIMIT 10""".stripMargin
-      }),
-
-    // A9 (beyond parity, free via Catalyst): ROLLUP aggregation with
-    // subtotal rows — grouping-set machinery at scale.
-    Entry("q53_rollup_agg",
-      (s, d) => Tables.lineitem(s, d)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")),
-      Some("""SELECT l_returnflag, l_linestatus, count(*) AS n,
-             |  round(sum(l_quantity), 2) AS sum_qty
-             |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-             |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)),
-
-    // A9: sketch-based distinct (HLL++) next to the exact count — the 100 TB
-    // cardinality path. The raw sketch estimate is engine-specific, so the
-    // oracle-compared output carries the exact count plus a BOOLEAN asserting
-    // the sketch landed within 5× its configured rsd (1%) — the sketch stays
-    // in the measured plan and the check is SQL-expressible (always TRUE).
-    Entry("q54_approx_distinct",
-      (s, d) => Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(approx_count_distinct(col("l_partkey"), 0.01).as("approx_parts"),
-          countDistinct(col("l_partkey")).as("exact_parts"))
-        .select(col("l_returnflag"), col("exact_parts"),
-          (abs(col("approx_parts") - col("exact_parts")) <=
-            col("exact_parts") * 0.05).as("approx_ok"))
-        .orderBy(col("l_returnflag")),
-      Some("""SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts,
-             |  TRUE AS approx_ok
-             |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // The COMPLETE §3.1 fused read path (Search.searchFused): vector KNN ∪
     // compiled graph query with neo-default 0.7 scores, grouped-memory

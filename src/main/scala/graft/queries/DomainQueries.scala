@@ -1,17 +1,14 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.{GraphOps, Retrieval}
+import graft.ops.Retrieval
 import graft.ops.Retrieval._
 
-/** The reference's retrieval/graph domain operators exercised on the driver
-  * tables: ACL filtering (F1), typed metadata filters (F4), 2-hop traversal
-  * (J3), pattern discovery (A7), fuzzy entity joins (J7), score fusion (W3),
-  * stratified sampling (W1/W2), recency fallback (V3/W6), watermark delta
-  * (T1), grouped-memory expansion (V6), session windows (§2.10).
+/** The reference's retrieval domain operators exercised on the test-data
+  * tables: ACL filtering (F1), typed metadata filters (F4), fuzzy entity
+  * joins (J7), score fusion (W3), stratified sampling (W1/W2).
   */
 object DomainQueries {
 
@@ -35,20 +32,6 @@ object DomainQueries {
           concat(lit("p"), col("l_partkey")).as("dst"), lit("CONTAINS").as("rel_type")))
     (nodes, edges)
   }
-
-  private val graphSqlCtes: String =
-    """nodes AS (
-      |  SELECT 'c' || CAST(c_custkey AS VARCHAR) AS node_id, 'Customer' AS label FROM customer
-      |  UNION ALL
-      |  SELECT 'o' || CAST(o_orderkey AS VARCHAR), 'Order' FROM orders
-      |  UNION ALL
-      |  SELECT 'p' || CAST(p_partkey AS VARCHAR), 'Part' FROM part),
-      |edges AS (
-      |  SELECT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-      |         'o' || CAST(o_orderkey AS VARCHAR) AS dst, 'PLACED' AS rel_type FROM orders
-      |  UNION ALL
-      |  SELECT 'o' || CAST(l_orderkey AS VARCHAR),
-      |         'p' || CAST(l_partkey AS VARCHAR), 'CONTAINS' FROM lineitem)""".stripMargin
 
   def entries: Seq[Entry] = Seq(
 
@@ -93,42 +76,6 @@ object DomainQueries {
              |WHERE CAST(json_extract_string(props, '$.k') AS DOUBLE) >= 50.0
              |  AND value BETWEEN 10 AND 100
              |ORDER BY event_id""".stripMargin)),
-
-    // J3: 2-hop traversal with a dst-side property predicate
-    // (chat_gpt_completion.py:5743-5886) — relational self-joins.
-    Entry("q29_graph_2hop",
-      (s, d) => {
-        val (nodes, edges) = graph(s, d)
-        GraphOps.twoHop(nodes, edges,
-            srcPred = col("label") === "Customer",
-            rel1Pred = col("rel_type") === "PLACED",
-            midPred = col("label") === "Order",
-            rel2Pred = col("rel_type") === "CONTAINS",
-            dstPred = col("label") === "Part" && col("psize") > 40)
-          .groupBy(col("src_id"))
-          .agg(countDistinct(col("dst_id")).as("n_parts"))
-          .orderBy(col("src_id"))
-      },
-      Some("""SELECT src_id, count(DISTINCT dst_id) AS n_parts FROM (
-             |  SELECT 'c' || CAST(o.o_custkey AS VARCHAR) AS src_id,
-             |         'p' || CAST(l.l_partkey AS VARCHAR) AS dst_id
-             |  FROM orders o
-             |  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-             |  JOIN part p ON p.p_partkey = l.l_partkey
-             |  WHERE p.p_size > 40)
-             |GROUP BY src_id ORDER BY src_id""".stripMargin)),
-
-    // A7: schema/pattern discovery — distinct (srcLabel, rel, dstLabel)
-    // triples with counts (memory_graph.py:5049-5136).
-    Entry("q30_pattern_discovery",
-      (s, d) => { val (nodes, edges) = graph(s, d); GraphOps.patternCounts(nodes, edges) },
-      Some(s"""WITH $graphSqlCtes
-              |SELECT ns.label AS src_label, rel_type, nd.label AS dst_label,
-              |  count(*) AS n
-              |FROM edges
-              |JOIN nodes ns ON ns.node_id = edges.src
-              |JOIN nodes nd ON nd.node_id = edges.dst
-              |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
 
     // J7 fuzzy: blocked levenshtein entity join (memory_graph.py:3090's
     // fuzzy match) — block on (noun, brand) so the quadratic stays local.
@@ -201,117 +148,6 @@ object DomainQueries {
              |  WHEN 'signup' THEN 5 ELSE 3 END
              |ORDER BY event_type, value DESC, event_id""".stripMargin)),
 
-    // V3/W6: filter-only recency fallback when KNN is empty
-    // (memory_graph.py:8327-8437).
-    Entry("q34_recency_fallback",
-      (s, d) => Tables.events(s, d)
-        .filter(col("event_type") === "error")
-        .select(col("event_id"), col("ts"))
-        .orderBy(desc("ts"), col("event_id"))
-        .limit(20),
-      Some("""SELECT event_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-             |WHERE event_type = 'error'
-             |ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id LIMIT 20""".stripMargin)),
-
-    // T1: strict watermark delta fetch (memory_management.py:4172-4228).
-    Entry("q35_watermark_delta",
-      (s, d) => Tables.events(s, d)
-        .filter(col("ts") > lit("2024-01-15 12:00:00").cast("timestamp"))
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .orderBy(col("event_id")),
-      Some("""SELECT event_id, user_id, event_type, value FROM events
-             |WHERE ts > TIMESTAMP '2024-01-15 12:00:00'
-             |ORDER BY event_id""".stripMargin)),
-
-    // V6: grouped-memory expansion — explode related ids, union, dedupe
-    // (memory_graph.py:6200-6222).
-    Entry("q36_grouped_expand",
-      (s, d) => {
-        val g = Tables.events(s, d)
-          .filter(get_json_object(col("props"), "$.k").cast("int") > 80)
-          .select(col("event_id"),
-            array(col("event_id") * 2, col("event_id") * 2 + 1).as("related"))
-        g.select(explode(col("related")).as("id"))
-          .union(g.select(col("event_id").as("id")))
-          .distinct()
-          .orderBy(col("id"))
-      },
-      Some("""WITH g AS (SELECT event_id FROM events
-             |  WHERE CAST(json_extract_string(props, '$.k') AS INT) > 80)
-             |SELECT DISTINCT id FROM (
-             |  SELECT unnest([event_id * 2, event_id * 2 + 1]) AS id FROM g
-             |  UNION ALL
-             |  SELECT event_id FROM g)
-             |ORDER BY id""".stripMargin)),
-
-    // §2.10 session windows: gap-based sessionization (60-min gap) via lag —
-    // batch twin of the streaming session pipeline (T2).
-    Entry("q37_sessionize",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        Tables.events(s, d)
-          .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-          .withColumn("new_sess",
-            when(col("prev_ts").isNull ||
-              col("ts") > col("prev_ts") + expr("INTERVAL 60 MINUTES"), 1).otherwise(0))
-          .groupBy(col("user_id"))
-          .agg(sum(col("new_sess")).as("n_sessions"), count(lit(1)).as("n_events"))
-          .orderBy(col("user_id"))
-      },
-      Some("""SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions,
-             |  count(*) AS n_events
-             |FROM (
-             |  SELECT user_id, CASE WHEN prev_ts IS NULL
-             |      OR ts > prev_ts + INTERVAL 60 MINUTE THEN 1 ELSE 0 END AS new_sess
-             |  FROM (SELECT user_id, ts, event_id,
-             |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-             |    FROM events))
-             |GROUP BY user_id ORDER BY user_id""".stripMargin)),
-
-    // As-of join (SURVEY J8, the feature-store staple): for each purchase,
-    // the latest view at-or-before it by the same user. Implemented as a
-    // single-shuffle carry-forward window, never an inequality join; the
-    // oracle uses DuckDB's native ASOF LEFT JOIN.
-    Entry("q65_asof_join",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        graft.ops.Temporal.asofLatest(
-            left = ev.filter(col("event_type") === "purchase"),
-            right = ev.filter(col("event_type") === "view"),
-            keyCol = "user_id", tsCol = "ts", idCol = "event_id")
-          .select(col("event_id"), col("asof_ts").as("asof_view_ts"))
-          .orderBy(col("event_id"))
-      },
-      Some("""SELECT p.event_id, CAST(v.ts AS TIMESTAMP) AS asof_view_ts
-             |FROM (SELECT event_id, user_id, ts FROM events
-             |      WHERE event_type = 'purchase') p
-             |ASOF LEFT JOIN (SELECT user_id, ts FROM events
-             |                WHERE event_type = 'view') v
-             |  ON p.user_id = v.user_id AND v.ts <= p.ts
-             |ORDER BY p.event_id""".stripMargin)),
-
-    // Skew-defeating join: selective salting of heavy-hitter keys, plain
-    // shuffle join for the tail. Salting only reroutes rows, so the result
-    // (here: revenue by order priority through a lineitem⋈orders join) must
-    // hash-match the plain-join oracle exactly — that IS the guarantee.
-    // heavyThreshold=5 makes the heavy branch non-empty at every SF
-    // (lineitem has up to 7 rows per order), exercising both branches.
-    Entry("q66_skew_join",
-      (s, d) => {
-        val joined = graft.ops.Skew.skewJoin(
-          Tables.lineitem(s, d), Tables.orders(s, d),
-          leftKey = "l_orderkey", rightKey = "o_orderkey",
-          saltFactor = 4, heavyThreshold = 5)
-        joined.groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("n_items"),
-            sum(col("l_quantity").cast("long")).as("sum_qty"))
-          .orderBy(col("o_orderpriority"))
-      },
-      Some("""SELECT o_orderpriority, count(*) AS n_items,
-             |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-             |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-             |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
-
     // Range join (point-in-interval): clicks landing inside the
     // 4-hour attribution window after each error by the same user. Bin-bucketed
     // equi-join (Temporal.rangeJoin) — the containment predicate is a
@@ -339,72 +175,6 @@ object DomainQueries {
              |      WHERE event_type = 'click') c
              |  ON c.user_id = e.user_id
              | AND c.ts >= e.ts AND c.ts < e.ts + INTERVAL 240 MINUTE
-             |GROUP BY e.event_id ORDER BY e.event_id""".stripMargin)),
+             |GROUP BY e.event_id ORDER BY e.event_id""".stripMargin)))
 
-    // SCD Type-2 dimension build: one versioned row per event_type change
-    // per user, [valid_from, valid_to) validity, open version flagged
-    // current. Single shuffle on the key — change-detect lag and validity
-    // lead share the window partitioning.
-    Entry("q73_scd2",
-      (s, d) => graft.ops.Temporal.scd2(Tables.events(s, d),
-          keyCol = "user_id", tsCol = "ts", orderCol = "event_id",
-          attrCols = Seq("event_type"))
-        .orderBy(col("user_id"), col("valid_from")),
-      Some("""WITH ordered AS (
-             |  SELECT user_id, ts, event_id, event_type,
-             |    lag(event_type) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS prev_type,
-             |    row_number() OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS rn
-             |  FROM events),
-             |changed AS (
-             |  -- rn=1 (not prev IS NULL) + IS DISTINCT FROM: mirrors the
-             |  -- operator's null-safe <=> for null attribute values
-             |  SELECT user_id, ts, event_id, event_type FROM ordered
-             |  WHERE rn = 1 OR event_type IS DISTINCT FROM prev_type)
-             |SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS valid_from,
-             |  CAST(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-             |    AS TIMESTAMP) AS valid_to,
-             |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-             |    IS NULL AS is_current
-             |FROM changed ORDER BY user_id, valid_from""".stripMargin)),
-
-    // Snapshot reconciliation: classify keys added / removed / changed
-    // between two versions of orders (synthetic churn: %11 keys absent from
-    // the old snapshot, %17 absent from the new, %13 repriced). One
-    // full-outer join; unchanged keys never leave the join.
-    Entry("q74_snapshot_diff",
-      (s, d) => {
-        val orders = Tables.orders(s, d)
-        val oldSnap = orders.filter(col("o_orderkey") % 11 =!= 0)
-          .withColumn("o_totalprice",
-            when(col("o_orderkey") % 13 === 0, col("o_totalprice") + 10)
-              .otherwise(col("o_totalprice")))
-        val newSnap = orders.filter(col("o_orderkey") % 17 =!= 0)
-        graft.ops.Snapshots.diff(oldSnap, newSnap,
-            keyCols = Seq("o_orderkey"),
-            compareCols = Seq("o_totalprice", "o_orderstatus"))
-          .orderBy(col("o_orderkey"))
-      },
-      Some("""WITH oldv AS (
-             |  SELECT o_orderkey,
-             |    CASE WHEN o_orderkey % 13 = 0 THEN o_totalprice + 10
-             |         ELSE o_totalprice END AS p,
-             |    o_orderstatus AS st, true AS oldp
-             |  FROM orders WHERE o_orderkey % 11 <> 0),
-             |newv AS (
-             |  SELECT o_orderkey, o_totalprice AS p, o_orderstatus AS st,
-             |    true AS newp
-             |  FROM orders WHERE o_orderkey % 17 <> 0)
-             |SELECT o_orderkey,
-             |  CASE WHEN oldp IS NULL THEN 'added'
-             |       WHEN newp IS NULL THEN 'removed'
-             |       WHEN (n.p, n.st) IS DISTINCT FROM (o.p, o.st)
-             |         THEN 'changed' END AS change_type
-             |FROM newv n FULL OUTER JOIN oldv o USING (o_orderkey)
-             |WHERE CASE WHEN oldp IS NULL THEN 'added'
-             |           WHEN newp IS NULL THEN 'removed'
-             |           WHEN (n.p, n.st) IS DISTINCT FROM (o.p, o.st)
-             |             THEN 'changed' END IS NOT NULL
-             |ORDER BY o_orderkey""".stripMargin)))
 }

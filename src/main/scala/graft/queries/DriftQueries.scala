@@ -3,204 +3,23 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Fns
-import graft.ops.PrefixSum
 
-/** Round-5 set: the statistical-testing suite a training-data pipeline
-  * runs between corpus snapshots — distribution drift (KS, Mann–Whitney,
-  * χ²/Cramér's V, Jensen–Shannon), multiple-testing control (Benjamini–
-  * Hochberg), a deterministic permutation test, and the generation-quality
-  * diagnostics (n-gram novelty, distinct-n diversity). Every ranked or
-  * cumulative step over a corpus-growing relation runs through the
-  * two-pass BSP prefix primitives (ops/PrefixSum.scala) — no single-task
-  * global sorts. Every entry is DuckDB-oracle-checked; transcendental
-  * outputs (ln/exp) emit float32 per the repo-wide discipline, while
-  * division/sqrt chains over exact integers emit full doubles (IEEE ops
-  * on identical inputs are bit-identical across engines).
+/** Statistics a training-data pipeline runs between corpus snapshots, over
+  * the engine's text, dedup, similarity and graph operators: token
+  * distribution drift (Jensen–Shannon), generation-quality diagnostics
+  * (n-gram novelty, distinct-n diversity), readability, burstiness and
+  * concentration, and embedding and graph diagnostics. Every entry is
+  * DuckDB-oracle-checked; transcendental outputs (ln/exp) emit float32 per
+  * the repo-wide discipline, while division/sqrt chains over exact
+  * integers emit full doubles (IEEE ops on identical inputs are
+  * bit-identical across engines).
   *
-  * The a/b population split used throughout is the source-name length
-  * (src0–src9 vs src10–src19) for documents and an md5-parity user split
-  * for events — deterministic, engine-portable (md5 is bit-identical
-  * everywhere; no engine-specific hash enters an oracle-compared value).
+  * The a/b population split is the source-name length (src0–src9 vs
+  * src10–src19) — deterministic and engine-portable.
   */
 object DriftQueries {
 
   def entries: Seq[Entry] = Seq(
-
-    // Two-sample Kolmogorov–Smirnov over the document-length distribution
-    // of corpus halves: D = max |F_a(x) − F_b(x)| over the observed
-    // support — the standard drift gate between corpus snapshots. Both
-    // ECDFs are exact cumulative counts via the two-pass BSP prefix sum
-    // over the (corpus-growing) distinct-value relation; D is a max of
-    // single divisions of exact integers — bit-identical across engines.
-    Entry("q280_ks_test",
-      (s, d) => {
-        val side = when(length(col("source")) === 4, lit("a")).otherwise(lit("b"))
-        val g = Tables.documents(s, d)
-          .select(col("n_chars"), side.as("side"))
-          .groupBy(col("n_chars"))
-          .agg(sum(when(col("side") === "a", 1L).otherwise(0L)).as("ca"),
-            sum(when(col("side") === "b", 1L).otherwise(0L)).as("cb"))
-        val cum = PrefixSum.globalRunningSum(
-          PrefixSum.globalRunningSum(g, Seq(col("n_chars")),
-              col("ca").cast("decimal(20,0)"))
-            .withColumnRenamed("running", "cum_a"),
-          Seq(col("n_chars")), col("cb").cast("decimal(20,0)"))
-          .withColumnRenamed("running", "cum_b")
-        val tot = g.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-        cum.crossJoin(broadcast(tot))
-          .agg(max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b"),
-            max(abs(col("cum_a").cast("double") / col("n_a") -
-              col("cum_b").cast("double") / col("n_b"))).as("ks_d"))
-      },
-      Some("""WITH s AS (
-             |  SELECT n_chars,
-             |    CASE WHEN length(source) = 4 THEN 'a' ELSE 'b' END AS side
-             |  FROM documents),
-             |g AS (
-             |  SELECT n_chars,
-             |    CAST(sum(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-             |    CAST(sum(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS cb
-             |  FROM s GROUP BY 1),
-             |c AS (
-             |  SELECT
-             |    CAST(sum(ca) OVER (ORDER BY n_chars) AS BIGINT) AS cum_a,
-             |    CAST(sum(cb) OVER (ORDER BY n_chars) AS BIGINT) AS cum_b
-             |  FROM g),
-             |t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-             |             CAST(sum(cb) AS BIGINT) AS n_b FROM g)
-             |SELECT max(t.n_a) AS n_a, max(t.n_b) AS n_b,
-             |  max(abs(c.cum_a::DOUBLE / t.n_a - c.cum_b::DOUBLE / t.n_b))
-             |    AS ks_d
-             |FROM c CROSS JOIN t""".stripMargin)),
-
-    // Mann–Whitney U (Wilcoxon rank-sum) with midrank tie handling and the
-    // tie-corrected normal approximation — the nonparametric location test
-    // for "did the new crawl shift document lengths?". All rank machinery
-    // is integer-exact WITHOUT materializing per-row ranks: 2·R_a =
-    // Σ_v ca_v·(2·cumBefore_v + ct_v + 1) over the distinct-value relation,
-    // whose cumulative runs through the BSP prefix sum. The z chain is
-    // division/sqrt over exact integers — full-double emit.
-    Entry("q281_mann_whitney",
-      (s, d) => {
-        val side = when(length(col("source")) === 4, lit("a")).otherwise(lit("b"))
-        val g = Tables.documents(s, d)
-          .select(col("n_chars"), side.as("side"))
-          .groupBy(col("n_chars"))
-          .agg(sum(when(col("side") === "a", 1L).otherwise(0L)).as("ca"),
-            sum(when(col("side") === "b", 1L).otherwise(0L)).as("cb"))
-          .withColumn("ct", col("ca") + col("cb"))
-        val cum = PrefixSum.globalRunningSum(g, Seq(col("n_chars")),
-            col("ct").cast("decimal(20,0)"))
-          .withColumn("cum", col("running").cast("long")).drop("running")
-        val a = cum.agg(
-          sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
-          sum(col("ca") * (lit(2L) * (col("cum") - col("ct")) + col("ct") + 1L))
-            .as("two_ra"),
-          sum(col("ct") * col("ct") * col("ct") - col("ct")).as("tie_sum"))
-        val uA = (col("two_ra").cast("double") -
-          col("na").cast("double") * (col("na") + lit(1L))) / lit(2.0)
-        val nD = (col("na") + col("nb")).cast("double")
-        val sigma = sqrt(col("na").cast("double") * col("nb") / lit(12.0) *
-          ((col("na") + col("nb") + lit(1L)).cast("double") -
-            col("tie_sum").cast("double") / (nD * (col("na") + col("nb") - lit(1L)))))
-        a.select(col("na").as("n_a"), col("nb").as("n_b"),
-          uA.as("u_a"),
-          ((uA - col("na").cast("double") * col("nb") / lit(2.0)) / sigma).as("z"))
-      },
-      Some("""WITH s AS (
-             |  SELECT n_chars,
-             |    CASE WHEN length(source) = 4 THEN 'a' ELSE 'b' END AS side
-             |  FROM documents),
-             |g AS (
-             |  SELECT n_chars,
-             |    CAST(sum(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-             |    CAST(sum(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS cb,
-             |    CAST(count(*) AS BIGINT) AS ct
-             |  FROM s GROUP BY 1),
-             |c AS (
-             |  SELECT *, CAST(sum(ct) OVER (ORDER BY n_chars) AS BIGINT) AS cum
-             |  FROM g),
-             |a AS (
-             |  SELECT CAST(sum(ca) AS BIGINT) AS na, CAST(sum(cb) AS BIGINT) AS nb,
-             |    CAST(sum(ca * (2 * (cum - ct) + ct + 1)) AS BIGINT) AS two_ra,
-             |    CAST(sum(ct * ct * ct - ct) AS BIGINT) AS tie_sum
-             |  FROM c)
-             |SELECT na AS n_a, nb AS n_b,
-             |  (two_ra::DOUBLE - na::DOUBLE * (na + 1)) / 2.0 AS u_a,
-             |  ((two_ra::DOUBLE - na::DOUBLE * (na + 1)) / 2.0
-             |      - na::DOUBLE * nb / 2.0)
-             |    / sqrt(na::DOUBLE * nb / 12.0 *
-             |        ((na + nb + 1)::DOUBLE
-             |          - tie_sum::DOUBLE / ((na + nb)::DOUBLE * (na + nb - 1))))
-             |    AS z
-             |FROM a""".stripMargin)),
-
-    // χ² independence test of event_type × 6-hour daypart, with Cramér's V
-    // effect size — "is traffic mix shifting across dayparts?". The
-    // contingency grid is DENSIFIED (type × daypart cross join, absent
-    // cells observed 0 — a zero cell still contributes its expectation).
-    // Counts exact; each cell term is an exact-integer division, but χ²
-    // SUMS those doubles — addition order is engine-dependent, so χ² and
-    // the V derived from it emit float32 (one-ulp drift seen at sf0.001).
-    Entry("q282_chi_squared",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-          .select(col("event_type"), expr("hour(ts) div 6").as("daypart"))
-        val obs = ev.groupBy(col("event_type"), col("daypart"))
-          .agg(count(lit(1)).as("o"))
-        val grid = ev.select(col("event_type")).distinct()
-          .crossJoin(ev.select(col("daypart")).distinct())
-          .join(obs, Seq("event_type", "daypart"), "left")
-          .withColumn("o", coalesce(col("o"), lit(0L)))
-        val rowT = grid.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
-        val colT = grid.groupBy(col("daypart")).agg(sum(col("o")).as("ctt"))
-        val nT = grid.agg(sum(col("o")).as("n"),
-          countDistinct(col("event_type")).as("r"),
-          countDistinct(col("daypart")).as("c"))
-        val e = col("rt").cast("double") * col("ctt") / col("n")
-        grid.join(broadcast(rowT), "event_type")
-          .join(broadcast(colT), "daypart")
-          .crossJoin(broadcast(nT))
-          .agg(max(col("n")).as("n"), max(col("r")).as("r"),
-            max(col("c")).as("c"),
-            sum((col("o") - e) * (col("o") - e) / e).as("chi2"))
-          .select(col("n"), col("r"), col("c"),
-            ((col("r") - 1) * (col("c") - 1)).as("dof"),
-            col("chi2").cast("float").as("chi2"),
-            sqrt(col("chi2") / (col("n").cast("double") *
-              least(col("r") - 1, col("c") - 1))).cast("float").as("cramers_v"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT event_type, hour(ts) // 6 AS daypart FROM events),
-             |obs AS (
-             |  SELECT event_type, daypart, CAST(count(*) AS BIGINT) AS o
-             |  FROM ev GROUP BY 1, 2),
-             |grid AS (
-             |  SELECT t.event_type, p.daypart, coalesce(obs.o, 0) AS o
-             |  FROM (SELECT DISTINCT event_type FROM ev) t
-             |  CROSS JOIN (SELECT DISTINCT daypart FROM ev) p
-             |  LEFT JOIN obs ON obs.event_type = t.event_type
-             |    AND obs.daypart = p.daypart),
-             |rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
-             |       FROM grid GROUP BY 1),
-             |ctt AS (SELECT daypart, CAST(sum(o) AS BIGINT) AS ctt
-             |        FROM grid GROUP BY 1),
-             |nt AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-             |  count(DISTINCT event_type) AS r, count(DISTINCT daypart) AS c
-             |  FROM grid)
-             |SELECT max(n) AS n, max(r) AS r, max(c) AS c,
-             |  (max(r) - 1) * (max(c) - 1) AS dof,
-             |  CAST(sum((g.o - rt.rt::DOUBLE * ctt.ctt / nt.n)
-             |    * (g.o - rt.rt::DOUBLE * ctt.ctt / nt.n)
-             |    / (rt.rt::DOUBLE * ctt.ctt / nt.n)) AS REAL) AS chi2,
-             |  CAST(sqrt(sum((g.o - rt.rt::DOUBLE * ctt.ctt / nt.n)
-             |    * (g.o - rt.rt::DOUBLE * ctt.ctt / nt.n)
-             |    / (rt.rt::DOUBLE * ctt.ctt / nt.n))
-             |    / (max(nt.n)::DOUBLE * least(max(r) - 1, max(c) - 1)))
-             |    AS REAL) AS cramers_v
-             |FROM grid g
-             |JOIN rt USING (event_type) JOIN ctt USING (daypart)
-             |CROSS JOIN nt""".stripMargin)),
 
     // Jensen–Shannon divergence between the token distributions of the two
     // corpus halves — the bounded (≤ ln 2), symmetric drift measure for
@@ -248,113 +67,6 @@ object DriftQueries {
              |        / (((ca::DOUBLE / n_a) + (cb::DOUBLE / n_b)) / 2.0))
              |      ELSE 0.0 END) AS REAL) AS jsd
              |FROM cnt CROSS JOIN t""".stripMargin)),
-
-    // Benjamini–Hochberg FDR control over a grid of Welch z-tests (arm =
-    // md5-parity user split, one hypothesis per event_type × daypart cell):
-    // rank p ascending, reject every rank ≤ max{i : p_(i) ≤ α·i/m}. The
-    // corpus-sized work is ONE map-side-combinable agg (decimal power sums
-    // per cell); the ranking window runs on the m-row hypothesis grid —
-    // bounded by the design, not the corpus. The normal tail uses the
-    // Abramowitz–Stegun 26.2.17 polynomial, written IDENTICALLY in both
-    // engines; exp makes p float32, and BH compares that same float32 on
-    // both sides, so the reject set can never straddle.
-    Entry("q284_bh_fdr",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val arm = pmod(ascii(substring(md5(col("user_id").cast("string")), 1, 1)), lit(2))
-        // decimal(12,6), NOT (20,6): v*v must fit (25,12) unclipped — at
-        // (20,6) Spark's product would exceed precision 38 and CLIP the
-        // scale to 9 while DuckDB keeps 12, a one-ulp z drift (seen at sf0.1)
-        val cells = Tables.events(s, d)
-          .select(col("event_type"), expr("hour(ts) div 6").as("daypart"),
-            arm.as("arm"), col("value").cast("decimal(12,6)").as("v"))
-          .groupBy(col("event_type"), col("daypart"))
-          .agg(sum(when(col("arm") === 0, col("v"))).as("s0"),
-            sum(when(col("arm") === 0, col("v") * col("v"))).as("q0"),
-            sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
-            sum(when(col("arm") === 1, col("v"))).as("s1"),
-            sum(when(col("arm") === 1, col("v") * col("v"))).as("q1"),
-            sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
-          .filter(col("n0") > 1 && col("n1") > 1)
-        def mv(sCol: String, qCol: String, nCol: String) = {
-          val m = col(sCol).cast("double") / col(nCol)
-          val v = (col(qCol).cast("double") -
-            col(sCol).cast("double") * col(sCol).cast("double") / col(nCol)) /
-            (col(nCol) - 1)
-          (m, v)
-        }
-        val (m0, v0) = mv("s0", "q0", "n0")
-        val (m1, v1) = mv("s1", "q1", "n1")
-        val z = (m0 - m1) / sqrt(v0 / col("n0") + v1 / col("n1"))
-        // the tail polynomial runs ALL-DOUBLE from the float32 z:
-        // float-precision intermediates promote differently across
-        // engines (Spark float*float=float, DuckDB REAL*lit=DOUBLE)
-        val az = abs(col("z").cast("double"))
-        val k = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
-        val pnd = exp(-az * az / 2) * lit(0.3989422804014327) *
-          (k * (lit(0.319381530) + k * (lit(-0.356563782) +
-            k * (lit(1.781477937) + k * (lit(-1.821255978) +
-              k * lit(1.330274429))))))
-        val scored = cells
-          .withColumn("z", z.cast("float"))
-          .withColumn("p", (lit(2.0) * pnd).cast("float"))
-          .withColumn("rank", row_number().over(
-            Window.orderBy(col("p"), col("event_type"), col("daypart"))))
-        val m = scored.agg(count(lit(1)).as("m")).head().getLong(0)
-        val passed = col("p") <= col("rank").cast("double") * lit(0.05) / lit(m)
-        val iMax = scored
-          .agg(coalesce(max(when(passed, col("rank"))), lit(0)).as("i_max"))
-        scored.crossJoin(broadcast(iMax))
-          .select(col("event_type"), col("daypart"),
-            col("n0").as("n_a"), col("n1").as("n_b"),
-            col("z"), col("p"), col("rank"),
-            (col("rank") <= col("i_max")).as("rejected"))
-          .orderBy(col("rank"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT event_type, hour(ts) // 6 AS daypart,
-             |    ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) % 2 AS arm,
-             |    CAST(value AS DECIMAL(12,6)) AS v
-             |  FROM events),
-             |cells AS (
-             |  SELECT event_type, daypart,
-             |    sum(CASE WHEN arm = 0 THEN v END) AS s0,
-             |    sum(CASE WHEN arm = 0 THEN v * v END) AS q0,
-             |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-             |    sum(CASE WHEN arm = 1 THEN v END) AS s1,
-             |    sum(CASE WHEN arm = 1 THEN v * v END) AS q1,
-             |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1
-             |  FROM ev GROUP BY 1, 2
-             |  HAVING sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) > 1
-             |     AND sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) > 1),
-             |zed AS (
-             |  SELECT *,
-             |    CAST((s0::DOUBLE / n0 - s1::DOUBLE / n1)
-             |      / sqrt(((q0::DOUBLE - s0::DOUBLE * s0::DOUBLE / n0) / (n0 - 1)) / n0
-             |           + ((q1::DOUBLE - s1::DOUBLE * s1::DOUBLE / n1) / (n1 - 1)) / n1)
-             |      AS REAL) AS z
-             |  FROM cells),
-             |pp AS (
-             |  SELECT *, CAST(2.0 * exp(-abs(z::DOUBLE) * abs(z::DOUBLE) / 2)
-             |    * 0.3989422804014327
-             |    * ((1.0 / (1.0 + 0.2316419 * abs(z::DOUBLE))) * (0.319381530
-             |      + (1.0 / (1.0 + 0.2316419 * abs(z::DOUBLE))) * (-0.356563782
-             |      + (1.0 / (1.0 + 0.2316419 * abs(z::DOUBLE))) * (1.781477937
-             |      + (1.0 / (1.0 + 0.2316419 * abs(z::DOUBLE))) * (-1.821255978
-             |      + (1.0 / (1.0 + 0.2316419 * abs(z::DOUBLE))) * 1.330274429)))))
-             |    AS REAL) AS p
-             |  FROM zed),
-             |ranked AS (
-             |  SELECT *, CAST(row_number() OVER
-             |      (ORDER BY p, event_type, daypart) AS INT) AS rank,
-             |    count(*) OVER () AS m
-             |  FROM pp),
-             |im AS (
-             |  SELECT coalesce(max(CASE WHEN p <= rank::DOUBLE * 0.05 / m
-             |    THEN rank END), 0) AS i_max FROM ranked)
-             |SELECT event_type, daypart, n0 AS n_a, n1 AS n_b, z, p, rank,
-             |  rank <= i_max AS rejected
-             |FROM ranked CROSS JOIN im ORDER BY rank""".stripMargin)),
 
     // n-gram novelty: the fraction of each held-out source's DISTINCT
     // 3-shingles unseen in the training half — the generalization-vs-
@@ -438,264 +150,6 @@ object DriftQueries {
            |ORDER BY source, n""".stripMargin
       }),
 
-    // Deterministic permutation test for the A/B mean-value gap: 64
-    // md5-keyed reassignments of users to arms (md5 is bit-identical in
-    // every engine — the permutation IDs ride the oracle), two-sided
-    // p = (1 + #{b : |Δ_b| ≥ |Δ_obs|}) / (B + 1). Sums carry DECIMAL so
-    // every Δ_b is exact-input double — the ≥ comparison can never flip
-    // on fp noise. One 65× map-side explode aggregated to 130 rows.
-    Entry("q287_permutation_test",
-      (s, d) => {
-        val B = 64
-        val perms = Tables.events(s, d)
-          .select(col("user_id"), col("value").cast("decimal(20,6)").as("v"),
-            explode(sequence(lit(0), lit(B))).as("b"))
-          .withColumn("arm",
-            pmod(ascii(substring(md5(concat(col("user_id"), lit("|"),
-              col("b").cast("string"))), 1, 1)), lit(2)))
-        val diffs = perms.groupBy(col("b"))
-          .agg(sum(when(col("arm") === 0, col("v"))).as("s0"),
-            sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
-            sum(when(col("arm") === 1, col("v"))).as("s1"),
-            sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
-          .select(col("b"),
-            (col("s0").cast("double") / col("n0") -
-              col("s1").cast("double") / col("n1")).as("diff"))
-        val obs = diffs.filter(col("b") === 0)
-          .select(col("diff").as("diff_obs"))
-        diffs.filter(col("b") > 0)
-          .crossJoin(broadcast(obs))
-          .agg(max(col("diff_obs")).as("diff_obs"),
-            count(lit(1)).as("n_perms"),
-            sum(when(abs(col("diff")) >= abs(col("diff_obs")), 1L)
-              .otherwise(0L)).as("n_extreme"))
-          .select(col("diff_obs").cast("float").as("diff_obs"),
-            col("n_perms"), col("n_extreme"),
-            ((col("n_extreme") + 1).cast("double") / (col("n_perms") + 1))
-              .as("p_value"))
-      },
-      Some("""WITH perms AS (
-             |  SELECT user_id, CAST(value AS DECIMAL(20,6)) AS v, b,
-             |    ascii(substr(md5(user_id || '|' || CAST(b AS VARCHAR)), 1, 1))
-             |      % 2 AS arm
-             |  FROM events, unnest(generate_series(0, 64)) AS t(b)),
-             |diffs AS (
-             |  SELECT b,
-             |    sum(CASE WHEN arm = 0 THEN v END)::DOUBLE
-             |      / sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)
-             |    - sum(CASE WHEN arm = 1 THEN v END)::DOUBLE
-             |      / sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS diff
-             |  FROM perms GROUP BY b),
-             |obs AS (SELECT diff AS diff_obs FROM diffs WHERE b = 0)
-             |SELECT CAST(max(diff_obs) AS REAL) AS diff_obs,
-             |  CAST(count(*) AS BIGINT) AS n_perms,
-             |  CAST(sum(CASE WHEN abs(diff) >= abs(diff_obs) THEN 1 ELSE 0 END)
-             |    AS BIGINT) AS n_extreme,
-             |  (sum(CASE WHEN abs(diff) >= abs(diff_obs) THEN 1 ELSE 0 END) + 1)
-             |    ::DOUBLE / (count(*) + 1) AS p_value
-             |FROM diffs CROSS JOIN obs WHERE b > 0""".stripMargin)),
-
-    // Kendall τ-b between document length (chars) and token count, over
-    // ALL-INTEGER buckets (no float boundary can ever flip a cell across
-    // engines). Concordant/discordant pairs come from the bucket
-    // CONTINGENCY table's self-join — |cells|² work, bounded by the bucket
-    // design, never corpus² — and the tie terms from the marginals. Exact
-    // longs until the final sqrt ratio.
-    Entry("q288_kendall_tau",
-      (s, d) => {
-        val cells = Tables.documents(s, d)
-          .select(expr("n_chars div 50").as("x"),
-            expr("size(split(lower(text), ' ')) div 5").as("y"))
-          .groupBy(col("x"), col("y")).agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(true) // read by the pair join (twice) + 3 margins
-        val a = cells.select(col("x").as("xa"), col("y").as("ya"), col("cnt").as("na"))
-        val b = cells.select(col("x").as("xb"), col("y").as("yb"), col("cnt").as("nb"))
-        val pairs = a.join(b, col("xa") < col("xb"))
-          .agg(sum(when(col("ya") < col("yb"), col("na") * col("nb")).otherwise(0L)).as("conc"),
-            sum(when(col("ya") > col("yb"), col("na") * col("nb")).otherwise(0L)).as("disc"))
-        val n = cells.agg(sum(col("cnt")).as("n"))
-        val tx = cells.groupBy(col("x")).agg(sum(col("cnt")).as("t"))
-          .agg(sum(expr("t * (t - 1) div 2")).as("n1"))
-        val ty = cells.groupBy(col("y")).agg(sum(col("cnt")).as("t"))
-          .agg(sum(expr("t * (t - 1) div 2")).as("n2"))
-        pairs.crossJoin(broadcast(n)).crossJoin(broadcast(tx))
-          .crossJoin(broadcast(ty))
-          .select(col("n"), col("conc"), col("disc"),
-            ((col("conc") - col("disc")).cast("double") /
-              sqrt((col("n").cast("double") * (col("n") - 1) / lit(2.0) - col("n1")) *
-                (col("n").cast("double") * (col("n") - 1) / lit(2.0) - col("n2"))))
-              .as("tau_b"))
-      },
-      Some("""WITH cells AS (
-             |  SELECT n_chars // 50 AS x,
-             |    len(string_split(lower(text), ' ')) // 5 AS y,
-             |    CAST(count(*) AS BIGINT) AS cnt
-             |  FROM documents GROUP BY 1, 2),
-             |pairs AS (
-             |  SELECT
-             |    CAST(sum(CASE WHEN a.y < b.y THEN a.cnt * b.cnt ELSE 0 END)
-             |      AS BIGINT) AS conc,
-             |    CAST(sum(CASE WHEN a.y > b.y THEN a.cnt * b.cnt ELSE 0 END)
-             |      AS BIGINT) AS disc
-             |  FROM cells a JOIN cells b ON a.x < b.x),
-             |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM cells),
-             |tx AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n1 FROM (
-             |  SELECT CAST(sum(cnt) AS BIGINT) AS t FROM cells GROUP BY x)),
-             |ty AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS n2 FROM (
-             |  SELECT CAST(sum(cnt) AS BIGINT) AS t FROM cells GROUP BY y))
-             |SELECT n, conc, disc,
-             |  (conc - disc)::DOUBLE
-             |    / sqrt((n::DOUBLE * (n - 1) / 2.0 - n1)
-             |         * (n::DOUBLE * (n - 1) / 2.0 - n2)) AS tau_b
-             |FROM pairs CROSS JOIN n CROSS JOIN tx CROSS JOIN ty""".stripMargin)),
-
-    // Weight-of-evidence / information-value scorecard: activity deciles
-    // (two-pass BSP ntile over the corpus-sized user relation) against the
-    // error-heavy outcome — the standard credit-scoring feature audit
-    // ("which score bands separate the classes, and how much signal does
-    // the feature carry in total"). Counts exact; WoE and IV take ln →
-    // float32 emit. The IV total rides a 10-row window (k-bounded).
-    Entry("q289_woe_iv",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val users = Tables.events(s, d)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("score"),
-            (sum(when(col("event_type") === "error", 1L).otherwise(0L)) * 5 >
-              count(lit(1))).as("pos"))
-        val deciled = PrefixSum.globalNtile(users, 10,
-          Seq(desc("score"), col("user_id")), "decile")
-        val g = deciled.groupBy(col("decile"))
-          .agg(sum(when(col("pos"), 1L).otherwise(0L)).as("n_pos"),
-            sum(when(col("pos"), 0L).otherwise(1L)).as("n_neg"))
-        val tot = g.agg(sum(col("n_pos")).as("tp"), sum(col("n_neg")).as("tn"))
-        // ADJUSTED WoE (+0.5 per-bucket smoothing): a pure bucket (zero
-        // positives or negatives in a decile) would otherwise divide by
-        // zero — which ANSI Spark raises as an error even for doubles
-        // (seen at sf0.001). The IV weight keeps the raw shares.
-        val pr = col("n_pos").cast("double") / col("tp")
-        val nr = col("n_neg").cast("double") / col("tn")
-        val woe = log(((col("n_pos") + lit(0.5)) / col("tp")) /
-          ((col("n_neg") + lit(0.5)) / col("tn")))
-        val scored = g.crossJoin(broadcast(tot))
-          .filter(col("tp") > 0 && col("tn") > 0)
-          .withColumn("woe_term", (pr - nr) * woe)
-          .withColumn("woe", woe.cast("float"))
-        val wAll = Window.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)
-        scored
-          .withColumn("iv", sum(col("woe_term")).over(wAll).cast("float"))
-          .select(col("decile"), col("n_pos"), col("n_neg"), col("woe"),
-            col("iv"))
-          .orderBy(col("decile"))
-      },
-      Some("""WITH users AS (
-             |  SELECT user_id, count(*) AS score,
-             |    5 * count(CASE WHEN event_type = 'error' THEN 1 END)
-             |      > count(*) AS pos
-             |  FROM events GROUP BY user_id),
-             |deciled AS (
-             |  SELECT *, ntile(10) OVER (ORDER BY score DESC, user_id)
-             |      AS decile
-             |  FROM users),
-             |g AS (
-             |  SELECT decile,
-             |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-             |    CAST(sum(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT) AS n_neg
-             |  FROM deciled GROUP BY decile),
-             |t AS (SELECT CAST(sum(n_pos) AS BIGINT) AS tp,
-             |             CAST(sum(n_neg) AS BIGINT) AS tn FROM g)
-             |SELECT decile, n_pos, n_neg,
-             |  CAST(ln(((n_pos + 0.5) / tp) / ((n_neg + 0.5) / tn)) AS REAL)
-             |    AS woe,
-             |  CAST(sum((n_pos::DOUBLE / tp - n_neg::DOUBLE / tn)
-             |    * ln(((n_pos + 0.5) / tp) / ((n_neg + 0.5) / tn))) OVER ()
-             |    AS REAL) AS iv
-             |FROM g CROSS JOIN t WHERE tp > 0 AND tn > 0 ORDER BY decile""".stripMargin)),
-
-    // Kaplan–Meier survival over user lifetimes (days between first and
-    // last event), right-censored at the corpus horizon (no event in the
-    // final 12 hours = churned; later activity = still alive, censored) —
-    // the retention curve behind churn
-    // modeling. Risk sets are exact cumulative counts and the survival
-    // product is exp(Σ ln(1 − d/n)), both cumulatives through the two-pass
-    // BSP prefix sum (the duration axis grows with the observation span);
-    // ln/exp make survival float32.
-    Entry("q290_kaplan_meier",
-      (s, d) => {
-        val horizon = 12L * 3600000000L
-        val ev = Tables.events(s, d)
-          .select(col("user_id"),
-            unix_micros(col("ts").cast("timestamp")).as("us"))
-        val corpusMax = ev.agg(max(col("us")).as("max_us"))
-        val life = ev.groupBy(col("user_id"))
-          .agg(min(col("us")).as("first_us"), max(col("us")).as("last_us"))
-          .crossJoin(broadcast(corpusMax))
-          .select(expr("(last_us - first_us) div 86400000000").as("dur_d"),
-            when(col("max_us") - col("last_us") > horizon, 1L).otherwise(0L)
-              .as("died"))
-        val byDur = life.groupBy(col("dur_d"))
-          .agg(sum(col("died")).as("d_events"),
-            sum(lit(1L) - col("died")).as("c_censored"),
-            count(lit(1)).as("ct"))
-        val nTot = byDur.agg(sum(col("ct")).as("n_total"))
-        val cum = PrefixSum.globalRunningSum(byDur, Seq(col("dur_d")),
-            col("ct").cast("decimal(20,0)"))
-          .crossJoin(broadcast(nTot))
-          .withColumn("n_risk",
-            col("n_total") - col("running").cast("long") + col("ct"))
-          .withColumn("ln_term",
-            // Clamp away from 0: a terminal bucket where every at-risk
-            // user dies (d == n) would be ln(0) = -Inf, which the
-            // decimal(30,15) running-sum cast rejects under ANSI. The
-            // clamped product is then OVERRIDDEN to an exact 0 below —
-            // d == n can only happen at the terminal bucket (nobody
-            // survives past it to populate a later one), so the override
-            // never propagates into other rows' running product.
-            log(greatest(lit(1e-12),
-              lit(1.0) - col("d_events").cast("double") / col("n_risk"))))
-        PrefixSum.globalRunningSum(cum.drop("running"), Seq(col("dur_d")),
-            col("ln_term").cast("decimal(30,15)"))
-          .withColumn("survival",
-            when(col("d_events") === col("n_risk"), lit(0.0f))
-              .otherwise(exp(col("running").cast("double")).cast("float")))
-          .filter(col("d_events") > 0)
-          .select(col("dur_d"), col("n_risk"), col("d_events"),
-            col("c_censored"), col("survival"))
-          .orderBy(col("dur_d"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-             |  FROM events),
-             |mx AS (SELECT max(us) AS max_us FROM ev),
-             |life AS (
-             |  SELECT (max(us) - min(us)) // 86400000000 AS dur_d,
-             |    CASE WHEN (SELECT max_us FROM mx) - max(us) > 43200000000
-             |      THEN 1 ELSE 0 END AS died
-             |  FROM ev GROUP BY user_id),
-             |byd AS (
-             |  SELECT dur_d, CAST(sum(died) AS BIGINT) AS d_events,
-             |    CAST(sum(1 - died) AS BIGINT) AS c_censored,
-             |    CAST(count(*) AS BIGINT) AS ct
-             |  FROM life GROUP BY dur_d),
-             |t AS (SELECT CAST(sum(ct) AS BIGINT) AS n_total FROM byd),
-             |risk AS (
-             |  SELECT *,
-             |    (SELECT n_total FROM t)
-             |      - CAST(sum(ct) OVER (ORDER BY dur_d) AS BIGINT) + ct
-             |      AS n_risk
-             |  FROM byd),
-             |surv AS (
-             |  SELECT *,
-             |    CASE WHEN d_events = n_risk THEN CAST(0 AS REAL)
-             |    ELSE CAST(exp(sum(CAST(ln(greatest(1e-12,
-             |        1.0 - d_events::DOUBLE / n_risk))
-             |        AS DECIMAL(30,15))) OVER (ORDER BY dur_d)) AS REAL)
-             |    END AS survival
-             |  FROM risk)
-             |SELECT dur_d, n_risk, d_events, c_censored, survival
-             |FROM surv WHERE d_events > 0 ORDER BY dur_d""".stripMargin)),
-
     // Dedup-cluster edge-density audit: connected components merge
     // transitively, so a cluster can contain pairs that were NEVER
     // directly similar (chain-merge over-clustering — the failure mode
@@ -766,82 +220,11 @@ object DriftQueries {
              |FROM cl JOIN pe USING (cluster)
              |GROUP BY s ORDER BY s""".stripMargin)),
 
-    // Expected calibration error over a temporal split: each user's
-    // first-half error RATE is the "predicted probability" that they hit
-    // an error in the second half; ECE = Σ_b (n_b/N)·|acc_b − conf_b|
-    // over ten fixed-width bins. Bin ids floor identical doubles (exact
-    // rationals) so cells can never straddle engines; mean confidence
-    // sums doubles → float32, accuracy stays an exact rational.
-    Entry("q292_ece",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), col("event_type"),
-            unix_micros(col("ts").cast("timestamp")).as("us"))
-        val mid = ev.agg(((min(col("us")) + max(col("us"))) / 2).as("mid_us"))
-        val users = ev.crossJoin(broadcast(mid))
-          .groupBy(col("user_id"))
-          .agg(
-            sum(when(col("us") < col("mid_us"), 1L).otherwise(0L)).as("n1"),
-            sum(when(col("us") < col("mid_us") &&
-              col("event_type") === "error", 1L).otherwise(0L)).as("e1"),
-            max(when(col("us") >= col("mid_us") &&
-              col("event_type") === "error", 1L).otherwise(0L)).as("pos"))
-          .filter(col("n1") > 0)
-          .withColumn("p_hat", col("e1").cast("double") / col("n1"))
-          .withColumn("bin",
-            least(floor(col("p_hat") * 10), lit(9L)).cast("int"))
-        val g = users.groupBy(col("bin"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("pos")).as("n_pos"),
-            avg(col("p_hat")).as("conf_d"))
-        val tot = g.agg(sum(col("n")).as("n_tot"))
-        val wAll = Window.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)
-        g.crossJoin(broadcast(tot))
-          .withColumn("acc", col("n_pos").cast("double") / col("n"))
-          .withColumn("ece", sum(
-            col("n").cast("double") / col("n_tot") *
-              abs(col("acc") - col("conf_d"))).over(wAll).cast("float"))
-          .select(col("bin"), col("n"), col("conf_d").cast("float").as("conf"),
-            col("acc"), col("ece"))
-          .orderBy(col("bin"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT user_id, event_type,
-             |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
-             |  FROM events),
-             |mid AS (SELECT (min(us) + max(us)) / 2 AS mid_us FROM ev),
-             |users AS (
-             |  SELECT user_id,
-             |    CAST(sum(CASE WHEN us < mid_us THEN 1 ELSE 0 END) AS BIGINT)
-             |      AS n1,
-             |    CAST(sum(CASE WHEN us < mid_us AND event_type = 'error'
-             |      THEN 1 ELSE 0 END) AS BIGINT) AS e1,
-             |    CAST(max(CASE WHEN us >= mid_us AND event_type = 'error'
-             |      THEN 1 ELSE 0 END) AS BIGINT) AS pos
-             |  FROM ev CROSS JOIN mid GROUP BY user_id
-             |  HAVING sum(CASE WHEN us < mid_us THEN 1 ELSE 0 END) > 0),
-             |binned AS (
-             |  SELECT *, e1::DOUBLE / n1 AS p_hat,
-             |    CAST(least(floor((e1::DOUBLE / n1) * 10), 9) AS INT) AS bin
-             |  FROM users),
-             |g AS (
-             |  SELECT bin, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(pos) AS BIGINT) AS n_pos, avg(p_hat) AS conf_d
-             |  FROM binned GROUP BY bin),
-             |t AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot FROM g)
-             |SELECT bin, n, CAST(conf_d AS REAL) AS conf,
-             |  n_pos::DOUBLE / n AS acc,
-             |  CAST(sum(n::DOUBLE / n_tot * abs(n_pos::DOUBLE / n - conf_d))
-             |    OVER () AS REAL) AS ece
-             |FROM g CROSS JOIN t ORDER BY bin""".stripMargin)),
-
     // Count-min sketch audit: a 4×64 CMS over the token stream (seeded
     // md5 row hashes — bit-identical in any engine), read back for the
     // ten heaviest tokens against their true counts. The one-sided error
     // (est ≥ true, bounded by collisions) is the planning input for
-    // sizing sketch width vs the q99 exact heavy-hitter pass. Sketch
+    // sizing sketch width vs an exact heavy-hitter pass. Sketch
     // cells are ONE map-side-combinable agg (d·w cells total); estimates
     // are a broadcast-size join. All exact integers.
     Entry("q293_countmin",
@@ -897,46 +280,6 @@ object DriftQueries {
            |FROM probes GROUP BY tw ORDER BY true_c DESC, w""".stripMargin
       }),
 
-    // Neyman allocation for a labeling budget: the optimal stratified
-    // sample takes n_h ∝ N_h·σ_h — big AND internally varied strata get
-    // annotators; uniform strata don't. σ from exact integer power sums
-    // (one scan); the share normalizer sums 20 doubles → float32 emit.
-    Entry("q294_neyman_allocation",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val g = Tables.documents(s, d)
-          .select(col("source"), col("n_chars").cast("long").as("x"))
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("n_h"),
-            sum(col("x")).as("s1"), sum(col("x") * col("x")).as("s2"))
-          .filter(col("n_h") > 1)
-        val sigma = sqrt((col("s2").cast("double") -
-          col("s1").cast("double") * col("s1").cast("double") / col("n_h")) /
-          (col("n_h") - 1))
-        val wAll = Window.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)
-        g.withColumn("w_h", col("n_h").cast("double") * sigma)
-          .withColumn("share", (col("w_h") / sum(col("w_h")).over(wAll))
-            .cast("float"))
-          .select(col("source"), col("n_h"), sigma.cast("float").as("sigma"),
-            col("share"))
-          .orderBy(col("source"))
-      },
-      Some("""WITH g AS (
-             |  SELECT source, CAST(count(*) AS BIGINT) AS n_h,
-             |    CAST(sum(n_chars) AS BIGINT) AS s1,
-             |    CAST(sum(n_chars::BIGINT * n_chars) AS BIGINT) AS s2
-             |  FROM documents GROUP BY source HAVING count(*) > 1),
-             |w AS (
-             |  SELECT *, n_h::DOUBLE * sqrt((s2::DOUBLE
-             |      - s1::DOUBLE * s1::DOUBLE / n_h) / (n_h - 1)) AS w_h
-             |  FROM g)
-             |SELECT source, n_h,
-             |  CAST(sqrt((s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / n_h)
-             |    / (n_h - 1)) AS REAL) AS sigma,
-             |  CAST(w_h / sum(w_h) OVER () AS REAL) AS share
-             |FROM w ORDER BY source""".stripMargin)),
-
     // Quality ~ ln(length) regression per source — the confound audit
     // before using either signal for curation (a high slope means the
     // "quality" feature is mostly re-measuring length for that source).
@@ -984,8 +327,8 @@ object DriftQueries {
 
     // Flesch reading-ease per source, with a deterministic vowel-group
     // syllable heuristic (regex, identical in both engines) — the
-    // readability gate corpus curation runs next to the q24/q175 quality
-    // scores. One explode for syllables, one regex count for sentences;
+    // readability gate corpus curation runs next to the q24 quality
+    // score. One explode for syllables, one regex count for sentences;
     // per-doc scores are exact-input doubles, the per-source mean sums
     // them → float32.
     Entry("q296_readability",
@@ -1038,43 +381,11 @@ object DriftQueries {
              |  CAST(avg(spw) AS REAL) AS avg_syl_per_word
              |FROM perdoc GROUP BY source ORDER BY source""".stripMargin)),
 
-    // Trailing 7-day active users per day (DAU + WAU7) — the liveness
-    // series behind every engagement dashboard. Exact distinct counts:
-    // the (day, user) relation joins a 7-day trailing range (bounded ×7
-    // fan-out, never corpus²), then one distinct-count per day.
-    Entry("q297_rolling_active",
-      (s, d) => {
-        val du = Tables.events(s, d)
-          .select(to_date(col("ts")).as("day"), col("user_id"))
-          .distinct().localCheckpoint(true) // feeds the grid, DAU and the range join
-        val days = du.select(col("day")).distinct()
-        val dau = du.groupBy(col("day")).agg(count(lit(1)).as("dau"))
-        val wau = days.as("g")
-          .join(du.as("u"),
-            col("u.day") >= date_sub(col("g.day"), 6) &&
-              col("u.day") <= col("g.day"))
-          .groupBy(col("g.day").as("day"))
-          .agg(countDistinct(col("u.user_id")).as("wau7"))
-        dau.join(wau, "day").orderBy(col("day"))
-      },
-      Some("""WITH du AS (
-             |  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-             |days AS (SELECT DISTINCT day FROM du),
-             |dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau
-             |        FROM du GROUP BY day),
-             |wau AS (
-             |  SELECT g.day, CAST(count(DISTINCT u.user_id) AS BIGINT) AS wau7
-             |  FROM days g JOIN du u
-             |    ON u.day >= g.day - 6 AND u.day <= g.day
-             |  GROUP BY g.day)
-             |SELECT day, dau, wau7 FROM dau JOIN wau USING (day)
-             |ORDER BY day""".stripMargin)),
-
     // Church–Gale word burstiness for the 50 heaviest tokens: a Poisson
     // spread would hit df_pred = D·(1 − e^(−tf/D)) documents; real words
     // CLUMP (df_obs < df_pred), templates repeat everywhere. The
-    // burstiness ratio feeds stopword/boilerplate calls the raw df rank
-    // (q176) can't make. Counts exact; e^ makes the ratio float32.
+    // burstiness ratio feeds stopword/boilerplate calls a raw df rank
+    // can't make. Counts exact; e^ makes the ratio float32.
     Entry("q298_word_burstiness",
       (s, d) => {
         val tok = Tables.documents(s, d)
@@ -1104,63 +415,6 @@ object DriftQueries {
              |  CAST((n_docs * (1.0 - exp(-(tf::DOUBLE) / n_docs))) / df
              |    AS REAL) AS burstiness
              |FROM top CROSS JOIN nd ORDER BY tf DESC, w""".stripMargin)),
-
-    // Mutual information (and the sqrt-normalized NMI) between event type
-    // and daypart — the effect-size companion to q282's χ²: how many nats
-    // does knowing the hour tell you about the event mix? Same densified
-    // grid; ln → float32.
-    Entry("q299_mutual_information",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-          .select(col("event_type"), expr("hour(ts) div 6").as("daypart"))
-        val obs = ev.groupBy(col("event_type"), col("daypart"))
-          .agg(count(lit(1)).as("o"))
-        val rowT = obs.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
-        val colT = obs.groupBy(col("daypart")).agg(sum(col("o")).as("ctt"))
-        val nT = obs.agg(sum(col("o")).as("n"))
-        val pxy = col("o").cast("double") / col("n")
-        val px = col("rt").cast("double") / col("n")
-        val py = col("ctt").cast("double") / col("n")
-        val joined = obs.join(broadcast(rowT), "event_type")
-          .join(broadcast(colT), "daypart")
-          .crossJoin(broadcast(nT))
-        val hx = rowT.crossJoin(broadcast(nT))
-          .agg(sum(-(col("rt").cast("double") / col("n")) *
-            log(col("rt").cast("double") / col("n"))).as("h_x"))
-        val hy = colT.crossJoin(broadcast(nT))
-          .agg(sum(-(col("ctt").cast("double") / col("n")) *
-            log(col("ctt").cast("double") / col("n"))).as("h_y"))
-        joined
-          .agg(max(col("n")).as("n"),
-            sum(pxy * log(pxy / (px * py))).as("mi_d"))
-          .crossJoin(broadcast(hx)).crossJoin(broadcast(hy))
-          .select(col("n"), col("mi_d").cast("float").as("mi"),
-            (col("mi_d") / sqrt(col("h_x") * col("h_y"))).cast("float")
-              .as("nmi"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT event_type, hour(ts) // 6 AS daypart FROM events),
-             |obs AS (
-             |  SELECT event_type, daypart, CAST(count(*) AS BIGINT) AS o
-             |  FROM ev GROUP BY 1, 2),
-             |rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
-             |       FROM obs GROUP BY 1),
-             |ctt AS (SELECT daypart, CAST(sum(o) AS BIGINT) AS ctt
-             |        FROM obs GROUP BY 1),
-             |nt AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM obs),
-             |hx AS (SELECT sum(-(rt::DOUBLE / n) * ln(rt::DOUBLE / n)) AS h_x
-             |       FROM rt CROSS JOIN nt),
-             |hy AS (SELECT sum(-(ctt::DOUBLE / n) * ln(ctt::DOUBLE / n)) AS h_y
-             |       FROM ctt CROSS JOIN nt)
-             |SELECT max(n) AS n,
-             |  CAST(sum((o::DOUBLE / n) * ln((o::DOUBLE / n)
-             |    / ((rt.rt::DOUBLE / n) * (ctt.ctt::DOUBLE / n)))) AS REAL)
-             |    AS mi,
-             |  CAST(sum((o::DOUBLE / n) * ln((o::DOUBLE / n)
-             |    / ((rt.rt::DOUBLE / n) * (ctt.ctt::DOUBLE / n))))
-             |    / sqrt(max(h_x) * max(h_y)) AS REAL) AS nmi
-             |FROM obs JOIN rt USING (event_type) JOIN ctt USING (daypart)
-             |CROSS JOIN nt CROSS JOIN hx CROSS JOIN hy""".stripMargin)),
 
     // End-to-end curation run report — the whole filter funnel as ONE
     // declarative plan: length gate → language gate → repetition gate →
@@ -1268,184 +522,6 @@ object DriftQueries {
              |    CAST(coalesce(sum(n_chars), 0) AS BIGINT) FROM s5)
              |ORDER BY stage""".stripMargin)),
 
-    // Sample-ratio mismatch check for the md5-parity A/B assignment: a
-    // healthy 50/50 user split should give |z| ≤ 3; SRM is the first
-    // thing to rule out before reading any experiment metric (a biased
-    // assignment invalidates every downstream lift). One distinct-user
-    // agg; z is divisions/sqrt over exact integers (full double), the
-    // A–S tail p emits float32.
-    Entry("q301_srm_check",
-      (s, d) => {
-        val users = Tables.events(s, d).select(col("user_id")).distinct()
-          .withColumn("arm",
-            pmod(ascii(substring(md5(col("user_id").cast("string")), 1, 1)),
-              lit(2)))
-        val g = users.agg(
-          sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n_a"),
-          sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_b"))
-        val n = col("n_a") + col("n_b")
-        val z = (col("n_a").cast("double") - n.cast("double") / 2) /
-          sqrt(n.cast("double") / 4)
-        val az = abs(col("z"))
-        val k = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
-        val pnd = exp(-az * az / 2) * lit(0.3989422804014327) *
-          (k * (lit(0.319381530) + k * (lit(-0.356563782) +
-            k * (lit(1.781477937) + k * (lit(-1.821255978) +
-              k * lit(1.330274429))))))
-        g.withColumn("z", z)
-          .select(col("n_a"), col("n_b"), col("z"),
-            (lit(2.0) * pnd).cast("float").as("p"),
-            (abs(col("z")) > 3.0).as("srm_flag"))
-      },
-      Some("""WITH users AS (
-             |  SELECT DISTINCT user_id,
-             |    ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) % 2 AS arm
-             |  FROM events),
-             |g AS (
-             |  SELECT
-             |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-             |  FROM users),
-             |zed AS (
-             |  SELECT *, (n_a::DOUBLE - (n_a + n_b)::DOUBLE / 2)
-             |    / sqrt((n_a + n_b)::DOUBLE / 4) AS z
-             |  FROM g)
-             |SELECT n_a, n_b, z,
-             |  CAST(2.0 * exp(-abs(z) * abs(z) / 2) * 0.3989422804014327
-             |    * ((1.0 / (1.0 + 0.2316419 * abs(z))) * (0.319381530
-             |      + (1.0 / (1.0 + 0.2316419 * abs(z))) * (-0.356563782
-             |      + (1.0 / (1.0 + 0.2316419 * abs(z))) * (1.781477937
-             |      + (1.0 / (1.0 + 0.2316419 * abs(z))) * (-1.821255978
-             |      + (1.0 / (1.0 + 0.2316419 * abs(z))) * 1.330274429)))))
-             |    AS REAL) AS p,
-             |  abs(z) > 3.0 AS srm_flag
-             |FROM zed""".stripMargin)),
-
-    // MinHash banding planner: for every (bands, rows) factorization of a
-    // 16-hash signature, the S-curve P(match | s) = 1 − (1 − s^r)^b
-    // integrated above/below the target threshold gives the false-negative
-    // and false-positive mass — the a-priori companion to q143's empirical
-    // calibration (pick the factorization BEFORE paying a corpus pass).
-    // Pure closed-form grid (5 plans × 19 similarity points, broadcast
-    // literals); pow emits float32.
-    Entry("q302_lsh_band_planner",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val t = 0.5
-        val plans = Seq((1, 16), (2, 8), (4, 4), (8, 2), (16, 1))
-        val planDf = s.range(1).select(explode(array(plans.map {
-            case (b, r) => struct(lit(b).as("bands"),
-              lit(r).as("rows_per_band"))
-          }: _*)).as("p"))
-          .select(col("p.bands").as("bands"),
-            col("p.rows_per_band").as("rows_per_band"))
-        val grid = planDf.withColumn("i",
-          explode(sequence(lit(1), lit(19))))
-          .withColumn("sim", col("i").cast("double") / 20)
-        val pMatch = lit(1.0) -
-          pow(lit(1.0) - pow(col("sim"), col("rows_per_band")), col("bands"))
-        val scored = grid
-          .withColumn("fn", when(col("sim") >= t, lit(1.0) - pMatch)
-            .otherwise(0.0))
-          .withColumn("fp", when(col("sim") < t, pMatch).otherwise(0.0))
-          .groupBy(col("bands"), col("rows_per_band"))
-          .agg(sum(col("fn")).as("fn_mass_d"), sum(col("fp")).as("fp_mass_d"))
-          .withColumn("cost_d", col("fn_mass_d") + col("fp_mass_d"))
-        val wAll = Window.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)
-        scored
-          .withColumn("best",
-            col("cost_d") === min(col("cost_d")).over(wAll))
-          .select(col("bands"), col("rows_per_band"),
-            col("fn_mass_d").cast("float").as("fn_mass"),
-            col("fp_mass_d").cast("float").as("fp_mass"),
-            col("cost_d").cast("float").as("cost"), col("best"))
-          .orderBy(col("bands"))
-      },
-      Some("""WITH plans(bands, rows_per_band) AS (
-             |  VALUES (1, 16), (2, 8), (4, 4), (8, 2), (16, 1)),
-             |grid AS (
-             |  SELECT bands, rows_per_band, i::DOUBLE / 20 AS sim
-             |  FROM plans, unnest(generate_series(1, 19)) AS t(i)),
-             |scored AS (
-             |  SELECT bands, rows_per_band,
-             |    sum(CASE WHEN sim >= 0.5
-             |      THEN 1.0 - (1.0 - (1.0 - pow(sim, rows_per_band))
-             |        ** bands) ELSE 0.0 END) AS fn_mass_d,
-             |    sum(CASE WHEN sim < 0.5
-             |      THEN 1.0 - (1.0 - pow(sim, rows_per_band)) ** bands
-             |      ELSE 0.0 END) AS fp_mass_d
-             |  FROM grid GROUP BY 1, 2)
-             |SELECT bands, rows_per_band,
-             |  CAST(fn_mass_d AS REAL) AS fn_mass,
-             |  CAST(fp_mass_d AS REAL) AS fp_mass,
-             |  CAST(fn_mass_d + fp_mass_d AS REAL) AS cost,
-             |  fn_mass_d + fp_mass_d
-             |    = min(fn_mass_d + fp_mass_d) OVER () AS best
-             |FROM scored ORDER BY bands""".stripMargin)),
-
-    // Per-user interval-union coverage: treat each event as an activity
-    // interval [ts, ts + ceil(value) minutes) and compute the exact union
-    // length (merged, overlap-free) vs the first→last span — how BUSY a
-    // user's timeline actually is, the per-key sibling of q195's global
-    // sweep. One user-partitioned window (running max of interval end
-    // over PRIOR rows clips each interval's new contribution); exact
-    // integer seconds throughout.
-    Entry("q303_interval_coverage",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("s_us"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val clipped = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"),
-            unix_micros(col("ts").cast("timestamp")).as("s_us"),
-            (unix_micros(col("ts").cast("timestamp")) +
-              greatest(lit(1L), ceil(col("value")).cast("long")) * 60000000L)
-              .as("e_us"))
-          .withColumn("prev_end", max(col("e_us")).over(w))
-          .withColumn("add_us",
-            greatest(lit(0L), col("e_us") -
-              greatest(col("s_us"), coalesce(col("prev_end"), col("s_us")))))
-        clipped.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("add_us")).as("cov_us"),
-            (max(col("e_us")) - min(col("s_us"))).as("span_us"))
-          // INTEGER division (div), not /: a double quotient could round
-          // up across an integer boundary before the truncating cast
-          .withColumn("covered_s", expr("cov_us div 1000000"))
-          .withColumn("span_s", expr("span_us div 1000000"))
-          .withColumn("coverage",
-            col("covered_s").cast("double") / col("span_s"))
-          .select(col("user_id"), col("n_events"), col("covered_s"),
-            col("span_s"), col("coverage"))
-          .orderBy(col("user_id"))
-      },
-      Some("""WITH iv AS (
-             |  SELECT user_id, event_id,
-             |    epoch_us(CAST(ts AS TIMESTAMP)) AS s_us,
-             |    epoch_us(CAST(ts AS TIMESTAMP))
-             |      + greatest(1, CAST(ceil(value) AS BIGINT)) * 60000000
-             |      AS e_us
-             |  FROM events),
-             |clipped AS (
-             |  SELECT *,
-             |    max(e_us) OVER (PARTITION BY user_id
-             |      ORDER BY s_us, event_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             |      AS prev_end
-             |  FROM iv)
-             |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-             |  CAST(sum(greatest(0, e_us
-             |    - greatest(s_us, coalesce(prev_end, s_us)))) // 1000000
-             |    AS BIGINT) AS covered_s,
-             |  CAST((max(e_us) - min(s_us)) // 1000000 AS BIGINT) AS span_s,
-             |  (CAST(sum(greatest(0, e_us
-             |    - greatest(s_us, coalesce(prev_end, s_us)))) // 1000000
-             |    AS BIGINT))::DOUBLE
-             |    / ((max(e_us) - min(s_us)) // 1000000) AS coverage
-             |FROM clipped GROUP BY user_id ORDER BY user_id""".stripMargin)),
-
     // Herfindahl–Hirschman concentration of the token supply across
     // sources, with the effective source count 1/HHI — "is the corpus
     // really diverse, or three sources in a trenchcoat?" (the mixing
@@ -1476,143 +552,6 @@ object DriftQueries {
              |  CAST(1.0 / sum((c::DOUBLE / t) * (c::DOUBLE / t)) AS REAL)
              |    AS effective_sources
              |FROM g CROSS JOIN t""".stripMargin)),
-
-    // Decision-stump learner: the information gain of every "activity ≥ t"
-    // split for predicting the error-heavy outcome, with the best split
-    // flagged — the single-feature baseline every feature audit starts
-    // from (and the WoE table's discrete cousin). Candidate thresholds =
-    // the distinct activity values; left/right class counts come from ONE
-    // cumulative pass over that relation (BSP prefix sum — the value
-    // domain grows with the corpus), entropies are closed-form from exact
-    // counts; ln → float32. The argmax rides an agg + broadcast join, not
-    // a global window.
-    Entry("q305_info_gain_split",
-      (s, d) => {
-        val users = Tables.events(s, d)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("score"),
-            (sum(when(col("event_type") === "error", 1L).otherwise(0L)) * 5 >
-              count(lit(1))).as("pos"))
-        val g = users.groupBy(col("score"))
-          .agg(count(lit(1)).as("n_s"),
-            sum(when(col("pos"), 1L).otherwise(0L)).as("pos_s"))
-        // cumulative from the HIGH end: left split of "score >= t"
-        val cum = PrefixSum.globalRunningSum(
-          PrefixSum.globalRunningSum(g, Seq(desc("score")),
-              col("n_s").cast("decimal(20,0)"))
-            .withColumn("n_left", col("running").cast("long"))
-            .drop("running"),
-          Seq(desc("score")), col("pos_s").cast("decimal(20,0)"))
-          .withColumn("pos_left", col("running").cast("long"))
-          .drop("running")
-        val tot = g.agg(sum(col("n_s")).as("n"), sum(col("pos_s")).as("npos"))
-        def ent(p: org.apache.spark.sql.Column) =
-          when(p > 0 && p < 1, -p * log(p) - (lit(1.0) - p) * log(lit(1.0) - p))
-            .otherwise(0.0)
-        val scored = cum.crossJoin(broadcast(tot))
-          .withColumn("n_right", col("n") - col("n_left"))
-          .withColumn("pos_right", col("npos") - col("pos_left"))
-          .filter(col("n_right") > 0) // the lowest threshold splits nothing off
-          .withColumn("ig_d",
-            ent(col("npos").cast("double") / col("n")) -
-              col("n_left").cast("double") / col("n") *
-                ent(col("pos_left").cast("double") / col("n_left")) -
-              col("n_right").cast("double") / col("n") *
-                ent(col("pos_right").cast("double") / col("n_right")))
-        val best = scored.agg(max(col("ig_d")).as("best_ig"))
-        scored.crossJoin(broadcast(best))
-          .select(col("score").as("threshold"), col("n_left"), col("pos_left"),
-            col("ig_d").cast("float").as("info_gain"),
-            (col("ig_d") === col("best_ig")).as("best"))
-          .orderBy(col("threshold"))
-      },
-      Some("""WITH users AS (
-             |  SELECT user_id, count(*) AS score,
-             |    5 * count(CASE WHEN event_type = 'error' THEN 1 END)
-             |      > count(*) AS pos
-             |  FROM events GROUP BY user_id),
-             |g AS (
-             |  SELECT score, CAST(count(*) AS BIGINT) AS n_s,
-             |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS pos_s
-             |  FROM users GROUP BY score),
-             |cum AS (
-             |  SELECT score,
-             |    CAST(sum(n_s) OVER (ORDER BY score DESC) AS BIGINT)
-             |      AS n_left,
-             |    CAST(sum(pos_s) OVER (ORDER BY score DESC) AS BIGINT)
-             |      AS pos_left
-             |  FROM g),
-             |t AS (SELECT CAST(sum(n_s) AS BIGINT) AS n,
-             |             CAST(sum(pos_s) AS BIGINT) AS npos FROM g),
-             |scored AS (
-             |  SELECT score, n_left, pos_left,
-             |    (CASE WHEN npos > 0 AND npos < n
-             |       THEN -(npos::DOUBLE / n) * ln(npos::DOUBLE / n)
-             |          - (1.0 - npos::DOUBLE / n) * ln(1.0 - npos::DOUBLE / n)
-             |       ELSE 0.0 END)
-             |    - n_left::DOUBLE / n *
-             |      (CASE WHEN pos_left > 0 AND pos_left < n_left
-             |        THEN -(pos_left::DOUBLE / n_left)
-             |            * ln(pos_left::DOUBLE / n_left)
-             |          - (1.0 - pos_left::DOUBLE / n_left)
-             |            * ln(1.0 - pos_left::DOUBLE / n_left)
-             |        ELSE 0.0 END)
-             |    - (n - n_left)::DOUBLE / n *
-             |      (CASE WHEN npos - pos_left > 0 AND npos - pos_left < n - n_left
-             |        THEN -((npos - pos_left)::DOUBLE / (n - n_left))
-             |            * ln((npos - pos_left)::DOUBLE / (n - n_left))
-             |          - (1.0 - (npos - pos_left)::DOUBLE / (n - n_left))
-             |            * ln(1.0 - (npos - pos_left)::DOUBLE / (n - n_left))
-             |        ELSE 0.0 END) AS ig_d
-             |  FROM cum CROSS JOIN t WHERE n - n_left > 0),
-             |best AS (SELECT max(ig_d) AS best_ig FROM scored)
-             |SELECT score AS threshold, n_left, pos_left,
-             |  CAST(ig_d AS REAL) AS info_gain, ig_d = best_ig AS best
-             |FROM scored CROSS JOIN best ORDER BY threshold""".stripMargin)),
-
-    // Smoothed target encoding of event_type against the high-value
-    // outcome (value above the exact corpus mean): te = (pos_c + m·prior)
-    // / (n_c + m) with m = 10 — the leakage-resistant categorical feature
-    // every tabular model starts with. The mean rides an exact decimal
-    // sum so the outcome labels can never straddle engines; everything
-    // after is exact counts + single divisions (full doubles).
-    Entry("q306_target_encoding",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-          .select(col("event_type"), col("value"))
-        val mean = ev.agg(
-          (sum(col("value").cast("decimal(20,6)")).cast("double") /
-            count(lit(1))).as("mu"))
-        val labeled = ev.crossJoin(broadcast(mean))
-          .withColumn("pos", col("value") > col("mu"))
-        val g = labeled.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("pos"), 1L).otherwise(0L)).as("n_pos"))
-        val prior = g.agg(sum(col("n")).as("nt"), sum(col("n_pos")).as("pt"))
-        g.crossJoin(broadcast(prior))
-          .select(col("event_type"), col("n"), col("n_pos"),
-            (col("n_pos").cast("double") / col("n")).as("raw_rate"),
-            ((col("n_pos").cast("double") +
-              lit(10.0) * (col("pt").cast("double") / col("nt"))) /
-              (col("n") + lit(10L))).as("te_smoothed"))
-          .orderBy(col("event_type"))
-      },
-      Some("""WITH mu AS (
-             |  SELECT sum(CAST(value AS DECIMAL(20,6)))::DOUBLE / count(*)
-             |    AS mu
-             |  FROM events),
-             |g AS (
-             |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(CASE WHEN value > mu THEN 1 ELSE 0 END) AS BIGINT)
-             |      AS n_pos
-             |  FROM events CROSS JOIN mu GROUP BY event_type),
-             |p AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
-             |             CAST(sum(n_pos) AS BIGINT) AS pt FROM g)
-             |SELECT event_type, n, n_pos,
-             |  n_pos::DOUBLE / n AS raw_rate,
-             |  (n_pos::DOUBLE + 10.0 * (pt::DOUBLE / nt)) / (n + 10)
-             |    AS te_smoothed
-             |FROM g CROSS JOIN p ORDER BY event_type""".stripMargin)),
 
     // Hash-fold split stability: five md5-keyed folds of the corpus, per-
     // fold mean quality and length, and the max−min fold drift — if a
@@ -1724,117 +663,6 @@ object DriftQueries {
              |JOIN sizes nb ON nb.source = source_b
              |ORDER BY source_a, source_b""".stripMargin)),
 
-    // Nelson–Aalen cumulative hazard over the q290 lifetimes — the
-    // additive (hazard-space) twin of the Kaplan–Meier product: H(t) =
-    // Σ_{t'≤t} d/n is what hazard-regression models consume. Per-duration
-    // hazards are single exact divisions; the cumulative rides the BSP
-    // prefix sum in decimal, emitted float32.
-    Entry("q309_nelson_aalen",
-      (s, d) => {
-        val horizon = 12L * 3600000000L
-        val ev = Tables.events(s, d)
-          .select(col("user_id"),
-            unix_micros(col("ts").cast("timestamp")).as("us"))
-        val corpusMax = ev.agg(max(col("us")).as("max_us"))
-        val life = ev.groupBy(col("user_id"))
-          .agg(min(col("us")).as("first_us"), max(col("us")).as("last_us"))
-          .crossJoin(broadcast(corpusMax))
-          .select(expr("(last_us - first_us) div 86400000000").as("dur_d"),
-            when(col("max_us") - col("last_us") > horizon, 1L).otherwise(0L)
-              .as("died"))
-        val byDur = life.groupBy(col("dur_d"))
-          .agg(sum(col("died")).as("d_events"), count(lit(1)).as("ct"))
-        val nTot = byDur.agg(sum(col("ct")).as("n_total"))
-        val risk = PrefixSum.globalRunningSum(byDur, Seq(col("dur_d")),
-            col("ct").cast("decimal(20,0)"))
-          .crossJoin(broadcast(nTot))
-          .withColumn("n_risk",
-            col("n_total") - col("running").cast("long") + col("ct"))
-          .drop("running")
-          .withColumn("hazard",
-            col("d_events").cast("double") / col("n_risk"))
-        PrefixSum.globalRunningSum(risk, Seq(col("dur_d")),
-            col("hazard").cast("decimal(30,15)"))
-          .withColumn("cum_hazard", col("running").cast("double").cast("float"))
-          .filter(col("d_events") > 0)
-          .select(col("dur_d"), col("n_risk"), col("d_events"),
-            col("hazard"), col("cum_hazard"))
-          .orderBy(col("dur_d"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-             |  FROM events),
-             |mx AS (SELECT max(us) AS max_us FROM ev),
-             |life AS (
-             |  SELECT (max(us) - min(us)) // 86400000000 AS dur_d,
-             |    CASE WHEN (SELECT max_us FROM mx) - max(us) > 43200000000
-             |      THEN 1 ELSE 0 END AS died
-             |  FROM ev GROUP BY user_id),
-             |byd AS (
-             |  SELECT dur_d, CAST(sum(died) AS BIGINT) AS d_events,
-             |    CAST(count(*) AS BIGINT) AS ct
-             |  FROM life GROUP BY dur_d),
-             |t AS (SELECT CAST(sum(ct) AS BIGINT) AS n_total FROM byd),
-             |risk AS (
-             |  SELECT *,
-             |    (SELECT n_total FROM t)
-             |      - CAST(sum(ct) OVER (ORDER BY dur_d) AS BIGINT) + ct
-             |      AS n_risk
-             |  FROM byd),
-             |haz AS (
-             |  SELECT *, d_events::DOUBLE / n_risk AS hazard FROM risk)
-             |SELECT dur_d, n_risk, d_events, hazard,
-             |  CAST(CAST(sum(CAST(hazard AS DECIMAL(30,15)))
-             |    OVER (ORDER BY dur_d) AS DOUBLE) AS REAL) AS cum_hazard
-             |FROM haz WHERE d_events > 0 ORDER BY dur_d""".stripMargin)),
-
-    // Character-class profile per source: upper-case, digit, punctuation
-    // and whitespace character shares — the cheap curation columns that
-    // catch ALL-CAPS spam, number dumps and markup residue before any
-    // model-based scoring. Counts via regex-strip length differences
-    // (identical regex engines on ASCII classes); exact integers and
-    // single divisions.
-    Entry("q310_casing_profile",
-      (s, d) => {
-        def cnt(pat: String) =
-          (length(col("text")) -
-            length(regexp_replace(col("text"), pat, ""))).cast("long")
-        val g = Tables.documents(s, d)
-          .select(col("source"), length(col("text")).cast("long").as("nc"),
-            cnt("[A-Z]").as("upper"), cnt("[0-9]").as("digit"),
-            cnt("[^A-Za-z0-9 ]").as("punct"), cnt(" ").as("space"))
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("nc")).as("n_chars"),
-            sum(col("upper")).as("u"), sum(col("digit")).as("dg"),
-            sum(col("punct")).as("p"), sum(col("space")).as("sp"))
-        g.select(col("source"), col("n_docs"), col("n_chars"),
-            (col("u").cast("double") / col("n_chars")).as("upper_ratio"),
-            (col("dg").cast("double") / col("n_chars")).as("digit_ratio"),
-            (col("p").cast("double") / col("n_chars")).as("punct_ratio"),
-            (col("sp").cast("double") / col("n_chars")).as("space_ratio"))
-          .orderBy(col("source"))
-      },
-      Some("""WITH g AS (
-             |  SELECT source,
-             |    CAST(length(text) AS BIGINT) AS nc,
-             |    CAST(length(text) - length(regexp_replace(text, '[A-Z]', '', 'g'))
-             |      AS BIGINT) AS u,
-             |    CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
-             |      AS BIGINT) AS dg,
-             |    CAST(length(text)
-             |      - length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g'))
-             |      AS BIGINT) AS p,
-             |    CAST(length(text) - length(regexp_replace(text, ' ', '', 'g'))
-             |      AS BIGINT) AS sp
-             |  FROM documents)
-             |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-             |  CAST(sum(nc) AS BIGINT) AS n_chars,
-             |  sum(u)::DOUBLE / sum(nc) AS upper_ratio,
-             |  sum(dg)::DOUBLE / sum(nc) AS digit_ratio,
-             |  sum(p)::DOUBLE / sum(nc) AS punct_ratio,
-             |  sum(sp)::DOUBLE / sum(nc) AS space_ratio
-             |FROM g GROUP BY source ORDER BY source""".stripMargin)),
-
     // Template-head detection: documents sharing their first five tokens
     // — the cheapest boilerplate-family finder (form letters, scraped
     // templates, generated spam share heads long before they share whole
@@ -1926,71 +754,6 @@ object DriftQueries {
              |    / sqrt((m::DOUBLE * sxx - sx::DOUBLE * sx)
              |         * (m::DOUBLE * syy - sy::DOUBLE * sy)) AS assortativity
              |FROM agg""".stripMargin)),
-
-    // Deterministic Poisson bootstrap CI for the mean event value: 32
-    // replicas, each row's replica weight drawn from a QUANTIZED
-    // Poisson(1) inverse-CDF over an md5-derived byte — fully
-    // reproducible and bit-identical in any engine (the practical
-    // requirement a sampled bootstrap can't meet). Replica means are
-    // exact-decimal rationals; the band is the 2nd-smallest/2nd-largest
-    // replica mean (a ~94% percentile-bootstrap interval at B = 32).
-    Entry("q313_hash_bootstrap_ci",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val B = 32
-        // byte ∈ [0,256): two md5 hex chars; Poisson(1) CDF quantized to
-        // /256 steps: P(0)=.368→94, P(≤1)=.736→188, P(≤2)=.920→235,
-        // P(≤3)=.981→251, P(≤4)=.996→255
-        val byte = conv(substring(md5(concat(col("event_id"), lit("|"),
-          col("b").cast("string"))), 1, 2), 16, 10).cast("int")
-        val w = when(col("byte") < 94, 0L).when(col("byte") < 188, 1L)
-          .when(col("byte") < 235, 2L).when(col("byte") < 251, 3L)
-          .when(col("byte") < 255, 4L).otherwise(5L)
-        val reps = Tables.events(s, d)
-          .select(col("event_id"), col("value").cast("decimal(20,6)").as("v"),
-            explode(sequence(lit(1), lit(B))).as("b"))
-          .withColumn("byte", byte)
-          .withColumn("w", w)
-          .groupBy(col("b"))
-          .agg((sum(col("w") * col("v")).cast("double") / sum(col("w")))
-            .as("rep_mean"))
-        val obs = Tables.events(s, d)
-          .agg((sum(col("value").cast("decimal(20,6)")).cast("double") /
-            count(lit(1))).as("mean_obs"))
-        val ranked = reps.withColumn("rk",
-          row_number().over(Window.orderBy(col("rep_mean"), col("b"))))
-        ranked.crossJoin(broadcast(obs))
-          .agg(max(col("mean_obs")).as("mean_obs"),
-            count(lit(1)).as("n_reps"),
-            max(when(col("rk") === 2, col("rep_mean"))).as("ci_lo"),
-            max(when(col("rk") === B - 1, col("rep_mean"))).as("ci_hi"))
-      },
-      Some("""WITH reps AS (
-             |  SELECT b,
-             |    sum(w * v)::DOUBLE / sum(w) AS rep_mean
-             |  FROM (
-             |    SELECT b, CAST(value AS DECIMAL(20,6)) AS v,
-             |      CASE WHEN byte < 94 THEN 0 WHEN byte < 188 THEN 1
-             |        WHEN byte < 235 THEN 2 WHEN byte < 251 THEN 3
-             |        WHEN byte < 255 THEN 4 ELSE 5 END AS w
-             |    FROM (
-             |      SELECT event_id, value, b,
-             |        CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)
-             |          || '|' || CAST(b AS VARCHAR)), 1, 2)) AS INT) AS byte
-             |      FROM events, unnest(generate_series(1, 32)) AS t(b)))
-             |  GROUP BY b),
-             |obs AS (
-             |  SELECT sum(CAST(value AS DECIMAL(20,6)))::DOUBLE / count(*)
-             |    AS mean_obs
-             |  FROM events),
-             |ranked AS (
-             |  SELECT *, row_number() OVER (ORDER BY rep_mean, b) AS rk
-             |  FROM reps)
-             |SELECT max(mean_obs) AS mean_obs,
-             |  CAST(count(*) AS BIGINT) AS n_reps,
-             |  max(CASE WHEN rk = 2 THEN rep_mean END) AS ci_lo,
-             |  max(CASE WHEN rk = 31 THEN rep_mean END) AS ci_hi
-             |FROM ranked CROSS JOIN obs""".stripMargin)),
 
     // Label-centroid separation matrix: between-centroid cosine for every
     // label pair next to each label's within-cohesion (mean member→
@@ -2312,103 +1075,6 @@ object DriftQueries {
              |  CAST(e_after / e_before AS REAL) AS smoothing_ratio
              |FROM before_e CROSS JOIN after_e""".stripMargin)),
 
-    // Score-band monotonicity audit: the outcome rate should fall (or
-    // rise) MONOTONICALLY across activity deciles for the score to be
-    // rankable at all — each adjacent inversion (rate going the wrong way
-    // between neighboring deciles) is a calibration defect the WoE table
-    // (q289) can't see. Deciles via the BSP ntile; the adjacency join is
-    // on the 10-row decile relation. Exact rationals.
-    Entry("q319_rate_monotonicity",
-      (s, d) => {
-        val users = Tables.events(s, d)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("score"),
-            (sum(when(col("event_type") === "error", 1L).otherwise(0L)) * 5 >
-              count(lit(1))).as("pos"))
-        val g = PrefixSum.globalNtile(users, 10,
-            Seq(desc("score"), col("user_id")), "decile")
-          .groupBy(col("decile"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("pos"), 1L).otherwise(0L)).as("n_pos"))
-          .withColumn("rate", col("n_pos").cast("double") / col("n"))
-        val nxt = g.select((col("decile") - 1).as("decile"),
-          col("rate").as("next_rate"))
-        g.join(nxt, Seq("decile"), "left")
-          .withColumn("inversion",
-            col("next_rate").isNotNull && col("next_rate") > col("rate"))
-          .select(col("decile"), col("n"), col("n_pos"), col("rate"),
-            col("inversion"))
-          .orderBy(col("decile"))
-      },
-      Some("""WITH users AS (
-             |  SELECT user_id, count(*) AS score,
-             |    5 * count(CASE WHEN event_type = 'error' THEN 1 END)
-             |      > count(*) AS pos
-             |  FROM events GROUP BY user_id),
-             |g AS (
-             |  SELECT decile, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT)
-             |      AS n_pos
-             |  FROM (SELECT *, ntile(10) OVER (ORDER BY score DESC, user_id)
-             |          AS decile FROM users)
-             |  GROUP BY decile),
-             |r AS (SELECT *, n_pos::DOUBLE / n AS rate FROM g)
-             |SELECT a.decile, a.n, a.n_pos, a.rate,
-             |  b.rate IS NOT NULL AND b.rate > a.rate AS inversion
-             |FROM r a LEFT JOIN r b ON b.decile = a.decile + 1
-             |ORDER BY a.decile""".stripMargin)),
-
-    // Seasonality strength per event type: the share of hourly-count
-    // variance explained by the (hour-of-day × day-of-week) profile —
-    // R² of the seasonal means. Near 1 = a periodic signal worth
-    // gap-filling around; near 0 = noise. Exact counts feed power sums;
-    // the variance ratio sums engine-ordered doubles → float32.
-    Entry("q320_seasonality_strength",
-      (s, d) => {
-        val hourly = Tables.events(s, d)
-          .select(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-          .groupBy(col("event_type"), col("h"))
-          .agg(count(lit(1)).as("x"))
-          .withColumn("hod", hour(col("h")))
-          .withColumn("dow", dayofweek(col("h")) - 1)
-        val cell = hourly.groupBy(col("event_type"), col("hod"), col("dow"))
-          .agg(sum(col("x")).as("sx"), count(lit(1)).as("cn"))
-          .withColumn("cell_mean", col("sx").cast("double") / col("cn"))
-        val joined = hourly.join(cell, Seq("event_type", "hod", "dow"))
-        val tot = hourly.groupBy(col("event_type"))
-          .agg(sum(col("x")).as("st"), count(lit(1)).as("nt"))
-          .withColumn("gmean", col("st").cast("double") / col("nt"))
-        joined.join(broadcast(tot), "event_type")
-          .groupBy(col("event_type"))
-          .agg(max(col("nt")).as("n_hours"),
-            (lit(1.0) -
-              sum((col("x") - col("cell_mean")) * (col("x") - col("cell_mean"))) /
-                sum((col("x") - col("gmean")) * (col("x") - col("gmean"))))
-              .cast("float").as("seasonality_r2"))
-          .orderBy(col("event_type"))
-      },
-      Some("""WITH hourly AS (
-             |  SELECT event_type, date_trunc('hour', ts) AS h,
-             |    CAST(count(*) AS BIGINT) AS x
-             |  FROM events GROUP BY 1, 2),
-             |k AS (
-             |  SELECT *, hour(h) AS hod, dayofweek(h) AS dow FROM hourly),
-             |cell AS (
-             |  SELECT event_type, hod, dow,
-             |    sum(x)::DOUBLE / count(*) AS cell_mean
-             |  FROM k GROUP BY 1, 2, 3),
-             |tot AS (
-             |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
-             |    sum(x)::DOUBLE / count(*) AS gmean
-             |  FROM k GROUP BY 1)
-             |SELECT event_type, max(n_hours) AS n_hours,
-             |  CAST(1.0 - sum((x - cell_mean) * (x - cell_mean))
-             |    / sum((x - gmean) * (x - gmean)) AS REAL)
-             |    AS seasonality_r2
-             |FROM k JOIN cell USING (event_type, hod, dow)
-             |JOIN tot USING (event_type)
-             |GROUP BY event_type ORDER BY event_type""".stripMargin)),
-
     // Bigram conditional entropy per source: H(w₂|w₁) = H(bigram) −
     // H(unigram) — the compressibility proxy (low conditional entropy =
     // predictable, template-like text; the per-source slice of what
@@ -2465,89 +1131,7 @@ object DriftQueries {
              |SELECT source, CAST(h1 AS REAL) AS h_unigram,
              |  CAST(h2 AS REAL) AS h_bigram,
              |  CAST(h2 - h1 AS REAL) AS h_cond
-             |FROM h1 JOIN h2 USING (source) ORDER BY source""".stripMargin)),
+             |FROM h1 JOIN h2 USING (source) ORDER BY source""".stripMargin))
 
-    // Day-over-day active-user stickiness: Jaccard of consecutive days'
-    // active sets — the short-horizon retention series (WAU7 in q297
-    // smooths exactly this signal away). One day+1 self-join of the
-    // distinct (day, user) relation; exact counts.
-    Entry("q322_dau_stickiness",
-      (s, d) => {
-        val du = Tables.events(s, d)
-          .select(to_date(col("ts")).as("day"), col("user_id"))
-          .distinct().localCheckpoint(true) // both join legs + sizes
-        val sizes = du.groupBy(col("day")).agg(count(lit(1)).as("n"))
-        val inter = du.select(col("day"), col("user_id"))
-          .join(du.select(date_sub(col("day"), 1).as("day"), col("user_id")),
-            Seq("day", "user_id"))
-          .groupBy(col("day")).agg(count(lit(1)).as("inter"))
-        sizes
-          .join(sizes.select(date_sub(col("day"), 1).as("day"),
-            col("n").as("n_next")), Seq("day"))
-          .join(inter, Seq("day"), "left")
-          .withColumn("inter", coalesce(col("inter"), lit(0L)))
-          .select(col("day"), col("n").as("dau"), col("n_next").as("dau_next"),
-            col("inter"),
-            (col("inter").cast("double") /
-              (col("n") + col("n_next") - col("inter"))).as("jaccard"))
-          .orderBy(col("day"))
-      },
-      Some("""WITH du AS (
-             |  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-             |sizes AS (SELECT day, CAST(count(*) AS BIGINT) AS n
-             |          FROM du GROUP BY day),
-             |inter AS (
-             |  SELECT a.day, CAST(count(*) AS BIGINT) AS inter
-             |  FROM du a JOIN du b
-             |    ON b.day = a.day + 1 AND b.user_id = a.user_id
-             |  GROUP BY a.day)
-             |SELECT a.day, a.n AS dau, b.n AS dau_next,
-             |  coalesce(i.inter, 0) AS inter,
-             |  coalesce(i.inter, 0)::DOUBLE
-             |    / (a.n + b.n - coalesce(i.inter, 0)) AS jaccard
-             |FROM sizes a JOIN sizes b ON b.day = a.day + 1
-             |LEFT JOIN inter i ON i.day = a.day
-             |ORDER BY a.day""".stripMargin)),
-
-    // Discount elasticity: mean quantity per discount level plus the OLS
-    // slope of that response curve — does a deeper discount actually move
-    // volume? Level means are exact decimal rationals; the 11-point
-    // regression is a closed-form slope over engine-identical doubles —
-    // the slope emits float32 (level-mean sums are engine-ordered).
-    Entry("q323_discount_elasticity",
-      (s, d) => {
-        val g = Tables.lineitem(s, d)
-          .select(col("l_discount").cast("decimal(4,2)").as("disc"),
-            col("l_quantity").cast("decimal(12,2)").as("q"))
-          .groupBy(col("disc"))
-          .agg(count(lit(1)).as("n"),
-            (sum(col("q")).cast("double") / count(lit(1))).as("mean_qty"))
-        val x = col("disc").cast("double")
-        val a = g.agg(count(lit(1)).as("k"),
-          sum(x).as("sx"), sum(col("mean_qty")).as("sy"),
-          sum(x * col("mean_qty")).as("sxy"), sum(x * x).as("sxx"))
-        val slope = (col("k") * col("sxy") - col("sx") * col("sy")) /
-          (col("k") * col("sxx") - col("sx") * col("sx"))
-        g.crossJoin(broadcast(a.select(slope.cast("float").as("slope"))))
-          .select(col("disc").cast("double").as("discount"), col("n"),
-            col("mean_qty"), col("slope"))
-          .orderBy(col("discount"))
-      },
-      Some("""WITH g AS (
-             |  SELECT CAST(l_discount AS DECIMAL(4,2)) AS disc,
-             |    CAST(count(*) AS BIGINT) AS n,
-             |    sum(CAST(l_quantity AS DECIMAL(12,2)))::DOUBLE / count(*)
-             |      AS mean_qty
-             |  FROM lineitem GROUP BY 1),
-             |a AS (
-             |  SELECT CAST(count(*) AS BIGINT) AS k,
-             |    sum(disc::DOUBLE) AS sx, sum(mean_qty) AS sy,
-             |    sum(disc::DOUBLE * mean_qty) AS sxy,
-             |    sum(disc::DOUBLE * disc::DOUBLE) AS sxx
-             |  FROM g)
-             |SELECT disc::DOUBLE AS discount, n, mean_qty,
-             |  CAST((k * sxy - sx * sy) / (k * sxx - sx * sx) AS REAL)
-             |    AS slope
-             |FROM g CROSS JOIN a ORDER BY discount""".stripMargin))
   )
 }

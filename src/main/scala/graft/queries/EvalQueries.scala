@@ -4,73 +4,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Round-4 eval-infrastructure completion: threshold curves, count-class
-  * smoothing, decile gains — the remaining classifier/LM evaluation
-  * surfaces beyond the scalar metrics (q263 AUC, q217 kappa, q201 NDCG).
-  * Every entry is DuckDB-oracle-checked.
+/** Evaluation surfaces: Good–Turing count-class smoothing over n-gram
+  * counts and journey similarity between users' event sequences (bounded
+  * edit distance under the Levenshtein prefilter). Every entry is
+  * DuckDB-oracle-checked.
   */
 object EvalQueries {
 
   def entries: Seq[Entry] = Seq(
-
-    // Precision/recall curve: P and R of "volume predicts elevated error
-    // share" at a threshold grid — the curve behind q263's single AUC
-    // number. One per-user agg, then one 5-row broadcast grid expansion
-    // with conditional sums (no per-threshold rescan). All-integer counts,
-    // single divisions.
-    Entry("q272_pr_curve",
-      (s, d) => {
-        val users = Tables.events(s, d)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("score"),
-            (sum(when(col("event_type") === "error", 1L).otherwise(0L)) * 5 >
-              count(lit(1))).as("pos"))
-          .localCheckpoint(true)
-        // thresholds from score QUANTILES, not absolute counts — the grid
-        // stays meaningful at any scale factor and never flags zero rows
-        val grid = users
-          .agg(expr("percentile(score, array(0.1, 0.3, 0.5, 0.7, 0.9))")
-            .as("ths"))
-          .select(posexplode(col("ths")).as(Seq("i", "threshold")))
-          .select((col("i") + 1).cast("int").as("grid_pt"), col("threshold"))
-        users.crossJoin(broadcast(grid))
-          .groupBy(col("grid_pt"), col("threshold"))
-          .agg(
-            sum(when(col("score") >= col("threshold"), 1L).otherwise(0L))
-              .as("n_flagged"),
-            sum(when(col("score") >= col("threshold") && col("pos"), 1L)
-              .otherwise(0L)).as("n_tp"),
-            sum(when(col("pos"), 1L).otherwise(0L)).as("n_pos"))
-          .select(col("grid_pt"), col("threshold"), col("n_flagged"),
-            col("n_tp"),
-            (col("n_tp") / col("n_flagged")).as("precision"),
-            (col("n_tp") / col("n_pos")).as("recall"))
-          .orderBy(col("grid_pt"))
-      },
-      Some("""WITH users AS (
-             |  SELECT count(*) AS score,
-             |    5 * count(CASE WHEN event_type = 'error' THEN 1 END)
-             |      > count(*) AS pos
-             |  FROM events GROUP BY user_id),
-             |grid AS (
-             |  SELECT CAST(i AS INT) AS grid_pt, th AS threshold FROM (
-             |    SELECT unnest(quantile_cont(score,
-             |        [0.1, 0.3, 0.5, 0.7, 0.9])) AS th,
-             |      unnest(generate_series(1, 5)) AS i
-             |    FROM users))
-             |SELECT grid_pt, threshold,
-             |  CAST(sum(CASE WHEN score >= threshold THEN 1 ELSE 0 END)
-             |    AS BIGINT) AS n_flagged,
-             |  CAST(sum(CASE WHEN score >= threshold AND pos THEN 1 ELSE 0
-             |    END) AS BIGINT) AS n_tp,
-             |  sum(CASE WHEN score >= threshold AND pos THEN 1 ELSE 0 END)
-             |    ::DOUBLE
-             |    / sum(CASE WHEN score >= threshold THEN 1 ELSE 0 END)
-             |    AS precision,
-             |  sum(CASE WHEN score >= threshold AND pos THEN 1 ELSE 0 END)
-             |    ::DOUBLE / sum(CASE WHEN pos THEN 1 ELSE 0 END) AS recall
-             |FROM users CROSS JOIN grid
-             |GROUP BY grid_pt, threshold ORDER BY grid_pt""".stripMargin)),
 
     // Good–Turing count-class smoothing: the count-of-counts table N_r
     // and the discounted estimate r* = (r+1)·N_{r+1}/N_r for the low
@@ -121,72 +62,6 @@ object EvalQueries {
              |FROM nr a LEFT JOIN nr b ON b.r = a.r + 1
              |CROSS JOIN tot
              |WHERE a.r <= 5 ORDER BY a.r""".stripMargin)),
-
-    // Decile gains table: rank users by score, split into deciles, report
-    // per-decile capture and CUMULATIVE capture of positives vs the
-    // random baseline (lift) — the targeting readout ("the top 20% of the
-    // list holds X% of the positives"). The user relation is corpus-sized,
-    // so the decile cut is the two-pass BSP ranker (PrefixSum.globalNtile)
-    // over the exact integer score with the id tie-break — bit-identical
-    // to ANSI ntile, no single-task global sort; the remaining cumulative
-    // windows run over the 10-row decile relation.
-    Entry("q274_gains_table",
-      (s, d) => {
-        import graft.ops.PrefixSum
-        val users = Tables.events(s, d)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("score"),
-            (sum(when(col("event_type") === "error", 1L).otherwise(0L)) * 5 >
-              count(lit(1))).as("pos"))
-        val deciled = PrefixSum.globalNtile(users, 10,
-          Seq(desc("score"), col("user_id")), "decile")
-        val wCum = Window.orderBy(col("decile"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wAll = Window.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)
-        deciled.groupBy(col("decile"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("pos"), 1L).otherwise(0L)).as("n_pos"))
-          .withColumn("cum_pos", sum(col("n_pos")).over(wCum))
-          .withColumn("cum_n", sum(col("n")).over(wCum))
-          .withColumn("tot_pos", sum(col("n_pos")).over(wAll))
-          .withColumn("tot_n", sum(col("n")).over(wAll))
-          .select(col("decile"), col("n"), col("n_pos"),
-            (col("cum_pos") / col("tot_pos")).as("cum_capture"),
-            ((col("cum_pos") / col("tot_pos")) /
-              (col("cum_n") / col("tot_n"))).as("cum_lift"))
-          .orderBy(col("decile"))
-      },
-      Some("""WITH users AS (
-             |  SELECT user_id, count(*) AS score,
-             |    5 * count(CASE WHEN event_type = 'error' THEN 1 END)
-             |      > count(*) AS pos
-             |  FROM events GROUP BY user_id),
-             |deciled AS (
-             |  SELECT *, ntile(10) OVER (ORDER BY score DESC, user_id)
-             |      AS decile
-             |  FROM users),
-             |agg AS (
-             |  SELECT decile, count(*) AS n,
-             |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT)
-             |      AS n_pos
-             |  FROM deciled GROUP BY decile),
-             |c AS (
-             |  SELECT *,
-             |    CAST(sum(n_pos) OVER (ORDER BY decile
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS BIGINT) AS cum_pos,
-             |    CAST(sum(n) OVER (ORDER BY decile
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS BIGINT) AS cum_n,
-             |    CAST(sum(n_pos) OVER () AS BIGINT) AS tot_pos,
-             |    CAST(sum(n) OVER () AS BIGINT) AS tot_n
-             |  FROM agg)
-             |SELECT decile, n, n_pos,
-             |  cum_pos::DOUBLE / tot_pos AS cum_capture,
-             |  (cum_pos::DOUBLE / tot_pos) / (cum_n::DOUBLE / tot_n)
-             |    AS cum_lift
-             |FROM c ORDER BY decile""".stripMargin)),
 
     // User-journey similarity: users whose first-12-event journey strings
     // (event-type initials in time order) are within edit distance 3 —
@@ -240,195 +115,7 @@ object EvalQueries {
              |  ON substr(a.journey, 1, 3) = substr(b.journey, 1, 3)
              | AND a.user_id < b.user_id
              |WHERE levenshtein(a.journey, b.journey) <= 3
-             |ORDER BY lev, u_a, u_b LIMIT 50""".stripMargin)),
+             |ORDER BY lev, u_a, u_b LIMIT 50""".stripMargin))
 
-    // Burstiness (Fano factor) per event type: variance-to-mean ratio of
-    // hourly arrival counts — F ≈ 1 is Poisson, F ≫ 1 is bursty (retry
-    // storms, bots), F < 1 is rate-limited. The hourly relation is
-    // DENSIFIED against the global hour range (type × hour grid, absent
-    // hours = 0 arrivals) — grouping only observed hours would drop the
-    // zero-count hours, biasing the mean up and F down for sparse types
-    // and breaking the "F ≈ 1 is Poisson" readout. Variance from exact
-    // integer power sums (Σx, Σx²), so everything up to the two final
-    // divisions is exact — no variance-of-doubles drift.
-    Entry("q276_fano_burstiness",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-          .select(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        val hourly = ev.groupBy(col("event_type"), col("h"))
-          .agg(count(lit(1)).as("x"))
-        // global hour domain, in-plan (broadcast grid: |types| × |hours|,
-        // bounded by the time range at any corpus size)
-        val hours = ev.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-          .select(explode(sequence(col("h0"), col("h1"),
-            expr("interval 1 hour"))).as("h"))
-        val dense = ev.select(col("event_type")).distinct()
-          .crossJoin(hours)
-          .join(hourly, Seq("event_type", "h"), "left")
-          .withColumn("x", coalesce(col("x"), lit(0L)))
-        dense.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_hours"),
-            sum(col("x")).as("s1"),
-            sum(col("x") * col("x")).as("s2"))
-          .filter(col("n_hours") > 1)
-          .select(col("event_type"), col("n_hours"),
-            (col("s1") / col("n_hours")).as("mean_per_hour"),
-            (((col("s2") - col("s1") * col("s1") / col("n_hours").cast("double")) /
-              (col("n_hours") - 1)) /
-              (col("s1") / col("n_hours"))).as("fano"))
-          .orderBy(col("event_type"))
-      },
-      Some("""WITH ev AS (
-             |  SELECT event_type, date_trunc('hour', ts) AS h FROM events),
-             |hourly AS (
-             |  SELECT event_type, h, count(*) AS x FROM ev GROUP BY 1, 2),
-             |hours AS (
-             |  SELECT unnest(generate_series(min(h), max(h),
-             |    INTERVAL 1 HOUR)) AS h
-             |  FROM ev),
-             |dense AS (
-             |  SELECT t.event_type, hr.h, coalesce(hourly.x, 0) AS x
-             |  FROM (SELECT DISTINCT event_type FROM ev) t
-             |  CROSS JOIN hours hr
-             |  LEFT JOIN hourly ON hourly.event_type = t.event_type
-             |    AND hourly.h = hr.h),
-             |agg AS (
-             |  SELECT event_type, count(*) AS n_hours,
-             |    CAST(sum(x) AS BIGINT) AS s1,
-             |    CAST(sum(x * x) AS BIGINT) AS s2
-             |  FROM dense GROUP BY 1)
-             |SELECT event_type, n_hours,
-             |  s1::DOUBLE / n_hours AS mean_per_hour,
-             |  ((s2 - s1 * s1 / n_hours::DOUBLE) / (n_hours - 1))
-             |    / (s1::DOUBLE / n_hours) AS fano
-             |FROM agg WHERE n_hours > 1 ORDER BY event_type""".stripMargin)),
-
-    // Inter-event dwell-time percentiles per transition: exact p50/p90 of
-    // the gap (seconds) between consecutive events for the 10 most common
-    // (prev → next) transitions — the empirical basis for session-gap
-    // (q37) and state-timeout choices, where q238 calibrates the
-    // watermark. One lag window, one percentile agg per transition.
-    Entry("q277_dwell_percentiles",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us"), col("event_id"))
-        val gaps = Tables.events(s, d)
-          .select(col("user_id"), col("event_type"), col("event_id"),
-            unix_micros(col("ts").cast("timestamp")).as("ts_us"))
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .withColumn("prev_us", lag(col("ts_us"), 1).over(w))
-          .filter(col("prev_type").isNotNull)
-          .select(col("prev_type"), col("event_type").as("next_type"),
-            ((col("ts_us") - col("prev_us")) / 1000000.0).as("gap_s"))
-        gaps.groupBy(col("prev_type"), col("next_type"))
-          .agg(count(lit(1)).as("n"),
-            round(expr("percentile(gap_s, 0.5)"), 3).as("p50_s"),
-            round(expr("percentile(gap_s, 0.9)"), 3).as("p90_s"))
-          .orderBy(desc("n"), col("prev_type"), col("next_type"))
-          .limit(10)
-      },
-      Some("""WITH seq AS (
-             |  SELECT user_id, event_type,
-             |    epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-             |    lag(event_type) OVER w AS prev_type,
-             |    lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER w AS prev_us
-             |  FROM events
-             |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-             |gaps AS (
-             |  SELECT prev_type, event_type AS next_type,
-             |    (ts_us - prev_us) / 1000000.0 AS gap_s
-             |  FROM seq WHERE prev_type IS NOT NULL)
-             |SELECT prev_type, next_type, count(*) AS n,
-             |  round(quantile_cont(gap_s, 0.5), 3) AS p50_s,
-             |  round(quantile_cont(gap_s, 0.9), 3) AS p90_s
-             |FROM gaps GROUP BY 1, 2
-             |ORDER BY n DESC, prev_type, next_type LIMIT 10""".stripMargin)),
-
-    // Lorenz concentration curve: cumulative share of total events held
-    // by the bottom-p fraction of users, at decile points — the curve
-    // behind q237's Gini scalar ("the top 10% of keys hold X% of the
-    // rows" readout that sizes skew mitigations). The decile cut over the
-    // corpus-sized user relation is the two-pass BSP ranker
-    // (PrefixSum.globalNtile) on exact integer activity — bit-identical
-    // to ANSI ntile, no single-task global sort; shares are exact single
-    // divisions over the 10-row decile relation.
-    Entry("q278_lorenz_curve",
-      (s, d) => {
-        import graft.ops.PrefixSum
-        val users = Tables.events(s, d)
-          .groupBy(col("user_id")).agg(count(lit(1)).as("x"))
-        val deciled = PrefixSum.globalNtile(users, 10,
-          Seq(col("x"), col("user_id")), "decile")
-        val wCum = Window.orderBy(col("decile"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wAll = Window.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)
-        deciled.groupBy(col("decile"))
-          .agg(count(lit(1)).as("n_users"), sum(col("x")).as("rows_held"))
-          .withColumn("cum_rows", sum(col("rows_held")).over(wCum))
-          .withColumn("tot_rows", sum(col("rows_held")).over(wAll))
-          .withColumn("cum_users", sum(col("n_users")).over(wCum))
-          .withColumn("tot_users", sum(col("n_users")).over(wAll))
-          .select(col("decile"), col("n_users"), col("rows_held"),
-            (col("cum_users") / col("tot_users")).as("pop_share"),
-            (col("cum_rows") / col("tot_rows")).as("row_share"))
-          .orderBy(col("decile"))
-      },
-      Some("""WITH users AS (
-             |  SELECT user_id, count(*) AS x FROM events GROUP BY user_id),
-             |deciled AS (
-             |  SELECT *, ntile(10) OVER (ORDER BY x, user_id) AS decile
-             |  FROM users),
-             |agg AS (
-             |  SELECT decile, count(*) AS n_users,
-             |    CAST(sum(x) AS BIGINT) AS rows_held
-             |  FROM deciled GROUP BY decile),
-             |c AS (
-             |  SELECT *,
-             |    CAST(sum(rows_held) OVER (ORDER BY decile
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS BIGINT) AS cum_rows,
-             |    CAST(sum(rows_held) OVER () AS BIGINT) AS tot_rows,
-             |    CAST(sum(n_users) OVER (ORDER BY decile
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS BIGINT) AS cum_users,
-             |    CAST(sum(n_users) OVER () AS BIGINT) AS tot_users
-             |  FROM agg)
-             |SELECT decile, n_users, rows_held,
-             |  cum_users::DOUBLE / tot_users AS pop_share,
-             |  cum_rows::DOUBLE / tot_rows AS row_share
-             |FROM c ORDER BY decile""".stripMargin)),
-
-    // Hill tail-index estimator over the top-200 order values: α =
-    // 1 / mean(ln(x_i / x_k)) — is the revenue distribution power-law
-    // heavy (α < 2: variance undefined, whales dominate; mitigations like
-    // q256's winsorizing become mandatory)? Top-k via the bounded top-k
-    // heap; ln-derived output emits float32.
-    Entry("q279_hill_tail",
-      (s, d) => {
-        val k = 200
-        val top = Tables.orders(s, d)
-          .select(col("o_totalprice"), col("o_orderkey"))
-          .orderBy(desc("o_totalprice"), col("o_orderkey"))
-          .limit(k + 1)
-          .localCheckpoint(true) // feeds the cutoff scalar and the mean
-        val cutoff = top.agg(min(col("o_totalprice")).as("x_k"))
-        top.crossJoin(broadcast(cutoff))
-          .filter(col("o_totalprice") > col("x_k"))
-          .agg(count(lit(1)).as("n_tail"),
-            (lit(1.0) / avg(log(col("o_totalprice") / col("x_k"))))
-              .cast("float").as("hill_alpha"),
-            max(col("o_totalprice")).as("x_max"),
-            min(col("x_k")).as("x_k"))
-      },
-      Some("""WITH top AS (
-             |  SELECT o_totalprice FROM orders
-             |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 201),
-             |cutoff AS (SELECT min(o_totalprice) AS x_k FROM top)
-             |SELECT count(*) AS n_tail,
-             |  CAST(1.0 / avg(ln(o_totalprice / x_k)) AS REAL) AS hill_alpha,
-             |  max(o_totalprice) AS x_max, min(x_k) AS x_k
-             |FROM top CROSS JOIN cutoff
-             |WHERE o_totalprice > x_k""".stripMargin))
   )
 }

@@ -1,14 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.{Dedup, Rerank, Retrieval, Similarity}
 
-/** Second coverage wave: OMO safety filter (F5), last-wins dedup (A2),
-  * deterministic rerank (W5), projection/trim (F7), multi-space vector
-  * fusion (V2), tumbling windows (§2.10), simhash-hamming near-dup,
-  * id-list hydration with pointer chains (J1/J6), adaptive quota fill (W2).
+/** OMO safety filter (F5), last-wins dedup (A2), deterministic rerank
+  * (W5), multi-space vector fusion (V2), simhash-hamming near-dup and
+  * adaptive quota fill (W2).
   */
 object ExtendedQueries {
 
@@ -81,17 +79,6 @@ object ExtendedQueries {
              |FROM documents
              |ORDER BY rr_score DESC, doc_id LIMIT 15""".stripMargin)),
 
-    // F7: projection/trim — bounded snippet of related content
-    // (trim_and_filter_related_memories, memory_graph.py:5175).
-    Entry("q41_trim_projection",
-      (s, d) => Tables.documents(s, d)
-        .select(col("doc_id"), substring(col("text"), 1, 100).as("snippet"),
-          length(col("text")).cast("long").as("full_len"))
-        .orderBy(col("doc_id")),
-      Some("""SELECT doc_id, substr(text, 1, 100) AS snippet,
-             |  CAST(length(text) AS BIGINT) AS full_len
-             |FROM documents ORDER BY doc_id""".stripMargin)),
-
     // V2: multi-space parallel search + fusion — same query in two embedding
     // spaces, union, keep best score per id (memory_graph.py:6085-6127;
     // second space simulated by component reversal).
@@ -125,18 +112,6 @@ object ExtendedQueries {
               |  SELECT * FROM spaceA UNION ALL SELECT * FROM spaceB)
               |GROUP BY vec_id ORDER BY score DESC, vec_id LIMIT 10""".stripMargin)),
 
-    // §2.10: tumbling-window aggregation over the event stream (batch twin
-    // of the streaming windowed agg; epoch-aligned 6h windows).
-    Entry("q43_tumbling_window",
-      (s, d) => Tables.events(s, d)
-        .groupBy(window(col("ts"), "6 hours").as("w"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-        .select(col("w.start").as("ws"), col("n"), col("sum_value"))
-        .orderBy(col("ws")),
-      Some("""SELECT time_bucket(INTERVAL 6 HOUR, CAST(ts AS TIMESTAMP)) AS ws,
-             |  count(*) AS n, round(sum(value), 2) AS sum_value
-             |FROM events GROUP BY ws ORDER BY ws""".stripMargin)),
-
     // SimHash near-dup pairs by hamming distance on 16-bit fingerprints.
     Entry("q44_simhash_hamming",
       (s, d) => Dedup.simhashPairs(Tables.documents(s, d), "doc_id", "text",
@@ -162,29 +137,6 @@ object ExtendedQueries {
              |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
              |ORDER BY doc_a, doc_b""".stripMargin)),
 
-    // J1/J6: id-list hydration with a two-level pointer chain
-    // (fetch_memory_items_from_sources_mongo + parse_pointer,
-    // memory_graph.py:7719-7860): top ids → row fetch → FK resolution.
-    Entry("q45_hydrate_ids",
-      (s, d) => {
-        val ids = Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .orderBy(desc("o_totalprice"), col("o_orderkey"))
-          .limit(20)
-        ids.join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-          .select(col("o_orderkey"), col("c_name"), col("n_name"))
-          .orderBy(col("o_orderkey"))
-      },
-      Some("""WITH ids AS (
-             |  SELECT o_orderkey, o_custkey FROM orders
-             |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 20)
-             |SELECT o_orderkey, c_name, n_name
-             |FROM ids
-             |JOIN customer ON o_custkey = c_custkey
-             |JOIN nation ON c_nationkey = n_nationkey
-             |ORDER BY o_orderkey""".stripMargin)),
-
     // W2: adaptive quota filling — per-source quota then global-score fill
     // of the remaining slots (memory_graph.py:6330-6372).
     Entry("q46_adaptive_fill",
@@ -204,44 +156,6 @@ object ExtendedQueries {
              |  ORDER BY value DESC, event_id LIMIT 10)
              |SELECT event_type, event_id, value FROM (
              |  SELECT * FROM base UNION ALL SELECT * FROM fill)
-             |ORDER BY value DESC, event_id""".stripMargin)),
+             |ORDER BY value DESC, event_id""".stripMargin)))
 
-    // W7 (beyond parity, free via Catalyst): frame-spec window — per-user
-    // running event count and running value sum in event-time order.
-    Entry("q55_running_window",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        Tables.events(s, d)
-          .withColumn("running_n", count(lit(1)).over(w))
-          .withColumn("running_sum", round(sum(col("value")).over(w), 2))
-          .select(col("user_id"), col("event_id"), col("running_n"), col("running_sum"))
-          .orderBy(col("user_id"), col("event_id"))
-      },
-      Some("""SELECT user_id, event_id,
-             |  count(*) OVER w AS running_n,
-             |  round(sum(value) OVER w, 2) AS running_sum
-             |FROM events
-             |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |ORDER BY user_id, event_id""".stripMargin)),
-
-    // Catalyst decorrelation (SURVEY §4 "free via Catalyst"), exercised
-    // through the engine's SQL surface: orders more than 2× their own
-    // customer's average — correlated scalar subquery → join rewrite.
-    Entry("q57_correlated_subquery",
-      (s, d) => {
-        Tables.orders(s, d).createOrReplaceTempView("orders_v")
-        s.sql("""SELECT o_orderkey FROM orders_v o
-                |WHERE o_totalprice > 2 * (
-                |  SELECT avg(o_totalprice) FROM orders_v o2
-                |  WHERE o2.o_custkey = o.o_custkey)
-                |ORDER BY o_orderkey""".stripMargin)
-      },
-      Some("""SELECT o_orderkey FROM orders o
-             |WHERE o_totalprice > 2 * (
-             |  SELECT avg(o_totalprice) FROM orders o2
-             |  WHERE o2.o_custkey = o.o_custkey)
-             |ORDER BY o_orderkey""".stripMargin)))
 }

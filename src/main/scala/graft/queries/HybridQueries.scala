@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine.HashEmbedder
 import graft.functions.Fns
-import graft.multimodal.Multimodal
 import graft.ops.Retrieval
 
 /** Hybrid retrieval and training-corpus hygiene operators:
@@ -17,10 +16,7 @@ import graft.ops.Retrieval
   *  - q117: benchmark-contamination detection — eval-split documents
   *    sharing an 8-token n-gram with any train-split document, via an
   *    inverted-index join (pairs materialize only on shared n-grams — the
-  *    shape that survives a 100 TB train corpus);
-  *  - q118: multimodal frame sampling — the video-decode batch stage
-  *    (deterministic stub decoder) with frame grid, timestamps, and the
-  *    first feature component oracle-checked in SQL via sha-256.
+  *    shape that survives a 100 TB train corpus).
   */
 object HybridQueries {
 
@@ -244,115 +240,6 @@ object HybridQueries {
               |    / count(*) AS accuracy
               |FROM pred GROUP BY true_label ORDER BY true_label""".stripMargin)),
 
-    // Video frame sampling: one frame every 700 ms up to the clip duration
-    // (≥1 per clip), fanned out by flatMap without a shuffle; the stub
-    // decoder's first feature component is reproduced in SQL from the same
-    // sha-256, so the batch plumbing AND the deterministic decode contract
-    // are both hash-checked.
-    Entry("q118_frame_sample",
-      (s, d) => {
-        import s.implicits._
-        val media = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .map { case (id, text) =>
-            Multimodal.MediaRow(s"media$id",
-              Seq("image", "audio", "video")((id % 3).toInt),
-              text.getBytes("UTF-8"),
-              Multimodal.MediaMeta("application/octet-stream", 64, 48,
-                1000L * (id % 10 + 1), 0))
-          }
-        Multimodal.sampleFrames(s, media, everyMs = 700L)
-          .toDF()
-          .select(col("media_id"), col("frame_index"), col("ts_ms"),
-            element_at(col("features"), 1).as("f0"))
-          .orderBy(col("media_id"), col("frame_index"))
-      },
-      Some {
-        val hex = "strpos('0123456789abcdef', substr(h, 1, 1)) - 1"
-        val hex2 = "strpos('0123456789abcdef', substr(h, 2, 1)) - 1"
-        s"""WITH v AS (
-           |  SELECT doc_id, text, 1000 * (doc_id % 10 + 1) AS dur
-           |  FROM documents
-           |  WHERE doc_id % 3 = 2
-           |    AND octet_length(CAST(text AS BLOB)) > 0),
-           |f AS (
-           |  SELECT doc_id, text,
-           |    unnest(generate_series(0, CAST(greatest(dur // 700, 1) AS INT) - 1)) AS i
-           |  FROM v),
-           |hashed AS (
-           |  SELECT doc_id, i,
-           |    sha256(text || CAST(i AS VARCHAR) || '0') AS h
-           |  FROM f),
-           |b AS (
-           |  SELECT doc_id, i, ($hex) * 16 + ($hex2) AS byte0
-           |  FROM hashed)
-           |SELECT 'media' || CAST(doc_id AS VARCHAR) AS media_id,
-           |  CAST(i AS INT) AS frame_index,
-           |  CAST(i * 700 AS BIGINT) AS ts_ms,
-           |  CAST((CASE WHEN byte0 >= 128 THEN byte0 - 256 ELSE byte0 END) / 128.0
-           |       AS REAL) AS f0
-           |FROM b ORDER BY media_id, frame_index""".stripMargin
-      }),
-
-    // Point-in-time (leakage-safe) feature join: each training example
-    // (click event) picks the SCD2 user-state version valid AT example
-    // time — the label-leakage guard every feature pipeline needs. SCD2
-    // build + bin-bucketed range join, both existing operators; the open
-    // version gets a far-future sentinel so it stays joinable.
-    Entry("q120_point_in_time",
-      (s, d) => {
-        import graft.ops.Temporal
-        val ev = Tables.events(s, d)
-        // open-version sentinel = max(ts) + 1 day, NOT a far-future date:
-        // rangeJoin explodes one bin row per day of interval span, so a
-        // 2100 sentinel would fan every open version into ~27k bins (the
-        // exact pathology rangeJoin's fan-out guard warns about). Computed
-        // IN-PLAN (1-row aggregate cross-joined in) — a driver-side
-        // head() here is both an action at plan-build time and fragile
-        // across Spark's java.time/java.sql external-type settings.
-        val sentinel = ev.agg(
-          (max(col("ts")) + expr("INTERVAL 1 DAY")).as("__sentinel"))
-        val dim = Temporal.scd2(ev, keyCol = "user_id", tsCol = "ts",
-            orderCol = "event_id", attrCols = Seq("event_type"))
-          .crossJoin(broadcast(sentinel))
-          .select(col("user_id"), col("event_type").as("state_at_ts"),
-            col("valid_from"),
-            coalesce(col("valid_to"), col("__sentinel")).as("valid_to_c"))
-        val examples = ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        Temporal.rangeJoin(examples, "ts", dim, "valid_from", "valid_to_c",
-            binWidthSec = 86400, keys = Seq("user_id"))
-          .select(col("event_id"), col("user_id"), col("state_at_ts"),
-            col("valid_from"))
-          .orderBy(col("event_id"))
-      },
-      Some("""WITH ordered AS (
-             |  SELECT user_id, ts, event_id, event_type,
-             |    lag(event_type) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS prev_type,
-             |    row_number() OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS rn
-             |  FROM events),
-             |changed AS (
-             |  SELECT user_id, ts, event_id, event_type FROM ordered
-             |  WHERE rn = 1 OR event_type IS DISTINCT FROM prev_type),
-             |dim AS (
-             |  SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS valid_from,
-             |    CAST(coalesce(
-             |      lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-             |      (SELECT max(CAST(ts AS TIMESTAMP)) + INTERVAL 1 DAY FROM events))
-             |      AS TIMESTAMP) AS valid_to
-             |  FROM changed)
-             |SELECT p.event_id, p.user_id, d.event_type AS state_at_ts,
-             |  d.valid_from
-             |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |      FROM events WHERE event_type = 'click') p
-             |JOIN dim d ON d.user_id = p.user_id
-             |  AND p.ts >= d.valid_from AND p.ts < d.valid_to
-             |  AND d.valid_to > d.valid_from
-             |ORDER BY p.event_id""".stripMargin)),
-
     // Training-sequence packing: concat-then-chop into 512-token
     // sequences, per source shard (each shard packs independently — no
     // global ordering anywhere). A document belongs to the sequence its
@@ -547,172 +434,6 @@ object HybridQueries {
              |  round(sum(value) / count(*), 4) AS avg_value
              |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // HLL rollup: daily distinct-user sketches union to per-type sketches
-    // (raw data never re-read) whose estimates must land within 5% of the
-    // exact distinct — the q54 boolean trick keeps the sketch in the
-    // measured plan while staying SQL-expressible.
-    Entry("q126_hll_rollup",
-      (s, d) => {
-        import graft.ops.Sketches
-        val ev = Tables.events(s, d).withColumn("day", dayofmonth(col("ts")))
-        val daily = Sketches.distinctSketch(ev, Seq("event_type", "day"), "user_id")
-        val merged = Sketches.mergeSketches(daily.drop("day"), Seq("event_type"))
-        val exact = Tables.events(s, d).groupBy(col("event_type"))
-          .agg(countDistinct(col("user_id")).as("exact_users"))
-        Sketches.estimate(merged).join(exact, "event_type")
-          .select(col("event_type"), col("exact_users"),
-            (abs(col("approx_distinct") - col("exact_users")) <=
-              col("exact_users") * 0.05).as("approx_ok"))
-          .orderBy(col("event_type"))
-      },
-      Some("""SELECT event_type, count(DISTINCT user_id) AS exact_users,
-             |  TRUE AS approx_ok
-             |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    // KLL quantile-sketch rollup — the percentile member of the rollup
-    // family: daily per-type sketches merge into per-type sketches WITHOUT
-    // re-reading raw data, and the merged sketch must place the exact
-    // median (computed independently, emitted float32 for cross-engine
-    // hash parity) at normalized rank 0.5 within the KLL error bound.
-    Entry("q128_quantile_rollup",
-      (s, d) => {
-        import graft.ops.Sketches
-        val ev = Tables.events(s, d)
-          .select(col("event_type"), col("value"), dayofmonth(col("ts")).as("day"))
-        val daily = Sketches.quantileSketch(ev, Seq("event_type", "day"), "value")
-        val merged = Sketches.mergeQuantileSketches(daily.drop("day"), Seq("event_type"))
-        val exact = ev.groupBy(col("event_type"))
-          .agg(expr("percentile(value, 0.5)").as("exact_p50"),
-            count(lit(1)).as("n"))
-        merged.join(exact, "event_type")
-          .select(col("event_type"), col("n"),
-            col("exact_p50").cast("float").as("p50"),
-            (abs(Sketches.rankOf(col("qsk"), col("exact_p50")) - 0.5) <= 0.05)
-              .as("rank_ok"))
-          .orderBy(col("event_type"))
-      },
-      Some("""SELECT event_type, count(*) AS n,
-             |  CAST(quantile_cont(value, 0.5) AS REAL) AS p50,
-             |  TRUE AS rank_ok
-             |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    // Theta-sketch set algebra — the segment-overlap member of the sketch
-    // family HLL cannot express: per-day distinct-user sketches fold up
-    // from (day, cohort) partials exactly like the HLL rollups, and then
-    // any PAIR of stored ~KB sketches answers |A∩B| / |A∪B| / |A\B|
-    // without re-shuffling raw ids (day-over-day retention at 100 TB).
-    // Exact comparables are computed in-engine and by the oracle; the
-    // sketch estimates must land within the theta error bound (exact-mode
-    // at these cardinalities → equality in practice).
-    Entry("q129_theta_overlap",
-      (s, d) => {
-        import graft.ops.Sketches
-        val du = Tables.events(s, d)
-          .filter(dayofmonth(col("ts")) <= 7)
-          .select(dayofmonth(col("ts")).as("d"), col("user_id"), col("event_type"))
-        // two-level fold: (day, cohort) partials → per-day sketches
-        val partials = Sketches.thetaSketch(du, Seq("d", "event_type"), "user_id")
-        val daily = Sketches.mergeThetaSketches(partials.drop("event_type"), Seq("d"))
-        val dist = du.select("d", "user_id").distinct()
-        val cnt = dist.groupBy("d").agg(count(lit(1)).as("c"))
-        val ov = dist.as("a").join(dist.as("b"),
-            col("a.user_id") === col("b.user_id") && col("a.d") < col("b.d"))
-          .groupBy(col("a.d").as("day_a"), col("b.d").as("day_b"))
-          .agg(count(lit(1)).as("overlap_users"))
-        ov
-          .join(cnt.select(col("d").as("day_a"), col("c").as("ca")), "day_a")
-          .join(cnt.select(col("d").as("day_b"), col("c").as("cb")), "day_b")
-          .join(daily.select(col("d").as("day_a"), col("tsk").as("ska")), "day_a")
-          .join(daily.select(col("d").as("day_b"), col("tsk").as("skb")), "day_b")
-          .select(
-            col("day_a"), col("day_b"), col("overlap_users"),
-            (col("ca") + col("cb") - col("overlap_users")).as("union_users"),
-            (col("ca") - col("overlap_users")).as("only_a_users"),
-            (Sketches.thetaOk(
-                Sketches.thetaEstimate(Sketches.thetaIntersect(col("ska"), col("skb"))),
-                col("overlap_users")) &&
-             Sketches.thetaOk(
-                Sketches.thetaEstimate(Sketches.thetaUnion(col("ska"), col("skb"))),
-                col("ca") + col("cb") - col("overlap_users")) &&
-             Sketches.thetaOk(
-                Sketches.thetaEstimate(Sketches.thetaANotB(col("ska"), col("skb"))),
-                col("ca") - col("overlap_users"))).as("theta_ok"))
-          .orderBy(col("day_a"), col("day_b"))
-      },
-      Some("""WITH du AS (SELECT DISTINCT dayofmonth(ts) AS d, user_id
-             |  FROM events WHERE dayofmonth(ts) <= 7),
-             |cnt AS (SELECT d, count(*) AS c FROM du GROUP BY 1),
-             |ov AS (SELECT a.d AS day_a, b.d AS day_b, count(*) AS overlap_users
-             |  FROM du a JOIN du b ON a.user_id = b.user_id AND a.d < b.d
-             |  GROUP BY 1, 2)
-             |SELECT ov.day_a, ov.day_b, ov.overlap_users,
-             |  ca.c + cb.c - ov.overlap_users AS union_users,
-             |  ca.c - ov.overlap_users AS only_a_users,
-             |  TRUE AS theta_ok
-             |FROM ov JOIN cnt ca ON ca.d = ov.day_a
-             |  JOIN cnt cb ON cb.d = ov.day_b
-             |ORDER BY 1, 2""".stripMargin)),
-
-    // Audio windowing: 900 ms windows per clip with per-window RMS/peak
-    // over the stub pseudo-PCM — the third modality next to q50 (image
-    // features) and q118 (video frames). All arithmetic is exactly
-    // representable (samples are byte/128 dyadic rationals), so rms/peak
-    // hash-match the sha-256 SQL oracle bit for bit.
-    Entry("q136_audio_windows",
-      (s, d) => {
-        import s.implicits._
-        val media = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .map { case (id, text) =>
-            Multimodal.MediaRow(s"media$id",
-              Seq("image", "audio", "video")((id % 3).toInt),
-              text.getBytes("UTF-8"),
-              Multimodal.MediaMeta("application/octet-stream", 0, 0,
-                1000L * (id % 10 + 1), 16000))
-          }
-        Multimodal.audioWindows(s, media, windowMs = 900L)
-          .toDF()
-          .select(col("media_id"), col("window_index"), col("start_ms"),
-            col("end_ms"), col("rms"), col("peak"))
-          .orderBy(col("media_id"), col("window_index"))
-      },
-      Some {
-        val byteJ =
-          """(strpos('0123456789abcdef', substr(h, 2*j - 1, 1)) - 1) * 16
-            | + strpos('0123456789abcdef', substr(h, 2*j, 1)) - 1""".stripMargin
-        s"""WITH a AS (
-           |  SELECT doc_id, text, 1000 * (doc_id % 10 + 1) AS dur
-           |  FROM documents
-           |  WHERE doc_id % 3 = 1
-           |    AND octet_length(CAST(text AS BLOB)) > 0),
-           |w AS (
-           |  SELECT doc_id, text, dur,
-           |    unnest(generate_series(0, CAST(greatest(dur // 900, 1) AS INT) - 1)) AS i
-           |  FROM a),
-           |hashed AS (
-           |  SELECT doc_id, dur, i,
-           |    sha256(text || 'w' || CAST(i AS VARCHAR) || '0') AS h
-           |  FROM w),
-           |samples AS (
-           |  SELECT doc_id, dur, i,
-           |    list_transform(generate_series(1, 32), j ->
-           |      ($byteJ)) AS bytes
-           |  FROM hashed),
-           |xs AS (
-           |  SELECT doc_id, dur, i,
-           |    list_transform(bytes, b ->
-           |      (CASE WHEN b >= 128 THEN b - 256 ELSE b END) / 128.0) AS x
-           |  FROM samples)
-           |SELECT 'media' || CAST(doc_id AS VARCHAR) AS media_id,
-           |  CAST(i AS INT) AS window_index,
-           |  CAST(i * 900 AS BIGINT) AS start_ms,
-           |  CAST(least((i + 1) * 900, dur) AS BIGINT) AS end_ms,
-           |  sqrt(list_sum(list_transform(x, v -> v * v)) / 32.0) AS rms,
-           |  CAST(list_max(list_transform(x, v -> abs(v))) AS REAL) AS peak
-           |FROM xs ORDER BY media_id, window_index""".stripMargin
-      }),
-
     // Retrieval-quality evaluation: recall@10 and reciprocal rank of the
     // 16-dim Matryoshka prefix ranking against exact full-dim gold, per
     // query — the eval harness a serving stack runs after every index
@@ -824,8 +545,8 @@ object HybridQueries {
     // Matryoshka prefix prune → exact rescore: rank the corpus by cosine
     // over the FIRST 16 dims only (4× fewer bytes per scan row — the MRL
     // serving trick), keep 20 candidates, rescore those at full dimension
-    // and return the top 5. Same prune-then-rescore shape as the PQ path
-    // (q79), with dimension truncation as the cheap stage.
+    // and return the top 5 — prune-then-rescore with dimension truncation
+    // as the cheap stage.
     Entry("q135_matryoshka_rescore",
       (s, d) => {
         import graft.functions.VectorFunctions._
@@ -855,74 +576,6 @@ object HybridQueries {
               |  ${OracleSql.cosine("embedding", "qvec")} AS score
               |FROM pruned
               |ORDER BY score DESC, vec_id LIMIT 5""".stripMargin)),
-
-    // Scene-cut detection: L1 distance between CONSECUTIVE frame feature
-    // vectors per clip, cuts = distance above threshold — the shot-
-    // boundary stage of a video training pipeline, built on q118's frame
-    // sampler. Every feature component is a dyadic rational (byte/128),
-    // so |x−y| sums are EXACT in double at any fold order — the whole
-    // row hash-matches without any float32 absorption. One lag window
-    // per clip (frames never leave their media_id partition).
-    Entry("q164_scene_cuts",
-      (s, d) => {
-        import s.implicits._
-        import org.apache.spark.sql.expressions.Window
-        val media = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .map { case (id, text) =>
-            Multimodal.MediaRow(s"media$id",
-              Seq("image", "audio", "video")((id % 3).toInt),
-              text.getBytes("UTF-8"),
-              Multimodal.MediaMeta("application/octet-stream", 64, 48,
-                1000L * (id % 10 + 1), 0))
-          }
-        val w = Window.partitionBy(col("media_id")).orderBy(col("frame_index"))
-        Multimodal.sampleFrames(s, media, everyMs = 700L).toDF()
-          .withColumn("prev", lag(col("features"), 1).over(w))
-          .filter(col("prev").isNotNull)
-          .withColumn("dist", expr(
-            """aggregate(zip_with(features, prev,
-              |  (x, y) -> cast(abs(x - y) as double)),
-              |cast(0.0 as double), (a, v) -> a + v)""".stripMargin))
-          .select(col("media_id"), col("frame_index"), col("ts_ms"),
-            col("dist"), (col("dist") > 22.0).as("is_cut"))
-          .orderBy(col("media_id"), col("frame_index"))
-      },
-      Some {
-        def byteCol(j: Int) = {
-          val p = 2 * j
-          val b = s"((strpos('0123456789abcdef', substr(h, ${p + 1}, 1)) - 1) * 16" +
-            s" + strpos('0123456789abcdef', substr(h, ${p + 2}, 1)) - 1)"
-          s"CAST((CASE WHEN $b >= 128 THEN $b - 256 ELSE $b END) / 128.0 AS REAL) AS b$j"
-        }
-        val cols = (0 until 32).map(byteCol).mkString(",\n    ")
-        val dist = (0 until 32)
-          .map(j => s"abs(a.b$j::DOUBLE - p.b$j::DOUBLE)").mkString(" + ")
-        s"""WITH v AS (
-           |  SELECT doc_id, text, 1000 * (doc_id % 10 + 1) AS dur
-           |  FROM documents
-           |  WHERE doc_id % 3 = 2
-           |    AND octet_length(CAST(text AS BLOB)) > 0),
-           |f AS (
-           |  SELECT doc_id, text,
-           |    unnest(generate_series(0, CAST(greatest(dur // 700, 1) AS INT) - 1)) AS i
-           |  FROM v),
-           |hashed AS (
-           |  SELECT doc_id, i, sha256(text || CAST(i AS VARCHAR) || '0') AS h
-           |  FROM f),
-           |feat AS (
-           |  SELECT 'media' || CAST(doc_id AS VARCHAR) AS media_id,
-           |    CAST(i AS INT) AS frame_index, CAST(i * 700 AS BIGINT) AS ts_ms,
-           |    $cols
-           |  FROM hashed)
-           |SELECT a.media_id, a.frame_index, a.ts_ms,
-           |  ($dist) AS dist,
-           |  ($dist) > 22.0 AS is_cut
-           |FROM feat a JOIN feat p
-           |  ON p.media_id = a.media_id AND p.frame_index = a.frame_index - 1
-           |ORDER BY a.media_id, a.frame_index""".stripMargin
-      }),
 
     // Intra-list similarity (ILS): mean pairwise cosine within each
     // query's top-10 — the diversity eval that complements q141's
@@ -1013,4 +666,5 @@ object HybridQueries {
   // matches vs non-matches, per comparison field.
   private val fsPriors: Seq[(Double, Double)] =
     Seq((0.9, 0.1), (0.8, 0.2), (0.95, 0.05))
+
 }

@@ -73,53 +73,4 @@ object OracleSql {
        |        FROM ${out}_acc))""".stripMargin
   }
 
-  /** CTE chain reproducing `SifEmbedder(dim, a, freq).embed(txt)` for every
-    * row of a prior CTE `src(id, txt)`; the final CTE is `out(id, emb)`.
-    * `freqCte` must be a prior CTE `(tk, p)` of relative token frequencies
-    * (absent tokens weight 1, matching the Scala map-miss path). Arithmetic
-    * mirrors the JVM exactly: the weight is a double, each weighted element
-    * rounds to float32 (`CAST(w * x AS REAL)` = `(w * v(i)).toFloat`), the
-    * fold adds float32s in token order, the norm accumulates doubles. */
-  def sifEmbedCtes(src: String, dim: Int, out: String, a: String,
-                   freqCte: String): String = {
-    require(dim % 32 == 0, s"sifEmbedCtes supports multiples of 32 (sha-256 digest), got $dim")
-    val rounds = dim / 32
-    val vec = (0 until dim).map(j => byteExpr(s"h${j / 32}", j)).mkString(",\n      ")
-    s"""${out}_tok AS (
-       |  SELECT id, unnest(toks) AS tk, unnest(generate_series(1, len(toks))) AS pos
-       |  FROM (SELECT id,
-       |          list_filter(string_split_regex(lower(txt), '\\s+'), x -> x <> '') AS toks
-       |        FROM $src)),
-       |${out}_h AS (
-       |  SELECT t.id, t.pos,
-       |    ${(0 until rounds).map(r => s"sha256(t.tk || '#$r') AS h$r").mkString(", ")},
-       |    CASE WHEN f.p IS NULL THEN 1.0 ELSE $a / ($a + f.p) END AS w
-       |  FROM ${out}_tok t LEFT JOIN $freqCte f ON f.tk = t.tk),
-       |${out}_v AS (
-       |  SELECT id, pos, list_transform([
-       |      $vec], x -> CAST(w * x AS REAL)) AS vec
-       |  FROM ${out}_h),
-       |${out}_acc AS (
-       |  SELECT id, list_reduce(list(vec ORDER BY pos),
-       |    (a, b) -> list_transform(generate_series(1, $dim),
-       |                i -> CAST(a[i] + b[i] AS REAL))) AS acc
-       |  FROM ${out}_v GROUP BY id),
-       |$out AS (
-       |  SELECT id, list_transform(acc, x -> CAST(x / nrm AS REAL)) AS emb
-       |  FROM (SELECT id, acc,
-       |          sqrt(list_sum(list_transform(acc, y -> y::DOUBLE * y::DOUBLE))) AS nrm
-       |        FROM ${out}_acc))""".stripMargin
-  }
-
-  /** The value-level indexability classifier
-    * (`_is_deterministic_value`, property_indexing_service.py:39-57) as a
-    * DuckDB predicate over column `c` — mirrors
-    * [[graft.engine.SchemaRegistry.shouldIndexValue]]. */
-  def shouldIndexValue(c: String): String =
-    s"""($c IS NOT NULL AND length(trim($c)) > 0
-       |  AND NOT regexp_matches(lower($c),
-       |    '^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$$')
-       |  AND NOT regexp_matches($c, '^[0-9]+$$')
-       |  AND NOT regexp_matches($c, '^[0-9]{4}-[0-9]{2}-[0-9]{2}')
-       |  AND lower($c) NOT IN ('true', 'false'))""".stripMargin
 }

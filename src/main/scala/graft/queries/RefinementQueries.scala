@@ -2,12 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.{Curation, Dedup, GraphAnalytics, TextAnalysis}
+import graft.ops.{Dedup, GraphAnalytics, TextAnalysis}
 
-/** Round-4 refinement set: the exact-recall scale path for set-similarity
-  * joins (prefix filtering), leakage-safe dataset splitting, the per-source
-  * dedup impact report, and the character-entropy quality gate. Every entry
-  * is DuckDB-oracle-checked.
+/** The exact-recall scale path for set-similarity joins (prefix
+  * filtering), delta dedup, LSH recall, leakage-safe dataset splitting and
+  * the evaluation metrics computed over the engine's similarity, text and
+  * graph operators. Every entry is DuckDB-oracle-checked.
   */
 object RefinementQueries {
 
@@ -45,7 +45,7 @@ object RefinementQueries {
        |ORDER BY doc_a, doc_b""".stripMargin
 
   // Near-dup clusters (recursive-CTE connected components over exact
-  // Jaccard ≥ 0.5 pairs) — the q56 oracle shape, reused by q190/q191.
+  // Jaccard ≥ 0.5 pairs) — the q56 oracle shape, reused by q190.
   private val clusterCtes: String =
     s"""$shingleCtes,
        |inter AS (
@@ -240,84 +240,6 @@ object RefinementQueries {
               |    THEN 'train' ELSE 'test' END AS split
               |FROM assigned ORDER BY doc_id""".stripMargin)),
 
-    // Per-source dedup impact report: doc/token keep rates after near-dup
-    // clustering (canonical survivor = cluster min). The numbers a mixture
-    // planner needs before weighting sources. All counts exact; the two
-    // rates are single divisions.
-    Entry("q191_dedup_impact",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        Curation.dedupImpact(docs, "doc_id", "text", "source",
-          GraphAnalytics.dedupClusters(
-            Dedup.exactJaccardPairs(docs, "doc_id", "text", 3, 0.5)
-              .select(col("doc_a"), col("doc_b"))))
-      },
-      Some(s"""WITH RECURSIVE $clusterCtes,
-              |tok AS (
-              |  SELECT doc_id, source,
-              |    len(list_filter(string_split(lower(text), ' '),
-              |      x -> length(x) > 0))::BIGINT AS n_tokens
-              |  FROM documents),
-              |j AS (
-              |  SELECT tok.source, tok.n_tokens,
-              |    (assigned.cluster = tok.doc_id) AS kept
-              |  FROM tok JOIN assigned USING (doc_id))
-              |SELECT source, count(*) AS n_docs,
-              |  sum(CASE WHEN kept THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-              |  sum(CASE WHEN kept THEN 1 ELSE 0 END)::DOUBLE / count(*) AS keep_rate,
-              |  sum(n_tokens)::BIGINT AS tokens_total,
-              |  sum(CASE WHEN kept THEN n_tokens ELSE 0 END)::BIGINT AS tokens_kept,
-              |  (sum(n_tokens) - sum(CASE WHEN kept THEN n_tokens ELSE 0 END))::DOUBLE
-              |    / sum(n_tokens) AS token_loss_rate
-              |FROM j GROUP BY source ORDER BY source""".stripMargin)),
-
-    // Perceptual-hash (dHash) media near-dup: binary content → stub-decoded
-    // features → 32-bit gradient-sign fingerprint → byte-banded Hamming
-    // join (pigeonhole-exact for maxDist < #bands). The image-dedup path of
-    // the multimodal pipeline; fixture media share content in groups of 5,
-    // so within-group pairs surface at Hamming 0. Plumbing (decode seam,
-    // fingerprint pack, banded join) is the real 100 TB shape.
-    Entry("q193_phash_neardup",
-      (s, d) => {
-        import s.implicits._
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val reps = docs.select(col("doc_id").as("rep_id"), col("text").as("rep_text"))
-        val media = docs
-          .select(col("doc_id"), (col("doc_id") - pmod(col("doc_id"), lit(5))).as("rep_id"))
-          .join(reps, "rep_id")
-          .select(col("doc_id"), col("rep_text"))
-          .as[(Long, String)]
-          .map { case (id, t) =>
-            graft.multimodal.Multimodal.MediaRow(f"media$id%05d", "image",
-              t.getBytes("UTF-8"),
-              graft.multimodal.Multimodal.MediaMeta("image/png", 64, 48, 0L, 0))
-          }
-        graft.multimodal.Multimodal.phashNearDup(s, media, maxDist = 3)
-      },
-      Some("""WITH m AS (
-             |  SELECT d.doc_id, r.text AS rep_text
-             |  FROM documents d JOIN documents r ON r.doc_id = d.doc_id - (d.doc_id % 5)
-             |  WHERE octet_length(CAST(r.text AS BLOB)) > 0),
-             |h AS (SELECT doc_id, sha256(rep_text || '0') AS h FROM m),
-             |sb AS (
-             |  SELECT doc_id, list_transform(generate_series(0, 31), j ->
-             |    CASE WHEN CAST(('0x' || substr(h, 2*j+1, 2)) AS INT) >= 128
-             |      THEN CAST(('0x' || substr(h, 2*j+1, 2)) AS INT) - 256
-             |      ELSE CAST(('0x' || substr(h, 2*j+1, 2)) AS INT) END) AS s
-             |  FROM h),
-             |ph AS (
-             |  SELECT doc_id,
-             |    list_sum(list_transform(generate_series(0, 31), j ->
-             |      CASE WHEN s[j+1] > s[((j+1) % 32) + 1]
-             |        THEN CAST(1 AS BIGINT) << j ELSE CAST(0 AS BIGINT) END))::BIGINT AS phash
-             |  FROM sb)
-             |SELECT 'media' || lpad(CAST(a.doc_id AS VARCHAR), 5, '0') AS media_a,
-             |  'media' || lpad(CAST(b.doc_id AS VARCHAR), 5, '0') AS media_b,
-             |  CAST(bit_count(xor(a.phash, b.phash)) AS INT) AS hamming
-             |FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-             |WHERE bit_count(xor(a.phash, b.phash)) <= 3
-             |ORDER BY media_a, media_b""".stripMargin)),
-
     // Language-ID eval against gold labels: the documents table carries the
     // TRUE lang column, so the q23 marker classifier gets a real confusion
     // matrix — which languages the marker heuristic confuses, per cell.
@@ -357,100 +279,6 @@ object RefinementQueries {
            |SELECT lang, pred_lang, count(*) AS n
            |FROM pred GROUP BY 1, 2 ORDER BY lang, pred_lang""".stripMargin
       }),
-
-    // Exact Spearman rank correlation between the quality composite and
-    // document length — the signal-redundancy check before adding a new
-    // quality feature. Total tie order (metric, doc_id) makes ranks
-    // integers; both rank passes are the two-pass BSP ranker
-    // (PrefixSum.globalRowNumber — range partials + broadcast offsets),
-    // bit-identical to the single-window row_number with no single-task
-    // global sort over the corpus-sized doc relation.
-    // ρ = 1 − 6Σd²/(n(n²−1)) is exact longs + ONE division.
-    Entry("q206_rank_correlation",
-      (s, d) => {
-        import graft.ops.PrefixSum
-        val docs = Tables.documents(s, d)
-        val q = TextAnalysis.quality(docs, "doc_id", "text")
-          .select(col("doc_id"), col("quality"))
-          .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
-        val ranked = PrefixSum.globalRowNumber(
-          PrefixSum.globalRowNumber(q,
-            Seq(col("quality"), col("doc_id")), "rq"),
-          Seq(col("n_chars"), col("doc_id")), "rl")
-        ranked.agg(count(lit(1)).as("n"),
-            sum((col("rq") - col("rl")) * (col("rq") - col("rl"))).as("sum_d2"))
-          .select(col("n"), col("sum_d2"),
-            (lit(1.0) - lit(6L) * col("sum_d2") /
-              (col("n") * (col("n") * col("n") - lit(1L)))).as("spearman_rho"))
-      },
-      Some {
-        val stop = TextAnalysis.langMarkers.values.flatten.toSeq.distinct.sorted
-          .map(m => s"'$m'").mkString(", ")
-        s"""WITH t AS (
-           |  SELECT doc_id, n_chars, string_split(lower(text), ' ') AS toks
-           |  FROM documents),
-           |f AS (
-           |  SELECT doc_id, n_chars,
-           |    CAST(len(toks) AS BIGINT) AS n_tokens,
-           |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-           |    CAST(len(list_filter(toks, x -> list_contains([$stop], x)))
-           |      AS BIGINT) AS n_stop
-           |  FROM t),
-           |qual AS (
-           |  SELECT doc_id, n_chars,
-           |    0.4 * least(1.0, n_tokens / 64.0)
-           |      + 0.3 * (n_distinct::DOUBLE / n_tokens)
-           |      + 0.3 * (1.0 - n_stop::DOUBLE / n_tokens) AS quality
-           |  FROM f),
-           |ranked AS (
-           |  SELECT
-           |    CAST(row_number() OVER (ORDER BY quality, doc_id) AS BIGINT) AS rq,
-           |    CAST(row_number() OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS rl
-           |  FROM qual)
-           |SELECT count(*) AS n,
-           |  sum((rq - rl) * (rq - rl))::BIGINT AS sum_d2,
-           |  1.0 - 6 * sum((rq - rl) * (rq - rl))::BIGINT
-           |    / (count(*) * (count(*) * count(*) - 1)) AS spearman_rho
-           |FROM ranked""".stripMargin
-      }),
-
-    // Exact audience-overlap matrix: pairwise user-set Jaccard between
-    // event types — the EXACT twin of the q129 theta-sketch estimates
-    // (run both to calibrate sketch error budgets). Distinct-pair
-    // inverted-index join, exact rational Jaccard.
-    Entry("q227_audience_overlap",
-      (s, d) => {
-        val ua = Tables.events(s, d)
-          .select(col("event_type"), col("user_id")).distinct()
-          .localCheckpoint(true)
-        val sizes = ua.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        val inter = ua.select(col("event_type").as("ta"), col("user_id"))
-          .join(ua.select(col("event_type").as("tb"), col("user_id")), "user_id")
-          .filter(col("ta") < col("tb"))
-          .groupBy(col("ta"), col("tb")).agg(count(lit(1)).as("n_both"))
-        inter
-          .join(sizes.select(col("event_type").as("ta"), col("n").as("na")), "ta")
-          .join(sizes.select(col("event_type").as("tb"), col("n").as("nb")), "tb")
-          .select(col("ta"), col("tb"), col("n_both"), col("na"), col("nb"),
-            (col("n_both") / (col("na") + col("nb") - col("n_both")))
-              .as("jaccard"))
-          .orderBy(col("ta"), col("tb"))
-      },
-      Some("""WITH ua AS (
-             |  SELECT DISTINCT event_type, user_id FROM events),
-             |sizes AS (SELECT event_type, count(*) AS n FROM ua GROUP BY 1),
-             |inter AS (
-             |  SELECT a.event_type AS ta, b.event_type AS tb,
-             |    count(*) AS n_both
-             |  FROM ua a JOIN ua b
-             |    ON a.user_id = b.user_id AND a.event_type < b.event_type
-             |  GROUP BY 1, 2)
-             |SELECT ta, tb, n_both, sa.n AS na, sb.n AS nb,
-             |  n_both::DOUBLE / (sa.n + sb.n - n_both) AS jaccard
-             |FROM inter
-             |JOIN sizes sa ON sa.event_type = ta
-             |JOIN sizes sb ON sb.event_type = tb
-             |ORDER BY ta, tb""".stripMargin)),
 
     // Kendall-tau rank agreement between the cosine and dot-product
     // rankings (q103's two fusion legs): concordant vs discordant pairs
@@ -516,377 +344,6 @@ object RefinementQueries {
            |    / count(*) AS kendall_tau
            |FROM p""".stripMargin
       }),
-
-    // Deseasonalized anomaly detection: daily event counts per type, the
-    // day-of-week median as the seasonal level, |count − dow_median|
-    // scored against the MAD of the deseasonalized residuals — flags the
-    // genuinely anomalous days a raw threshold (which fires every weekend)
-    // cannot isolate. Order-statistic arithmetic only — fully exact.
-    Entry("q225_seasonal_outliers",
-      (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("dow", dayofweek(col("day")))
-          .localCheckpoint(true) // seasonal medians + residuals + MAD share it
-        val seasonal = daily.groupBy(col("event_type"), col("dow"))
-          .agg(expr("percentile(n, 0.5)").as("dow_median"))
-        val resid = daily.join(seasonal, Seq("event_type", "dow"))
-          .withColumn("resid", abs(col("n") - col("dow_median")))
-        val mad = resid.groupBy(col("event_type"))
-          .agg(expr("percentile(resid, 0.5)").as("mad"))
-        resid.join(mad, "event_type")
-          .filter(col("resid") > lit(3.0) * col("mad") && col("mad") > 0)
-          .select(col("event_type"), col("day"), col("n"),
-            col("dow_median"), col("resid"), col("mad"))
-          .orderBy(col("event_type"), col("day"))
-      },
-      Some("""WITH daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-             |  FROM events GROUP BY 1, 2),
-             |dd AS (
-             |  SELECT event_type, day, n, dayofweek(day) + 1 AS dow FROM daily),
-             |seasonal AS (
-             |  SELECT event_type, dow, quantile_cont(n, 0.5) AS dow_median
-             |  FROM dd GROUP BY 1, 2),
-             |resid AS (
-             |  SELECT dd.event_type, dd.day, dd.n, s.dow_median,
-             |    abs(dd.n - s.dow_median) AS resid
-             |  FROM dd JOIN seasonal s
-             |    ON s.event_type = dd.event_type AND s.dow = dd.dow),
-             |mad AS (
-             |  SELECT event_type, quantile_cont(resid, 0.5) AS mad
-             |  FROM resid GROUP BY 1)
-             |SELECT r.event_type, r.day, r.n, r.dow_median, r.resid, m.mad
-             |FROM resid r JOIN mad m ON m.event_type = r.event_type
-             |WHERE r.resid > 3.0 * m.mad AND m.mad > 0
-             |ORDER BY r.event_type, r.day""".stripMargin)),
-
-    // Cross-correlation matrix of event types: Pearson r between every
-    // pair of types' daily-count series (inner-joined on shared days) —
-    // which behaviors move together. Exact integer sums into the
-    // closed-form r; float32 at emit.
-    Entry("q226_type_correlation",
-      (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("n"))
-          .localCheckpoint(true)
-        val a = daily.select(col("event_type").as("ta"), col("day"),
-          col("n").as("na"))
-        val b = daily.select(col("event_type").as("tb"), col("day"),
-          col("n").as("nb"))
-        a.join(b, Seq("day")).filter(col("ta") < col("tb"))
-          .groupBy(col("ta"), col("tb"))
-          .agg(count(lit(1)).as("days"),
-            sum(col("na")).as("sa"), sum(col("nb")).as("sb"),
-            sum(col("na") * col("nb")).as("sab"),
-            sum(col("na") * col("na")).as("saa"),
-            sum(col("nb") * col("nb")).as("sbb"))
-          .select(col("ta"), col("tb"), col("days"),
-            ((col("days") * col("sab") - col("sa") * col("sb")) /
-              (sqrt(col("days") * col("saa") - col("sa") * col("sa")) *
-                sqrt(col("days") * col("sbb") - col("sb") * col("sb"))))
-              .cast("float").as("pearson_r"))
-          .orderBy(col("ta"), col("tb"))
-      },
-      Some("""WITH daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-             |  FROM events GROUP BY 1, 2),
-             |j AS (
-             |  SELECT a.event_type AS ta, b.event_type AS tb,
-             |    a.n AS na, b.n AS nb
-             |  FROM daily a JOIN daily b
-             |    ON a.day = b.day AND a.event_type < b.event_type),
-             |agg AS (
-             |  SELECT ta, tb, count(*) AS days,
-             |    sum(na)::BIGINT AS sa, sum(nb)::BIGINT AS sb,
-             |    sum(na * nb)::BIGINT AS sab,
-             |    sum(na * na)::BIGINT AS saa,
-             |    sum(nb * nb)::BIGINT AS sbb
-             |  FROM j GROUP BY 1, 2)
-             |SELECT ta, tb, days,
-             |  CAST((days * sab - sa * sb)
-             |    / (sqrt(days * saa - sa * sa) * sqrt(days * sbb - sb * sb))
-             |    AS REAL) AS pearson_r
-             |FROM agg ORDER BY ta, tb""".stripMargin)),
-
-    // Functional-dependency discovery: for candidate X → Y pairs, how many
-    // X values map to more than one Y (0 violators = the FD holds) plus
-    // the violation rate — schema profiling that catches denormalization
-    // bugs and finds natural keys. Exact distinct counts per key.
-    Entry("q223_fd_discovery",
-      (s, d) => {
-        import s.implicits._
-        val li = Tables.lineitem(s, d)
-        val orders = Tables.orders(s, d)
-        def fd(name: String, df: org.apache.spark.sql.DataFrame,
-               x: String, y: String) =
-          df.groupBy(col(x)).agg(countDistinct(col(y)).as("ny"))
-            .agg(count(lit(1)).as("n_keys"),
-              sum(when(col("ny") > 1, 1L).otherwise(0L)).as("n_violating"))
-            .select(lit(name).as("fd"), col("n_keys"), col("n_violating"),
-              (col("n_violating") / col("n_keys")).as("violation_rate"))
-        fd("o_orderkey->o_custkey", orders, "o_orderkey", "o_custkey")
-          .unionByName(fd("o_custkey->o_orderpriority", orders,
-            "o_custkey", "o_orderpriority"))
-          .unionByName(fd("l_orderkey->l_partkey", li,
-            "l_orderkey", "l_partkey"))
-          .unionByName(fd("l_partkey->l_suppkey", li,
-            "l_partkey", "l_suppkey"))
-          .orderBy(col("fd"))
-      },
-      Some {
-        def fd(name: String, table: String, x: String, y: String) =
-          s"""SELECT '$name' AS fd, count(*)::BIGINT AS n_keys,
-             |  sum(CASE WHEN ny > 1 THEN 1 ELSE 0 END)::BIGINT AS n_violating,
-             |  sum(CASE WHEN ny > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*)
-             |    AS violation_rate
-             |FROM (SELECT $x, count(DISTINCT $y) AS ny FROM $table
-             |      GROUP BY $x)""".stripMargin
-        s"""SELECT * FROM (
-           |${fd("o_orderkey->o_custkey", "orders", "o_orderkey", "o_custkey")}
-           |UNION ALL
-           |${fd("o_custkey->o_orderpriority", "orders", "o_custkey", "o_orderpriority")}
-           |UNION ALL
-           |${fd("l_orderkey->l_partkey", "lineitem", "l_orderkey", "l_partkey")}
-           |UNION ALL
-           |${fd("l_partkey->l_suppkey", "lineitem", "l_partkey", "l_suppkey")})
-           |ORDER BY fd""".stripMargin
-      }),
-
-    // Benford first-digit audit of order totals: observed first-digit
-    // shares vs Benford's log10(1+1/d) expectation with per-digit χ²
-    // contributions — the classic synthetic-data/fraud smell test. Digit
-    // extraction is exact string arithmetic; expectation and χ² are
-    // identical ln-ratio arithmetic on both engines, float32 at emit.
-    Entry("q224_benford",
-      (s, d) => {
-        val digits = Tables.orders(s, d)
-          .filter(col("o_totalprice") > 0)
-          .select(substring(col("o_totalprice").cast("string"), 1, 1)
-            .cast("int").as("digit"))
-          .filter(col("digit").between(1, 9))
-        val counts = digits.groupBy(col("digit")).agg(count(lit(1)).as("n"))
-        val total = digits.agg(count(lit(1)).as("total"))
-        counts.crossJoin(broadcast(total))
-          .withColumn("observed", col("n") / col("total"))
-          .withColumn("expected",
-            log(lit(1.0) + lit(1.0) / col("digit")) / lit(math.log(10.0)))
-          .withColumn("chi2_term",
-            (col("n") - col("expected") * col("total")) *
-              (col("n") - col("expected") * col("total")) /
-              (col("expected") * col("total")))
-          .select(col("digit"), col("n"),
-            col("observed").cast("float").as("observed"),
-            col("expected").cast("float").as("expected"),
-            col("chi2_term").cast("float").as("chi2_term"))
-          .orderBy(col("digit"))
-      },
-      Some("""WITH dg AS (
-             |  SELECT CAST(substr(CAST(o_totalprice AS VARCHAR), 1, 1) AS INT)
-             |    AS digit
-             |  FROM orders WHERE o_totalprice > 0),
-             |dd AS (SELECT digit FROM dg WHERE digit BETWEEN 1 AND 9),
-             |c AS (SELECT digit, count(*) AS n FROM dd GROUP BY 1),
-             |t AS (SELECT count(*) AS total FROM dd)
-             |SELECT digit, n,
-             |  CAST(n::DOUBLE / total AS REAL) AS observed,
-             |  CAST(ln(1.0 + 1.0 / digit) / ln(10.0) AS REAL) AS expected,
-             |  CAST((n - (ln(1.0 + 1.0 / digit) / ln(10.0)) * total)
-             |     * (n - (ln(1.0 + 1.0 / digit) / ln(10.0)) * total)
-             |     / ((ln(1.0 + 1.0 / digit) / ln(10.0)) * total) AS REAL)
-             |    AS chi2_term
-             |FROM c CROSS JOIN t ORDER BY digit""".stripMargin)),
-
-    // Data-quality expectation suite (the dbt-test/Great-Expectations op
-    // class): FK orphan counts, key uniqueness, empty-content and
-    // out-of-range checks — one row per check with its exact violation
-    // count, unioned into a single report relation a scheduler can gate
-    // on. Anti-joins and count-distinct only.
-    Entry("q221_data_quality_suite",
-      (s, d) => {
-        import s.implicits._
-        val orders = Tables.orders(s, d)
-        val li = Tables.lineitem(s, d)
-        val cust = Tables.customer(s, d)
-        val docs = Tables.documents(s, d)
-        val ev = Tables.events(s, d)
-        def check(name: String, df: org.apache.spark.sql.DataFrame) =
-          df.agg(count(lit(1)).as("n_violations"))
-            .select(lit(name).as("check"), col("n_violations"))
-        check("orders_custkey_fk",
-            orders.join(cust, orders("o_custkey") === cust("c_custkey"),
-              "left_anti"))
-          .unionByName(check("lineitem_orderkey_fk",
-            li.join(orders, li("l_orderkey") === orders("o_orderkey"),
-              "left_anti")))
-          .unionByName(
-            cust.agg((count(lit(1)) -
-              countDistinct(col("c_custkey"))).as("n_violations"))
-              .select(lit("customer_key_unique").as("check"),
-                col("n_violations")))
-          .unionByName(check("documents_nonempty",
-            docs.filter(col("text").isNull || length(col("text")) === 0)))
-          .unionByName(check("events_value_range",
-            ev.filter(col("value").isNull || isnan(col("value")))))
-          .orderBy(col("check"))
-      },
-      Some("""SELECT "check", n_violations FROM (
-             |  SELECT 'orders_custkey_fk' AS "check", count(*)::BIGINT AS n_violations
-             |  FROM orders o WHERE NOT EXISTS (
-             |    SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-             |  UNION ALL
-             |  SELECT 'lineitem_orderkey_fk', count(*)::BIGINT
-             |  FROM lineitem l WHERE NOT EXISTS (
-             |    SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-             |  UNION ALL
-             |  SELECT 'customer_key_unique',
-             |    (count(*) - count(DISTINCT c_custkey))::BIGINT FROM customer
-             |  UNION ALL
-             |  SELECT 'documents_nonempty', count(*)::BIGINT FROM documents
-             |  WHERE text IS NULL OR length(text) = 0
-             |  UNION ALL
-             |  SELECT 'events_value_range', count(*)::BIGINT FROM events
-             |  WHERE value IS NULL OR isnan(value))
-             |ORDER BY "check"""".stripMargin)),
-
-    // FK-candidate inference by inclusion coefficient: for column pairs
-    // (A → B), |distinct A ∩ distinct B| / |distinct A| — 1.0 flags a
-    // foreign key, low values rule it out. The schema-discovery upgrade of
-    // A7 (the reference discovers labels/types; this discovers
-    // RELATIONSHIPS from data). Exact distinct counts per pair.
-    Entry("q222_fk_inference",
-      (s, d) => {
-        import s.implicits._
-        val pairs = Seq(
-          ("lineitem.l_orderkey->orders.o_orderkey",
-            Tables.lineitem(s, d).select(col("l_orderkey").as("a")),
-            Tables.orders(s, d).select(col("o_orderkey").as("b"))),
-          ("orders.o_custkey->customer.c_custkey",
-            Tables.orders(s, d).select(col("o_custkey").as("a")),
-            Tables.customer(s, d).select(col("c_custkey").as("b"))),
-          ("lineitem.l_partkey->part.p_partkey",
-            Tables.lineitem(s, d).select(col("l_partkey").as("a")),
-            Tables.part(s, d).select(col("p_partkey").as("b"))),
-          ("customer.c_nationkey->nation.n_nationkey",
-            Tables.customer(s, d).select(col("c_nationkey").as("a")),
-            Tables.nation(s, d).select(col("n_nationkey").as("b"))),
-          ("lineitem.l_suppkey->customer.c_custkey", // negative control
-            Tables.lineitem(s, d).select(col("l_suppkey").as("a")),
-            Tables.customer(s, d).select(col("c_custkey").as("b"))))
-        pairs.map { case (name, a, b) =>
-          val da = a.distinct()
-          val hit = da.join(b.distinct(), da("a") === col("b"), "left_semi")
-          da.agg(count(lit(1)).as("n_distinct_a"))
-            .crossJoin(broadcast(hit.agg(count(lit(1)).as("n_included"))))
-            .select(lit(name).as("candidate"), col("n_distinct_a"),
-              col("n_included"),
-              (col("n_included") / col("n_distinct_a")).as("inclusion"))
-        }.reduce(_ unionByName _).orderBy(col("candidate"))
-      },
-      Some {
-        def pair(name: String, a: String, b: String) =
-          s"""SELECT '$name' AS candidate,
-             |  (SELECT count(DISTINCT $a) FROM ${a.split("\\.")(0)}) AS n_distinct_a,
-             |  (SELECT count(*) FROM (
-             |     SELECT DISTINCT ${a.split("\\.")(1)} AS v FROM ${a.split("\\.")(0)}) x
-             |   WHERE EXISTS (SELECT 1 FROM ${b.split("\\.")(0)}
-             |     WHERE ${b.split("\\.")(1)} = x.v)) AS n_included""".stripMargin
-        val rows = Seq(
-          pair("lineitem.l_orderkey->orders.o_orderkey",
-            "lineitem.l_orderkey", "orders.o_orderkey"),
-          pair("orders.o_custkey->customer.c_custkey",
-            "orders.o_custkey", "customer.c_custkey"),
-          pair("lineitem.l_partkey->part.p_partkey",
-            "lineitem.l_partkey", "part.p_partkey"),
-          pair("customer.c_nationkey->nation.n_nationkey",
-            "customer.c_nationkey", "nation.n_nationkey"),
-          pair("lineitem.l_suppkey->customer.c_custkey",
-            "lineitem.l_suppkey", "customer.c_custkey")
-        ).mkString("\n  UNION ALL\n")
-        s"""SELECT candidate, n_distinct_a::BIGINT AS n_distinct_a,
-           |  n_included::BIGINT AS n_included,
-           |  n_included::DOUBLE / n_distinct_a AS inclusion
-           |FROM (
-           |  $rows)
-           |ORDER BY candidate""".stripMargin
-      }),
-
-    // Wilson-lower-bound conversion ranking: users ranked by the 95%
-    // Wilson score interval lower bound of purchases/(views+purchases) —
-    // the small-sample-honest "sort by rating" (a 1/1 user must NOT
-    // outrank a 40/50 one, which the raw rate does). Exact counts; one
-    // identical sqrt on both engines; float32 emit; rank on the exact
-    // integer pair would be ambiguous, so ties break by (rate desc,
-    // trials desc, user) via the exact integers.
-    Entry("q219_wilson_ranking",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-          .filter(col("event_type").isin("view", "purchase"))
-        val agg = ev.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("trials"),
-            sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-              .as("successes"))
-          .filter(col("trials") >= 5)
-        val z2 = lit(1.96 * 1.96)
-        val p = col("successes") / col("trials")
-        val n = col("trials")
-        val wilson = (p + z2 / (lit(2.0) * n) -
-          lit(1.96) * sqrt((p * (lit(1.0) - p) + z2 / (lit(4.0) * n)) / n)) /
-          (lit(1.0) + z2 / n)
-        agg.select(col("user_id"), col("trials"), col("successes"),
-            wilson.cast("float").as("wilson_lb"))
-          .orderBy(desc("wilson_lb"), desc("trials"), col("user_id"))
-          .limit(20)
-      },
-      Some("""WITH agg AS (
-             |  SELECT user_id, count(*) AS trials,
-             |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT
-             |      AS successes
-             |  FROM events WHERE event_type IN ('view', 'purchase')
-             |  GROUP BY 1 HAVING count(*) >= 5),
-             |w AS (
-             |  SELECT user_id, trials, successes,
-             |    CAST((successes::DOUBLE / trials
-             |        + (1.96 * 1.96) / (2.0 * trials)
-             |        - 1.96 * sqrt(((successes::DOUBLE / trials)
-             |            * (1.0 - successes::DOUBLE / trials)
-             |            + (1.96 * 1.96) / (4.0 * trials)) / trials))
-             |      / (1.0 + (1.96 * 1.96) / trials) AS REAL) AS wilson_lb
-             |  FROM agg)
-             |SELECT user_id, trials, successes, wilson_lb FROM w
-             |ORDER BY wilson_lb DESC, trials DESC, user_id LIMIT 20""".stripMargin)),
-
-    // Behavioral entropy per user: Shannon entropy of the event-type
-    // distribution — the "how varied is this user's activity" feature
-    // (0 = single-action bots, high = diverse engagement). Same exact-
-    // count + ln discipline as the char-entropy gate.
-    Entry("q220_behavior_entropy",
-      (s, d) => {
-        val counts = Tables.events(s, d)
-          .groupBy(col("user_id"), col("event_type"))
-          .agg(count(lit(1)).as("c"))
-        counts.groupBy(col("user_id"))
-          .agg(sum(col("c")).as("n_events"),
-            count(lit(1)).as("n_types"),
-            sum(col("c") * log(col("c"))).as("clog"))
-          .select(col("user_id"), col("n_events"), col("n_types"),
-            ((log(col("n_events")) - col("clog") / col("n_events")) /
-              lit(math.log(2.0))).cast("float").as("entropy_bits"))
-          .orderBy(col("user_id"))
-      },
-      Some("""WITH c AS (
-             |  SELECT user_id, event_type, count(*) AS c FROM events
-             |  GROUP BY 1, 2),
-             |a AS (
-             |  SELECT user_id, sum(c)::BIGINT AS n_events,
-             |    count(*) AS n_types, sum(c * ln(c)) AS clog
-             |  FROM c GROUP BY 1)
-             |SELECT user_id, n_events, n_types,
-             |  CAST((ln(n_events) - clog / n_events) / ln(2) AS REAL)
-             |    AS entropy_bits
-             |FROM a ORDER BY user_id""".stripMargin)),
 
     // Cohen's kappa for the language classifier vs gold: chance-corrected
     // agreement from the exact confusion counts — accuracy (q205) rewards
@@ -1071,53 +528,6 @@ object RefinementQueries {
              |    / (count(*) * sum(x * x) - sum(x) * sum(x)) AS REAL) AS slope
              |FROM dist""".stripMargin)),
 
-    // RFM segmentation: recency (days since last order), frequency (order
-    // count) and monetary (total spend) per customer, each cut into
-    // quartiles over a deterministic total order — the classic
-    // customer-value segmentation. The customer relation is corpus-sized
-    // (10⁹ at target scale), so each quartile cut is the two-pass BSP
-    // ranker (PrefixSum.globalNtile: range partials + broadcast offsets +
-    // closed-form map-side bucket) — bit-identical to ANSI ntile with no
-    // single-task global sort. The reference date is the corpus max
-    // order date, computed IN-PLAN (the q120 lesson: no driver-side
-    // actions in query construction). Exact integers and one spend sum
-    // per customer (sum of doubles within one group — rounded at emit).
-    Entry("q213_rfm",
-      (s, d) => {
-        import graft.ops.PrefixSum
-        val o = Tables.orders(s, d)
-        val maxDate = o.agg(max(col("o_orderdate")).as("max_d"))
-        val rfm = o.groupBy(col("o_custkey"))
-          .agg(max(col("o_orderdate")).as("last_d"),
-            count(lit(1)).as("frequency"),
-            round(sum(col("o_totalprice")), 2).as("monetary"))
-          .crossJoin(broadcast(maxDate))
-          .withColumn("recency_days", datediff(col("max_d"), col("last_d")))
-        val cut = Seq(
-          ("r_q", Seq(col("recency_days"), col("o_custkey"))),
-          ("f_q", Seq(desc("frequency"), col("o_custkey"))),
-          ("m_q", Seq(desc("monetary"), col("o_custkey"))))
-          .foldLeft(rfm) { case (df, (name, order)) =>
-            PrefixSum.globalNtile(df, 4, order, name)
-          }
-        cut
-          .select(col("o_custkey"), col("recency_days"), col("frequency"),
-            col("monetary"), col("r_q"), col("f_q"), col("m_q"))
-          .orderBy(col("o_custkey"))
-      },
-      Some("""WITH rfm AS (
-             |  SELECT o_custkey,
-             |    date_diff('day', max(o_orderdate),
-             |      (SELECT max(o_orderdate) FROM orders)) AS recency_days,
-             |    count(*) AS frequency,
-             |    round(sum(o_totalprice), 2) AS monetary
-             |  FROM orders GROUP BY 1)
-             |SELECT o_custkey, recency_days, frequency, monetary,
-             |  CAST(ntile(4) OVER (ORDER BY recency_days, o_custkey) AS INT) AS r_q,
-             |  CAST(ntile(4) OVER (ORDER BY frequency DESC, o_custkey) AS INT) AS f_q,
-             |  CAST(ntile(4) OVER (ORDER BY monetary DESC, o_custkey) AS INT) AS m_q
-             |FROM rfm ORDER BY o_custkey""".stripMargin)),
-
     // Market-basket association rules over order baskets: part pairs with
     // min support, directional confidence and lift — support/confidence/
     // lift are exact rationals of basket counts. The wedge join runs on
@@ -1165,103 +575,6 @@ object RefinementQueries {
              |JOIN itemn nbm ON nbm.l_partkey = pairs.b
              |CROSS JOIN nb
              |ORDER BY a, b""".stripMargin)),
-
-    // Conversion latency: first view → first subsequent purchase per user,
-    // with exact-interval percentiles — the time-to-convert distribution
-    // (q88 counts conversions; this measures HOW LONG they take).
-    Entry("q211_conversion_latency",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        val firstView = ev.filter(col("event_type") === "view")
-          .groupBy(col("user_id")).agg(min(col("ts")).as("v_ts"))
-        val conv = ev.filter(col("event_type") === "purchase")
-          .join(firstView, "user_id")
-          .filter(col("ts") > col("v_ts"))
-          .groupBy(col("user_id"))
-          .agg(min(col("ts")).as("p_ts"), min(col("v_ts")).as("v_ts"))
-          .select((unix_timestamp(col("p_ts")) - unix_timestamp(col("v_ts")))
-            .as("latency_s"))
-        conv.agg(count(lit(1)).as("n_conversions"),
-          round(expr("percentile(latency_s, 0.5)"), 4).as("p50_s"),
-          round(expr("percentile(latency_s, 0.9)"), 4).as("p90_s"),
-          min(col("latency_s")).as("min_s"),
-          max(col("latency_s")).as("max_s"))
-      },
-      Some("""WITH fv AS (
-             |  SELECT user_id, min(ts) AS v_ts FROM events
-             |  WHERE event_type = 'view' GROUP BY 1),
-             |conv AS (
-             |  SELECT e.user_id,
-             |    floor(epoch(min(e.ts))) - floor(epoch(min(fv.v_ts)))
-             |      AS latency_s
-             |  FROM events e JOIN fv ON fv.user_id = e.user_id
-             |  WHERE e.event_type = 'purchase' AND e.ts > fv.v_ts
-             |  GROUP BY 1)
-             |SELECT count(*) AS n_conversions,
-             |  round(quantile_cont(latency_s, 0.5), 4) AS p50_s,
-             |  round(quantile_cont(latency_s, 0.9), 4) AS p90_s,
-             |  min(latency_s)::BIGINT AS min_s,
-             |  max(latency_s)::BIGINT AS max_s
-             |FROM conv""".stripMargin)),
-
-    // U-shaped (position-based) multi-touch attribution: each purchase
-    // credits its day-window touch journey 40% to the first touch, 40% to
-    // the last, 20% split across the middle (1-touch → 1.0, 2 → 0.5/0.5).
-    // The multi-touch complement of q183's last-touch model. Per-channel
-    // credit sums emit float32 (partition-order drift on double sums).
-    Entry("q212_ushaped_attribution",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val ev = Tables.events(s, d)
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
-        val touches = ev.filter(col("event_type").isin("view", "click"))
-          .select(col("user_id"), col("event_id").as("t_id"),
-            col("ts").as("t_ts"), col("event_type").as("channel"))
-        val joined = purchases.join(touches, Seq("user_id"))
-          .filter(col("t_ts") < col("p_ts") &&
-            unix_timestamp(col("p_ts")) - unix_timestamp(col("t_ts")) <= 86400L)
-        val w = Window.partitionBy(col("user_id"), col("p_id"))
-        val ordered = joined
-          .withColumn("rn", row_number().over(w.orderBy(col("t_ts"), col("t_id"))))
-          .withColumn("rrn", row_number().over(w.orderBy(desc("t_ts"), desc("t_id"))))
-          .withColumn("n", count(lit(1)).over(w))
-        val credited = ordered.withColumn("credit",
-          when(col("n") === 1, lit(1.0))
-            .when(col("n") === 2, lit(0.5))
-            .when(col("rn") === 1 || col("rrn") === 1, lit(0.4))
-            .otherwise(lit(0.2) / (col("n") - 2)))
-        credited.groupBy(col("channel"))
-          .agg(count(lit(1)).as("n_touches"),
-            sum(col("credit")).cast("float").as("credit"))
-          .orderBy(col("channel"))
-      },
-      Some("""WITH p AS (
-             |  SELECT user_id, event_id AS p_id, ts AS p_ts FROM events
-             |  WHERE event_type = 'purchase'),
-             |t AS (
-             |  SELECT user_id, event_id AS t_id, ts AS t_ts,
-             |    event_type AS channel
-             |  FROM events WHERE event_type IN ('view', 'click')),
-             |j AS (
-             |  SELECT p.user_id, p.p_id, t.t_id, t.t_ts, t.channel
-             |  FROM p JOIN t ON t.user_id = p.user_id
-             |  WHERE t.t_ts < p.p_ts
-             |    AND floor(epoch(p.p_ts)) - floor(epoch(t.t_ts)) <= 86400),
-             |o AS (
-             |  SELECT channel,
-             |    row_number() OVER (PARTITION BY user_id, p_id
-             |      ORDER BY t_ts, t_id) AS rn,
-             |    row_number() OVER (PARTITION BY user_id, p_id
-             |      ORDER BY t_ts DESC, t_id DESC) AS rrn,
-             |    count(*) OVER (PARTITION BY user_id, p_id) AS n
-             |  FROM j)
-             |SELECT channel, count(*) AS n_touches,
-             |  CAST(sum(CASE WHEN n = 1 THEN 1.0
-             |    WHEN n = 2 THEN 0.5
-             |    WHEN rn = 1 OR rrn = 1 THEN 0.4
-             |    ELSE 0.2 / (n - 2) END) AS REAL) AS credit
-             |FROM o GROUP BY channel ORDER BY channel""".stripMargin)),
 
     // IVF probe-sweep harness: recall@10 and rows-probed at nProbe ∈
     // {1,2,4,8} against the exact cosine top-10 — the probed-rows/recall
@@ -1443,60 +756,6 @@ object RefinementQueries {
            |    ORDER BY quality, doc_id) AS q_norm
            |FROM qual ORDER BY doc_id""".stripMargin
       }),
-
-    // Time-respecting 2-hop reachability over the purchase bipartite graph:
-    // customer a bought part p at t1, customer b bought the SAME part
-    // strictly later — the "possible influence" pair, with the earliest
-    // witnessing (t1, t2, part). Temporal-graph semantics (paths must move
-    // forward in time) that static 2-hop joins (q29) cannot express.
-    // Restricted to one market segment; the pair aggregate is a min_by
-    // over an exact struct order.
-    Entry("q208_time_respecting_reach",
-      (s, d) => {
-        val seg = Tables.customer(s, d)
-          .filter(col("c_mktsegment") === "BUILDING")
-          .select(col("c_custkey"))
-        val orders = Tables.orders(s, d)
-        val po = orders
-          .join(seg, orders("o_custkey") === seg("c_custkey"))
-          .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-        val purch = po
-          .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey").as("cust"), col("l_partkey").as("part"),
-            col("o_orderdate").as("t"))
-          .distinct()
-          .localCheckpoint(true) // both legs of the temporal self-join
-        val a = purch.select(col("cust").as("c_a"), col("part"), col("t").as("t1"))
-        val b = purch.select(col("cust").as("c_b"), col("part"), col("t").as("t2"))
-        a.join(b, Seq("part"))
-          .filter(col("c_a") =!= col("c_b") && col("t2") > col("t1"))
-          .groupBy(col("c_a"), col("c_b"))
-          .agg(min_by(struct(col("t1"), col("t2"), col("part")),
-            struct(col("t1"), col("t2"), col("part"))).as("w"))
-          .select(col("c_a"), col("c_b"), col("w.part").as("via_part"),
-            col("w.t1").as("t1"), col("w.t2").as("t2"))
-          .orderBy(col("c_a"), col("c_b"))
-      },
-      Some("""WITH purch AS (
-             |  SELECT DISTINCT o.o_custkey AS cust, l.l_partkey AS part,
-             |    o.o_orderdate AS t
-             |  FROM orders o
-             |  JOIN customer c ON c.c_custkey = o.o_custkey
-             |    AND c.c_mktsegment = 'BUILDING'
-             |  JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
-             |pairs AS (
-             |  SELECT a.cust AS c_a, b.cust AS c_b, a.part,
-             |    a.t AS t1, b.t AS t2
-             |  FROM purch a JOIN purch b ON a.part = b.part
-             |   AND a.cust <> b.cust AND b.t > a.t),
-             |best AS (
-             |  SELECT c_a, c_b, part AS via_part, t1, t2 FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY c_a, c_b
-             |      ORDER BY t1, t2, part) AS rn
-             |    FROM pairs) WHERE rn = 1)
-             |SELECT c_a, c_b, via_part, t1, t2
-             |FROM best ORDER BY c_a, c_b""".stripMargin)),
 
     // Confusion matrix for the leave-one-out kNN label eval (the q166
     // pipeline, sliced by (true, predicted) instead of accuracy-per-class):
@@ -1776,155 +1035,7 @@ object RefinementQueries {
            |JOIN marg mb ON mb.node = cnt.b
            |CROSS JOIN tot
            |ORDER BY cnt.a, cnt.b""".stripMargin
-      }),
+      })
 
-    // Interval×interval overlap self-join per user: which activity
-    // intervals overlap, with exact overlap seconds — the temporal-join
-    // classic q70's point-in-interval shape does not cover. Bin-bucketed
-    // (never a per-user cross product), positional pair dedup.
-    Entry("q198_interval_overlap",
-      (s, d) => {
-        val iv = Tables.events(s, d).select(col("user_id"), col("event_id"),
-          col("ts").as("s0"),
-          (col("ts") + expr(
-            "make_interval(0, 0, 0, 0, 0, 1 + abs(ceil(value)) % 10, 0)")).as("e0"))
-        val a = iv.select(col("user_id"), col("event_id").as("a_id"),
-          col("s0").as("a_s"), col("e0").as("a_e"))
-        val b = iv.select(col("user_id"), col("event_id").as("b_id"),
-          col("s0").as("b_s"), col("e0").as("b_e"))
-        graft.ops.Temporal.intervalOverlapJoin(a, "a_s", "a_e", b, "b_s", "b_e",
-            binWidthSec = 600, keys = Seq("user_id"))
-          .filter(col("a_id") < col("b_id"))
-          .select(col("user_id"), col("a_id"), col("b_id"),
-            (unix_timestamp(least(col("a_e"), col("b_e"))) -
-              unix_timestamp(greatest(col("a_s"), col("b_s"))))
-              .as("overlap_sec"))
-          .orderBy(col("user_id"), col("a_id"), col("b_id"))
-      },
-      Some("""WITH iv AS (
-             |  SELECT user_id, event_id, ts AS s,
-             |    ts + to_minutes(1 + (CAST(abs(ceil(value)) AS BIGINT) % 10)) AS e
-             |  FROM events)
-             |SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id,
-             |  CAST(date_diff('second', greatest(a.s, b.s), least(a.e, b.e))
-             |    AS BIGINT) AS overlap_sec
-             |FROM iv a JOIN iv b ON a.user_id = b.user_id
-             |  AND a.event_id < b.event_id
-             |  AND a.s < b.e AND b.s < a.e
-             |ORDER BY a.user_id, a_id, b_id""".stripMargin)),
-
-    // Sweep-line concurrency profile: per minute bucket, the net change in
-    // active event intervals and the count concurrently active. Deltas
-    // aggregate distributedly; the ordered cumulative runs over the
-    // DISTINCT-BUCKET domain (bounded by the time range, not row count).
-    // Exact integers throughout.
-    Entry("q195_concurrency",
-      (s, d) => {
-        val iv = Tables.events(s, d)
-          .select(date_trunc("minute", col("ts")).as("s"),
-            greatest(lit(1L), ceil(col("value")).cast("long")).as("dur"))
-          .select(col("s"), expr("timestampadd(MINUTE, dur, s)").as("e"))
-        graft.ops.PrefixSum.concurrencyProfile(iv, col("s"), col("e"))
-      },
-      Some("""WITH iv AS (
-             |  SELECT date_trunc('minute', ts) AS s,
-             |    date_trunc('minute', ts)
-             |      + to_minutes(greatest(1, CAST(ceil(value) AS BIGINT))) AS e
-             |  FROM events),
-             |d AS (
-             |  SELECT s AS bucket, 1 AS d FROM iv
-             |  UNION ALL SELECT e, -1 FROM iv),
-             |agg AS (SELECT bucket, sum(d)::BIGINT AS net FROM d GROUP BY bucket)
-             |SELECT bucket, net,
-             |  CAST(sum(net) OVER (ORDER BY bucket
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             |    AS concurrent
-             |FROM agg ORDER BY bucket""".stripMargin)),
-
-    // Distributed global running sum (two-pass BSP prefix sum): the
-    // scale-correct replacement for the single-partition Window.orderBy
-    // cumulative — per-partition partials + broadcast offsets, the only
-    // serial state is one decimal per partition. DECIMAL accumulation is
-    // exact and order-independent, so the 100k-row cumulative is
-    // bit-identical to a sequential scan (float32 could NOT absorb the
-    // order drift at cumulative magnitude — caught at sf0.1).
-    Entry("q196_global_cumsum",
-      (s, d) => graft.ops.PrefixSum.globalRunningSum(
-          Tables.events(s, d).select(col("event_id"), col("ts"), col("value")),
-          Seq(col("ts"), col("event_id")), col("value").cast("decimal(30,10)"))
-        .select(col("event_id"), col("value"),
-          col("running").cast("double").as("running"))
-        .orderBy(col("event_id")),
-      Some("""SELECT event_id, value,
-             |  CAST(sum(CAST(value AS DECIMAL(30,10))) OVER (ORDER BY ts, event_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-             |    AS running
-             |FROM events ORDER BY event_id""".stripMargin)),
-
-    // Session compression (the reference's POST /sessions/{id}/compress
-    // shape, message_routes.py:559, with trim semantics from
-    // memory_graph.py:5175): keep the first/last messages verbatim
-    // (truncated previews), collapse the middle into exact counts — the
-    // deterministic analog of summary-compression. One window shuffle per
-    // session key; exact integers plus one ratio division.
-    Entry("q200_session_compress",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val msgs = Tables.documents(s, d)
-          .select(col("source").as("session_id"), col("doc_id"), col("text"))
-        val w = Window.partitionBy(col("session_id")).orderBy(col("doc_id"))
-        val wDesc = Window.partitionBy(col("session_id")).orderBy(desc("doc_id"))
-        val ranked = msgs
-          .withColumn("rn", row_number().over(w))
-          .withColumn("rrn", row_number().over(wDesc))
-        ranked.groupBy(col("session_id"))
-          .agg(count(lit(1)).as("n_msgs"),
-            sum(length(col("text"))).as("orig_chars"),
-            sum(when(col("rn") <= 2 || col("rrn") <= 2, length(col("text")))
-              .otherwise(0L)).as("kept_chars"),
-            max(when(col("rn") === 1, substring(col("text"), 1, 80)))
-              .as("head_preview"),
-            max(when(col("rrn") === 1, substring(col("text"), 1, 80)))
-              .as("tail_preview"))
-          .withColumn("n_kept", least(col("n_msgs"), lit(4L)))
-          .withColumn("compression_ratio",
-            col("kept_chars") / col("orig_chars"))
-          .select(col("session_id"), col("n_msgs"), col("n_kept"),
-            col("orig_chars"), col("kept_chars"), col("compression_ratio"),
-            col("head_preview"), col("tail_preview"))
-          .orderBy(col("session_id"))
-      },
-      Some("""WITH m AS (
-             |  SELECT source AS session_id, doc_id, text,
-             |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn,
-             |    row_number() OVER (PARTITION BY source ORDER BY doc_id DESC) AS rrn
-             |  FROM documents)
-             |SELECT session_id,
-             |  count(*) AS n_msgs,
-             |  sum(length(text))::BIGINT AS orig_chars,
-             |  sum(CASE WHEN rn <= 2 OR rrn <= 2 THEN length(text)
-             |    ELSE 0 END)::BIGINT AS kept_chars,
-             |  max(CASE WHEN rn = 1 THEN substr(text, 1, 80) END) AS head_preview,
-             |  max(CASE WHEN rrn = 1 THEN substr(text, 1, 80) END) AS tail_preview,
-             |  least(count(*), 4) AS n_kept,
-             |  sum(CASE WHEN rn <= 2 OR rrn <= 2 THEN length(text)
-             |    ELSE 0 END)::DOUBLE / sum(length(text)) AS compression_ratio
-             |FROM m GROUP BY session_id ORDER BY session_id""".stripMargin)),
-
-    // Character-level Shannon entropy — the compressibility/gibberish gate.
-    // Exact char counts; ln-based arithmetic; float32 at the emit boundary
-    // absorbs partition-order sum drift.
-    Entry("q192_char_entropy",
-      (s, d) => Curation.charEntropy(Tables.documents(s, d), "doc_id", "text"),
-      Some("""WITH ch AS (
-             |  SELECT doc_id, substr(text, i, 1) AS ch
-             |  FROM documents, unnest(generate_series(1, length(text))) AS u(i)),
-             |c AS (SELECT doc_id, ch, count(*) AS c FROM ch GROUP BY 1, 2),
-             |a AS (SELECT doc_id, sum(c)::BIGINT AS n_chars,
-             |        count(*) AS distinct_chars, sum(c * ln(c)) AS clog
-             |      FROM c GROUP BY 1)
-             |SELECT doc_id, n_chars, distinct_chars,
-             |  CAST((ln(n_chars) - clog / n_chars) / ln(2) AS REAL) AS entropy
-             |FROM a ORDER BY doc_id""".stripMargin))
   )
 }

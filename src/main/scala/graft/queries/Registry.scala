@@ -16,8 +16,7 @@ object Registry {
     val entries =
       RelationalQueries.entries ++ VectorQueries.entries ++
         TextQueries.entries ++ DomainQueries.entries ++ ExtendedQueries.entries ++
-        DomainPipelineQueries.entries ++ StatsQueries.entries ++
-        BreadthQueries.entries ++ SchemaQueries.entries ++ HybridQueries.entries ++
+        DomainPipelineQueries.entries ++ BreadthQueries.entries ++ HybridQueries.entries ++
         CurationQueries.entries ++ RefinementQueries.entries ++
         PipelineQueries.entries ++ EvalQueries.entries ++ DriftQueries.entries ++
         AugQueries.entries

@@ -1,120 +1,17 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Fns._
 import graft.ops.Retrieval
 
-/** Core relational operators (SURVEY §2.2, §2.3, §2.5, §2.7, §2.8, §2.9) on
-  * the driver's TPC-H-ish tables. Each plan is written so Catalyst produces
-  * the scale-correct physical shape: filters/projections reach the parquet
-  * scan, dims are broadcast, aggregations get map-side partials, global
-  * top-k collapses to TakeOrderedAndProject.
+/** Retrieval-counter and ranking operators on the test-data tables:
+  * time-decayed EMA counters (A4), tier-1 ranking (A5), the portable hash60
+  * scalar surface (§2.9) and chunk rollup (J2).
   */
 object RelationalQueries {
 
   def entries: Seq[Entry] = Seq(
-
-    // F2/F7: projection + predicate pushdown — the scan must read 3 columns
-    // and skip row groups via min/max stats.
-    Entry("q01_pruned_scan",
-      (s, d) => Tables.lineitem(s, d)
-        .filter(col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_quantity") > 45)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .orderBy(col("l_orderkey"), col("l_linenumber")),
-      Some("""SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-             |WHERE l_shipdate < TIMESTAMP '1997-01-01' AND l_quantity > 45
-             |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
-
-    // A-family: grouped aggregation with map-side combine (TPC-H Q1 shape).
-    Entry("q02_agg_pushdown",
-      (s, d) => Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-          round(avg(col("l_discount")), 4).as("avg_disc"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"), col("l_linestatus")),
-      Some("""SELECT l_returnflag, l_linestatus,
-             |  round(sum(l_quantity), 2) AS sum_qty,
-             |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-             |  round(avg(l_discount), 4) AS avg_disc,
-             |  count(*) AS n
-             |FROM lineitem GROUP BY l_returnflag, l_linestatus
-             |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
-
-    // J1/J6: multiway join; nation/region are broadcast dims.
-    Entry("q03_join_multiway",
-      (s, d) => Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA")
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("o_totalprice")), 2).as("revenue"),
-          count(lit(1)).as("n_orders"))
-        .orderBy(col("n_name")),
-      Some("""SELECT n_name, round(sum(o_totalprice), 2) AS revenue, count(*) AS n_orders
-             |FROM orders
-             |JOIN customer ON o_custkey = c_custkey
-             |JOIN nation ON c_nationkey = n_nationkey
-             |JOIN region ON n_regionkey = r_regionkey
-             |WHERE r_name = 'ASIA' GROUP BY n_name ORDER BY n_name""".stripMargin)),
-
-    // J1 hydration shape: left-semi (EXISTS) — no row multiplication.
-    Entry("q04_semi_join",
-      (s, d) => Tables.customer(s, d)
-        .join(Tables.orders(s, d).filter(col("o_totalprice") > 450000),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey")),
-      Some("""SELECT c_custkey, c_name FROM customer
-             |WHERE EXISTS (SELECT 1 FROM orders
-             |  WHERE o_custkey = c_custkey AND o_totalprice > 450000)
-             |ORDER BY c_custkey""".stripMargin)),
-
-    // S7 delete rewrite / U2: anti join (NOT EXISTS).
-    Entry("q05_anti_join",
-      (s, d) => Tables.customer(s, d)
-        .join(Tables.orders(s, d).filter(col("o_totalprice") > 490000),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey")),
-      Some("""SELECT c_custkey, c_name FROM customer
-             |WHERE NOT EXISTS (SELECT 1 FROM orders
-             |  WHERE o_custkey = c_custkey AND o_totalprice > 490000)
-             |ORDER BY c_custkey""".stripMargin)),
-
-    // W4: global top-k → TakeOrderedAndProject (no full sort shuffle).
-    Entry("q06_topk_orders",
-      (s, d) => Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .orderBy(desc("o_totalprice"), col("o_orderkey"))
-        .limit(50),
-      Some("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-             |ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""".stripMargin)),
-
-    // W1: ranking window — per-source quota (stratified top-N per group).
-    Entry("q07_window_quota",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("event_type"))
-          .orderBy(desc("value"), col("event_id"))
-        Tables.events(s, d)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
-          .select(col("event_type"), col("event_id"), col("value"), col("rn"))
-          .orderBy(col("event_type"), col("rn"))
-      },
-      Some("""SELECT event_type, event_id, value, rn FROM (
-             |  SELECT event_type, event_id, value,
-             |    CAST(row_number() OVER (PARTITION BY event_type
-             |      ORDER BY value DESC, event_id) AS INT) AS rn
-             |  FROM events) WHERE rn <= 5
-             |ORDER BY event_type, rn""".stripMargin)),
 
     // A4: time-decayed counter recompute (EMA half-life 30d,
     // memory_management.py:3177-3190), decay-at-read over the event log.
@@ -150,48 +47,6 @@ object RelationalQueries {
              |      + 0.2 * (avg(value) / 200.0), 4) AS score
              |  FROM events GROUP BY user_id)
              |ORDER BY score DESC, user_id LIMIT 10""".stripMargin)),
-
-    // A6: top retrieved over a recency window (memory_management.py:3675).
-    Entry("q10_top_retrieved",
-      (s, d) => Tables.events(s, d)
-        .filter(col("ts") >= lit("2024-01-20").cast("timestamp"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_retrievals"))
-        .orderBy(desc("n_retrievals"), col("user_id"))
-        .limit(10),
-      Some("""SELECT user_id, count(*) AS n_retrievals FROM events
-             |WHERE ts >= TIMESTAMP '2024-01-20'
-             |GROUP BY user_id ORDER BY n_retrievals DESC, user_id LIMIT 10""".stripMargin)),
-
-    // U1: union of per-source id sets + distinct (memory_graph.py:6171-6185).
-    Entry("q11_union_sources",
-      (s, d) => {
-        val e = Tables.events(s, d)
-        e.filter(col("event_type") === "purchase").select(col("user_id"))
-          .union(e.filter(col("event_type") === "signup").select(col("user_id")))
-          .distinct()
-          .orderBy(col("user_id"))
-      },
-      Some("""SELECT user_id FROM events WHERE event_type = 'purchase'
-             |UNION
-             |SELECT user_id FROM events WHERE event_type = 'signup'
-             |ORDER BY user_id""".stripMargin)),
-
-    // U2: set-minus for remainder slots (memory_graph.py:6337-6341).
-    Entry("q12_except_sources",
-      (s, d) => {
-        val e = Tables.events(s, d)
-        e.filter(col("event_type") === "purchase" && col("value") > 195)
-          .select(col("user_id"))
-          .except(e.filter(col("event_type") === "error" && col("value") > 195)
-            .select(col("user_id")))
-          .orderBy(col("user_id"))
-      },
-      Some("""SELECT * FROM (
-             |  SELECT user_id FROM events WHERE event_type = 'purchase' AND value > 195
-             |  EXCEPT
-             |  SELECT user_id FROM events WHERE event_type = 'error' AND value > 195)
-             |ORDER BY user_id""".stripMargin)),
 
     // §2.9 scalar kernel: chunk-suffix strip, split, sha2, portable hash60,
     // levenshtein — all codegen'd builtins.

@@ -1576,26 +1576,6 @@ object TextQueries {
              |  CAST((pos - 1) // 8 AS BIGINT) AS batch_id, pos
              |FROM p ORDER BY doc_id""".stripMargin)),
 
-    // Hourly value percentiles per event type: the ops-analytics tail
-    // report (p50/p95 per tumbling hour). Exact in-group percentile —
-    // group sizes here are hour×type bounded; at true corpus scale the
-    // same report runs on the mergeable KLL path (q128). float32 output:
-    // Spark and DuckDB interpolate the same rank position with
-    // differently-associated fp formulas (1 ulp apart).
-    Entry("q168_latency_percentiles",
-      (s, d) => Tables.events(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          expr("percentile(value, 0.5D)").cast("float").as("p50"),
-          expr("percentile(value, 0.95D)").cast("float").as("p95"))
-        .orderBy(col("hour"), col("event_type")),
-      Some("""SELECT date_trunc('hour', ts) AS hour, event_type,
-             |  count(*) AS n,
-             |  CAST(quantile_cont(value, 0.5) AS REAL) AS p50,
-             |  CAST(quantile_cont(value, 0.95) AS REAL) AS p95
-             |FROM events GROUP BY 1, 2
-             |ORDER BY hour, event_type""".stripMargin)),
-
     // Per-domain Pareto frontier on (quality ↑, length ↑): a doc is on
     // the frontier iff no other doc in its domain is at least as good on
     // both axes and better on one. The 2-D skyline needs ONE pass: sort
@@ -1647,91 +1627,6 @@ object TextQueries {
            |WHERE best_len_before IS NULL OR n_chars > best_len_before
            |ORDER BY doc_id""".stripMargin
       }),
-
-    // Per-event-type linear trend: OLS slope/intercept of value over
-    // time from the five classic sums (n, Σx, Σy, Σxy, Σx²) — one
-    // map-side-combinable aggregation per type, the distributed
-    // regression shape (never a collect). x is centered epoch seconds so
-    // Σx² stays well inside double precision; outputs float32 (sum-order
-    // drift).
-    Entry("q170_trend_per_type",
-      (s, d) => {
-        val x = (unix_timestamp(col("ts")) - lit(1700000000L)).cast("double")
-        Tables.events(s, d)
-          .select(col("event_type"), x.as("x"), col("value").as("y"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).cast("double").as("n"),
-            sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-            sum(col("x") * col("y")).as("sxy"),
-            sum(col("x") * col("x")).as("sxx"))
-          .select(col("event_type"), col("n").cast("long").as("n"),
-            ((col("n") * col("sxy") - col("sx") * col("sy")) /
-              (col("n") * col("sxx") - col("sx") * col("sx")))
-              .cast("float").as("slope"),
-            ((col("sy") - ((col("n") * col("sxy") - col("sx") * col("sy")) /
-              (col("n") * col("sxx") - col("sx") * col("sx"))) * col("sx")) /
-              col("n")).cast("float").as("intercept"))
-          .orderBy(col("event_type"))
-      },
-      Some("""WITH e AS (
-             |  SELECT event_type,
-             |    (floor(epoch(ts)) - 1700000000)::DOUBLE AS x, value AS y
-             |  FROM events),
-             |s AS (
-             |  SELECT event_type, count(*)::DOUBLE AS n,
-             |    sum(x) AS sx, sum(y) AS sy,
-             |    sum(x * y) AS sxy, sum(x * x) AS sxx
-             |  FROM e GROUP BY 1)
-             |SELECT event_type, CAST(n AS BIGINT) AS n,
-             |  CAST((n * sxy - sx * sy) / (n * sxx - sx * sx) AS REAL)
-             |    AS slope,
-             |  CAST((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx)
-             |    / n AS REAL) AS intercept
-             |FROM s ORDER BY event_type""".stripMargin)),
-
-    // CUSUM change-point flags on the daily event-count series per type:
-    // cumulative sum of (daily_count − series mean), flagged where
-    // |cusum| exceeds k·series-stddev — the classic drift detector for
-    // ingest monitoring. The running sum's order is pinned by the date
-    // window, so the doubles are bit-identical across engines.
-    Entry("q171_cusum_changepoints",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("c"))
-        val stats = daily.groupBy(col("event_type"))
-          .agg((sum(col("c")) / count(lit(1))).as("mu"),
-            count(lit(1)).cast("double").as("nd"),
-            sum(col("c") * col("c")).as("s2"))
-          .withColumn("sd", sqrt(col("s2") / col("nd") -
-            col("mu") * col("mu")))
-          .select(col("event_type"), col("mu"), col("sd"))
-        val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-        daily.join(broadcast(stats), "event_type")
-          .withColumn("cusum", sum(col("c") - col("mu")).over(w))
-          .select(col("event_type"), col("day"), col("c"),
-            col("cusum").cast("float").as("cusum"),
-            (abs(col("cusum")) > lit(3.0) * col("sd")).as("flagged"))
-          .orderBy(col("event_type"), col("day"))
-      },
-      Some("""WITH daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS c
-             |  FROM events GROUP BY 1, 2),
-             |st AS (
-             |  SELECT event_type, sum(c) / count(*) AS mu,
-             |    sqrt(sum(c * c) / count(*)::DOUBLE
-             |      - (sum(c) / count(*)) * (sum(c) / count(*))) AS sd
-             |  FROM daily GROUP BY 1),
-             |cu AS (
-             |  SELECT d.event_type, d.day, d.c,
-             |    sum(d.c - st.mu) OVER (PARTITION BY d.event_type
-             |      ORDER BY d.day) AS cusum,
-             |    st.sd
-             |  FROM daily d JOIN st USING (event_type))
-             |SELECT event_type, day, c, CAST(cusum AS REAL) AS cusum,
-             |  abs(cusum) > 3.0 * sd AS flagged
-             |FROM cu ORDER BY event_type, day""".stripMargin)),
 
     // DSIR importance selection: top 100 documents by mean log-likelihood
     // ratio between the English-target unigram LM and the whole-corpus

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.engine.{IvfIndex, PqIndex}
+import graft.engine.IvfIndex
 import graft.functions.VectorFunctions.{cosineSim, l2sq}
 import graft.ops.Similarity
 import graft.plans.AnnRewrite
@@ -894,60 +894,6 @@ object VectorQueries {
            |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin
       }),
 
-    // Product-quantization KNN: hash-sampled codebook (16 centroids × 8
-    // subspaces), integer micro-unit ADC candidate scan, exact rescore of
-    // the 40 best. Codes are 8 ints per 64-float vector — the candidate
-    // pass reads 32× fewer vector bytes; integer distances make the ADC
-    // sum order-independent, so the oracle reproduces every code and
-    // score exactly.
-    Entry("q79_pq_knn",
-      (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        val corpus = emb.filter(col("vec_id") > 0)
-          .select(col("vec_id"), col("embedding"))
-        val model = PqIndex.train(corpus, "vec_id", "embedding", m = 8, nCentroids = 16)
-        val qv = emb.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0).toArray
-        val enc = PqIndex.encode(corpus, "vec_id", "embedding", model)
-        PqIndex.topK(enc, corpus, "vec_id", "embedding", model, qv,
-          k = 10, candidates = 40)
-      },
-      Some {
-        def microDistSql(a: String, b: String, j: String): String =
-          s"""CAST(floor(list_sum(list_transform(generate_series(1, 8),
-             |      i -> ($a[$j*8 + i]::DOUBLE - $b[$j*8 + i]::DOUBLE)
-             |         * ($a[$j*8 + i]::DOUBLE - $b[$j*8 + i]::DOUBLE)))
-             |    * 1000000 + 0.5) AS BIGINT)""".stripMargin
-        s"""WITH corpus AS (
-           |  SELECT vec_id, embedding FROM embeddings WHERE vec_id > 0),
-           |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-           |samp AS (
-           |  SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS cid,
-           |    embedding AS cvec
-           |  FROM (SELECT vec_id, embedding,
-           |          ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT AS h
-           |        FROM corpus ORDER BY h, vec_id LIMIT 16)),
-           |sub AS (SELECT j FROM generate_series(0, 7) AS g(j)),
-           |enc AS (
-           |  SELECT vec_id, j, cid FROM (
-           |    SELECT v.vec_id, sub.j, s.cid,
-           |      row_number() OVER (PARTITION BY v.vec_id, sub.j ORDER BY
-           |        ${microDistSql("v.embedding", "s.cvec", "sub.j")}, s.cid) AS rn
-           |    FROM corpus v CROSS JOIN samp s CROSS JOIN sub) WHERE rn = 1),
-           |qtab AS (
-           |  SELECT sub.j, s.cid,
-           |    ${microDistSql("q.qvec", "s.cvec", "sub.j")} AS d
-           |  FROM q CROSS JOIN samp s CROSS JOIN sub),
-           |adc AS (
-           |  SELECT enc.vec_id, sum(qtab.d) AS approx
-           |  FROM enc JOIN qtab ON qtab.j = enc.j AND qtab.cid = enc.cid
-           |  GROUP BY enc.vec_id),
-           |cand AS (SELECT vec_id FROM adc ORDER BY approx, vec_id LIMIT 40)
-           |SELECT c.vec_id, round(${cosineSql("c.embedding", "qvec")}, 4) AS score
-           |FROM corpus c JOIN cand USING (vec_id) CROSS JOIN q
-           |ORDER BY score DESC, c.vec_id LIMIT 10""".stripMargin
-      }),
-
     // Late-interaction MaxSim (ColBERT scoring): label groups play the
     // multi-vector documents, vec_ids 0-3 the query bag. Per-qid maxima
     // are rounded then summed in FIXED qid order — bit-reproducible.
@@ -1026,43 +972,6 @@ object VectorQueries {
            |SELECT * FROM ($out) ORDER BY mmr_rank""".stripMargin
       }),
 
-    // Embedding-space hygiene: per-DIMENSION mean/variance/range over the
-    // corpus. Dead dimensions (variance ≈ 0) and mean-shifted dimensions
-    // are the classic symptoms of a collapsed or mis-batched encoder, and
-    // they silently degrade every cosine downstream — this is the QA
-    // table an embedding pipeline checks before building an index.
-    // One posexplode + one dim-keyed aggregation (64 groups — map-side
-    // combinable, no corpus-sized buffer anywhere); mean/var emitted
-    // float32 to absorb partition-order sum drift, min/max exact.
-    Entry("q158_embedding_dims",
-      (s, d) => Tables.embeddings(s, d)
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
-        .select(col("dim").cast("long").as("dim"), col("x").cast("double").as("v"))
-        .groupBy(col("dim"))
-        .agg(count(lit(1)).as("n"),
-          (sum(col("v")) / count(lit(1))).cast("float").as("mean"),
-          (sum(col("v") * col("v")) / count(lit(1)) -
-            (sum(col("v")) / count(lit(1))) * (sum(col("v")) / count(lit(1))))
-            .cast("float").as("variance"),
-          min(col("v").cast("float")).as("min_v"),
-          max(col("v").cast("float")).as("max_v"))
-        .orderBy(col("dim")),
-      Some("""WITH d AS (
-             |  SELECT vec_id, embedding,
-             |    unnest(generate_series(1, len(embedding))) AS i
-             |  FROM embeddings),
-             |x AS (
-             |  SELECT CAST(i - 1 AS BIGINT) AS dim, embedding[i]::DOUBLE AS v
-             |  FROM d)
-             |SELECT dim, count(*) AS n,
-             |  CAST(sum(v) / count(*) AS REAL) AS mean,
-             |  CAST(sum(v * v) / count(*)
-             |    - (sum(v) / count(*)) * (sum(v) / count(*)) AS REAL)
-             |    AS variance,
-             |  CAST(min(v) AS REAL) AS min_v,
-             |  CAST(max(v) AS REAL) AS max_v
-             |FROM x GROUP BY dim ORDER BY dim""".stripMargin)),
-
     // Deterministic Lloyd k-means (k=8, 2 iterations): hash-seeded, L2
     // argmin with rounded distance + centroid-id tie-break, per-dim mean
     // centroids cast float32 so the whole trajectory is bit-stable. The
@@ -1110,34 +1019,7 @@ object VectorQueries {
            |${assign("corpus", "c2", "a3")}
            |SELECT vec_id, centroid_id AS cluster FROM a3
            |ORDER BY vec_id""".stripMargin
-      }),
+      })
 
-    // Dominant principal direction of the embedding space via distributed
-    // power iteration (2 matvecs on the uncentered Gramian): the
-    // anisotropy / rogue-dimension QA probe. The Gramian is ONE
-    // map-side-combined aggregation over d² = 4096 keys — corpus-size-
-    // independent shuffle — and each matvec joins d² rows against a
-    // broadcast d-row vector. The oracle unrolls the identical rounds.
-    Entry("q184_power_iteration",
-      (s, d) => graft.ops.Spectral.powerIteration(
-          graft.ops.Spectral.gramian(Tables.embeddings(s, d), "embedding"),
-          dim = 64, rounds = 2)
-        .select(col("i").cast("long").as("i"), col("loading"))
-        .orderBy(col("i")),
-      Some("""WITH g AS (
-             |  SELECT i, j,
-             |    sum(embedding[i]::DOUBLE * embedding[j]::DOUBLE) AS g
-             |  FROM embeddings,
-             |    unnest(generate_series(1, len(embedding))) AS a(i),
-             |    unnest(generate_series(1, len(embedding))) AS b(j)
-             |  GROUP BY 1, 2),
-             |w1 AS (SELECT i, sum(g * 0.125) AS u FROM g GROUP BY i),
-             |n1 AS (SELECT sqrt(sum(u * u)) AS nrm FROM w1),
-             |wn AS (SELECT i AS j, u / nrm AS wj FROM w1, n1),
-             |w2 AS (SELECT g.i, sum(g.g * wn.wj) AS u
-             |  FROM g JOIN wn ON g.j = wn.j GROUP BY 1),
-             |n2 AS (SELECT sqrt(sum(u * u)) AS nrm FROM w2)
-             |SELECT CAST(i - 1 AS BIGINT) AS i, CAST(u / nrm AS REAL) AS loading
-             |FROM w2, n2 ORDER BY i""".stripMargin))
   )
 }

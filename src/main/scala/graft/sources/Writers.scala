@@ -138,9 +138,8 @@ object Writers {
           .unionByName(incoming)
     }
 
-  /** The shared partition-scoped rewrite core under [[upsertPartitioned]],
-    * [[deletePartitioned]] and
-    * [[graft.ops.IncrementalAgg.refreshPartialPartitioned]]: scope the
+  /** The shared partition-scoped rewrite core under [[upsertPartitioned]]
+    * and [[deletePartitioned]]: scope the
     * table to the partitions `scopeFrom` touches, hand those rows to
     * `mergeFn`, and atomically swap ONLY the touched directories.
     *
@@ -529,8 +528,8 @@ object Writers {
     * every publish lands a complete new `v=N` directory, then flips the
     * `_LATEST` pointer. Readers resolve the pointer (or pin an explicit
     * version), so a publish is invisible until complete, historical
-    * versions stay queryable for audits (`Snapshots.diff(readVersion(n-1),
-    * readVersion(n), …)` is the CDC changelog), and `pruneVersions` bounds
+    * versions stay queryable for audits (the difference of two pinned
+    * reads is the changelog), and `pruneVersions` bounds
     * storage. A missing pointer (crash in the flip window) falls back to
     * the highest complete version. */
   object Versioned {

@@ -31,9 +31,10 @@ object Sinks {
     * everyNBatches - 1` — batchIds are contiguous per stream) the sink
     * runs `run(spark, batchId)` AFTER folding the batch. Replay caveat:
     * an at-least-once redelivery of a cadence batch re-runs the hook —
-    * both shipped hooks are idempotent-by-measurement (a rebuild
-    * re-checks drift; a compaction re-counts files), so a replay costs
-    * one measurement, never a second rewrite. */
+    * a hook should be idempotent-by-measurement, as [[Maintenance.compaction]]
+    * (it re-counts files) and a hook around
+    * [[graft.engine.IvfIndex.rebuildIfDrifted]] (it re-checks drift) are,
+    * so a replay costs one measurement, never a second rewrite. */
   final case class Maintenance(everyNBatches: Int,
                                run: (org.apache.spark.sql.SparkSession, Long) => Unit) {
     require(everyNBatches >= 1,
@@ -44,39 +45,6 @@ object Sinks {
   }
 
   object Maintenance {
-    /** Drift-checked rebuild cadence for [[indexAppendPartitioned]]:
-      * measures [[graft.engine.IvfIndex.driftCheck]] against the persisted
-      * build stats and rebuilds (atomically, under the pending marker)
-      * only at/above the threshold — so the cadence costs one cluster-mass
-      * aggregation per check, and a drifted ingest stream triggers exactly
-      * one rebuild (the rebuild resets the stats the next check measures
-      * against). Pass the SAME `centroidsPath` the sink's `centroids`
-      * DataFrame reads from, and construct that handle INSIDE the
-      * foreachBatch body (`Readers.table(spark, centroidsPath)` per
-      * batch): a DataFrame pins its file listing at resolution, so a
-      * handle created before the stream started would go stale — and fail
-      * on vanished files — at the first rebuild swap.
-      *
-      * Do NOT point the sink's per-batch `statsPath` refresh at the same
-      * stats table as this cadence: `refreshClusterMass` overwrites the
-      * cluster-mass half with the LIVE distribution (for the ANN rule's
-      * decline guard), which is exactly the build-time reference the
-      * drift check must measure against — combined, drift always reads
-      * ~0 and the rebuild never fires. One stats table per purpose. */
-    def driftRebuild(assignedPath: String, centroidsPath: String,
-                     statsPath: String, idCol: String, vecCol: String,
-                     nCentroids: Int, everyNBatches: Int,
-                     partitionCols: Seq[String] = Nil,
-                     filterCols: Seq[String] = Nil,
-                     threshold: Double =
-                       graft.engine.IvfIndex.DriftRebuildThreshold): Maintenance =
-      Maintenance(everyNBatches, (s, _) => {
-        graft.engine.IvfIndex.rebuildIfDrifted(s, assignedPath, centroidsPath,
-          statsPath, idCol, vecCol, nCentroids, threshold, filterCols,
-          partitionCols)
-        ()
-      })
-
     /** Small-file compaction cadence for either partitioned sink: rewrite
       * (only) partitions holding more than `maxFilesPerPartition` data
       * files, restoring the clustered layout (`sortCols` = the sink's
@@ -339,7 +307,7 @@ object Sinks {
     * are maintained by candidate-proportional work, never a corpus
     * rescan. Verification re-derives shingle sets ONLY for docs the
     * delta touches (semi-join against `docs` — the usual tiny candidate
-    * population), scores with [[graft.ops.Dedup.jaccardVerify]]'s exact
+    * population), scores with [[graft.ops.Dedup.jaccardVerifySized]]'s exact
     * arithmetic, and upserts under the same collision-free JSON pair key
     * as the candidate feed. Because verification is a pure function of
     * the two docs' texts, the union of per-batch verified deltas equals
@@ -366,7 +334,7 @@ object Sinks {
       docs(idCol) === candDocs("doc_id"), "left_semi").persist()
     // coverage assert: a candidate doc ABSENT from `docs` (batch folded
     // into the band table but not yet into the corpus, or any
-    // ingest-ordering skew) would be silently dropped by jaccardVerify's
+    // ingest-ordering skew) would be silently dropped by jaccardVerifySized's
     // join, breaking the documented one-shot parity with no error
     // (ADVICE r11) — fail loudly instead. Both counts are
     // candidate-proportional (candTexts is the persisted semi-join).
@@ -536,20 +504,9 @@ object Sinks {
     fs.delete(marker, true)
   }
 
-  /** Delete victims from ANY standing (doc_a, doc_b)-keyed pair table —
-    * the candidate feed, the [[verifiedPairsUpsert]] table, or any other
-    * derived pair state: anti-join on either endpoint, atomic swap,
-    * idempotent replay. `victims` must carry `idCol`. The GDPR cascade's
-    * public entry for pair tables beyond the one `lshIndexDelete` owns. */
-  def pairFeedDelete(path: String, victims: DataFrame,
-                     idCol: String = "doc_id"): Unit =
-    purgePairs(victims.sparkSession, path,
-      victims.select(col(idCol).as("doc_id")).distinct())
-
   /** Anti-join victim ids (a `doc_id` column) out of the standing pair
     * feed on EITHER endpoint — the shared pair-purge core of
-    * [[lshIndexDelete]], [[healPendingPairDelete]] and
-    * [[pairFeedDelete]]. Idempotent. */
+    * [[lshIndexDelete]] and [[healPendingPairDelete]]. Idempotent. */
   private def purgePairs(spark: org.apache.spark.sql.SparkSession,
                          pairsPath: String, ids: DataFrame): Unit =
     standingSchema(spark, pairsPath).foreach { schema =>

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 /** Smoke coverage of the driver contract: entry() returns rows; every
   * declared query runs at sf0.001; every oracleSql key has a query.
   * Plus the dynamic unpartitioned-window guard — at sf0.001 over the full
-  * suite, at sf0.1 over the ranked-statistics family (where sf0.001 is too
+  * suite, at sf0.1 over the rank/fusion-statistics family (where sf0.001 is too
   * small for a corpus-sized window to exceed the bound), and a negative
   * test proving the guard actually fires on an injected offender. */
 class EntrySpec extends SparkSpec {
@@ -18,6 +18,12 @@ class EntrySpec extends SparkSpec {
     val qs = SparkEntry.queries.keySet
     val orphans = SparkEntry.oracleSql.keySet.diff(qs)
     assert(orphans.isEmpty, s"oracleSql without queries: $orphans")
+  }
+
+  test("PLAN_BUDGET.json rows are a subset of queries") {
+    val stale = PlanAudit.read("PLAN_BUDGET.json").keySet.diff(SparkEntry.queries.keySet)
+    assert(stale.isEmpty,
+      s"PLAN_BUDGET.json rows without a declared query: ${stale.toSeq.sorted.mkString(", ")}")
   }
 
   // Every engine site that runs a WindowExec with no partition spec is
@@ -151,15 +157,16 @@ class EntrySpec extends SparkSpec {
     "AT sf0.1 (where the input relations exceed the bound)") {
     // sf0.001 can't stress this check: documents = 500 rows lands exactly
     // at the cap, so a corpus-sized window there is invisible (the round-4
-    // guard gap). At sf0.1 the ranked relations are 1.5k–150k rows — a
-    // single-task global-sort window in any of these queries goes red.
+    // guard gap). At sf0.1 the relations these rank/fusion statistics read
+    // are 1.5k–150k rows — a single-task global-sort window in any of them
+    // goes red. The family is every declared query, IVF probes and k-means
+    // seed picks aside, whose plan runs an unpartitioned window.
     val sf01 = "/root/testdata/sf0.1"
     assume(new java.io.File(s"$sf01/documents.parquet").exists())
     val MaxUnpartitionedRows = 500L
-    val family = Set("q206_rank_correlation", "q213_rfm", "q229_zipf_fit",
-      "q237_key_skew", "q250_ccnet_buckets", "q258_negative_sampling",
-      "q274_gains_table", "q278_lorenz_curve",
-      "q195_concurrency", "q196_global_cumsum")
+    val family = Set("q103_rrf_fusion", "q116_hybrid_search",
+      "q228_rank_agreement", "q229_zipf_fit", "q242_jackknife_source",
+      "q246_dataset_card", "q260_epoch_plan", "q307_split_stability")
     assert(family.subsetOf(SparkEntry.queries.keySet))
     val current = new java.util.concurrent.atomic.AtomicReference[String]("")
     val seen = watchUnpartitionedWindows(current) {
@@ -176,6 +183,7 @@ class EntrySpec extends SparkSpec {
     val offenders = seen.filter(_._2 > MaxUnpartitionedRows)
     assert(offenders.isEmpty,
       s"corpus-sized unpartitioned WindowExec at sf0.1 (query, rows): $offenders")
+    assert(seen.nonEmpty, "listener saw no unpartitioned windows at sf0.1 — guard is blind")
   }
 
   test("the window guard FIRES on an injected corpus-sized ntile " +

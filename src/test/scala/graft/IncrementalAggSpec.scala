@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.ops.{IncrementalAgg, Sketches}
+import graft.ops.IncrementalAgg
 
 class IncrementalAggSpec extends SparkSpec {
 
@@ -108,122 +108,6 @@ class IncrementalAggSpec extends SparkSpec {
     assert(a.getDouble(a.fieldIndex("sm")) === 9.0)
     assert(a.getDouble(a.fieldIndex("mn")) === 1.0)
     assert(a.getDouble(a.fieldIndex("mx")) === 5.0)
-  }
-
-  test("HLL sketches: merged daily partials == whole-data sketch, ~exact at this scale") {
-    val ev = Tables.events(spark, sfDir)
-    val daily = ev.withColumn("day", dayofmonth(col("ts")))
-      .groupBy(col("event_type"), col("day"))
-      .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
-    val merged = Sketches.estimate(
-        Sketches.mergeSketches(daily, Seq("event_type")))
-      .select(col("event_type"), col("approx_distinct"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    val whole = Sketches.estimate(
-        Sketches.distinctSketch(ev, Seq("event_type"), "user_id"))
-      .select(col("event_type"), col("approx_distinct"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(merged === whole) // sketch union is lossless vs one-shot build
-
-    val exact = ev.groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    merged.foreach { case (k, est) =>
-      val err = math.abs(est.toDouble - exact(k)) / exact(k).toDouble
-      assert(err < 0.05, s"$k: est=$est exact=${exact(k)} err=$err")
-    }
-  }
-
-  test("KLL quantile sketches: daily partials merge losslessly, exact median " +
-    "lands at rank 0.5 within the bound, any-quantile estimates hold") {
-    val ev = Tables.events(spark, sfDir)
-      .select(col("event_type"), col("value"), dayofmonth(col("ts")).as("day"))
-    val daily = Sketches.quantileSketch(ev, Seq("event_type", "day"), "value")
-    val merged = Sketches.mergeQuantileSketches(daily.drop("day"), Seq("event_type"))
-
-    // exact per-type percentiles, driver-side comparables
-    val exact = ev.groupBy(col("event_type"))
-      .agg(expr("percentile(value, 0.5)").as("p50"),
-        expr("percentile(value, 0.9)").as("p90"))
-      .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-
-    val got = merged
-      .select(col("event_type"),
-        Sketches.quantileOf(col("qsk"), 0.5).as("q50"),
-        Sketches.quantileOf(col("qsk"), 0.9).as("q90"))
-      .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    assert(got.keySet === exact.keySet)
-
-    // the sketch's rank of the true median must sit at 0.5 ± the KLL bound
-    val ranks = merged
-      .join(ev.groupBy(col("event_type"))
-        .agg(expr("percentile(value, 0.5)").as("p50")), "event_type")
-      .select(col("event_type"), Sketches.rankOf(col("qsk"), col("p50")).as("r"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    ranks.foreach { case (k, r) =>
-      assert(math.abs(r - 0.5) <= 0.05, s"$k: rank(exact median)=$r")
-    }
-    // and the estimated quantile VALUES must bracket the exact ones within
-    // the value spread (rank error translates to value error via density;
-    // generated values are well-spread, so 10% of the p90 scale is lax)
-    got.foreach { case (k, (q50, q90)) =>
-      val (e50, e90) = exact(k)
-      assert(math.abs(q50 - e50) <= math.abs(e90) * 0.1 + 1e-6,
-        s"$k: q50=$q50 exact=$e50")
-      assert(q90 >= q50, s"$k: quantiles not monotone")
-    }
-  }
-
-  test("theta sketches: partials union losslessly; intersection/union/diff " +
-    "estimates match exact set algebra at exact-mode cardinalities") {
-    val du = Tables.events(spark, sfDir)
-      .filter(dayofmonth(col("ts")) <= 4)
-      .select(dayofmonth(col("ts")).as("d"), col("user_id"), col("event_type"))
-
-    // two-level fold equals a direct one-level sketch
-    val partials = Sketches.thetaSketch(du, Seq("d", "event_type"), "user_id")
-    val daily = Sketches.mergeThetaSketches(partials.drop("event_type"), Seq("d"))
-    val direct = Sketches.thetaSketch(du, Seq("d"), "user_id")
-    val folded = daily.select(col("d"), Sketches.thetaEstimate(col("tsk")).as("e"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val one = direct.select(col("d"), Sketches.thetaEstimate(col("tsk")).as("e"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(folded === one, "two-level fold drifted from direct sketch")
-
-    // estimates == exact distinct counts (exact mode below 2^lgK)
-    val exactCnt = du.select("d", "user_id").distinct()
-      .groupBy("d").agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    folded.foreach { case (d, e) =>
-      assert(math.rint(e).toLong == exactCnt(d), s"day $d: est=$e exact=${exactCnt(d)}")
-    }
-
-    // pairwise set algebra vs exact joins
-    val dist = du.select("d", "user_id").distinct()
-    val exactOv = dist.as("a").join(dist.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.d") < col("b.d"))
-      .groupBy(col("a.d").as("da"), col("b.d").as("db"))
-      .agg(count(lit(1)).as("ov"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val sk = daily.collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]]("tsk")).toMap
-    val pairsDf = daily.select(col("d").as("da"), col("tsk").as("ska"))
-      .crossJoin(daily.select(col("d").as("db"), col("tsk").as("skb")))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db"),
-        Sketches.thetaEstimate(Sketches.thetaIntersect(col("ska"), col("skb"))).as("i"),
-        Sketches.thetaEstimate(Sketches.thetaUnion(col("ska"), col("skb"))).as("u"),
-        Sketches.thetaEstimate(Sketches.thetaANotB(col("ska"), col("skb"))).as("x"))
-      .collect()
-    assert(sk.size >= 3 && pairsDf.nonEmpty)
-    pairsDf.foreach { r =>
-      val (da, db) = (r.getInt(0), r.getInt(1))
-      val ov = exactOv((da, db))
-      val (ca, cb) = (exactCnt(da), exactCnt(db))
-      assert(math.rint(r.getDouble(2)).toLong == ov, s"($da,$db) intersect")
-      assert(math.rint(r.getDouble(3)).toLong == ca + cb - ov, s"($da,$db) union")
-      assert(math.rint(r.getDouble(4)).toLong == ca - ov, s"($da,$db) aNotB")
-    }
   }
 
   test("joinDelta: old join + delta == full join, for any disjoint split") {

@@ -447,10 +447,8 @@ class MaintainedDeleteSpec extends SparkSpec {
     // cleared — killed before the LAST pair purge. Only the verified
     // table's marker stands; its pairs still carry the victim.
     Seq("d5").toDF("doc_id").write.parquet(verified + ".delete.pending")
-    Sinks.indexDelete(bands, Seq(("d5", "book")).toDF("doc_id", "source"),
-      "doc_id", partitionCols = Seq("source"),
-      sortCols = Seq("band_idx", "band_key"))
-    Sinks.pairFeedDelete(pairs, Seq("d5").toDF("doc_id"))
+    Sinks.lshIndexDelete(bands, Seq(("d5", "book")).toDF("doc_id", "source"),
+      "doc_id", partitionCols = Seq("source"), pairTables = Seq(pairs))
     assert(pairsOf(verified).exists(p => p._1 == "d5" || p._2 == "d5"),
       "fixture should be torn: last pair table unpurged, marker standing")
 
@@ -472,7 +470,7 @@ class MaintainedDeleteSpec extends SparkSpec {
 
   test("verifiedPairsUpsert: the incrementally-maintained verified table " +
     "equals the one-shot minhashLsh output (cross-batch pairs included); " +
-    "pairFeedDelete purges it") {
+    "the GDPR cascade purges it") {
     val base = tmp("lsh-verified")
     val bands = base + "/bands"
     val verified = base + "/verified"
@@ -504,8 +502,9 @@ class MaintainedDeleteSpec extends SparkSpec {
     Sinks.verifiedPairsUpsert(verified, docsDf, "doc_id", "text",
       shingleK = 2, threshold = 0.5)(replayDelta, 2L)
     assert(rows(Readers.table(spark, verified)) === got)
-    // GDPR: the verified table joins the cascade through pairFeedDelete
-    Sinks.pairFeedDelete(verified, Seq("d2").toDF("doc_id"))
+    // GDPR: the verified table joins the cascade as a pair table
+    Sinks.lshIndexDelete(bands, Seq(("d2", "web")).toDF("doc_id", "source"),
+      "doc_id", partitionCols = Seq("source"), pairTables = Seq(verified))
     val post = rows(Readers.table(spark, verified))
     assert(!post.exists(p => p._1 == "d2" || p._2 == "d2"))
     assert(post === got.filterNot(p => p._1 == "d2" || p._2 == "d2"))
@@ -525,9 +524,11 @@ class MaintainedDeleteSpec extends SparkSpec {
     val corpus = vecs(0 until 40, i => (i % 4).toInt)
     val idx = IvfIndex.build(corpus, "vec_id", "embedding", nCentroids = 4)
     Writers.swapWrite(idx.centroids, cpath)
-    val cadence = Seq(Sinks.Maintenance.driftRebuild(apath, cpath, spath,
-      "vec_id", "embedding", nCentroids = 4, everyNBatches = 1,
-      partitionCols = Seq("label")))
+    val cadence = Seq(Sinks.Maintenance(1, (s, _) => {
+      IvfIndex.rebuildIfDrifted(s, apath, cpath, spath, "vec_id", "embedding",
+        nCentroids = 4, partitionCols = Seq("label"))
+      ()
+    }))
     // centroid handle constructed PER BATCH (a DataFrame pins its file
     // listing at resolution — a pre-stream handle would go stale at the
     // first rebuild swap; this is the documented foreachBatch shape)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Curation, Dedup, GraphAnalytics}
+import graft.ops.Dedup
 import org.apache.spark.sql.functions._
 
 class RefinementSpec extends SparkSpec {
@@ -127,50 +127,4 @@ class RefinementSpec extends SparkSpec {
     assert(Set(1L, 2L, 3L, 6L).map(clusterOf).size === 1)
   }
 
-  test("dedupImpact: exact keep rates per source on a hand-checked fixture") {
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta", "web"),
-      (2L, "alpha beta gamma delta epsilon zeta", "web"),   // exact dup of 1
-      (3L, "totally different text in this row here", "web"),
-      (4L, "books corpus document one two three four", "books")
-    ).toDF("doc_id", "text", "source")
-    val clusters = GraphAnalytics.dedupClusters(
-      Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)
-        .select(col("doc_a"), col("doc_b")))
-    val out = Curation.dedupImpact(docs, "doc_id", "text", "source", clusters)
-      .collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4), r.getLong(5)))).toMap
-    assert(out("web") === ((3L, 2L, 2.0 / 3, 19L, 13L)))   // doc 2 dropped (6 tokens)
-    assert(out("books") === ((1L, 1L, 1.0, 7L, 7L)))
-  }
-
-  test("phashNearDup: identical content pairs at Hamming 0, nothing else at tight radius") {
-    import graft.multimodal.Multimodal
-    val media = spark.createDataset(Seq(
-      Multimodal.MediaRow("m1", "image", "same pixels".getBytes("UTF-8"),
-        Multimodal.MediaMeta("image/png", 64, 48, 0L, 0)),
-      Multimodal.MediaRow("m2", "image", "same pixels".getBytes("UTF-8"),
-        Multimodal.MediaMeta("image/png", 64, 48, 0L, 0)),
-      Multimodal.MediaRow("m3", "image", "different pixels".getBytes("UTF-8"),
-        Multimodal.MediaMeta("image/png", 64, 48, 0L, 0)),
-      Multimodal.MediaRow("m4", "image", Array.empty[Byte],   // decode failure: dropped
-        Multimodal.MediaMeta("image/png", 64, 48, 0L, 0))
-    ))
-    val out = Multimodal.phashNearDup(spark, media, maxDist = 1)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-    assert(out.toSeq === Seq(("m1", "m2", 0)))
-  }
-
-  test("charEntropy: closed-form values") {
-    val docs = Seq(
-      (1L, "aaaa"),      // one symbol → H = 0
-      (2L, "abab"),      // two equiprobable → H = 1
-      (3L, "abcd")       // four equiprobable → H = 2
-    ).toDF("doc_id", "text")
-    val out = Curation.charEntropy(docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getFloat(3)))).toMap
-    assert(out(1L) === ((4L, 1L, 0.0f)))
-    assert(out(2L) === ((4L, 2L, 1.0f)))
-    assert(out(3L) === ((4L, 4L, 2.0f)))
-  }
 }

@@ -308,9 +308,12 @@ class ServingSpec extends SparkSpec {
     check(Seq(("d1": Any) -> texts("d1"),
       ("zz": Any) -> "alpha beta gamma delta epsilon zeta"), "mixed")
 
-    // maintenance: purge d2 from the verified table — the LIVE session
-    // must stop serving its pairs at the next request
-    Sinks.pairFeedDelete(base + "/verified", Seq("d2").toDF("doc_id"))
+    // maintenance: the GDPR cascade purges d2 from the bands and both
+    // pair tables — the LIVE session must stop serving its pairs at the
+    // next request
+    Sinks.lshIndexDelete(base + "/bands", Seq(("d2", "web")).toDF("doc_id", "source"),
+      "doc_id", partitionCols = Seq("source"),
+      pairTables = Seq(base + "/pairs", base + "/verified"))
     val after = check(Seq(("d1": Any) -> texts("d1")), "post-purge")
     assert(!after.exists(p => p._1 == "d2" || p._2 == "d2"),
       s"live session served a purged victim's verified pairs: $after")

@@ -47,7 +47,7 @@ object PlanAudit {
   }
   val Zero: Counts = Counts(0, 0, 0)
 
-  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+  private[graft] def kids(p: SparkPlan): Seq[SparkPlan] = p match {
     // the INITIAL adaptive plan, not the executed one: runtime stage-cache
     // exchange reuse is racy (two equivalent stages submitted concurrently
     // can both materialize before either registers for reuse), so executed

@@ -11,8 +11,11 @@ object SparkEntry {
     * memory_graph.py:5721-7120) — chunked+embedded corpus, cosine-KNN
     * vector branch ∪ compiled-AST graph branch at the 0.7 neo-default,
     * grouped-memory expansion, stratified source quotas + adaptive fill,
-    * max-score fusion, hydration. Same plan the q115 oracle hash-checks;
-    * the graph branch alone guarantees rows > 0 at every SF. */
+    * max-score fusion, hydration. The Spark jobs run inside this call
+    * (the hit list and graph branch overlapped, then one hydration
+    * point-get); fusion runs on the driver and the fused rows come back as
+    * a local relation — the rows the q115 oracle hash-checks. The graph
+    * branch alone guarantees rows > 0 at every SF. */
   def entry(spark: SparkSession): DataFrame =
     Registry.queries("q115_fused_search")(spark, "/root/testdata/sf0.001")
 

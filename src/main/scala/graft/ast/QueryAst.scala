@@ -128,15 +128,20 @@ object QueryCompiler {
     * invisible intermediate node, so the edge relation is semi-joined down
     * to visible-to-visible edges as well. Columns the principal doesn't
     * exercise (empty role/org/namespace lists) are never referenced, so the
-    * node schema only needs the grants actually used. */
+    * node schema only needs the grants actually used. A 1-hop match joins
+    * both edge endpoints to the visible nodes already, so it skips the two
+    * semi-joins (and their broadcast jobs). */
   def compile(q: GraphQuery, nodes: DataFrame, edges: DataFrame,
               principal: graft.ops.Retrieval.Principal): DataFrame = {
     val visible = nodes.filter(graft.ops.Retrieval.aclPredicate(principal))
-    val vIds = visible.select(col("node_id"))
-    val vEdges = edges
-      .join(vIds.withColumnRenamed("node_id", "src"), Seq("src"), "left_semi")
-      .join(vIds.withColumnRenamed("node_id", "dst"), Seq("dst"), "left_semi")
-    compile(q, visible, vEdges)
+    if (q.pattern.maxHops == 1) compile(q, visible, edges)
+    else {
+      val vIds = visible.select(col("node_id"))
+      val vEdges = edges
+        .join(vIds.withColumnRenamed("node_id", "src"), Seq("src"), "left_semi")
+        .join(vIds.withColumnRenamed("node_id", "dst"), Seq("dst"), "left_semi")
+      compile(q, visible, vEdges)
+    }
   }
 
   /** Compile to a DataFrame plan over nodes(node_id,label,name,properties)

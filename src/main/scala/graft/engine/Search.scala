@@ -1,27 +1,41 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.{ExecutionException, ExecutorService, LinkedBlockingQueue,
+  ThreadPoolExecutor, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.ast.{GraphQuery, QueryCompiler}
-import graft.functions.Fns.baseId
+import graft.functions.Fns.{baseId, ChunkSuffix}
 import graft.functions.VectorFunctions._
 import graft.ops.{Rerank, Reranker, LexicalReranker, Retrieval}
 import graft.ops.Retrieval.{MetaPred, Principal}
 
-/** The flagship read path — the reference's
+/** The flagship read paths — the reference's
   * `find_related_memory_items_async` (`memory/memory_graph.py:5721-7120`,
-  * traced in SURVEY §3.1) as ONE declarative Spark plan:
+  * traced in SURVEY §3.1).
+  *
+  * [[Search.search]] is ONE declarative Spark plan:
   *
   *   chunks → ACL filter (F1) → metadata filter (F4) → cosine KNN over the
   *   embedded query, ×3 oversampled (V1) → chunk→memory rollup keeping best
   *   score (J2) → hydration join to `memories` (J1) → exclude-id (F6) →
   *   global top-k (W4) → optional rerank (W5).
   *
-  * Scale shape: the ACL/meta predicates and the column pruning reach the
-  * chunk scan (chunks are partitionable by tenant); the query vector is a
-  * broadcast literal; the only shuffles are the rollup groupBy (on
-  * memory_id, map-side combinable) and the hydration join (broadcast when
-  * the candidate set is small — it is ≤ 3k rows by construction).
+  * Its scale shape: the ACL/meta predicates and the column pruning reach
+  * the chunk scan (chunks are partitionable by tenant); the query vector is
+  * a literal; the only shuffles are the rollup groupBy (on memory_id,
+  * map-side combinable) and the hydration join (broadcast when the
+  * candidate set is small — it is ≤ 3k rows by construction).
+  *
+  * [[Search.searchFused]] adds the graph branch and runs as a few bounded
+  * Spark jobs — the KNN hit list and the graph ids, overlapped, then one
+  * hydration point-get — with the quotas, fill and fusion in driver-side
+  * Scala over at most about 4·topK rows.
   */
 object Search {
 
@@ -84,10 +98,7 @@ object Search {
 
   /** The shared KNN hit list: F1/F2/F4 filters → literal-qvec cosine →
     * 0.15 gate → ×3-oversampled top cut, carrying the grouped payload when
-    * the chunk relation has it (IVF-pruned projections may not). The hit
-    * list feeds BOTH the rollup and the grouped expansion, so it is
-    * materialized (≤ 3·topK rows) — otherwise the corpus-wide KNN scan
-    * would run once per consumer.
+    * the chunk relation has it (IVF-pruned projections may not).
     *
     * The query vector is attached as a LITERAL (it is driver-known — the
     * embedder runs on the request text), which is exactly the
@@ -97,25 +108,28 @@ object Search {
     * (`searchIndexed` remains the explicit-pruning variant). `centroid_id`
     * is carried through the projection when the relation has it so column
     * pruning can never evict the rule's prune key. */
-  private def chunkHitList(spark: SparkSession, chunks: DataFrame,
-                           req: SearchRequest, embedder: Embedder): DataFrame = {
+  private def chunkHitList(chunks: DataFrame, req: SearchRequest,
+                           embedder: Embedder): DataFrame = {
     val qvec = lit(embedder.embed(req.queryText))
     val extraCols = Seq("is_grouped", "related_memory_ids", "centroid_id")
       .filter(chunks.columns.contains)
-    val hits = applyFilters(chunks, req)
+    applyFilters(chunks, req)
       .withColumn("score", cosineSim(col("embedding"), qvec))
       .filter(col("score") >= ScoreThreshold)
       .select((Seq("chunk_id", "memory_id", "score") ++ extraCols).map(col): _*)
       .orderBy(desc("score"), col("chunk_id"))
       .limit(req.topK * OversampleFactor)
-    if (extraCols.isEmpty) hits else hits.localCheckpoint(true)
   }
 
   def search(spark: SparkSession, chunks: DataFrame, memories: DataFrame,
              req: SearchRequest,
              embedder: Embedder = new HashEmbedder(64),
              reranker: Reranker = LexicalReranker): DataFrame = {
-    val chunkHits = chunkHitList(spark, chunks, req, embedder)
+    // the hit list feeds BOTH the rollup and the grouped expansion, so it is
+    // materialized (≤ 3·topK rows) when it carries the payload — otherwise
+    // the corpus-wide KNN scan would run once per consumer
+    val hits = chunkHitList(chunks, req, embedder)
+    val chunkHits = if (hits.columns.length > 3) hits.localCheckpoint(true) else hits
 
     // V6 applied mid-pipeline (memory_graph.py:6200-6222): grouped hits pull
     // their related memories into the candidate set at score 0.0 before the
@@ -160,6 +174,44 @@ object Search {
     search(spark, pruned, memories, req, embedder, reranker)
   }
 
+  /** One fusion candidate: a memory id, its score and the branch that
+    * found it ("vector", "graph" or "grouped"). */
+  private case class Candidate(id: String, score: Double, source: String)
+
+  /** Spark's UTF8_BINARY string order (UTF-8 bytes), nulls first. */
+  private def compareIds(a: String, b: String): Int =
+    if (a eq b) 0 else if (a == null) -1 else if (b == null) 1
+    else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
+  /** `ORDER BY score DESC, memory_id` as Spark sorts it: NaN greatest,
+    * -0.0 equal to 0.0, ids in UTF-8 byte order. */
+  private val byRank: Ordering[Candidate] = (a, b) => {
+    val c = compareDoubles(b.score, a.score)
+    if (c != 0) c else compareIds(a.id, b.id)
+  }
+
+  /** `max(struct(score, source))`: best score wins, the source string
+    * breaks exact-score ties. */
+  private val byBest: Ordering[Candidate] = (a, b) => {
+    val c = compareDoubles(a.score, b.score)
+    if (c != 0) c else compareIds(a.source, b.source)
+  }
+
+  private val chunkSuffix = java.util.regex.Pattern.compile(ChunkSuffix)
+
+  /** Runs the graph branch beside the hit list. Daemon threads, so an idle
+    * pool never holds the JVM open; they retire after 30 s idle. */
+  private lazy val branchPool: ExecutorService = {
+    val pool = new ThreadPoolExecutor(4, 4, 30, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "graft-search-branch")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
   /** The COMPLETE §3.1 read path — vector branch ∪ AST graph branch fused
     * under stratified quotas (`memory_graph.py:6289-6431`), ONE entry point:
     *
@@ -182,70 +234,88 @@ object Search {
     * (bounded by the quotas, ≈ 4·topK + expansions), sorted best-first —
     * topK gates the QUOTAS, not a final cut.
     *
-    * Scale shape: both branches are independent subplans Spark schedules
-    * concurrently; the quota window partitions on the 2-value source tag
-    * of a ≤ 4·topK-row relation; the one driver-side count gating the fill
-    * runs over that same tiny relation (the reference counts the same list
-    * in-process, `:6689`). */
+    * Scale shape: every Spark job returns a bounded row set to the driver,
+    * and steps 1–5 after the scans run there as plain Scala, the way the
+    * reference counts and fills the same list in-process (`:6689`).
+    *   - The hit list is one job, ≤ 3·topK rows, in the Sort + Limit shape
+    *     [[graft.plans.AnnRewrite]] prunes.
+    *   - The graph ids run at the same time on an engine-owned pool, under
+    *     the caller's local properties (job tags, scheduler pool, tracing
+    *     spans). They are cut to the first baseQuota + topK + 3·topK ids in
+    *     id order. The cut is exact: sampling keeps the first baseQuota,
+    *     and the fill takes at most topK leftovers, skipping only ids
+    *     already sampled from the vector branch (≤ 3·topK).
+    *   - Hydration is one point-get on the principal-visible memories.
+    * The result is a local relation: collecting it runs no job. */
   def searchFused(spark: SparkSession, chunks: DataFrame, memories: DataFrame,
                   nodes: DataFrame, edges: DataFrame, graphQuery: GraphQuery,
                   req: SearchRequest,
                   embedder: Embedder = new HashEmbedder(64)): DataFrame = {
-    val chunkHits = chunkHitList(spark, chunks, req, embedder)
-
-    val vector = chunkHits.groupBy(col("memory_id"))
-      .agg(max(col("score")).as("score"))
-      .withColumn("source", lit("vector"))
+    val baseQuota = math.max(req.topK / 2, 10)
     // The graph branch is PRINCIPAL-SCOPED (the ACL compile overload):
     // both endpoints of every traversed edge must pass the principal's
     // read predicate, exactly like the vector branch's chunk filter — the
     // reference's Neo4j branch is user-scoped Cypher. The non-principal
     // overload here would let graph-sourced memories bypass ACL entirely.
-    val graph = QueryCompiler.compile(graphQuery, nodes, edges, req.principal)
-      .select(col("m_id").as("memory_id")).distinct()
-      .withColumn("score", lit(NeoDefaultScore))
-      .withColumn("source", lit("graph"))
-    val expanded = groupedExpansion(chunkHits).withColumn("source", lit("grouped"))
+    val graphIds = SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], branchPool) {
+      QueryCompiler.compile(graphQuery, nodes, edges, req.principal)
+        .select(col("m_id").as("memory_id")).distinct()
+        .orderBy(col("memory_id"))
+        .limit(baseQuota + req.topK + req.topK * OversampleFactor)
+        .collect().map(_.getString(0))
+    }
+    val hits =
+      try chunkHitList(chunks, req, embedder).collect()
+      catch { case e: Throwable =>
+        // wait for the graph branch so none of its jobs outlives the call
+        try graphIds.get() catch { case _: Throwable => () }
+        throw e
+      }
+    val graph = (try graphIds.get() catch { case e: ExecutionException => throw e.getCause })
+      .map(Candidate(_, NeoDefaultScore, "graph")).toSeq   // already in (0.7, id) order
 
-    val baseQuota = math.max(req.topK / 2, 10)
-    val quotaCol = when(col("source") === "vector", lit(baseQuota * ChunkFactor))
-      .otherwise(lit(baseQuota))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source")).orderBy(desc("score"), col("memory_id"))
-    // materialized (NOT persist: a per-query cache pin would leak across a
-    // serving loop) — ≤ oversample+|graph| rows, read by sample, count, fill
-    val ranked = vector.unionByName(graph)
-      .withColumn("rn", row_number().over(w))
-      .localCheckpoint(true)
+    val vector = hits.groupMapReduce(_.getAs[String]("memory_id"))(_.getAs[Double]("score"))(
+      (a, b) => if (compareDoubles(a, b) >= 0) a else b)
+      .map { case (id, score) => Candidate(id, score, "vector") }.toSeq.sorted(byRank)
+    // V6 (see groupedExpansion), over the collected hit list
+    val grouped =
+      if (!Seq("is_grouped", "related_memory_ids").forall(chunks.columns.contains)) Nil
+      else hits.toSeq
+        .filter(h => !h.isNullAt(h.fieldIndex("is_grouped")) && h.getAs[Boolean]("is_grouped"))
+        .flatMap(h => Option(h.getAs[scala.collection.Seq[String]]("related_memory_ids"))
+          .getOrElse(Nil))
+        .collect { case rid if rid != null => chunkSuffix.matcher(rid).replaceAll("") }
+        .distinct.map(Candidate(_, 0.0, "grouped"))
 
-    val sampled = ranked.filter(col("rn") <= quotaCol).drop("rn")
-    val sampledIds = sampled.select(col("memory_id")).distinct()
-    val need = req.topK - sampledIds.count()
+    val vectorQuota = baseQuota * ChunkFactor
+    val sampled = vector.take(vectorQuota) ++ graph.take(baseQuota)
+    val sampledIds = sampled.map(_.id).toSet
+    val need = req.topK - sampledIds.size
     val fill =
-      if (need <= 0) sampled.limit(0)
-      else ranked.filter(col("rn") > quotaCol).drop("rn")
-        .join(sampledIds, Seq("memory_id"), "left_anti")
-        .orderBy(desc("score"), col("memory_id"))
-        .limit(need.toInt)
-
-    val fused = sampled.unionByName(fill).unionByName(expanded)
-      .groupBy(col("memory_id"))
-      // lexicographic max over (score, source): best score wins; the source
-      // string only breaks exact-score ties, which the fixed 0.7/0.0
-      // defaults make unreachable across sources in practice
-      .agg(max(struct(col("score"), col("source"))).as("best"))
-      .select(col("memory_id"), col("best.score").as("score"),
-        col("best.source").as("source"))
+      if (need <= 0) Nil
+      else (vector.drop(vectorQuota) ++ graph.drop(baseQuota))
+        .filterNot(c => sampledIds(c.id)).sorted(byRank).take(need)
+    val fused = (sampled ++ fill ++ grouped).groupBy(_.id)
+      .map { case (id, cs) => id -> cs.max(byBest) }
 
     // visibility re-checked at hydration (see visibleMemories): the graph
     // branch is already principal-scoped, but grouped expansion injects
     // raw related ids that must not hydrate into invisible memories
-    fused
-      .join(visibleMemories(memories, req), Seq("memory_id"))
+    val ids = fused.keys.filter(_ != null).toSeq
+    val hydration = visibleMemories(memories, req)
+      .filter(col("memory_id").isin(ids: _*))
       .filter(req.excludeMemoryId.map(col("memory_id") =!= _).getOrElse(lit(true)))
-      .select(col("memory_id"), col("score"), col("source"), col("content"),
-        col("title"), col("user_id"), col("created_at"))
-      .orderBy(desc("score"), col("memory_id"))
+      .select(col("memory_id"), col("content"), col("title"), col("user_id"),
+        col("created_at"))
+    val hydrated = if (ids.isEmpty) Array.empty[Row] else hydration.collect()
+    val rows = hydrated.toSeq
+      .map(h => (fused(h.getString(0)), h))
+      .sortBy(_._1)(byRank)
+      .map { case (c, h) => Row.fromSeq(Seq(c.id, c.score, c.source) ++ h.toSeq.tail) }
+    val fields = hydration.schema.fields
+    spark.createDataFrame(rows.asJava, StructType(fields.head +:
+      StructField("score", DoubleType) +: StructField("source", StringType) +: fields.tail))
   }
 
   /** [[searchFused]] against a prebuilt IVF index: the vector branch scans

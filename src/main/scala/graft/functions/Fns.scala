@@ -54,8 +54,11 @@ object Fns {
     coalesce(ColumnBridge.column(ShingleStrings(ColumnBridge.expression(toks), k)),
       array().cast("array<string>"))
 
-  /** strip the reference's `_N` chunk suffix → base id (memory_graph.py:6065). */
-  def baseId(chunkId: Column): Column = regexp_replace(chunkId, "_[0-9]+$", "")
+  /** The reference's `_N` chunk suffix (memory_graph.py:6065). */
+  val ChunkSuffix = "_[0-9]+$"
+
+  /** strip the `_N` chunk suffix → base id. */
+  def baseId(chunkId: Column): Column = regexp_replace(chunkId, ChunkSuffix, "")
 
   /** 30-day-half-life exponential time decay (memory_management.py:3177-3190):
     * weight = 0.5 ^ (days(now - ts) / halfLifeDays). `now` is passed in for

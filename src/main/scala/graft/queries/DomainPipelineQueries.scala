@@ -273,10 +273,12 @@ object DomainPipelineQueries {
     // The COMPLETE §3.1 fused read path (Search.searchFused): vector KNN ∪
     // compiled graph query with neo-default 0.7 scores, grouped-memory
     // expansion, stratified quotas + adaptive fill, max-score fusion,
-    // hydration. Chunks of every 7th memory are flagged grouped with two
-    // related ids, so expansion and re-dedup are live in the measured plan;
-    // the oracle replays every stage (chunking, bit-exact embeddings,
-    // quotas, fill-count arithmetic, fusion tie-breaks) in SQL.
+    // hydration. The KNN hit list, the graph ids and the hydration are
+    // bounded Spark jobs; quotas, fill and fusion run on the driver, and
+    // the rows come back as a local relation. Chunks of every 7th memory
+    // are flagged grouped with two related ids, so expansion and re-dedup
+    // are live; the oracle replays every stage (chunking, bit-exact
+    // embeddings, quotas, fill-count arithmetic, fusion tie-breaks) in SQL.
     Entry("q115_fused_search",
       (s, d) => {
         import graft.ast.{CompOp, GraphQuery, Pattern, Return, Where}

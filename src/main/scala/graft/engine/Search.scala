@@ -105,9 +105,8 @@ object Search {
     * `Sort(cosine(emb, literal)) + Limit` shape [[graft.plans.AnnRewrite]]
     * fires on: against a registered IVF-assigned chunks table the
     * OPTIMIZER, not the caller, swaps this scan for a cluster-pruned one
-    * (`searchIndexed` remains the explicit-pruning variant). `centroid_id`
-    * is carried through the projection when the relation has it so column
-    * pruning can never evict the rule's prune key. */
+    * `centroid_id` is carried through the projection when the relation
+    * has it so column pruning can never evict the rule's prune key. */
   private def chunkHitList(chunks: DataFrame, req: SearchRequest,
                            embedder: Embedder): DataFrame = {
     val qvec = lit(embedder.embed(req.queryText))
@@ -157,21 +156,6 @@ object Search {
 
     if (!req.rerank) topK
     else Rerank.rerank(topK, "content", "memory_id", req.queryText, req.topK, reranker)
-  }
-
-  /** Flagship search against a prebuilt IVF index: identical pipeline, but
-    * the KNN scan touches only the query's `nProbe` nearest clusters
-    * (`IvfIndex.prunedCorpus`) — the candidate-pruned path for corpora where
-    * a full scan per query is too expensive. Recall < 1 like any ANN; raise
-    * nProbe to trade time for recall. */
-  def searchIndexed(spark: SparkSession, index: IvfIndex.Index, memories: DataFrame,
-                    req: SearchRequest, nProbe: Int = 2,
-                    embedder: Embedder = new HashEmbedder(64),
-                    reranker: Reranker = LexicalReranker): DataFrame = {
-    import spark.implicits._
-    val qvec = Seq(Tuple1(embedder.embed(req.queryText))).toDF("qvec")
-    val pruned = IvfIndex.prunedCorpus(index, qvec, nProbe).drop("centroid_id")
-    search(spark, pruned, memories, req, embedder, reranker)
   }
 
   /** One fusion candidate: a memory id, its score and the branch that
@@ -316,104 +300,5 @@ object Search {
     val fields = hydration.schema.fields
     spark.createDataFrame(rows.asJava, StructType(fields.head +:
       StructField("score", DoubleType) +: StructField("source", StringType) +: fields.tail))
-  }
-
-  /** [[searchFused]] against a prebuilt IVF index: the vector branch scans
-    * only the query's `nProbe` nearest clusters — the serving shape when a
-    * full chunk scan per query is too expensive. With `nProbe` = all
-    * clusters the result equals the full-scan fused search exactly
-    * (spec-pinned); the pruned corpus keeps the chunk payload, so grouped
-    * expansion still fires — but only from hits the probe can see. */
-  def searchFusedIndexed(spark: SparkSession, index: IvfIndex.Index,
-                         memories: DataFrame, nodes: DataFrame, edges: DataFrame,
-                         graphQuery: GraphQuery, req: SearchRequest, nProbe: Int = 2,
-                         embedder: Embedder = new HashEmbedder(64)): DataFrame = {
-    import spark.implicits._
-    val qvec = Seq(Tuple1(embedder.embed(req.queryText))).toDF("qvec")
-    val pruned = IvfIndex.prunedCorpus(index, qvec, nProbe).drop("centroid_id")
-    searchFused(spark, pruned, memories, nodes, edges, graphQuery, req, embedder)
-  }
-
-  /** V2 modernized — multi-space search with reciprocal-rank fusion: run
-    * the full filtered KNN independently per embedding space (the
-    * reference fans out to Pinecone/BigBird/Qdrant concurrently,
-    * `memory_graph.py:6085-6127`; Spark schedules the per-space stages in
-    * parallel from one plan), rank per space, fuse by RRF (rank-based, so
-    * heterogeneous score scales need no calibration — replacing the
-    * reference's last-wins score merge), then hydrate the fused top-k.
-    * `spaces` maps space name → (chunks relation, its embedding column). */
-  def searchMultiSpace(spark: SparkSession, spaces: Seq[(DataFrame, String)],
-                       memories: DataFrame, req: SearchRequest,
-                       embedder: Embedder = new HashEmbedder(64),
-                       rrfK: Int = 60): DataFrame = {
-    import spark.implicits._
-    val qvec = Seq(Tuple1(embedder.embed(req.queryText))).toDF("qvec")
-    val perSpace = spaces.map { case (chunks, embCol) =>
-      // same F1/F2/F4 stack as the single-space path — every space is
-      // filtered identically before its ranking exists
-      val filtered = applyFilters(chunks, req)
-      filtered.crossJoin(broadcast(qvec))
-        .withColumn("score", cosineSim(col(embCol), col("qvec")))
-        .select(col("memory_id"), col("score"))
-        .groupBy(col("memory_id")).agg(max(col("score")).as("score"))
-        .orderBy(desc("score"), col("memory_id"))
-        .limit(req.topK * OversampleFactor)
-    }
-    Retrieval.rrfFuse(perSpace, "memory_id", rrfK)
-      .join(visibleMemories(memories, req), Seq("memory_id"))
-      .filter(req.excludeMemoryId.map(col("memory_id") =!= _).getOrElse(lit(true)))
-      .select(col("memory_id"), col("rrf"), col("content"), col("title"),
-        col("user_id"), col("created_at"))
-      .orderBy(desc("rrf"), col("memory_id"))
-      .limit(req.topK)
-  }
-
-  /** V3 — filter-only fallback when KNN returns nothing
-    * (`memory_graph.py:8327-8437`): newest matching rows, no vector. */
-  def fallbackScan(chunks: DataFrame, memories: DataFrame, req: SearchRequest): DataFrame =
-    chunks.filter(Retrieval.aclPredicate(req.principal))
-      .select(col("memory_id")).distinct()
-      .join(visibleMemories(memories, req), Seq("memory_id"))
-      // F6 applies on EVERY path — the fallback must not return the very
-      // memory the caller asked to exclude (primary path filters at hydrate)
-      .filter(req.excludeMemoryId.map(col("memory_id") =!= _).getOrElse(lit(true)))
-      .select(col("memory_id"), lit(null).cast("double").as("score"),
-        lit(0L).as("n_chunks"), col("content"), col("title"), col("user_id"),
-        col("topics"), col("created_at"))
-      .orderBy(desc("created_at"), col("memory_id"))
-      .limit(req.topK)
-
-  /** The degradation policy around plan variants (`memory_graph.py:9137`,
-    * `:8582`): run the primary plan; if empty, strip property filters; if
-    * still empty, recency scan. Driver-side retry over tiny results — the
-    * plans themselves stay distributed. */
-  /** Generic-query canonicalization (`memory_models.py:899-927`: `"*"` and
-    * friends are rewritten to "show me my most recent memories"): a
-    * wildcard/empty query skips the vector branch entirely. */
-  def isGenericQuery(q: String): Boolean = {
-    val t = q.trim.toLowerCase
-    t.isEmpty || t == "*" || t == "all" || t == "everything"
-  }
-
-  def searchWithFallback(spark: SparkSession, chunks: DataFrame, memories: DataFrame,
-                         req: SearchRequest): DataFrame = {
-    if (isGenericQuery(req.queryText)) return fallbackScan(chunks, memories, req)
-    // persist each variant before probing emptiness: isEmpty materializes the
-    // plan, and without the cache the caller's collect would re-run the full
-    // corpus scan a second time. The cached result is ≤ topK rows. Abandoned
-    // (empty) variants are unpersisted immediately; the RETURNED DataFrame
-    // stays cached — serving loops should unpersist it once consumed.
-    val primary = search(spark, chunks, memories, req).persist()
-    if (!primary.isEmpty) primary
-    else {
-      primary.unpersist()
-      val unfiltered =
-        search(spark, chunks, memories, req.copy(metaFilters = Map.empty)).persist()
-      if (!unfiltered.isEmpty) unfiltered
-      else {
-        unfiltered.unpersist()
-        fallbackScan(chunks, memories, req)
-      }
-    }
   }
 }

@@ -1,13 +1,15 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, In, Literal, Or}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference,
+  EqualTo, Expression, In, Literal, Or}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,49 +25,47 @@ import graft.sources.{Readers, Writers}
   * analyzer + optimizer + physical planning + file re-listing before the
   * first byte is read, which is why the per-request floor sat at
   * 0.35–1.3 s against the reference's warm 240–340 ms resident-index band
-  * (`docs/SEARCH_LATENCY_ANALYSIS.md`; VERDICT r11 #2). A session here
-  * compiles the probe shape ONCE — through the normal DataFrame path, so
-  * every optimization (filter pushdown, broadcast selection, codegen)
-  * applies — and each request then only REBINDS the literals inside the
-  * cached optimized plan:
+  * (the reference repository's `docs/SEARCH_LATENCY_ANALYSIS.md`). A
+  * session here compiles the probe shape ONCE — through the normal
+  * DataFrame path, so every optimization (filter pushdown, broadcast
+  * selection, codegen) applies — and each request then only REBINDS
+  * ([[rebind]]) the two nodes of the cached optimized plan that carry
+  * request data:
   *
   *  - the pushed predicate on the standing scan (`Filter` over the
   *    relation) is rebuilt from the request's keys/ids,
   *  - the probe-side `LocalRelation` gets the request's rows,
   *
   * and nothing else changes — answer parity with the fresh path is
-  * spec-pinned (ServingSpec). Execution tiers per request:
-  * [[LshProbeSession.probeDf]] re-enters through a fresh Dataset
-  * (analyzer+optimizer re-run on the already-optimized plan — idempotent
-  * and cheap; keeps plan-pin `require()`s inspectable), while
-  * [[LshProbeSession.probeRows]] hands the rebound plan straight to
-  * physical planning (`PlanBridge.collectFromOptimized`) — the true warm
-  * path, where per-request cost is codegen-cache lookup + the pushed scan
-  * itself. The standing DataFrame handle is held by the session, so the
-  * relation's file listing happens once per session, not once per request
-  * (at 100 TB the listing alone is a job).
+  * spec-pinned (ServingSpec). Execution tiers per request: the `…Df`
+  * calls re-enter through a fresh Dataset (analyzer+optimizer re-run on
+  * the already-optimized plan — idempotent and cheap; keeps plan-pin
+  * `require()`s inspectable), while the `…Rows` calls hand the rebound
+  * plan straight to physical planning (`PlanBridge.collectFromOptimized`)
+  * — the true warm path, where per-request cost is codegen-cache lookup +
+  * the pushed scan itself. The standing DataFrame handle is held by the
+  * session, so the relation's file listing happens once per session, not
+  * once per request (at 100 TB the listing alone is a job).
   *
-  * MAINTENANCE LIFETIME — generation-aware auto-refresh. A cached template
-  * pins the standing table's file listing; every maintenance mutation
-  * (partition merge, GDPR delete cascade, compaction, drift rebuild)
-  * replaces files, so a session that outlived the mutation would throw
-  * FileNotFound or — the unacceptable case — keep serving a purged
-  * victim's rows from retired files. "Open a new session after
-  * maintenance" is a caller convention, and serving-after-delete is
-  * exactly the defect class conventions leak (VERDICT r10/r11 on the pair
-  * cascade). So sessions constructed WITH the standing table's path poll
-  * the table's generation marker ([[Writers.Generation]] — bumped by every
-  * completed mutation) per request: one driver-side filesystem probe, no
-  * Spark job, microseconds against a local FS and one small read against
-  * an object store. On a bump the session recompiles its template from a
-  * NON-DESTRUCTIVE fresh read ([[Readers.servingSnapshot]] — a serving
-  * refresh must never rename; all heals stay with the single writer,
-  * ADVICE r11) — so a GDPR purge is visible to every live session at its
-  * very next request, spec-pinned (ServingSpec "auto-refresh"). The
-  * straight-to-physical tiers additionally retry ONCE through a forced
-  * refresh on a FileNotFound escaping mid-mutation — the residual window
-  * between the poll and the scan. Sessions constructed from a bare
-  * DataFrame (no path) keep the old pin-at-construction behavior.
+  * MAINTENANCE LIFETIME — generation-aware auto-refresh ([[Pinned]]). A
+  * cached template pins the standing table's file listing; every
+  * maintenance mutation (partition merge, GDPR delete cascade,
+  * compaction, drift rebuild) replaces files, so a session that outlived
+  * the mutation would throw FileNotFound or — the unacceptable case —
+  * keep serving a purged victim's rows from retired files. "Open a new
+  * session after maintenance" is a caller convention, and
+  * serving-after-delete is exactly the defect class conventions leak. So
+  * sessions constructed WITH the standing tables' paths poll each table's
+  * generation marker ([[Writers.Generation]] — bumped by every completed
+  * mutation) per request: one driver-side filesystem probe, no Spark job.
+  * On a bump the session rebuilds its state from a fresh non-destructive
+  * read ([[Readers.table]] — a serving refresh never renames; all heals
+  * stay with the single writer), so a GDPR purge is visible to every live
+  * session at its very next request (ServingSpec "auto-refresh"). The
+  * straight-to-physical tiers additionally rebuild and retry on a
+  * FileNotFound escaping mid-mutation — the residual window between the
+  * poll and the scan. Sessions constructed from bare DataFrames (no
+  * paths) pin their state at construction.
   */
 object Serving {
 
@@ -90,33 +90,6 @@ object Serving {
     acc
   }
 
-  /** Template sanity shared by both sessions: exactly one probe-side
-    * LocalRelation and one Filter directly over the standing relation —
-    * the two nodes a request rebinds. */
-  private def validate(template: LogicalPlan, who: String): Unit = {
-    val locals = template.collect { case lr: LocalRelation => lr }
-    val scans = template.collect {
-      case f @ Filter(_, _: LogicalRelation) => f }
-    require(locals.size == 1 && scans.size == 1,
-      s"$who: the probe template must contain exactly one probe-side " +
-        s"LocalRelation and one pushed Filter over the standing scan " +
-        s"(found ${locals.size}/${scans.size}) — pass a BARE standing " +
-        s"table handle (Readers.table), not a derived plan")
-  }
-
-  /** True when `t` (or anything in its cause chain) is the stale-listing
-    * failure a maintenance rewrite leaves behind in a pinned plan. */
-  private def isStaleListing(t: Throwable): Boolean = {
-    var c: Throwable = t
-    var depth = 0
-    while (c != null && depth < 16) {
-      if (c.isInstanceOf[java.io.FileNotFoundException]) return true
-      c = c.getCause
-      depth += 1
-    }
-    false
-  }
-
   /** Stale-listing retries per request before the failure surfaces: one
     * absorbs the poll-to-scan window of a single mutation; back-to-back
     * maintenance (a delete cascade immediately followed by compaction) can
@@ -124,69 +97,133 @@ object Serving {
     * keep a serving request from failing on an unlucky straddle. */
   private val StaleRetryAttempts = 3
 
-  /** Bound on the wait for an in-flight mutation's completion
-    * ([[settledBuild]]). Local-FS merges complete in milliseconds;
-    * object-store partition swaps in seconds — past this, the writer is
-    * treated as crashed mid-merge and the build proceeds anyway: the
-    * orphan-union read ([[Readers.servingSnapshot]]) still assembles
-    * every partition's last complete snapshot from the stable tree. */
+  /** Bound on the wait for an in-flight mutation's completion. Local-FS
+    * merges complete in milliseconds; object-store partition swaps in
+    * seconds — past this, the writer is treated as crashed mid-merge and
+    * the build proceeds anyway: the orphan-union read ([[Readers.table]])
+    * still assembles every partition's last complete snapshot from the
+    * stable tree. */
   private val SettleWaitMs = 10000L
 
-  /** Build a session's cached state CONSISTENTLY against concurrent
-    * maintenance (ADVICE r12: a refresh must never capture a partial
-    * directory tree). Writers bump generation markers only AFTER a
-    * mutation completes, so a marker comparison alone cannot see an
-    * IN-FLIGHT partition rewrite — whose retire-to-promote renames a
-    * file listing could silently straddle, missing a whole partition.
-    * The writer's own crash-contract artifact is the tell: a standing
-    * `.upsert.retired` root spans every rename. So: wait (bounded) while
-    * one stands, run `build` (which performs the file listings), then
+  /** Session state pinned to the generations of the tables at `paths` —
+    * the whole read-side half of the maintenance contract, written once
+    * for every session.
+    *
+    * SETTLED BUILD. Writers bump generation markers only AFTER a mutation
+    * completes, so a marker comparison alone cannot see an IN-FLIGHT
+    * partition rewrite — whose retire-to-promote renames a file listing
+    * could silently straddle, missing a whole partition. The writer's own
+    * crash-contract artifact is the tell: a standing `.upsert.retired`
+    * root spans every rename. So: wait (bounded) while one stands, read
+    * the markers, run `build` (which performs the file listings), then
     * re-check — if a marker moved or a rewrite started DURING the build,
-    * the listing may be torn; rebuild. A writer that never settles
+    * the listing may be torn; rebuild. Markers are read BEFORE the
+    * listing, so a mutation completing in between yields a conservative
+    * false-stale, never a missed one. A writer that never settles
     * (crashed mid-merge) falls through at the deadline to a final build,
     * which is safe: the tree is stable and the orphan-union read sees
-    * every partition's last complete contents. Returns the generations
-    * the build is consistent with, plus the built state. */
-  private def settledBuild[T](spark: org.apache.spark.sql.SparkSession,
-                              paths: Seq[String])(build: () => T): (Seq[Long], T) = {
-    def gens() = paths.map(Writers.Generation.read(spark, _))
-    def midFlight() = paths.exists(Writers.retiredPartitionsPresent(spark, _))
-    val deadline = System.nanoTime() + SettleWaitMs * 1000000L
-    while (true) {
-      while (midFlight() && System.nanoTime() < deadline) Thread.sleep(25)
-      val g0 = gens()
-      val t = build()
-      // post-build check, cheapest first: the retired-root probe is one
-      // existence check and short-circuits the per-path marker re-reads
-      // when a rewrite is in flight (the build is torn either way, so the
-      // marker values would not be consulted). Both probes are single
-      // driver-side filesystem calls (under 1 ms on a local FS in a
-      // one-off measurement; no test pins it), so this ordering is
-      // hygiene: the per-request cost lives in the probe job itself.
-      if ((!midFlight() && gens() == g0) || System.nanoTime() >= deadline)
-        return (g0, t)
+    * every partition's last complete contents.
+    *
+    * PER REQUEST. [[get]] reads each path's marker once and rebuilds when
+    * one moved; [[run]] additionally rebuilds and retries up to
+    * [[StaleRetryAttempts]] times on a stale-listing failure. With no
+    * paths the state is built once and never polled. The state is one
+    * volatile reference, so every request reads a CONSISTENT build. */
+  private final class Pinned[T](spark: SparkSession, paths: Seq[String])(build: () => T) {
+    private def gens() = paths.map(Writers.Generation.read(spark, _))
+    private def midFlight() = paths.exists(Writers.retiredPartitionsPresent(spark, _))
+
+    private def settled(): (Seq[Long], T) = {
+      val deadline = System.nanoTime() + SettleWaitMs * 1000000L
+      while (true) {
+        while (midFlight() && System.nanoTime() < deadline) Thread.sleep(25)
+        val g0 = gens()
+        val t = build()
+        // the retired-root probe is one existence check and short-circuits
+        // the marker re-reads when a rewrite is in flight (the build is
+        // torn either way)
+        if ((!midFlight() && gens() == g0) || System.nanoTime() >= deadline)
+          return (g0, t)
+      }
+      throw new IllegalStateException("unreachable")
     }
-    throw new IllegalStateException("unreachable")
+
+    @volatile private var state: (Seq[Long], T) = settled()
+    private def rebuild(): Unit = synchronized { state = settled() }
+
+    /** The state as last built, without a marker read. */
+    def last: T = state._2
+
+    /** The state for this request: one marker read per path, and a
+      * settled rebuild when any moved. */
+    def get: T = {
+      if (paths.nonEmpty && gens() != state._1) rebuild()
+      state._2
+    }
+
+    /** `f` over this request's state; a stale-listing failure (maintenance
+      * landed between the poll and the scan) rebuilds and retries. */
+    def run[R](f: T => R): R = {
+      var t = get
+      var attempt = 0
+      while (true) {
+        try return f(t)
+        catch {
+          case e: Throwable
+              if paths.nonEmpty && attempt < StaleRetryAttempts && isStaleListing(e) =>
+            attempt += 1
+            rebuild()
+            t = state._2
+        }
+      }
+      throw new IllegalStateException("unreachable")
+    }
+
+    /** True when `t` (or anything in its cause chain) is the stale-listing
+      * failure a maintenance rewrite leaves behind in a pinned plan. */
+    private def isStaleListing(t: Throwable): Boolean = {
+      var c: Throwable = t
+      var depth = 0
+      while (c != null && depth < 16) {
+        if (c.isInstanceOf[java.io.FileNotFoundException]) return true
+        c = c.getCause
+        depth += 1
+      }
+      false
+    }
   }
 
-  /** Run `body` with up to [[StaleRetryAttempts]] forced refresh-and-retry
-    * passes on a stale-listing failure; `recompile` must itself re-read
-    * through [[settledBuild]]. No-op shield when the session has no path
-    * pins (`pinned` false). */
-  private def withStaleRetry[T](pinned: Boolean, recompile: () => Unit)
-                               (body: () => T): T = {
-    var attempt = 0
-    while (true) {
-      try return body()
-      catch {
-        case t: Throwable
-            if pinned && attempt < StaleRetryAttempts && isStaleListing(t) =>
-          attempt += 1
-          recompile()
-      }
-    }
-    throw new IllegalStateException("unreachable")
+  /** `df` itself, or — for a path-pinned handle — a fresh read of its
+    * table under the same schema. */
+  private def reread(df: DataFrame, path: Option[String]): DataFrame =
+    path.fold(df)(Readers.table(df.sparkSession, _, Some(df.schema)))
+
+  /** `df`'s optimized plan, checked to be a rebindable template: exactly
+    * `locals` probe-side LocalRelations and one Filter directly over the
+    * standing relation — the nodes [[rebind]] replaces. */
+  private def compiled(df: DataFrame, who: String, locals: Int): LogicalPlan = {
+    val plan = df.queryExecution.optimizedPlan
+    val nLocal = plan.collect { case lr: LocalRelation => lr }.size
+    val nScan = plan.collect { case f @ Filter(_, _: LogicalRelation) => f }.size
+    require(nLocal == locals && nScan == 1,
+      s"$who: the template must contain exactly $locals probe-side " +
+        s"LocalRelation(s) and one pushed Filter over the standing scan " +
+        s"(found $nLocal/$nScan) — pass a BARE standing table handle " +
+        s"(Readers.table) and a literal-free build")
+    plan
   }
+
+  /** A request's plan: the scan Filter's condition and the probe
+    * LocalRelation's rows replaced, each built from its node's output. */
+  private def rebind(template: LogicalPlan, cond: Seq[Attribute] => Expression,
+                     rows: Seq[Attribute] => Seq[InternalRow]): LogicalPlan =
+    template.transformUp {
+      case lr: LocalRelation => LocalRelation(lr.output, rows(lr.output), lr.isStreaming)
+      case Filter(_, rel: LogicalRelation) => Filter(cond(rel.output), rel)
+    }
+
+  private def named(out: Seq[Attribute], name: String): Attribute =
+    out.find(_.name == name).get
 
   /** Compiled-plan session for the MinHash-LSH point probe
     * ([[graft.ops.Dedup.probeNearDupsLocal]]'s shape). `build` appends the
@@ -204,7 +241,6 @@ object Serving {
                               build: DataFrame => DataFrame = identity,
                               standingPath: Option[String] = None) {
     private val spark = standing.sparkSession
-    private val standingSchema = standing.schema
 
     /** Compiled once per standing-table generation: a synthetic single-doc
       * probe (≥ shingleK tokens, so every band carries a key and the
@@ -218,52 +254,28 @@ object Serving {
         (0 to shingleK).map(i => s"graftservingplaceholder$i").mkString(" ")
       val placeholderId = CatalystTypeConverters
         .createToScalaConverter(idType)(Literal.default(idType).value)
-      val df = build(Dedup.probeNearDupsLocal(st,
-        Seq((placeholderId, placeholderText)), idType, shingleK, numHashes,
-        numBands, maxDf))
-      val plan = df.queryExecution.optimizedPlan
-      validate(plan, "LshProbeSession")
-      plan
+      compiled(fresh(st, Seq((placeholderId, placeholderText))),
+        "LshProbeSession", locals = 1)
     }
 
-    /** (generation, standing handle, compiled template) built through the
-      * settled rebuild: markers are read BEFORE the listing (a mutation
-      * completing in between yields a conservative false-stale, never a
-      * missed one — ADVICE r12) and in-flight partition rewrites are
-      * waited out so the captured listing can't straddle a rename. A
-      * path-less session keeps the old pin-at-construction behavior. One
-      * volatile triple, so every request reads a CONSISTENT state. */
-    private def buildState(): (Long, DataFrame, LogicalPlan) =
-      standingPath match {
-        case Some(p) =>
-          val (gs, (st, tpl)) = Serving.settledBuild(spark, Seq(p)) { () =>
-            val st = Readers.servingSnapshot(spark, p, Some(standingSchema))
-            (st, compile(st))
-          }
-          (gs.head, st, tpl)
-        case None => (0L, standing, compile(standing))
-      }
-    @volatile private var state: (Long, DataFrame, LogicalPlan) = buildState()
-    private def standingNow: DataFrame = state._2
-    private def template: LogicalPlan = state._3
-
-    /** Recompile from a fresh settled non-destructive read. */
-    private def recompile(): Unit = synchronized {
-      if (standingPath.isDefined) state = buildState()
-    }
-
-    /** The per-request staleness poll: one driver-side marker read. */
-    private def freshen(): Unit = standingPath.foreach { p =>
-      if (Writers.Generation.read(spark, p) != state._1) recompile()
-    }
+    /** (standing handle, compiled template). */
+    private val pinned = new Pinned(spark, standingPath.toSeq)({ () =>
+      val st = reread(standing, standingPath)
+      (st, compile(st))
+    })
 
     private val idConv = CatalystTypeConverters.createToCatalystConverter(idType)
+
+    private def fresh(st: DataFrame, docs: Seq[(Any, String)]): DataFrame =
+      build(Dedup.probeNearDupsLocal(st, docs, idType, shingleK, numHashes,
+        numBands, maxDf))
 
     /** The rebound plan for a request, or None when the request has no
       * band keys at all (no doc with ≥ shingleK tokens) — the fresh path
       * folds that to an empty relation, a different plan SHAPE the
       * template cannot represent; callers fall back. */
-    private def rebound(docs: Seq[(Any, String)]): Option[LogicalPlan] = {
+    private def rebound(template: LogicalPlan,
+                        docs: Seq[(Any, String)]): Option[LogicalPlan] = {
       require(docs.length <= Dedup.PointProbeMaxDocs,
         s"LshProbeSession is the POINT-probe path (${docs.length} probe docs)")
       val bandRows = docs.flatMap { case (id, t) =>
@@ -275,211 +287,168 @@ object Serving {
         s"point probe produced more than ${Dedup.PointProbeMaxKeys} band keys")
       val byBand = bandRows.groupBy(_._2).toSeq.sortBy(_._1)
         .map { case (b, rs) => b -> rs.map(_._3).distinct }
-      Some(template.transformUp {
-        case lr: LocalRelation =>
-          val rows = bandRows.map { case (id, b, k) =>
-            InternalRow.fromSeq(lr.output.map(_.name match {
-              case "band_idx" => b
-              case "band_key" => UTF8String.fromString(k)
-              case _          => idConv(id)
-            }))
-          }
-          LocalRelation(lr.output, rows, lr.isStreaming)
-        case Filter(_, rel: LogicalRelation) =>
-          val bi = rel.output.find(_.name == "band_idx").get
-          val bk = rel.output.find(_.name == "band_key").get
-          Filter(byBand.map { case (b, ks) =>
-            And(EqualTo(bi, Literal(b)),
-              In(bk, ks.map(Literal.create(_, StringType))))
-          }.reduce[Expression](Or(_, _)), rel)
-      })
+      Some(rebind(template,
+        out => byBand.map { case (b, ks) =>
+          And(EqualTo(named(out, "band_idx"), Literal(b)),
+            In(named(out, "band_key"), ks.map(Literal.create(_, StringType))))
+        }.reduce[Expression](Or(_, _)),
+        out => bandRows.map { case (id, b, k) =>
+          InternalRow.fromSeq(out.map(_.name match {
+            case "band_idx" => b
+            case "band_key" => UTF8String.fromString(k)
+            case _          => idConv(id)
+          }))
+        }))
     }
 
     /** Per-request probe as a DataFrame (re-enters through a Dataset —
       * plan pins stay inspectable; analyzer/optimizer re-run, file listing
       * and plan construction don't). */
     def probeDf(docs: Seq[(Any, String)]): DataFrame = {
-      freshen()
-      rebound(docs) match {
-        case Some(p) => PlanBridge.ofRows(spark, p)
-        case None => build(Dedup.probeNearDupsLocal(standingNow, docs, idType,
-          shingleK, numHashes, numBands, maxDf))
-      }
+      val (st, template) = pinned.get
+      rebound(template, docs).fold(fresh(st, docs))(PlanBridge.ofRows(spark, _))
     }
 
     /** The warm serving call: rebound plan straight to physical planning
-      * and execute-collect — no analyzer, no optimizer, no Dataset. A
-      * stale-listing failure (maintenance landed between the generation
-      * poll and the scan) forces a settled refresh-and-retry
-      * ([[Serving.settleGenerations]]). */
-    def probeRows(docs: Seq[(Any, String)]): Array[Row] = {
-      freshen()
-      def run(): Array[Row] = rebound(docs) match {
-        case Some(p) => PlanBridge.collectFromOptimized(spark, p)
-        case None => build(Dedup.probeNearDupsLocal(standingNow, docs, idType,
-          shingleK, numHashes, numBands, maxDf)).collect()
+      * and execute-collect — no analyzer, no optimizer, no Dataset. */
+    def probeRows(docs: Seq[(Any, String)]): Array[Row] =
+      pinned.run { case (st, template) =>
+        rebound(template, docs).fold(fresh(st, docs).collect())(
+          PlanBridge.collectFromOptimized(spark, _))
       }
-      withStaleRetry(standingPath.isDefined, () => recompile())(run _)
-    }
   }
 
-  /** Compiled-plan session for PURE-SCAN point probes — requests that are
-    * one pushed predicate over one standing table and nothing else: the
-    * maintained VERIFIED pair table's per-request fetch, id point-gets
-    * (S3), any "read my rows, now" serving shape. No probe-side relation,
-    * so the template is just `build(standing.filter(…))` compiled once;
-    * each request REBINDS the Filter's condition from a plain Column
-    * predicate (its attributes resolved against the cached relation by
-    * name — an unknown name fails loudly).
-    *
-    * The request predicate is resolved by ONE analyzer pass over a bare
-    * `Filter(pred, standing)` plan (a few ms — resolution and type
-    * coercion only, no optimizer, no physical planning, no file listing),
-    * and the resolved condition is spliced into the cached template by
-    * attribute NAME. Generation auto-refresh and the stale-listing retry
-    * work as in [[LshProbeSession]]. */
-  final class ScanProbeSession(standing: DataFrame, keyCol: String,
-                               build: DataFrame => DataFrame = identity,
-                               standingPath: Option[String] = None) {
+  /** Compiled-plan session for PURE-SCAN point probes — one pushed
+    * predicate over one standing table and nothing else: the maintained
+    * pair tables' per-request fetch and the corpus ingested-ness check. No
+    * probe-side relation, so the template is just `build(standing.filter(…))`
+    * compiled once; each request REBINDS the Filter's condition from a
+    * plain Column predicate, resolved by ONE analyzer pass over a bare
+    * `Filter(pred, standing)` plan (resolution and type coercion only, no
+    * optimizer, no physical planning, no file listing) and spliced into
+    * the cached template by attribute NAME — an unknown name fails
+    * loudly. */
+  private final class ScanProbeSession(standing: DataFrame, keyCol: String,
+                                       build: DataFrame => DataFrame,
+                                       standingPath: Option[String]) {
     private val spark = standing.sparkSession
-    private val standingSchema = standing.schema
 
-    private def compile(st: DataFrame): LogicalPlan = {
-      // placeholder predicate on a DATA column — survives optimization as
-      // a Filter node directly over the relation (replaced per request
-      // before anything executes)
-      val keyType = standingSchema(keyCol).dataType
-      val df = build(st.filter(org.apache.spark.sql.graftbridge.ColumnBridge
-        .column(EqualTo(
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(keyCol),
-          Literal.default(keyType)))))
-      val plan = df.queryExecution.optimizedPlan
-      val scans = plan.collect { case f @ Filter(_, _: LogicalRelation) => f }
-      val locals = plan.collect { case lr: LocalRelation => lr }
-      require(scans.size == 1 && locals.isEmpty,
-        s"ScanProbeSession: the template must be exactly one Filter over " +
-          s"the standing scan (found ${scans.size} filters / " +
-          s"${locals.size} local relations) — pass a BARE standing table " +
-          s"handle and a literal-free build")
-      plan
-    }
+    /** (standing handle, compiled template). The placeholder predicate is
+      * on a DATA column, so it survives optimization as a Filter directly
+      * over the relation. */
+    private val pinned = new Pinned(spark, standingPath.toSeq)({ () =>
+      val st = reread(standing, standingPath)
+      (st, compiled(build(st.filter(ColumnBridge.column(EqualTo(
+        UnresolvedAttribute(keyCol), Literal.default(st.schema(keyCol).dataType))))),
+        "ScanProbeSession", locals = 0))
+    })
 
-    // settled consistent state — see the notes on [[LshProbeSession]]
-    private def buildState(): (Long, DataFrame, LogicalPlan) =
-      standingPath match {
-        case Some(p) =>
-          val (gs, (st, tpl)) = Serving.settledBuild(spark, Seq(p)) { () =>
-            val st = Readers.servingSnapshot(spark, p, Some(standingSchema))
-            (st, compile(st))
-          }
-          (gs.head, st, tpl)
-        case None => (0L, standing, compile(standing))
-      }
-    @volatile private var state: (Long, DataFrame, LogicalPlan) = buildState()
-    private def standingNow: DataFrame = state._2
-    private def template: LogicalPlan = state._3
-
-    private def recompile(): Unit = synchronized {
-      if (standingPath.isDefined) state = buildState()
-    }
-
-    private def freshen(): Unit = standingPath.foreach { p =>
-      if (Writers.Generation.read(spark, p) != state._1) recompile()
-    }
-
-    private def rebound(pred: org.apache.spark.sql.Column): LogicalPlan = {
-      // resolve + type-coerce the request predicate with one analyzer
-      // pass over Filter(pred, standing) — no optimizer, no physical
-      // planning, no listing — then splice the resolved condition into
-      // the cached template by attribute name
-      val analyzed = standingNow.filter(pred).queryExecution.analyzed
-      val cond = analyzed.collectFirst { case Filter(c, _) => c }
+    private def rebound(st: DataFrame, template: LogicalPlan, pred: Column): LogicalPlan = {
+      val cond = st.filter(pred).queryExecution.analyzed
+        .collectFirst { case Filter(c, _) => c }
         .getOrElse(throw new IllegalArgumentException(
           "ScanProbeSession: the request predicate analyzed away"))
-      template.transformUp {
-        case Filter(_, rel: LogicalRelation) =>
-          val byName = rel.output.map(a => a.name -> a).toMap
-          val remapped = cond.transformUp {
-            case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-              byName.getOrElse(a.name, throw new IllegalArgumentException(
-                s"ScanProbeSession: predicate names unknown column " +
-                  s"${a.name} (have ${rel.output.map(_.name).mkString(", ")})"))
-          }
-          Filter(remapped, rel)
-      }
+      rebind(template, out => cond.transformUp {
+        case a: AttributeReference =>
+          out.find(_.name == a.name).getOrElse(throw new IllegalArgumentException(
+            s"ScanProbeSession: predicate names unknown column ${a.name} " +
+              s"(have ${out.map(_.name).mkString(", ")})"))
+      }, _ => Nil)
     }
 
     /** Per-request read as a DataFrame (plan pins inspectable). */
-    def df(pred: org.apache.spark.sql.Column): DataFrame = {
-      freshen()
-      PlanBridge.ofRows(spark, rebound(pred))
+    def df(pred: Column): DataFrame = {
+      val (st, template) = pinned.get
+      PlanBridge.ofRows(spark, rebound(st, template, pred))
     }
 
-    /** The warm serving call — straight to physical planning; settled
-      * refresh-and-retry on a stale listing. */
-    def rows(pred: org.apache.spark.sql.Column): Array[Row] = {
-      freshen()
-      withStaleRetry(standingPath.isDefined, () => recompile())(
-        () => PlanBridge.collectFromOptimized(spark, rebound(pred)))
+    /** The warm serving call — straight to physical planning. */
+    def rows(pred: Column): Array[Row] =
+      pinned.run { case (st, template) =>
+        PlanBridge.collectFromOptimized(spark, rebound(st, template, pred))
+      }
+  }
+
+  /** The served half of the maintained-table sessions, and the split that
+    * decides it. A probe is SERVED only when its id exists in the corpus
+    * with bit-identical text — one pushed literal IN through the cached
+    * ingested-ness scan — so a stale maintained answer can never serve a
+    * changed doc. Served probes are answered by one pushed endpoint-IN
+    * fetch of the maintained pair table, EXCLUDING pairs that touch any
+    * novel probe id (a changed doc's maintained pairs are stale for this
+    * request — the novel branch re-derives those from the request's
+    * text). */
+  private final class MaintainedFetch(who: String, pairs: DataFrame,
+                                      pairCols: Seq[String], pairsPath: Option[String],
+                                      corpus: DataFrame, corpusPath: Option[String],
+                                      idCol: String, textCol: String) {
+    private val corpusCheck = new ScanProbeSession(corpus, idCol,
+      _.select(col(idCol), col(textCol).cast("string")), corpusPath)
+    private val fetch = new ScanProbeSession(pairs, "doc_a",
+      _.select(pairCols.map(col): _*), pairsPath)
+
+    /** (served docs, novel docs). */
+    private def split(probeDocs: Seq[(Any, String)])
+        : (Seq[(Any, String)], Seq[(Any, String)]) = {
+      require(probeDocs.length <= Dedup.PointProbeMaxDocs,
+        s"$who is the POINT-probe path (${probeDocs.length} probe docs)")
+      val ingested = corpusCheck
+        .rows(col(idCol).isin(probeDocs.map(_._1): _*))
+        .map(r => (r.get(0), if (r.isNullAt(1)) null else r.getString(1)))
+        .toMap
+      probeDocs.partition { case (id, t) =>
+        t != null && ingested.get(id).contains(t) }
     }
-  }
 
-  /** (served docs, novel docs) for a request: a probe is SERVED only when
-    * its id exists in the corpus with bit-identical text — one pushed
-    * literal IN through the cached ingested-ness scan. Shared by the
-    * maintained-table probe sessions. */
-  private def splitIngested(corpusCheck: ScanProbeSession, idCol: String,
-                            who: String, probeDocs: Seq[(Any, String)])
-      : (Seq[(Any, String)], Seq[(Any, String)]) = {
-    require(probeDocs.length <= Dedup.PointProbeMaxDocs,
-      s"$who is the POINT-probe path (${probeDocs.length} probe docs)")
-    val ingested = corpusCheck
-      .rows(col(idCol).isin(probeDocs.map(_._1): _*))
-      .map(r => (r.get(0), if (r.isNullAt(1)) null else r.getString(1)))
-      .toMap
-    probeDocs.partition { case (id, t) =>
-      t != null && ingested.get(id).contains(t) }
-  }
+    private def endpointPred(served: Seq[(Any, String)],
+                             novel: Seq[(Any, String)]): Column = {
+      val sIds = served.map(_._1)
+      val touch = col("doc_a").isin(sIds: _*) || col("doc_b").isin(sIds: _*)
+      if (novel.isEmpty) touch
+      else touch && !col("doc_a").isin(novel.map(_._1): _*) &&
+        !col("doc_b").isin(novel.map(_._1): _*)
+    }
 
-  /** Pair-table endpoint predicate for the served half: pairs touching a
-    * served id, EXCLUDING pairs touching any novel probe id (a changed
-    * doc's maintained pairs are stale for this request — the fresh half
-    * re-derives those from the request's text). */
-  private def endpointPred(served: Seq[(Any, String)],
-                           novel: Seq[(Any, String)]) = {
-    val sIds = served.map(_._1)
-    val touch = col("doc_a").isin(sIds: _*) || col("doc_b").isin(sIds: _*)
-    if (novel.isEmpty) touch
-    else touch && !col("doc_a").isin(novel.map(_._1): _*) &&
-      !col("doc_b").isin(novel.map(_._1): _*)
+    /** The request as a DataFrame: the served fetch, unioned with
+      * `novelDf` of the novel docs when there are any. */
+    def serveDf(probeDocs: Seq[(Any, String)])
+               (novelDf: Seq[(Any, String)] => DataFrame): DataFrame = {
+      val (served, novel) = split(probeDocs)
+      val servedDf = fetch.df(
+        if (served.isEmpty) lit(false) else endpointPred(served, novel))
+      if (novel.isEmpty) servedDf else servedDf.unionByName(novelDf(novel))
+    }
+
+    /** The request's rows: the served fetch (no job when nothing is
+      * served), plus `novelRows` of the novel docs when there are any. */
+    def serveRows(probeDocs: Seq[(Any, String)])
+                 (novelRows: Seq[(Any, String)] => Array[Row]): Array[Row] = {
+      val (served, novel) = split(probeDocs)
+      val servedRows =
+        if (served.isEmpty) Array.empty[Row]
+        else fetch.rows(endpointPred(served, novel))
+      if (novel.isEmpty) servedRows else servedRows ++ novelRows(novel)
+    }
   }
 
   /** Compiled-plan session for the per-request VERIFIED near-dup check —
     * the warm twin of [[graft.ops.Dedup.probeNearDupsVerifiedServed]]
     * (q344's shape: the reference's ingest-time duplicate check answered
-    * from the MAINTAINED verified table). Two cached scans per session:
-    *
-    *  - the ingested-ness check (pushed literal IN on the corpus id —
-    *    a probe is SERVED only when its id exists with bit-identical
-    *    text, so a stale maintained answer can never serve a changed doc),
-    *  - the verified fetch (pushed endpoint IN on the pair table, with
-    *    pairs touching novel ids excluded — the fresh half re-verifies
-    *    those with the request's text).
+    * from the MAINTAINED verified table through a [[MaintainedFetch]]).
     *
     * Novel texts (the true ingest-check case) fall back to the fresh
     * banded-candidates + exact-verify path — answer-identical to the
     * sessionless function by construction (spec-pinned), it just pays the
     * cold plan compile the maintained case no longer does.
     *
-    * Generation auto-refresh covers ALL FOUR handles (r12 verdict #1): the
-    * two cached scans ride their [[ScanProbeSession]]s' polls, and the
-    * novel-text fallback's `standing` band table and `corpus` handles are
-    * refreshed from their own `bandsPath`/`corpusPath` markers per novel
-    * request — a GDPR cascade or compaction rewriting the band table under
-    * a live session is served at the very next request on EVERY path, with
-    * the fresh branch's collect wrapped in the same settled stale-listing
-    * retry as the warm tiers. Reference bar: deletes are immediately
-    * invisible on every live search path (`memory_graph.py:9200-9459`). */
+    * Generation auto-refresh covers ALL FOUR handles: the two cached scans
+    * ride their own pins, and the novel-text fallback's `standing` band
+    * table and `corpus` handles are pinned to their `bandsPath`/
+    * `corpusPath` markers — a GDPR cascade or compaction rewriting the
+    * band table under a live session is served at the very next request
+    * on EVERY path, a stale-listing failure of the fresh branch's collect
+    * included. Reference bar: deletes are immediately invisible on every
+    * live search path (`memory_graph.py:9200-9459`). */
   final class VerifiedProbeSession(
       verified: DataFrame, standing: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, idType: DataType,
@@ -488,99 +457,46 @@ object Serving {
       verifiedPath: Option[String] = None,
       corpusPath: Option[String] = None,
       bandsPath: Option[String] = None) {
-    private val spark = verified.sparkSession
-    private val standingSchema = standing.schema
-    private val corpusSchema = corpus.schema
+    private val served = new MaintainedFetch("VerifiedProbeSession", verified,
+      Seq("doc_a", "doc_b", "jaccard"), verifiedPath, corpus, corpusPath, idCol, textCol)
 
-    private val corpusCheck = new ScanProbeSession(corpus, idCol,
-      build = _.select(col(idCol), col(textCol).cast("string")),
-      standingPath = corpusPath)
-    private val verifiedFetch = new ScanProbeSession(verified, "doc_a",
-      build = _.select(col("doc_a"), col("doc_b"), col("jaccard")),
-      standingPath = verifiedPath)
+    /** The fresh branch's (band handle, corpus handle). */
+    private val freshHandles = new Pinned(verified.sparkSession,
+      bandsPath.toSeq ++ corpusPath.toSeq)({ () =>
+      (reread(standing, bandsPath), reread(corpus, corpusPath))
+    })
 
-    // the fresh branch's own pins, held as one settled consistent triple
-    // (generations, band handle, corpus handle) — see [[LshProbeSession]]
-    private val freshPins: Seq[String] = bandsPath.toSeq ++ corpusPath.toSeq
-    private def buildFresh(): (Seq[Long], DataFrame, DataFrame) =
-      if (freshPins.isEmpty) (Nil, standing, corpus)
-      else {
-        val (gs, (st, co)) = Serving.settledBuild(spark, freshPins) { () =>
-          (bandsPath.map(p =>
-             Readers.servingSnapshot(spark, p, Some(standingSchema)))
-             .getOrElse(standing),
-           corpusPath.map(p =>
-             Readers.servingSnapshot(spark, p, Some(corpusSchema)))
-             .getOrElse(corpus))
-        }
-        (gs, st, co)
-      }
-    @volatile private var freshState: (Seq[Long], DataFrame, DataFrame) =
-      buildFresh()
-    private def standingNow: DataFrame = freshState._2
-    private def corpusNow: DataFrame = freshState._3
-
-    private def refreshFresh(): Unit = synchronized {
-      if (freshPins.nonEmpty) freshState = buildFresh()
-    }
-
-    private def freshenFresh(): Unit = if (freshPins.nonEmpty) {
-      if (freshPins.map(Writers.Generation.read(spark, _)) != freshState._1)
-        refreshFresh()
-    }
-
-    private def split(probeDocs: Seq[(Any, String)]) =
-      splitIngested(corpusCheck, idCol, "VerifiedProbeSession", probeDocs)
-
-    private def fresh(novel: Seq[(Any, String)]): DataFrame =
-      Dedup.probeNearDupsVerifiedFresh(standingNow, corpusNow, novel, idType,
+    private def fresh(handles: (DataFrame, DataFrame),
+                      novel: Seq[(Any, String)]): DataFrame =
+      Dedup.probeNearDupsVerifiedFresh(handles._1, handles._2, novel, idType,
         idCol, textCol, shingleK, numHashes, numBands, threshold, maxDf)
 
     /** Per-request answer as a DataFrame (plan pins inspectable). */
-    def serveDf(probeDocs: Seq[(Any, String)]): DataFrame = {
-      val (served, novel) = split(probeDocs)
-      val servedDf =
-        if (served.isEmpty) verifiedFetch.df(lit(false))
-        else verifiedFetch.df(endpointPred(served, novel))
-      if (novel.isEmpty) servedDf
-      else { freshenFresh(); servedDf.unionByName(fresh(novel)) }
-    }
+    def serveDf(probeDocs: Seq[(Any, String)]): DataFrame =
+      served.serveDf(probeDocs)(fresh(freshHandles.get, _))
 
     /** The warm serving call — for an all-ingested request this is two
-      * pushed scans through cached plans, nothing else; novel texts run
-      * the fresh branch under the settled stale-listing retry. */
-    def serveRows(probeDocs: Seq[(Any, String)]): Array[Row] = {
-      val (served, novel) = split(probeDocs)
-      val servedRows =
-        if (served.isEmpty) Array.empty[Row]
-        else verifiedFetch.rows(endpointPred(served, novel))
-      if (novel.isEmpty) servedRows
-      else {
-        freshenFresh()
-        servedRows ++ withStaleRetry(freshPins.nonEmpty, () => refreshFresh())(
-          () => fresh(novel).collect())
-      }
-    }
+      * pushed scans through cached plans, nothing else. */
+    def serveRows(probeDocs: Seq[(Any, String)]): Array[Row] =
+      served.serveRows(probeDocs)(novel => freshHandles.run(fresh(_, novel).collect()))
   }
 
-  /** Compiled-plan session for the INGESTED-doc LSH point probe (r12
-    * verdict #2 — the q344 pattern applied to q341): "who collides with
-    * THIS doc" for a doc already in the corpus is sitting in the MAINTAINED
-    * candidate-pair feed (`Sinks.lshIndexAppendPartitioned`'s `pairsPath`
-    * state, q346's table) — the banded posting aggregation + pair join the
-    * fresh probe re-runs per request (the 2-shuffle ~130 ms warm floor) is
-    * recomputing a maintained answer. Here an ingested probe (id present
-    * in the corpus with bit-identical text) is answered by ONE pushed
-    * endpoint-IN scan of the feed through a cached [[ScanProbeSession]]
-    * plan — the verified-probe latency class; novel texts fall back to the
-    * banded probe through a COMPILED [[LshProbeSession]] (not a cold
-    * plan), with pairs touching novel ids excluded from the served half
-    * (their fresh banding owns those — [[endpointPred]]'s contract).
+  /** Compiled-plan session for the INGESTED-doc LSH point probe (the q344
+    * pattern applied to q341): "who collides with THIS doc" for a doc
+    * already in the corpus is sitting in the MAINTAINED candidate-pair
+    * feed (`Sinks.lshIndexAppendPartitioned`'s `pairsPath` state, q346's
+    * table) — the banded posting aggregation + pair join the fresh probe
+    * re-runs per request (the 2-shuffle ~130 ms warm floor) is
+    * recomputing a maintained answer. Here an ingested probe is answered
+    * by ONE pushed endpoint-IN scan of the feed through a
+    * [[MaintainedFetch]] — the verified-probe latency class; novel texts
+    * fall back to the banded probe through a COMPILED [[LshProbeSession]]
+    * (not a cold plan).
     *
     * Parity: the feed is maintained as the union of per-batch candidate
     * deltas, which equals the from-scratch banded candidate set below the
-    * stop caps (the r11 delta-parity pin; q346's oracle re-proves it every
-    * run), so for an all-ingested request the served answer equals
+    * stop caps (q346's oracle re-proves it every run), so for an
+    * all-ingested request the served answer equals
     * [[Dedup.probeNearDupsLocal]]'s — spec-pinned. `feed`/`standing` must
     * be maintained FROM `corpus` (the usual lineage contract). All handles
     * are generation-aware via their underlying sessions. */
@@ -592,42 +508,20 @@ object Serving {
       feedPath: Option[String] = None,
       corpusPath: Option[String] = None,
       bandsPath: Option[String] = None) {
-
-    private val corpusCheck = new ScanProbeSession(corpus, idCol,
-      build = _.select(col(idCol), col(textCol).cast("string")),
-      standingPath = corpusPath)
-    private val feedFetch = new ScanProbeSession(feed, "doc_a",
-      build = _.select(col("doc_a"), col("doc_b")),
-      standingPath = feedPath)
-    // novel texts probe the band table through a compiled session — the
-    // warm fallback, itself generation-aware and stale-retry-shielded
+    private val served = new MaintainedFetch("LshServedProbeSession", feed,
+      Seq("doc_a", "doc_b"), feedPath, corpus, corpusPath, idCol, textCol)
     private val bandProbe = new LshProbeSession(standing, idType, shingleK,
       numHashes, numBands, maxDf, standingPath = bandsPath)
 
-    private def split(probeDocs: Seq[(Any, String)]) =
-      splitIngested(corpusCheck, idCol, "LshServedProbeSession", probeDocs)
-
     /** Per-request answer as a DataFrame (plan pins inspectable): for an
       * all-ingested request this is ONE pushed endpoint-IN feed scan. */
-    def serveDf(probeDocs: Seq[(Any, String)]): DataFrame = {
-      val (served, novel) = split(probeDocs)
-      val servedDf =
-        if (served.isEmpty) feedFetch.df(lit(false))
-        else feedFetch.df(endpointPred(served, novel))
-      if (novel.isEmpty) servedDf
-      else servedDf.unionByName(bandProbe.probeDf(novel))
-    }
+    def serveDf(probeDocs: Seq[(Any, String)]): DataFrame =
+      served.serveDf(probeDocs)(bandProbe.probeDf)
 
     /** The warm serving call — one cached pushed feed scan (plus the
       * compiled band probe for any novel texts). */
-    def serveRows(probeDocs: Seq[(Any, String)]): Array[Row] = {
-      val (served, novel) = split(probeDocs)
-      val servedRows =
-        if (served.isEmpty) Array.empty[Row]
-        else feedFetch.rows(endpointPred(served, novel))
-      if (novel.isEmpty) servedRows
-      else servedRows ++ bandProbe.probeRows(novel)
-    }
+    def serveRows(probeDocs: Seq[(Any, String)]): Array[Row] =
+      served.serveRows(probeDocs)(bandProbe.probeRows)
   }
 
   /** Compiled-plan session for the IVF point probe
@@ -649,7 +543,6 @@ object Serving {
                               build: (DataFrame, DataFrame) => DataFrame,
                               statePaths: Option[(String, String)] = None) {
     private val spark = assigned.sparkSession
-    private val assignedSchema = assigned.schema
 
     private def collectCents(c: DataFrame): Array[(Int, Array[Float])] = {
       val out = c.select(col("centroid_id").cast("int"), col("cvec"))
@@ -668,77 +561,46 @@ object Serving {
         java.util.List.of(Row(cs.head._2.toSeq)), qSchema)
       // centroid ids are 1-based (row_number); the placeholders are
       // unreachable and replaced before anything executes
-      val df = build(a.filter(col("centroid_id").isin(-1, -2)), qRel)
-      val plan = df.queryExecution.optimizedPlan
-      validate(plan, "IvfServeSession")
-      plan
+      compiled(build(a.filter(col("centroid_id").isin(-1, -2)), qRel),
+        "IvfServeSession", locals = 1)
     }
 
-    // settled consistent state — see the notes on [[LshProbeSession]].
-    // The centroid re-collect (one tiny job) is paid only on a bump.
-    private def buildState()
-        : (Seq[Long], Array[(Int, Array[Float])], LogicalPlan) =
-      statePaths match {
-        case Some((apath, cpath)) =>
-          val (gs, (cs, tpl)) =
-            Serving.settledBuild(spark, Seq(apath, cpath)) { () =>
-              val cs = collectCents(Readers.servingSnapshot(spark, cpath))
-              (cs, compile(Readers.servingSnapshot(spark, apath,
-                Some(assignedSchema)), cs))
-            }
-          (gs, cs, tpl)
-        case None =>
-          val cs = collectCents(centroids)
-          (Nil, cs, compile(assigned, cs))
-      }
-    @volatile private var state
-        : (Seq[Long], Array[(Int, Array[Float])], LogicalPlan) = buildState()
-    private def cents: Array[(Int, Array[Float])] = state._2
-    private def template: LogicalPlan = state._3
-
-    private def recompile(): Unit = synchronized {
-      if (statePaths.isDefined) state = buildState()
-    }
-
-    private def freshen(): Unit = statePaths.foreach { case (apath, cpath) =>
-      if (Seq(Writers.Generation.read(spark, apath),
-              Writers.Generation.read(spark, cpath)) != state._1) recompile()
-    }
+    /** (centroids, compiled template); the centroid re-collect (one tiny
+      * job — the re-read keeps the known schema, so no inference job) is
+      * paid only on a bump. */
+    private val pinned = new Pinned(spark,
+      statePaths.toSeq.flatMap { case (a, c) => Seq(a, c) })({ () =>
+      val cs = collectCents(reread(centroids, statePaths.map(_._2)))
+      (cs, compile(reread(assigned, statePaths.map(_._1)), cs))
+    })
 
     private val vecConv =
       CatalystTypeConverters.createToCatalystConverter(ArrayType(FloatType))
 
-    /** Driver-side twin of [[IvfIndex.probePoint]]'s probe selection:
-      * round-6 L2² with centroid_id tie-break. */
-    def selectCentroids(qvec: Array[Float], nProbe: Int): Seq[Int] =
+    private def select(cents: Array[(Int, Array[Float])], qvec: Array[Float],
+                       nProbe: Int): Seq[Int] =
       cents.map { case (id, v) => (round6(l2sqLocal(v, qvec)), id) }
         .sortBy(identity).take(nProbe).map(_._2).toSeq
 
-    private def rebound(qvec: Array[Float], nProbe: Int): LogicalPlan = {
-      val ids = selectCentroids(qvec, nProbe)
-      template.transformUp {
-        case lr: LocalRelation =>
-          LocalRelation(lr.output,
-            Seq(InternalRow(vecConv(qvec.toSeq))), lr.isStreaming)
-        case Filter(_, rel: LogicalRelation) =>
-          val cid = rel.output.find(_.name == "centroid_id").get
-          Filter(In(cid, ids.map(i => Literal(i))), rel)
-      }
+    /** Driver-side twin of [[IvfIndex.probePoint]]'s probe selection:
+      * round-6 L2² with centroid_id tie-break, over the centroids as last
+      * built (no marker read). */
+    def selectCentroids(qvec: Array[Float], nProbe: Int): Seq[Int] =
+      select(pinned.last._1, qvec, nProbe)
+
+    private def rebound(state: (Array[(Int, Array[Float])], LogicalPlan),
+                        qvec: Array[Float], nProbe: Int): LogicalPlan = {
+      val ids = select(state._1, qvec, nProbe)
+      rebind(state._2, out => In(named(out, "centroid_id"), ids.map(i => Literal(i))),
+        _ => Seq(InternalRow(vecConv(qvec.toSeq))))
     }
 
     /** Per-request answer as a DataFrame (plan pins inspectable). */
-    def serveDf(qvec: Array[Float], nProbe: Int): DataFrame = {
-      freshen()
-      PlanBridge.ofRows(spark, rebound(qvec, nProbe))
-    }
+    def serveDf(qvec: Array[Float], nProbe: Int): DataFrame =
+      PlanBridge.ofRows(spark, rebound(pinned.get, qvec, nProbe))
 
-    /** The warm serving call — straight to physical planning; settled
-      * refresh-and-retry on a stale listing (see [[LshProbeSession
-      * .probeRows]]). */
-    def serveRows(qvec: Array[Float], nProbe: Int): Array[Row] = {
-      freshen()
-      withStaleRetry(statePaths.isDefined, () => recompile())(
-        () => PlanBridge.collectFromOptimized(spark, rebound(qvec, nProbe)))
-    }
+    /** The warm serving call — straight to physical planning. */
+    def serveRows(qvec: Array[Float], nProbe: Int): Array[Row] =
+      pinned.run(s => PlanBridge.collectFromOptimized(spark, rebound(s, qvec, nProbe)))
   }
 }

@@ -98,13 +98,10 @@ object AnnRewrite {
         * wrong. So the rule re-checks these pins before every rewrite
         * (driver-side marker reads, [[graft.sources.Writers.Generation]],
         * no job) and DECLINES when any is stale: the query falls back to
-        * the exact scan — slower, never wrong — until
-        * [[AnnRewrite.refreshIfStale]] (or a fresh register) re-snapshots.
-        * Empty for in-memory registrations (nothing on disk to drift). */
-      generationPins: Seq[(String, Long)] = Nil,
-      /** The persisted source this registration can re-snapshot itself
-        * from: (centroidsPath, assignedPath, statsPath, clusterCol). */
-      source: Option[(String, String, Option[String], String)] = None)
+        * the exact scan — slower, never wrong — until a fresh
+        * [[AnnRewrite.registerFromPaths]] re-snapshots. Empty for
+        * in-memory registrations (nothing on disk to drift). */
+      generationPins: Seq[(String, Long)] = Nil)
 
   /** Registry scoped PER SESSION (weak keys — dropping the session drops its
     * indexes), keyed by embedding column name within it — the lookup key,
@@ -136,8 +133,7 @@ object AnnRewrite {
   def register(spark: SparkSession, index: IvfIndex.Index, embCol: String,
                rows: Long, clusterCol: String = "centroid_id",
                stats: Option[IvfIndex.IndexStats] = None,
-               generationPins: Seq[(String, Long)] = Nil,
-               source: Option[(String, String, Option[String], String)] = None): Unit = {
+               generationPins: Seq[(String, Long)] = Nil): Unit = {
     val centsF = index.centroids.collect().map { r =>
       val id = r.get(0) match {
         case i: Int => i
@@ -158,7 +154,7 @@ object AnnRewrite {
       var m = indexes.get(spark)
       if (m == null) { m = TrieMap.empty; indexes.put(spark, m) }
       m.put(embCol, RegisteredIndex(embCol, clusterCol, cents, rows, centsF,
-        stats, embId, paths, generationPins, source))
+        stats, embId, paths, generationPins))
     }
     // newSession()/cloneSession copy extraOptimizations, so a rule bound to
     // ANOTHER session may sit in this session's list. It would run first,
@@ -210,8 +206,7 @@ object AnnRewrite {
       graft.sources.Readers.table(spark, assignedPath))
     val st = statsPath.map(IvfIndex.readStats(spark, _))
     val rows = st.map(_.rows).getOrElse(idx.assigned.count())
-    register(spark, idx, embCol, rows, clusterCol, st, pins,
-      Some((centroidsPath, assignedPath, statsPath, clusterCol)))
+    register(spark, idx, embCol, rows, clusterCol, st, pins)
   }
 
   /** True when any of the registration's generation pins drifted — the
@@ -219,21 +214,6 @@ object AnnRewrite {
   private[plans] def isStale(spark: SparkSession, meta: RegisteredIndex): Boolean =
     meta.generationPins.exists { case (p, g) =>
       graft.sources.Writers.Generation.read(spark, p) != g }
-
-  /** Re-snapshot every stale path-sourced registration in this session
-    * (fresh centroids, stats and pins via [[registerFromPaths]]) — the
-    * serving-loop hook that restores the rewrite after maintenance; until
-    * it runs, stale entries simply stop rewriting (exact scans). Returns
-    * the embedding columns refreshed. */
-  def refreshIfStale(spark: SparkSession): Seq[String] =
-    indexesFor(spark).map { m =>
-      m.toSeq.collect {
-        case (embCol, meta) if meta.source.isDefined && isStale(spark, meta) =>
-          val (cp, ap, sp, cc) = meta.source.get
-          registerFromPaths(spark, cp, ap, embCol, sp, cc)
-          embCol
-      }
-    }.getOrElse(Nil)
 
   /** Drop ONE session's index for `embCol` — other sessions keep theirs. */
   def deregister(spark: SparkSession, embCol: String): Unit =
@@ -295,8 +275,8 @@ object AnnRewrite {
     // generation pins: a path-sourced registration is honored only while
     // its persisted state is UNCHANGED — pruning with a rebuilt table's
     // old centroids would silently drop true neighbors. Stale entries are
-    // masked for this optimization (exact scan) until refreshIfStale /
-    // re-registration; the poll is a driver-side marker read per pinned
+    // masked for this optimization (exact scan) until re-registration;
+    // the poll is a driver-side marker read per pinned
     // path, no job (see RegisteredIndex.generationPins).
     val idx = {
       val m = TrieMap.empty[String, RegisteredIndex]

@@ -91,18 +91,14 @@ object Readers {
     * CONCURRENCY: a plain read racing a LIVE merge on the same table
     * remains a best-effort snapshot (the per-partition renames land one
     * directory at a time); long-lived serving sessions get exact
-    * old-or-new semantics from the generation protocol
-    * ([[servingSnapshot]] + `Writers.Generation`) instead. The SWAP
-    * discipline is likewise rename-free on the read side: a missing
-    * primary falls back to reading the retired `.swap.old` copy in place
-    * (`Writers.swapReadPath`), so ONE reader entry point covers both
-    * write disciplines. */
+    * old-or-new semantics by re-reading through here under the generation
+    * protocol (`Writers.Generation` markers, polled and settled by
+    * `graft.engine.Serving`) instead. The SWAP discipline is likewise
+    * rename-free on the read side: a missing primary falls back to reading
+    * the retired `.swap.old` copy in place (`Writers.swapReadPath`), so ONE
+    * reader entry point covers both write disciplines. */
   def table(spark: SparkSession, path: String,
-            schema: Option[StructType] = None): DataFrame =
-    crashCoveredRead(spark, path, schema)
-
-  private def crashCoveredRead(spark: SparkSession, path: String,
-                               schema: Option[StructType]): DataFrame = {
+            schema: Option[StructType] = None): DataFrame = {
     val orphans = Writers.orphanedRetiredPartitions(spark, path)
     val resolved = Writers.swapReadPath(spark, path)
     def read(basePath: String, leafs: Seq[String]): DataFrame = {
@@ -124,19 +120,4 @@ object Readers {
       sides.reduce(_ unionByName _)
     }
   }
-
-  /** The read a long-lived SERVING session uses when it refreshes its
-    * cached handle on a generation bump ([[Writers.Generation]]) — since
-    * round 13 the SAME non-destructive crash-covered read as [[table]]
-    * (both entry points stopped renaming; the orphan-union covers the
-    * crash window in place, ADVICE r11 fully closed). The name is kept as
-    * the serving-intent entry point: refreshes are triggered by a
-    * POST-completion bump (or routed through `Serving`'s settled rebuild,
-    * which waits out in-flight rewrites), so the state read here is a
-    * complete promoted snapshot — and under a writer CRASHED mid-merge,
-    * the orphan-union still assembles every partition's last complete
-    * contents without touching the writer's recovery state. */
-  def servingSnapshot(spark: SparkSession, path: String,
-                      schema: Option[StructType] = None): DataFrame =
-    crashCoveredRead(spark, path, schema)
 }

@@ -486,7 +486,7 @@ class AnnRewriteSpec extends SparkSpec {
   }
 
   test("generation pins: maintenance on the persisted state MASKS the " +
-    "rewrite (exact scan — never stale centroids) until refreshIfStale " +
+    "rewrite (exact scan — never stale centroids) until registerFromPaths " +
     "re-snapshots against the new geometry") {
     val rows = (0 until 400).map { i =>
       val axis = i % 4
@@ -522,13 +522,16 @@ class AnnRewriteSpec extends SparkSpec {
       assert(!plan().contains(" IN "),
         "stale registration must DECLINE the rewrite, not prune with old centroids")
 
-      val refreshed = AnnRewrite.refreshIfStale(spark)
-      assert(refreshed === Seq("emb"), s"expected a refresh, got $refreshed")
+      // the re-snapshot the service's handle refresh takes
+      AnnRewrite.registerFromPaths(spark, base + "/centroids",
+        base + "/assigned", "emb")
       assert(plan().contains(" IN "),
         "rewrite should return after the re-snapshot")
-      // and the refreshed registration is pinned to the NEW state: no
-      // further refresh happens on an unchanged table
-      assert(AnnRewrite.refreshIfStale(spark).isEmpty)
+      // and the re-snapshot is pinned to the NEW state: it holds while the
+      // tables are unchanged, and the next marker bump masks it again
+      graft.sources.Writers.Generation.bump(spark, base + "/assigned")
+      assert(!plan().contains(" IN "),
+        "the re-snapshot must be pinned to the generation it read")
     } finally {
       AnnRewrite.clear()
       spark.conf.unset("spark.graft.ann.fullScanThreshold")

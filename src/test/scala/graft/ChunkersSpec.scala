@@ -68,19 +68,4 @@ class ChunkersSpec extends SparkSpec {
     assert(ok.collect().map(_.getString(0)).toSeq === Seq("m1"))
     assert(bad.collect().map(_.getString(0)).toSeq === Seq("m2"))
   }
-
-  test("generic query routes straight to recency fallback") {
-    import graft.engine.Search
-    assert(Search.isGenericQuery("*"))
-    assert(Search.isGenericQuery("  "))
-    assert(!Search.isGenericQuery("spark joins"))
-    val memsSeq = Fixtures.memories(spark).collect().toSeq
-    val memories = Fixtures.memories(spark).toDF()
-    val chunks = Fixtures.chunks(spark, memsSeq).toDF()
-    val out = Search.searchWithFallback(spark, chunks, memories,
-      Search.SearchRequest("*", graft.ops.Retrieval.Principal("u0"), topK = 5))
-      .collect()
-    assert(out.nonEmpty)
-    assert(out.forall(_.isNullAt(1)))   // no vector scores on the fallback path
-  }
 }

@@ -78,15 +78,4 @@ class IvfIndexSpec extends SparkSpec {
       "re-delivered batch duplicated assignment rows")
     assert(replayed.assigned.select("chunk_id").distinct().count() === n)
   }
-
-  test("searchIndexed finds the query's own memory (self-retrieval recall)") {
-    val idx = IvfIndex.build(chunks, "chunk_id", "embedding", nCentroids = 8)
-    val target = memsSeq.find(_.user_id == "u0").get
-    val out = Search.searchIndexed(spark, idx, memories,
-      SearchRequest(target.content, Principal("u0"), topK = 5), nProbe = 3)
-      .collect()
-    assert(out.nonEmpty)
-    // the exact-content memory must surface (its own chunks dominate a probe)
-    assert(out.map(_.getAs[String]("memory_id")).contains(target.memory_id))
-  }
 }

@@ -34,18 +34,6 @@ class ReviewFixesSpec extends SparkSpec {
     assert(out.forall(_.getAs[String]("user_id") == "u0"))
   }
 
-  test("fallbackScan honors excludeMemoryId (F6 on the degraded path)") {
-    val owner = Principal("u0")
-    val base = Search.fallbackScan(chunks, memories,
-      SearchRequest("q", owner, topK = 5)).collect()
-    assert(base.nonEmpty)
-    val excluded = base.head.getAs[String]("memory_id")
-    val out = Search.fallbackScan(chunks, memories,
-      SearchRequest("q", owner, topK = 5, excludeMemoryId = Some(excluded)))
-      .collect().map(_.getAs[String]("memory_id"))
-    assert(!out.contains(excluded))
-  }
-
   private def ev(id: String, day: Int, conf: Double) =
     AccessEvent(id, "m1", "u1", "retrieval", 0.9, conf,
       new Timestamp(day.toLong * 86400000L))

@@ -26,31 +26,6 @@ class SearchEngineSpec extends SparkSpec {
     assert(scores === scores.sorted.reverse)
   }
 
-  test("multi-space RRF search: consensus ranking, ACL holds on every space") {
-    val someContent = mems.find(_.user_id == "u0").get.content
-    // two AGREEING spaces: the consensus winner must be the exact-content
-    // memory (rank 1 in both ⇒ maximal rrf)
-    val agree = Search.searchMultiSpace(spark,
-      Seq((chunks, "embedding"), (chunks, "embedding")), memories,
-      Search.SearchRequest(someContent, Principal("u0"), topK = 5)).collect()
-    assert(agree.nonEmpty && agree.length <= 5)
-    assert(agree.head.getAs[String]("content") === someContent)
-
-    // a DISAGREEING second space (reversed embeddings ⇒ unrelated ranking):
-    // RRF may demote the top-1 — that is the point of consensus — but ACL
-    // visibility and score monotonicity always hold
-    val spaceB = chunks.withColumn("embedding", reverse(col("embedding")))
-    val out = Search.searchMultiSpace(spark,
-      Seq((chunks, "embedding"), (spaceB, "embedding")), memories,
-      Search.SearchRequest(someContent, Principal("u0"), topK = 5)).collect()
-    assert(out.nonEmpty && out.length <= 5)
-    val visible = mems.filter(m => m.user_id == "u0" ||
-      m.user_read_access.contains("u0")).map(_.memory_id).toSet
-    assert(out.forall(r => visible.contains(r.getAs[String]("memory_id"))))
-    val scores = out.map(_.getAs[Double]("rrf")).toSeq
-    assert(scores === scores.sorted.reverse)
-  }
-
   test("ACL isolation: a stranger principal gets no one else's memories") {
     val someContent = mems.find(_.user_id == "u0").get.content
     val stranger = Principal("nobody")
@@ -92,14 +67,6 @@ class SearchEngineSpec extends SparkSpec {
     assert(out.nonEmpty)
     val rr = out.map(_.getAs[Double]("rr_score")).toSeq
     assert(rr === rr.sorted.reverse)
-  }
-
-  test("fallback: impossible filter falls back, then recency scan") {
-    val out = Search.searchWithFallback(spark, chunks, memories,
-      SearchRequest("zzz qqq xxx totally unrelated nonsense", owner, topK = 5,
-        metaFilters = Map("priority" -> MetaAtLeast(9999))))
-      .collect()
-    assert(out.nonEmpty) // recency fallback returns newest visible memories
   }
 
   test("grouped-memory expansion (V6) pulls related ids into search results") {
@@ -186,15 +153,6 @@ class SearchEngineSpec extends SparkSpec {
     // output is sorted best-first
     val scores = out.map(_.getAs[Double]("score")).toSeq
     assert(scores === scores.sorted.reverse)
-
-    // IVF-probed fused search with nProbe = ALL clusters must equal the
-    // full-scan fused result exactly (the recall knob at its exact end)
-    val idx = graft.engine.IvfIndex.build(chunks, "chunk_id", "embedding", nCentroids = 4)
-    val probed = Search.searchFusedIndexed(spark, idx, memories,
-      memNodes.unionByName(topicNodes), edges, gq,
-      SearchRequest(someContent, owner, topK = 10), nProbe = 4).collect()
-    assert(probed.map(r => (r.getAs[String]("memory_id"), r.getAs[Double]("score"))).toSeq ===
-      out.map(r => (r.getAs[String]("memory_id"), r.getAs[Double]("score"))).toSeq)
   }
 
   /** A graph over the fixtures for the fusion pins: every memory with

@@ -564,6 +564,91 @@ class ServingSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1))).toSet === post)
   }
 
+  test("a warm request on path-pinned parquet sessions starts a fixed " +
+    "number of Spark jobs; a centroid bump adds exactly one, the centroid " +
+    "re-collect") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.functions.VectorFunctions.cosineSim
+    val base = tmp("serving-jobs")
+    val Seq(memPath, bandPath, pairPath, verPath, apath, cpath) =
+      Seq("memories", "bands", "pairs", "verified", "assigned", "centroids")
+        .map(base + "/" + _)
+    Writers.swapWrite(docsDf, memPath, Seq("source"))
+    val delta = Sinks.lshIndexAppendPartitioned(bandPath, "doc_id", "text",
+      shingleK = 2, numHashes = 16, numBands = 4,
+      partitionCols = Seq("source"), pairsPath = Some(pairPath))(
+      Readers.table(spark, memPath), 0L)
+    Sinks.verifiedPairsUpsert(verPath, Readers.table(spark, memPath),
+      "doc_id", "text", shingleK = 2, threshold = 0.5)(delta, 0L)
+    val rnd = new scala.util.Random(5)
+    val vecs = (0 until 120).map { i =>
+      (i.toLong, Array.fill(8)(rnd.nextFloat()), i % 2)
+    }.toDF("vec_id", "embedding", "label")
+    val idx = IvfIndex.build(vecs, "vec_id", "embedding", nCentroids = 4)
+    Writers.swapWrite(idx.centroids, cpath)
+    Sinks.indexAppendPartitioned(apath, idx.centroids, "vec_id", "embedding",
+      Seq("label"))(vecs, 0L)
+
+    // every session is built as the service builds it: bare table
+    // handles plus the path pins that make it generation-aware
+    val ivf = new Serving.IvfServeSession(Readers.table(spark, apath),
+      Readers.table(spark, cpath),
+      (pruned, qRel) => pruned.crossJoin(broadcast(qRel))
+        .withColumn("score", round(cosineSim(col("embedding"), col("qvec")), 4))
+        .select(col("vec_id"), col("score"))
+        .orderBy(desc("score"), col("vec_id")).limit(10),
+      statePaths = Some((apath, cpath)))
+    val lsh = new Serving.LshServedProbeSession(Readers.table(spark, pairPath),
+      Readers.table(spark, bandPath), Readers.table(spark, memPath),
+      "doc_id", "text", StringType, shingleK = 2, numHashes = 16, numBands = 4,
+      feedPath = Some(pairPath), corpusPath = Some(memPath),
+      bandsPath = Some(bandPath))
+    val verified = new Serving.VerifiedProbeSession(
+      Readers.table(spark, verPath), Readers.table(spark, bandPath),
+      Readers.table(spark, memPath), "doc_id", "text", StringType,
+      shingleK = 2, numHashes = 16, numBands = 4, threshold = 0.5,
+      verifiedPath = Some(verPath), corpusPath = Some(memPath),
+      bandsPath = Some(bandPath))
+    val q = Array.fill(8)(0.5f)
+    val probe: Seq[(Any, String)] =
+      Seq(("d1": Any) -> "alpha beta gamma delta epsilon zeta")
+
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+      started.set(0)
+      body
+      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
+      started.get()
+    }
+    // warm every session once (codegen, first reads)
+    assert(ivf.serveRows(q, 2).nonEmpty)
+    assert(lsh.serveRows(probe).nonEmpty)
+    assert(verified.serveRows(probe).nonEmpty)
+    // the jobs a warm request starts: two for the IVF probe, and for each
+    // served probe the ingested-ness check plus the pair fetch
+    val (ivfWarm, lshWarm, verifiedWarm) = (2, 2, 2)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val ivfJobs = jobsOf(ivf.serveRows(q, 2))
+      val lshJobs = jobsOf(lsh.serveRows(probe))
+      val verifiedJobs = jobsOf(verified.serveRows(probe))
+      assert((ivfJobs, lshJobs, verifiedJobs) === ((ivfWarm, lshWarm,
+        verifiedWarm)), "warm-request job counts (ivf, lsh, verified)")
+      // a moved centroid marker rebuilds the IVF state once: one centroid
+      // re-collect, then the same pushed scan as any warm request
+      Writers.Generation.bump(spark, cpath)
+      assert(jobsOf(ivf.serveRows(q, 2)) === ivfWarm + 1,
+        "the request after a centroid bump")
+      assert(jobsOf(ivf.serveRows(q, 2)) === ivfWarm,
+        "the request after the rebuild")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("round6 matches Spark's round(_, 6) on doubles (HALF_UP on the " +
     "shortest-decimal BigDecimal)") {
     val rnd = new scala.util.Random(42)

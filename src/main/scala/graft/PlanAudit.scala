@@ -73,13 +73,13 @@ object PlanAudit {
     * tables the serving queries probe) are NOT part of any query's plan:
     * they run under whichever query happens to touch the shared state
     * first in the run's iteration order, so counting them makes that
-    * query's budget hostage to map-iteration order (round 12 moved q341
-    * off `maintainedBandTable` and the build's ~10 exchanges silently
-    * re-attributed to q334). Builders wrap themselves in [[suppress]];
+    * query's budget hostage to map-iteration order (moving q341 off
+    * `maintainedBandTable` once silently re-attributed the build's ~10
+    * exchanges to q334). Builders wrap themselves in [[suppress]];
     * the drain-before/drain-after pairing keeps attribution exact: the
     * querying label's pending events flush before the flag flips, and the
     * build's own events flush while still suppressed. */
-  // depth counter, not a boolean (ADVICE r13): a nested suppress call must
+  // depth counter, not a boolean: a nested suppress call must
   // not clear the outer build's suppression early, which would leak the
   // rest of its executions into the current query's budget
   private val suppressDepth = new java.util.concurrent.atomic.AtomicInteger(0)

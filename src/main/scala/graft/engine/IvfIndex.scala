@@ -148,8 +148,8 @@ object IvfIndex {
     // heal a swap-crash orphan BEFORE reading: a prior refresh that died
     // between writeStats' retire and promote leaves only `.swap.old`, and
     // every later maintenance batch would fail at the read — the one
-    // maintained-stats path that lacked rebuildIfDrifted's discipline
-    // (ADVICE r10). No-op unless a crash actually happened.
+    // maintained-stats path that lacked rebuildIfDrifted's discipline.
+    // No-op unless a crash actually happened.
     graft.sources.Writers.healSwap(spark, statsPath)
     val fs = new org.apache.hadoop.fs.Path(statsPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -268,7 +268,7 @@ object IvfIndex {
       // localCheckpoint: executor block storage is non-reliable, and at
       // corpus scale an executor loss mid-rebuild would abort the one
       // unbounded step (correctness survives via the marker, but the
-      // rebuild might never complete on a flaky cluster — ADVICE r10).
+      // rebuild might never complete on a flaky cluster).
       // A crash mid-snapshot-write just re-writes it on recovery.
       val snapPath = assignedPath + ".rebuild.snapshot"
       assigned.drop("centroid_id").write
@@ -300,7 +300,7 @@ object IvfIndex {
     * via `AnnRewrite.registerFromPaths`, maintenance refresh, the drift
     * cadence) observes a complete snapshot without racing a live swap's
     * retire→promote window (renames stay with the single writer —
-    * ADVICE r11; `Writers.swapReadPath`). */
+    * `Writers.swapReadPath`). */
   def readStats(spark: SparkSession, path: String): IndexStats = {
     val r = spark.read
       .parquet(graft.sources.Writers.swapReadPath(spark, path)).head()
@@ -312,19 +312,6 @@ object IvfIndex {
         names(i) -> ColStats(r.getSeq[Long](4)(i), r.getSeq[Double](5)(i))).toMap)
   }
 
-  /** Probe: the nProbe centroids nearest the query vector (single-row DF
-    * with `qvec`), then the caller scans only those clusters. */
-  def probeClusters(index: Index, query: DataFrame, nProbe: Int): DataFrame =
-    index.centroids.crossJoin(broadcast(query))
-      .withColumn("dist", l2sq(col("cvec"), col("qvec")))
-      .orderBy(col("dist"), col("centroid_id"))
-      .limit(nProbe)
-      .select(col("centroid_id"))
-
-  /** Pruned corpus for a query: only rows in the probed clusters. */
-  def prunedCorpus(index: Index, query: DataFrame, nProbe: Int): DataFrame =
-    index.assigned.join(broadcast(probeClusters(index, query, nProbe)), Seq("centroid_id"))
-
   /** PER-REQUEST point probe against a STANDING assignment table — the
     * ANN twin of [[graft.ops.Dedup.probeNearDups]] and the serving shape
     * the reference answers from its resident HNSW without scanning the
@@ -332,9 +319,9 @@ object IvfIndex {
     * The nProbe nearest centroid ids are collected DRIVER-SIDE (bounded
     * by construction: the centroid table is nCentroids rows — one tiny
     * job) and pushed into the standing scan as a literal IN on
-    * `centroid_id`. Unlike [[prunedCorpus]]'s broadcast JOIN — correct,
-    * but partition-pruning-proof — the literal predicate reaches the
-    * parquet reader (PushedFilters), so under the maintenance sinks'
+    * `centroid_id`. Unlike a broadcast join against the probed ids, which
+    * is correct but partition-pruning-proof, the literal predicate reaches
+    * the parquet reader (PushedFilters), so under the maintenance sinks'
     * centroid-clustered layout ([[graft.streaming.Sinks.indexAppendPartitioned]])
     * the probe skips every file/row group outside its clusters: at 4096
     * centroids × 8 probes that is ~0.2% of rows wanted AND read, not
@@ -343,7 +330,7 @@ object IvfIndex {
     * Distances round to 6 decimals with centroid_id tie-break — the
     * declared queries' cross-engine-deterministic probe selection.
     * Returns the probed rows (id, vec, centroid_id, …); score/top-k
-    * composes downstream exactly as with [[prunedCorpus]]. */
+    * composes downstream. */
   def probePoint(assigned: DataFrame, centroids: DataFrame, query: DataFrame,
                  nProbe: Int): DataFrame = {
     val ids = centroids.crossJoin(broadcast(query))

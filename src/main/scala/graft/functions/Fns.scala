@@ -68,8 +68,8 @@ object Fns {
     pow(lit(0.5), datediff(now, ts).cast("double") / halfLifeDays)
 
   /** Column names whose types Spark's hash()/xxhash64() accept (MapType —
-    * anywhere in the tree — is rejected at analysis). Shared by every spot
-    * that content-hashes whole rows (skew salts, sink tiebreakers). */
+    * anywhere in the tree — is rejected at analysis). Used wherever whole
+    * rows are content-hashed (the keyed-upsert sink's tiebreaker). */
   def hashableCols(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.sql.types._
     def ok(dt: DataType): Boolean = dt match {

@@ -70,7 +70,7 @@ object BoundedCollect {
     // (struct(doc_id, …) at every call site): a null id wrapped in a
     // struct arrives NON-null, so the skip must look through one level —
     // otherwise the documented "ds IS NULL iff df > maxDf" invariant
-    // would hold only by the callers' id-non-null contract (ADVICE r13).
+    // would hold only by the callers' id-non-null contract.
     @transient private lazy val structNumFields: Int =
       child.dataType match {
         case s: org.apache.spark.sql.types.StructType => s.fields.length

@@ -199,7 +199,7 @@ object Dedup {
     * distinct would cost a batch-sized shuffle per micro-batch.
     *
     * The count AND the join both consume `newBands`, so it must be
-    * materialized — ENFORCED here, not just documented (ADVICE r10): an
+    * materialized — ENFORCED here, not just documented: an
     * unmaterialized caller would silently recompute the whole batch
     * derivation (shingle/minhash/bands) twice per micro-batch, so inputs
     * that are neither cached nor checkpointed/local get
@@ -324,7 +324,7 @@ object Dedup {
     // Shingle SETS for verification: semi-join the DOCS table down to the
     // (usually tiny) candidate population, re-explode just those, and
     // persist — the sized verifier reads this twice (the two join legs;
-    // the per-doc sizes ride the rows map-side, round 13).
+    // the per-doc sizes ride the rows map-side).
     val candTexts = docs.join(broadcast(candDocs),
       docs(idCol) === candDocs("doc_id"), "left_semi")
     val sh = shingleSetsSized(candTexts, idCol, textCol, shingleK).persist()
@@ -370,7 +370,7 @@ object Dedup {
       docs(idCol) === candDocs("doc_id"), "left_semi")
     val sh = shingleSets(candTexts, idCol, textCol, shingleK).persist()
     // sizes MAP-SIDE from the candidate texts (one row per doc, no
-    // groupBy over the exploded relation — round 13): a banding false
+    // groupBy over the exploded relation): a banding false
     // positive with ZERO true overlap must keep its row (true_jaccard 0),
     // so the sizes cannot ride the intersection join here — they attach
     // to `est` as a left-join-independent relation, now computed without
@@ -562,7 +562,7 @@ object Dedup {
                     numBands: Int, maxDf: Int = StopBucketDf): DataFrame = {
     // the guard binds BEFORE the driver materializes anything: fetch at
     // most maxDocs+1 rows, then check — feeding a corpus through the
-    // point path fails fast instead of OOMing the driver (ADVICE r10)
+    // point path fails fast instead of OOMing the driver
     val rows = docs
       .select(col(idCol), col(textCol).cast("string"))
       .limit(PointProbeMaxDocs + 1).collect()
@@ -619,7 +619,7 @@ object Dedup {
       else standing.filter(byBand.map { case (b, ks) =>
         col("band_idx") === b && col("band_key").isin(ks: _*)
       }.reduce(_ || _))
-    // SINGLE-EXCHANGE point plan (round 13): the pushed probe scan reads
+    // SINGLE-EXCHANGE point plan: the pushed probe scan reads
     // a request-bounded sliver of the table (≤ PointProbeMaxKeys buckets'
     // rows; the clustered layout row-group-skips the rest) IN PARALLEL,
     // then repartition(1) funnels it into one reducer — SinglePartition
@@ -792,7 +792,7 @@ object Dedup {
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String, shingleK: Int,
                    threshold: Double): DataFrame = {
     // the sized substrate is consumed ONCE (the posting aggregation; sizes
-    // ride the posting structs — round 13), so no persist is needed: the
+    // ride the posting structs), so no persist is needed: the
     // explode streams straight into the aggregation
     invertedIndexPairs(shingleSetsSized(docs, idCol, textCol, shingleK),
       threshold)
@@ -928,9 +928,9 @@ object Dedup {
     * gate's measurement and the cheap path's pair substrate, with every
     * buffer BOUNDED (bounded_collect_list saturates at cap + 1 elements;
     * the exact per-key `df` rides in the same aggregation even for
-    * saturated keys). Only the posting relation is persisted — the
-    * round-13 shape additionally cached the exploded substrate, which is
-    * consumed exactly once here (wasted cache write, dropped in r14).
+    * saturated keys). Only the posting relation is persisted: the
+    * exploded substrate is consumed exactly once here, so caching it would
+    * be a wasted cache write.
     * The gate reads Σ df / Σ df² / max df in one single-row pass:
     *  - cheap ∧ max df ≤ cap → consume the postings DIRECTLY (no key
     *    saturated, so the lists are complete — exactness verified, not
@@ -974,7 +974,7 @@ object Dedup {
     out
   }
 
-  /** Scale shape (r13 verdict #3): NOTHING corpus-proportional is ever
+  /** Scale shape: NOTHING corpus-proportional is ever
     * persisted. The df distribution is measured by a COUNT-ONLY
     * aggregation over the hashed distinct substrate ([[shingleHashSets]]
     * — 8-byte keys, map-side partial counts, shuffle = vocab-sized count

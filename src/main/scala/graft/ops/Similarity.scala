@@ -77,7 +77,7 @@ object Similarity {
     * Deterministic argmin: ties break on centroid_id. */
   /** Spread a BATCH-scoring corpus across the cluster's slots when its
     * scan arrived in fewer splits (the [[graft.ops.Dedup.shingleRaw]]
-    * device, applied to the vector side — round 14): a small parquet packs
+    * device, applied to the vector side): a small parquet packs
     * into ONE split (`files.openCostInBytes` floors every file at 4 MB),
     * so the O(|corpus|·|queries|·dim) score loop of a batch KNN would run
     * on one core while the rest idle — measured 6.5× on q166/q204 at
@@ -123,12 +123,12 @@ object Similarity {
   /** LEAVE-ONE-OUT batch KNN — [[knnBatch]] with the corpus as its own
     * query set and self-pairs dropped BEFORE the bounded TopK aggregation
     * (the [[hardNegatives]] filter placement). Equals
-    * `knnBatch(k+1)` → drop self → re-rank — the q166/q204 shape before
-    * round 14 — in every case: the k+1 list minus its self row (present
-    * or not) always keeps exactly the top k non-self neighbors, which is
-    * what the pre-aggregation filter selects directly. The change
-    * removes the per-query row_number window, its whole-relation exchange
-    * and the rank-rewrite projection from the plan (r13 verdict #6).
+    * `knnBatch(k+1)` → drop self → re-rank in every case: the k+1 list
+    * minus its self row (present or not) always keeps exactly the top k
+    * non-self neighbors, which is what the pre-aggregation filter selects
+    * directly. Filtering first keeps the per-query row_number window, its
+    * whole-relation exchange and the rank-rewrite projection out of the
+    * plan.
     * Ties break by id ascending, exactly as the oracle's
     * `ORDER BY s DESC, n_id`. */
   def knnBatchLoo(corpus: DataFrame, queries: DataFrame, idCol: String,

@@ -39,8 +39,8 @@ import graft.functions.CosineSimilarity
   *    `spark.graft.ann.fullScanThreshold` — below that an exact scan is
   *    cheaper than it is wrong.
   *  - Probed clusters are chosen driver-side from the registered centroids
-  *    (nearest by L2², ties by id — same order as `IvfIndex.probeClusters`),
-  *    so optimization never launches a Spark job.
+  *    (nearest by L2², ties by id), so optimization never launches a Spark
+  *    job.
   *
   * The rewrite trades recall for scan cost (top-k within probed clusters),
   * exactly like the reference's HNSW path; disable per-session with
@@ -193,7 +193,7 @@ object AnnRewrite {
     // pin the snapshot to the persisted tables' generations — the rule
     // declines the rewrite the moment maintenance reshapes any of them.
     // Markers are read BEFORE the table handles resolve their file
-    // listings (ADVICE r12): a mutation completing in between then leaves
+    // listings: a mutation completing in between then leaves
     // OLD pins against NEW-listing data, so the next poll reads a HIGHER
     // generation and the rule conservatively declines — where the old
     // handles-then-pins order recorded the NEW generation against
@@ -481,8 +481,7 @@ object AnnRewrite {
     } yield rewritten
   }
 
-  /** nProbe nearest centroids by L2², ties by centroid id — matches
-    * `IvfIndex.probeClusters` ordering. */
+  /** nProbe nearest centroids by L2², ties by centroid id. */
   private def probeIds(centroids: Array[(Int, Array[Double])], q: Array[Double],
                        n: Int): Array[Int] = {
     centroids.map { case (id, c) =>

@@ -5,15 +5,10 @@ import graft.Tables
 import graft.functions.VectorFunctions.cosineSim
 import graft.ops.{GraphAnalytics, Similarity}
 
-/** Harmonic centrality, SemDeDup-style cluster-scoped embedding dedup and
-  * token-distribution divergence. Every entry is DuckDB-oracle-checked.
+/** Harmonic centrality and SemDeDup-style cluster-scoped embedding dedup.
+  * Every entry is DuckDB-oracle-checked.
   */
 object CurationQueries {
-
-  // Shared oracle fragment: lowercased whitespace tokens with empties
-  // dropped — the SQL twin of filter(tokens(text), length > 0).
-  private val tokSql =
-    "list_filter(string_split(lower(text), ' '), x -> length(x) > 0)"
 
   def entries: Seq[Entry] = Seq(
 
@@ -113,84 +108,7 @@ object CurationQueries {
              |       x -> x::DOUBLE * x::DOUBLE)))
              |   * sqrt(list_sum(list_transform(b.embedding,
              |       x -> x::DOUBLE * x::DOUBLE)))), 4) >= 0.35
-             |ORDER BY vec_id""".stripMargin)),
-
-    // Pairwise Jensen–Shannon divergence between source-domain token
-    // distributions — the corpus-drift monitor ("did crawl batch B change
-    // the language mix?"), the smooth symmetric-KL counterpart of q146's
-    // per-term χ² keyness. Contributions where a token is absent on one
-    // side use the 0·ln0 = 0 convention. The (pair × vocab) grid is
-    // #domain-pairs × V rows — domains are few by construction, so the
-    // grid is vocab-linear, never corpus-sized. ln-derived sums emit
-    // float32 (JVM log vs libm can differ 1 ulp).
-    Entry("q187_js_divergence",
-      (s, d) => {
-        val tok = Tables.documents(s, d)
-          .select(col("source"),
-            explode(filter(graft.functions.Fns.tokens(col("text")),
-              w => length(w) > 0)).as("token"))
-        val counts = tok.groupBy(col("source"), col("token"))
-          .agg(count(lit(1)).as("c"))
-        val totals = counts.groupBy(col("source")).agg(sum(col("c")).as("n"))
-        val srcs = totals.select(col("source"), col("n"))
-        val pairs = srcs.select(col("source").as("source_a"), col("n").as("n_a"))
-          .crossJoin(srcs.select(col("source").as("source_b"), col("n").as("n_b")))
-          .filter(col("source_a") < col("source_b"))
-        val vocab = counts.select(col("token")).distinct()
-        val grid = pairs.crossJoin(vocab)
-          .join(counts.select(col("source").as("source_a"),
-            col("token"), col("c").as("c_a")), Seq("source_a", "token"), "left")
-          .join(counts.select(col("source").as("source_b"),
-            col("token"), col("c").as("c_b")), Seq("source_b", "token"), "left")
-          .withColumn("p", coalesce(col("c_a"), lit(0L)).cast("double") / col("n_a"))
-          .withColumn("q", coalesce(col("c_b"), lit(0L)).cast("double") / col("n_b"))
-        grid
-          .withColumn("contrib",
-            when(col("p") > 0,
-              lit(0.5) * col("p") * log(lit(2.0) * col("p") / (col("p") + col("q"))))
-              .otherwise(lit(0.0)) +
-            when(col("q") > 0,
-              lit(0.5) * col("q") * log(lit(2.0) * col("q") / (col("p") + col("q"))))
-              .otherwise(lit(0.0)))
-          .groupBy(col("source_a"), col("source_b"))
-          .agg(count(when(col("c_a").isNotNull || col("c_b").isNotNull, lit(1)))
-              .as("n_tokens"),
-            sum(col("contrib")).cast("float").as("js"))
-          .orderBy(col("source_a"), col("source_b"))
-      },
-      Some(s"""WITH tok AS (
-              |  SELECT source, w AS token FROM (
-              |    SELECT source, unnest($tokSql) AS w FROM documents)),
-              |counts AS (
-              |  SELECT source, token, count(*) AS c FROM tok GROUP BY 1, 2),
-              |totals AS (
-              |  SELECT source, CAST(sum(c) AS BIGINT) AS n FROM counts GROUP BY 1),
-              |pairs AS (
-              |  SELECT a.source AS source_a, a.n AS n_a,
-              |         b.source AS source_b, b.n AS n_b
-              |  FROM totals a JOIN totals b ON a.source < b.source),
-              |vocab AS (SELECT DISTINCT token FROM counts),
-              |grid AS (
-              |  SELECT p.source_a, p.source_b, v.token,
-              |    ca.c AS c_a, cb.c AS c_b,
-              |    coalesce(ca.c, 0)::DOUBLE / p.n_a AS pp,
-              |    coalesce(cb.c, 0)::DOUBLE / p.n_b AS qq
-              |  FROM pairs p CROSS JOIN vocab v
-              |  LEFT JOIN counts ca
-              |    ON ca.source = p.source_a AND ca.token = v.token
-              |  LEFT JOIN counts cb
-              |    ON cb.source = p.source_b AND cb.token = v.token)
-              |SELECT source_a, source_b,
-              |  count(CASE WHEN c_a IS NOT NULL OR c_b IS NOT NULL THEN 1 END)
-              |    AS n_tokens,
-              |  CAST(sum(
-              |    (CASE WHEN pp > 0
-              |       THEN 0.5 * pp * ln(2.0 * pp / (pp + qq)) ELSE 0.0 END) +
-              |    (CASE WHEN qq > 0
-              |       THEN 0.5 * qq * ln(2.0 * qq / (pp + qq)) ELSE 0.0 END))
-              |    AS REAL) AS js
-              |FROM grid GROUP BY 1, 2
-              |ORDER BY source_a, source_b""".stripMargin))
+             |ORDER BY vec_id""".stripMargin))
 
   )
 }

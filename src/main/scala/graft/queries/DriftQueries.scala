@@ -5,10 +5,9 @@ import graft.Tables
 import graft.functions.Fns
 
 /** Statistics a training-data pipeline runs between corpus snapshots, over
-  * the engine's text, dedup, similarity and graph operators: token
-  * distribution drift (Jensen–Shannon), generation-quality diagnostics
-  * (n-gram novelty, distinct-n diversity), readability, burstiness and
-  * concentration, and embedding and graph diagnostics. Every entry is
+  * the engine's text, dedup, similarity and graph operators: sketch and
+  * quality diagnostics, split stability, and embedding and graph
+  * diagnostics. Every entry is
   * DuckDB-oracle-checked; transcendental outputs (ln/exp) emit float32 per
   * the repo-wide discipline, while division/sqrt chains over exact
   * integers emit full doubles (IEEE ops on identical inputs are
@@ -21,134 +20,8 @@ object DriftQueries {
 
   def entries: Seq[Entry] = Seq(
 
-    // Jensen–Shannon divergence between the token distributions of the two
-    // corpus halves — the bounded (≤ ln 2), symmetric drift measure for
-    // "did the vocabulary mix move?". One vocab-keyed count agg (map-side
-    // combinable) and one broadcast of two scalars; ln enters the value,
-    // so the JSD emits float32.
-    Entry("q283_js_divergence",
-      (s, d) => {
-        val side = when(length(col("source")) === 4, lit("a")).otherwise(lit("b"))
-        val cnt = Tables.documents(s, d)
-          .select(side.as("side"), explode(Fns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0)
-          .groupBy(col("w"))
-          .agg(sum(when(col("side") === "a", 1L).otherwise(0L)).as("ca"),
-            sum(when(col("side") === "b", 1L).otherwise(0L)).as("cb"))
-        val tot = cnt.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
-        val p = col("ca").cast("double") / col("n_a")
-        val q = col("cb").cast("double") / col("n_b")
-        val m = (p + q) / lit(2.0)
-        cnt.crossJoin(broadcast(tot))
-          .agg(count(lit(1)).as("vocab"),
-            max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b"),
-            (lit(0.5) * sum(when(col("ca") > 0, p * log(p / m)).otherwise(0.0)) +
-              lit(0.5) * sum(when(col("cb") > 0, q * log(q / m)).otherwise(0.0)))
-              .cast("float").as("jsd"))
-      },
-      Some("""WITH s AS (
-             |  SELECT CASE WHEN length(source) = 4 THEN 'a' ELSE 'b' END AS side,
-             |    unnest(string_split(lower(text), ' ')) AS w
-             |  FROM documents),
-             |cnt AS (
-             |  SELECT w,
-             |    CAST(sum(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-             |    CAST(sum(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS cb
-             |  FROM s WHERE length(w) > 0 GROUP BY 1),
-             |t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-             |             CAST(sum(cb) AS BIGINT) AS n_b FROM cnt)
-             |SELECT count(*) AS vocab, max(n_a) AS n_a, max(n_b) AS n_b,
-             |  CAST(0.5 * sum(CASE WHEN ca > 0 THEN (ca::DOUBLE / n_a)
-             |      * ln((ca::DOUBLE / n_a)
-             |        / (((ca::DOUBLE / n_a) + (cb::DOUBLE / n_b)) / 2.0))
-             |      ELSE 0.0 END)
-             |    + 0.5 * sum(CASE WHEN cb > 0 THEN (cb::DOUBLE / n_b)
-             |      * ln((cb::DOUBLE / n_b)
-             |        / (((ca::DOUBLE / n_a) + (cb::DOUBLE / n_b)) / 2.0))
-             |      ELSE 0.0 END) AS REAL) AS jsd
-             |FROM cnt CROSS JOIN t""".stripMargin)),
 
-    // n-gram novelty: the fraction of each held-out source's DISTINCT
-    // 3-shingles unseen in the training half — the generalization-vs-
-    // memorization readout (novelty ≈ 0 means the "new" source is a
-    // restatement of the train set; complements q117's contamination
-    // direction). One distinct per side and one anti-join on the shingle
-    // key; exact rationals.
-    Entry("q285_ngram_novelty",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val train = docs.filter(length(col("source")) === 4)
-          .select(explode(Fns.shingles(Fns.tokens(col("text")), 3)).as("sh"))
-          .distinct()
-        val test = docs.filter(length(col("source")) > 4)
-          .select(col("source"), explode(Fns.shingles(Fns.tokens(col("text")), 3)).as("sh"))
-          .distinct()
-        val novel = test.join(train, Seq("sh"), "left_anti")
-          .groupBy(col("source")).agg(count(lit(1)).as("n_novel"))
-        test.groupBy(col("source")).agg(count(lit(1)).as("n_shingles"))
-          .join(novel, Seq("source"), "left")
-          .withColumn("n_novel", coalesce(col("n_novel"), lit(0L)))
-          .select(col("source"), col("n_shingles"), col("n_novel"),
-            (col("n_novel").cast("double") / col("n_shingles")).as("novelty_rate"))
-          .orderBy(col("source"))
-      },
-      Some("""WITH sh AS (
-             |  SELECT source, unnest(list_transform(
-             |    generate_series(1, greatest(len(t) - 2, 0)),
-             |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-             |  FROM (SELECT source, string_split(lower(text), ' ') AS t
-             |        FROM documents)),
-             |train AS (SELECT DISTINCT sh FROM sh WHERE length(source) = 4),
-             |test AS (SELECT DISTINCT source, sh FROM sh
-             |         WHERE length(source) > 4),
-             |novel AS (
-             |  SELECT source, CAST(count(*) AS BIGINT) AS n_novel
-             |  FROM test WHERE sh NOT IN (SELECT sh FROM train)
-             |  GROUP BY source)
-             |SELECT t.source, CAST(count(*) AS BIGINT) AS n_shingles,
-             |  coalesce(max(novel.n_novel), 0) AS n_novel,
-             |  coalesce(max(novel.n_novel), 0)::DOUBLE / count(*)
-             |    AS novelty_rate
-             |FROM test t LEFT JOIN novel ON novel.source = t.source
-             |GROUP BY t.source ORDER BY t.source""".stripMargin)),
 
-    // Distinct-n diversity per source: distinct/total n-gram ratios for
-    // n = 1, 2, 3 — the standard template/degeneracy detector for
-    // generated corpora (low distinct-2 = repetitive boilerplate). One
-    // explode per n, all aggregates map-side combinable; exact rationals.
-    Entry("q286_distinct_ngrams",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        def level(n: Int) = docs
-          .select(col("source"),
-            explode(Fns.shingles(Fns.tokens(col("text")), n)).as("g"))
-          .filter(length(col("g")) > 0)
-          .groupBy(col("source"))
-          .agg(lit(n).as("n"), count(lit(1)).as("total"),
-            countDistinct(col("g")).as("uniq"))
-        level(1).unionAll(level(2)).unionAll(level(3))
-          .select(col("source"), col("n"), col("total"), col("uniq"),
-            (col("uniq").cast("double") / col("total")).as("distinct_ratio"))
-          .orderBy(col("source"), col("n"))
-      },
-      Some {
-        def sql(n: Int) = {
-          val expr = (1 to n).map(j => s"t[i+${j - 1}]").mkString(" || ' ' || ")
-          s"""SELECT source, $n AS n, CAST(count(*) AS BIGINT) AS total,
-             |  CAST(count(DISTINCT g) AS BIGINT) AS uniq,
-             |  count(DISTINCT g)::DOUBLE / count(*) AS distinct_ratio
-             |FROM (
-             |  SELECT source, unnest(list_transform(
-             |    generate_series(1, greatest(len(t) - ${n - 1}, 0)),
-             |    i -> $expr)) AS g
-             |  FROM (SELECT source, string_split(lower(text), ' ') AS t
-             |        FROM documents))
-             |WHERE length(g) > 0
-             |GROUP BY source""".stripMargin
-        }
-        s"""SELECT * FROM (${sql(1)} UNION ALL ${sql(2)} UNION ALL ${sql(3)})
-           |ORDER BY source, n""".stripMargin
-      }),
 
     // Dedup-cluster edge-density audit: connected components merge
     // transitively, so a cluster can contain pairs that were NEVER
@@ -325,96 +198,7 @@ object DriftQueries {
            |FROM qual GROUP BY source ORDER BY source""".stripMargin
       }),
 
-    // Flesch reading-ease per source, with a deterministic vowel-group
-    // syllable heuristic (regex, identical in both engines) — the
-    // readability gate corpus curation runs next to the q24 quality
-    // score. One explode for syllables, one regex count for sentences;
-    // per-doc scores are exact-input doubles, the per-source mean sums
-    // them → float32.
-    Entry("q296_readability",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val syl = docs
-          .select(col("doc_id"), explode(Fns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0)
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_words"),
-            sum(greatest(lit(1),
-              size(regexp_extract_all(col("w"), lit("[aeiouy]+"), lit(0)))
-                .cast("long"))).as("n_syl"))
-        val perDoc = docs
-          .select(col("doc_id"), col("source"),
-            greatest(lit(1L),
-              size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-                .cast("long")).as("n_sent"))
-          .join(syl, "doc_id")
-          .withColumn("flesch",
-            lit(206.835) -
-              lit(1.015) * (col("n_words").cast("double") / col("n_sent")) -
-              lit(84.6) * (col("n_syl").cast("double") / col("n_words")))
-        perDoc.groupBy(col("source"))
-          .agg(count(lit(1)).as("n_docs"),
-            avg(col("flesch")).cast("float").as("avg_flesch"),
-            avg(col("n_syl").cast("double") / col("n_words")).cast("float")
-              .as("avg_syl_per_word"))
-          .orderBy(col("source"))
-      },
-      Some("""WITH toks AS (
-             |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
-             |  FROM documents),
-             |syl AS (
-             |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-             |    CAST(sum(greatest(1,
-             |      len(regexp_extract_all(w, '[aeiouy]+')))) AS BIGINT)
-             |      AS n_syl
-             |  FROM toks WHERE length(w) > 0 GROUP BY doc_id),
-             |perdoc AS (
-             |  SELECT d.source,
-             |    206.835
-             |      - 1.015 * (s.n_words::DOUBLE
-             |          / greatest(1, len(regexp_extract_all(d.text, '[.!?]+'))))
-             |      - 84.6 * (s.n_syl::DOUBLE / s.n_words) AS flesch,
-             |    s.n_syl::DOUBLE / s.n_words AS spw
-             |  FROM documents d JOIN syl s USING (doc_id))
-             |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-             |  CAST(avg(flesch) AS REAL) AS avg_flesch,
-             |  CAST(avg(spw) AS REAL) AS avg_syl_per_word
-             |FROM perdoc GROUP BY source ORDER BY source""".stripMargin)),
 
-    // Church–Gale word burstiness for the 50 heaviest tokens: a Poisson
-    // spread would hit df_pred = D·(1 − e^(−tf/D)) documents; real words
-    // CLUMP (df_obs < df_pred), templates repeat everywhere. The
-    // burstiness ratio feeds stopword/boilerplate calls a raw df rank
-    // can't make. Counts exact; e^ makes the ratio float32.
-    Entry("q298_word_burstiness",
-      (s, d) => {
-        val tok = Tables.documents(s, d)
-          .select(col("doc_id"), explode(Fns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0)
-        val stats = tok.groupBy(col("w"))
-          .agg(count(lit(1)).as("tf"), countDistinct(col("doc_id")).as("df"))
-        val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-        stats.orderBy(desc("tf"), col("w")).limit(50)
-          .crossJoin(broadcast(nDocs))
-          .select(col("w"), col("tf"), col("df"),
-            ((col("n_docs") * (lit(1.0) -
-              exp(-col("tf").cast("double") / col("n_docs")))) /
-              col("df")).cast("float").as("burstiness"))
-          .orderBy(desc("tf"), col("w"))
-      },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
-             |  FROM documents),
-             |stats AS (
-             |  SELECT w, CAST(count(*) AS BIGINT) AS tf,
-             |    CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-             |  FROM tok WHERE length(w) > 0 GROUP BY w),
-             |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-             |top AS (SELECT * FROM stats ORDER BY tf DESC, w LIMIT 50)
-             |SELECT w, tf, df,
-             |  CAST((n_docs * (1.0 - exp(-(tf::DOUBLE) / n_docs))) / df
-             |    AS REAL) AS burstiness
-             |FROM top CROSS JOIN nd ORDER BY tf DESC, w""".stripMargin)),
 
     // End-to-end curation run report — the whole filter funnel as ONE
     // declarative plan: length gate → language gate → repetition gate →
@@ -522,36 +306,6 @@ object DriftQueries {
              |    CAST(coalesce(sum(n_chars), 0) AS BIGINT) FROM s5)
              |ORDER BY stage""".stripMargin)),
 
-    // Herfindahl–Hirschman concentration of the token supply across
-    // sources, with the effective source count 1/HHI — "is the corpus
-    // really diverse, or three sources in a trenchcoat?" (the mixing
-    // planners q133/q142 read this before reweighting). Counts exact;
-    // the share-square sum is engine-ordered → float32.
-    Entry("q304_hhi_concentration",
-      (s, d) => {
-        val g = Tables.documents(s, d)
-          .select(col("source"), explode(Fns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0)
-          .groupBy(col("source")).agg(count(lit(1)).as("c"))
-        val tot = g.agg(sum(col("c")).as("t"))
-        val share = col("c").cast("double") / col("t")
-        g.crossJoin(broadcast(tot))
-          .agg(count(lit(1)).as("n_sources"),
-            sum(share * share).as("hhi_d"))
-          .select(col("n_sources"), col("hhi_d").cast("float").as("hhi"),
-            (lit(1.0) / col("hhi_d")).cast("float").as("effective_sources"))
-      },
-      Some("""WITH g AS (
-             |  SELECT source, CAST(count(*) AS BIGINT) AS c FROM (
-             |    SELECT source, unnest(string_split(lower(text), ' ')) AS w
-             |    FROM documents)
-             |  WHERE length(w) > 0 GROUP BY source),
-             |t AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM g)
-             |SELECT count(*) AS n_sources,
-             |  CAST(sum((c::DOUBLE / t) * (c::DOUBLE / t)) AS REAL) AS hhi,
-             |  CAST(1.0 / sum((c::DOUBLE / t) * (c::DOUBLE / t)) AS REAL)
-             |    AS effective_sources
-             |FROM g CROSS JOIN t""".stripMargin)),
 
     // Hash-fold split stability: five md5-keyed folds of the corpus, per-
     // fold mean quality and length, and the max−min fold drift — if a
@@ -615,81 +369,7 @@ object DriftQueries {
            |FROM g ORDER BY fold""".stripMargin
       }),
 
-    // Pairwise vocabulary overlap between sources (token-set Jaccard) —
-    // which sources are restatements of each other BEFORE document-level
-    // dedup ever runs. The pair terms come from the token-keyed join of
-    // distinct (source, token) rows — Σ per-token source-pair work, never
-    // |sources|² × vocab. Exact counts and one division.
-    Entry("q308_vocab_overlap",
-      (s, d) => {
-        val st = Tables.documents(s, d)
-          .select(col("source"), explode(Fns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0)
-          .distinct().localCheckpoint(true) // feeds sizes + both join legs
-        val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("nv"))
-        val inter = st.select(col("source").as("source_a"), col("w"))
-          .join(st.select(col("source").as("source_b"), col("w")), Seq("w"))
-          .filter(col("source_a") < col("source_b"))
-          .groupBy(col("source_a"), col("source_b"))
-          .agg(count(lit(1)).as("inter"))
-        inter
-          .join(sizes.select(col("source").as("source_a"),
-            col("nv").as("na")), "source_a")
-          .join(sizes.select(col("source").as("source_b"),
-            col("nv").as("nb")), "source_b")
-          .select(col("source_a"), col("source_b"), col("inter"),
-            (col("na") + col("nb") - col("inter")).as("union_sz"),
-            (col("inter").cast("double") /
-              (col("na") + col("nb") - col("inter"))).as("jaccard"))
-          .orderBy(col("source_a"), col("source_b"))
-      },
-      Some("""WITH st AS (
-             |  SELECT DISTINCT source, w FROM (
-             |    SELECT source, unnest(string_split(lower(text), ' ')) AS w
-             |    FROM documents)
-             |  WHERE length(w) > 0),
-             |sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS nv
-             |          FROM st GROUP BY source),
-             |inter AS (
-             |  SELECT a.source AS source_a, b.source AS source_b,
-             |    CAST(count(*) AS BIGINT) AS inter
-             |  FROM st a JOIN st b ON a.w = b.w AND a.source < b.source
-             |  GROUP BY 1, 2)
-             |SELECT source_a, source_b, inter,
-             |  na.nv + nb.nv - inter AS union_sz,
-             |  inter::DOUBLE / (na.nv + nb.nv - inter) AS jaccard
-             |FROM inter
-             |JOIN sizes na ON na.source = source_a
-             |JOIN sizes nb ON nb.source = source_b
-             |ORDER BY source_a, source_b""".stripMargin)),
 
-    // Template-head detection: documents sharing their first five tokens
-    // — the cheapest boilerplate-family finder (form letters, scraped
-    // templates, generated spam share heads long before they share whole
-    // shingle sets). One prefix groupBy; heads hitting ≥ 3 docs emit with
-    // an example doc. Exact counts.
-    Entry("q311_template_heads",
-      (s, d) => {
-        val heads = Tables.documents(s, d)
-          .select(col("doc_id"), Fns.tokens(col("text")).as("toks"))
-          .filter(size(col("toks")) >= 5)
-          .select(col("doc_id"),
-            array_join(slice(col("toks"), 1, 5), " ").as("head"))
-        heads.groupBy(col("head"))
-          .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("example_doc"))
-          .filter(col("n_docs") >= 3)
-          .orderBy(desc("n_docs"), col("head"))
-      },
-      Some("""WITH heads AS (
-             |  SELECT doc_id,
-             |    array_to_string(t[1:5], ' ') AS head
-             |  FROM (SELECT doc_id, string_split(lower(text), ' ') AS t
-             |        FROM documents)
-             |  WHERE len(t) >= 5)
-             |SELECT head, CAST(count(*) AS BIGINT) AS n_docs,
-             |  min(doc_id) AS example_doc
-             |FROM heads GROUP BY head HAVING count(*) >= 3
-             |ORDER BY n_docs DESC, head""".stripMargin)),
 
     // Degree assortativity of the co-purchase graph (q216's edges): the
     // Pearson correlation of endpoint degrees over the directed edge list
@@ -863,42 +543,6 @@ object DriftQueries {
            |FROM per GROUP BY plabel ORDER BY label""".stripMargin
       }),
 
-    // Token entropy BY POSITION (1..10): template-heavy corpora collapse
-    // early-position entropy (every doc opens with the same boilerplate)
-    // long before whole-document statistics notice — the quantitative
-    // twin of q311's template heads. Exact counts per (position, token);
-    // ln → float32.
-    Entry("q316_positional_entropy",
-      (s, d) => {
-        val toks = Tables.documents(s, d)
-          .select(col("doc_id"), Fns.tokens(col("text")).as("t"))
-        val at = toks
-          .select(explode(sequence(lit(1), lit(10))).as("pos"), col("t"))
-          .filter(size(col("t")) >= col("pos"))
-          .select(col("pos"), element_at(col("t"), col("pos")).as("w"))
-        val g = at.groupBy(col("pos"), col("w")).agg(count(lit(1)).as("c"))
-        val tot = g.groupBy(col("pos")).agg(sum(col("c")).as("n"),
-          count(lit(1)).as("vocab"))
-        val p = col("c").cast("double") / col("n")
-        g.join(broadcast(tot), "pos")
-          .groupBy(col("pos"))
-          .agg(max(col("n")).as("n_docs"), max(col("vocab")).as("vocab"),
-            sum(-p * log(p)).cast("float").as("entropy"))
-          .orderBy(col("pos"))
-      },
-      Some("""WITH at AS (
-             |  SELECT i AS pos, t[i] AS w FROM (
-             |    SELECT string_split(lower(text), ' ') AS t FROM documents),
-             |    unnest(generate_series(1, 10)) AS s(i)
-             |  WHERE len(t) >= i),
-             |g AS (SELECT pos, w, CAST(count(*) AS BIGINT) AS c
-             |      FROM at GROUP BY 1, 2),
-             |tot AS (SELECT pos, CAST(sum(c) AS BIGINT) AS n,
-             |        CAST(count(*) AS BIGINT) AS vocab FROM g GROUP BY pos)
-             |SELECT pos, max(n) AS n_docs, max(vocab) AS vocab,
-             |  CAST(sum(-(c::DOUBLE / n) * ln(c::DOUBLE / n)) AS REAL)
-             |    AS entropy
-             |FROM g JOIN tot USING (pos) GROUP BY pos ORDER BY pos""".stripMargin)),
 
     // Two-feature OLS via the closed-form normal equations: quality ~
     // ln(chars) + type-token ratio — how much of the composite is
@@ -1073,65 +717,7 @@ object DriftQueries {
              |SELECT n_edges, CAST(e_before AS REAL) AS energy_before,
              |  CAST(e_after AS REAL) AS energy_after,
              |  CAST(e_after / e_before AS REAL) AS smoothing_ratio
-             |FROM before_e CROSS JOIN after_e""".stripMargin)),
-
-    // Bigram conditional entropy per source: H(w₂|w₁) = H(bigram) −
-    // H(unigram) — the compressibility proxy (low conditional entropy =
-    // predictable, template-like text; the per-source slice of what
-    // q149's surprise scores per document). Map-side count aggs; ln →
-    // float32.
-    Entry("q321_bigram_cond_entropy",
-      (s, d) => {
-        val toks = Tables.documents(s, d)
-          .select(col("source"), col("doc_id"), Fns.tokens(col("text")).as("t"))
-        def ent(df: org.apache.spark.sql.DataFrame) = {
-          val g = df.groupBy(col("source"), col("g")).agg(count(lit(1)).as("c"))
-          val t = g.groupBy(col("source")).agg(sum(col("c")).as("n"))
-          val p = col("c").cast("double") / col("n")
-          g.join(broadcast(t), "source")
-            .groupBy(col("source")).agg(sum(-p * log(p)).as("h"))
-        }
-        val uni = ent(toks.select(col("source"),
-          explode(Fns.shingles(col("t"), 1)).as("g")))
-          .withColumnRenamed("h", "h1")
-        val bi = ent(toks.select(col("source"),
-          explode(Fns.shingles(col("t"), 2)).as("g")))
-          .withColumnRenamed("h", "h2")
-        uni.join(bi, "source")
-          .select(col("source"), col("h1").cast("float").as("h_unigram"),
-            col("h2").cast("float").as("h_bigram"),
-            (col("h2") - col("h1")).cast("float").as("h_cond"))
-          .orderBy(col("source"))
-      },
-      Some("""WITH t AS (
-             |  SELECT source, string_split(lower(text), ' ') AS t
-             |  FROM documents),
-             |uni AS (
-             |  SELECT source, w AS g FROM (
-             |    SELECT source, unnest(t) AS w FROM t)),
-             |bi AS (
-             |  SELECT source, unnest(list_transform(
-             |    generate_series(1, greatest(len(t) - 1, 0)),
-             |    i -> t[i] || ' ' || t[i+1])) AS g
-             |  FROM t),
-             |h1 AS (
-             |  SELECT source, sum(-(c::DOUBLE / n) * ln(c::DOUBLE / n)) AS h1
-             |  FROM (SELECT source, g, CAST(count(*) AS BIGINT) AS c
-             |        FROM uni GROUP BY 1, 2) x
-             |  JOIN (SELECT source, CAST(count(*) AS BIGINT) AS n
-             |        FROM uni GROUP BY 1) y USING (source)
-             |  GROUP BY source),
-             |h2 AS (
-             |  SELECT source, sum(-(c::DOUBLE / n) * ln(c::DOUBLE / n)) AS h2
-             |  FROM (SELECT source, g, CAST(count(*) AS BIGINT) AS c
-             |        FROM bi GROUP BY 1, 2) x
-             |  JOIN (SELECT source, CAST(count(*) AS BIGINT) AS n
-             |        FROM bi GROUP BY 1) y USING (source)
-             |  GROUP BY source)
-             |SELECT source, CAST(h1 AS REAL) AS h_unigram,
-             |  CAST(h2 AS REAL) AS h_bigram,
-             |  CAST(h2 - h1 AS REAL) AS h_cond
-             |FROM h1 JOIN h2 USING (source) ORDER BY source""".stripMargin))
+             |FROM before_e CROSS JOIN after_e""".stripMargin))
 
   )
 }

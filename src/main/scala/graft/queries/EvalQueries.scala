@@ -4,64 +4,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Evaluation surfaces: Good–Turing count-class smoothing over n-gram
-  * counts and journey similarity between users' event sequences (bounded
-  * edit distance under the Levenshtein prefilter). Every entry is
-  * DuckDB-oracle-checked.
+/** Journey similarity between users' event sequences (bounded edit
+  * distance under the Levenshtein prefilter), DuckDB-oracle-checked.
   */
 object EvalQueries {
 
   def entries: Seq[Entry] = Seq(
 
-    // Good–Turing count-class smoothing: the count-of-counts table N_r
-    // and the discounted estimate r* = (r+1)·N_{r+1}/N_r for the low
-    // count classes — how an n-gram LM reserves mass for unseen events
-    // (the missing-mass estimate N_1/N is the first row's headline). The
-    // table is |count classes|-sized; corpus touched once. Exact
-    // rationals. N_{r+1} comes from a SELF-JOIN on r+1 (coalesced to 0
-    // when the class is empty), NOT lead() over the present classes —
-    // lead returns N at the next PRESENT r, so a gap (say r=4 empty,
-    // r=6 present) would silently feed r* the wrong numerator.
-    Entry("q273_good_turing",
-      (s, d) => {
-        import graft.functions.Fns
-        // 3-shingle "events", not unigrams — the 31-word vocabulary has no
-        // low count classes, shingles populate r = 1..5 at every SF
-        val counts = Tables.documents(s, d)
-          .select(explode(Fns.shingles(Fns.tokens(col("text")), 3)).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("r"))
-        val nr = counts.groupBy(col("r")).agg(count(lit(1)).as("n_r"))
-        val nextClass = nr.select((col("r") - 1).as("r"),
-          col("n_r").as("n_r_next"))
-        val tot = nr.agg(sum(col("r") * col("n_r")).as("n_total"))
-        nr
-          .join(nextClass, Seq("r"), "left")
-          .crossJoin(broadcast(tot))
-          .filter(col("r") <= 5)
-          .select(col("r"), col("n_r"),
-            ((col("r") + 1) * coalesce(col("n_r_next"), lit(0L)) /
-              col("n_r")).as("r_star"),
-            (col("r") * col("n_r") / col("n_total")).as("class_mass"))
-          .orderBy(col("r"))
-      },
-      Some("""WITH toks AS (
-             |  SELECT doc_id, string_split(lower(text), ' ') AS t
-             |  FROM documents),
-             |counts AS (
-             |  SELECT w, count(*) AS r FROM (
-             |    SELECT doc_id,
-             |      unnest(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-             |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS w
-             |    FROM toks)
-             |  GROUP BY w),
-             |nr AS (SELECT r, count(*) AS n_r FROM counts GROUP BY r),
-             |tot AS (SELECT CAST(sum(r * n_r) AS BIGINT) AS n_total FROM nr)
-             |SELECT a.r, a.n_r,
-             |  (a.r + 1) * coalesce(b.n_r, 0)::DOUBLE / a.n_r AS r_star,
-             |  a.r * a.n_r::DOUBLE / n_total AS class_mass
-             |FROM nr a LEFT JOIN nr b ON b.r = a.r + 1
-             |CROSS JOIN tot
-             |WHERE a.r <= 5 ORDER BY a.r""".stripMargin)),
 
     // User-journey similarity: users whose first-12-event journey strings
     // (event-type initials in time order) are within edit distance 3 —

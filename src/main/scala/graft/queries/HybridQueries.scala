@@ -3,20 +3,14 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine.HashEmbedder
-import graft.functions.Fns
 import graft.ops.Retrieval
 
-/** Hybrid retrieval and training-corpus hygiene operators:
-  *
-  *  - q116: hybrid lexical+vector search — BM25 and whole-document cosine
-  *    legs fused by reciprocal rank (the standard two-tower hybrid stack;
-  *    the reference runs lexical rerank features next to its vector
-  *    sources, memory_graph.py:7001-7090 — here both legs are first-class
-  *    and rank-fused so score scales never need calibration);
-  *  - q117: benchmark-contamination detection — eval-split documents
-  *    sharing an 8-token n-gram with any train-split document, via an
-  *    inverted-index join (pairs materialize only on shared n-grams — the
-  *    shape that survives a 100 TB train corpus).
+/** Hybrid retrieval and training-corpus operators. The lead entry, q116,
+  * is hybrid lexical+vector search: BM25 and whole-document cosine legs
+  * fused by reciprocal rank (the standard two-tower hybrid stack; the
+  * reference runs lexical rerank features next to its vector sources,
+  * memory_graph.py:7001-7090 — here both legs are first-class and
+  * rank-fused so score scales never need calibration).
   */
 object HybridQueries {
 
@@ -91,95 +85,7 @@ object HybridQueries {
            |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin
       }),
 
-    // Train/eval n-gram contamination: the classic 8-gram overlap detector
-    // (benchmark leakage hygiene). Inverted-index join on the n-gram —
-    // candidate pairs exist only where an n-gram is shared, never an
-    // eval×train product.
-    Entry("q117_contamination",
-      (s, d) => {
-        val evalSources = Seq("src0", "src1", "src2", "src3", "src4")
-        // tokens materialized in their OWN projection first: the shingle
-        // higher-order function is interpreted and would re-run
-        // split(lower(text)) once per output element otherwise
-        val sh = Tables.documents(s, d)
-          .select(col("doc_id"), col("source"), Fns.tokens(col("text")).as("t"))
-          .select(col("doc_id"), col("source"),
-            explode(Fns.shingles(col("t"), 8)).as("ng"))
-          .distinct()
-        val evalSh = sh.filter(col("source").isin(evalSources: _*))
-        val trainSh = sh.filter(!col("source").isin(evalSources: _*))
-          .select(col("ng"), col("doc_id").as("train_id"))
-        evalSh.join(trainSh, Seq("ng"))
-          .groupBy(col("doc_id"))
-          .agg(countDistinct(col("ng")).as("shared_ngrams"),
-            countDistinct(col("train_id")).as("n_train_docs"))
-          .orderBy(col("doc_id"))
-      },
-      Some("""WITH t AS (
-             |  SELECT doc_id, source, string_split(lower(text), ' ') AS tk
-             |  FROM documents),
-             |sh AS (
-             |  SELECT DISTINCT doc_id, source, array_to_string(tk[i:i+7], ' ') AS ng
-             |  FROM t, LATERAL (SELECT unnest(generate_series(1,
-             |         greatest(len(tk) - 7, 0))) AS i) g
-             |  WHERE len(tk) >= 8),
-             |ev AS (SELECT * FROM sh
-             |       WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-             |tr AS (SELECT * FROM sh
-             |       WHERE source NOT IN ('src0', 'src1', 'src2', 'src3', 'src4'))
-             |SELECT e.doc_id, count(DISTINCT e.ng) AS shared_ngrams,
-             |  count(DISTINCT tr.doc_id) AS n_train_docs
-             |FROM ev e JOIN tr ON e.ng = tr.ng
-             |GROUP BY e.doc_id ORDER BY e.doc_id""".stripMargin)),
 
-    // Novelty rate: q117's inverse view — for EVERY eval document, the
-    // fraction of its distinct 8-grams NOT present anywhere in train
-    // (q117 reports only contaminated pairs; decontamination reporting
-    // needs every doc scored, zero-overlap included). Left-join on the
-    // same inverted index; the ratio is exact small-int arithmetic.
-    Entry("q165_novelty_rate",
-      (s, d) => {
-        val evalSources = Seq("src0", "src1", "src2", "src3", "src4")
-        val sh = Tables.documents(s, d)
-          .select(col("doc_id"), col("source"), Fns.tokens(col("text")).as("t"))
-          .select(col("doc_id"), col("source"),
-            explode(Fns.shingles(col("t"), 8)).as("ng"))
-          .distinct()
-          .localCheckpoint(true) // eval side, train side
-        val evalSh = sh.filter(col("source").isin(evalSources: _*))
-          .select(col("doc_id"), col("ng"))
-        val trainNg = sh.filter(!col("source").isin(evalSources: _*))
-          .select(col("ng")).distinct()
-        evalSh
-          .join(trainNg.withColumn("seen", lit(1)), Seq("ng"), "left")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_ngrams"),
-            sum(when(col("seen").isNotNull, 1L).otherwise(0L)).as("n_shared"))
-          .withColumn("novelty",
-            (col("n_ngrams") - col("n_shared")).cast("double") / col("n_ngrams"))
-          .orderBy(col("doc_id"))
-      },
-      Some("""WITH t AS (
-             |  SELECT doc_id, source, string_split(lower(text), ' ') AS tk
-             |  FROM documents),
-             |sh AS (
-             |  SELECT DISTINCT doc_id, source, array_to_string(tk[i:i+7], ' ') AS ng
-             |  FROM t, LATERAL (SELECT unnest(generate_series(1,
-             |         greatest(len(tk) - 7, 0))) AS i) g
-             |  WHERE len(tk) >= 8),
-             |ev AS (SELECT doc_id, ng FROM sh
-             |       WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-             |tr AS (SELECT DISTINCT ng FROM sh
-             |       WHERE source NOT IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-             |j AS (
-             |  SELECT e.doc_id, count(*) AS n_ngrams,
-             |    CAST(sum(CASE WHEN tr.ng IS NOT NULL THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS n_shared
-             |  FROM ev e LEFT JOIN tr ON e.ng = tr.ng
-             |  GROUP BY e.doc_id)
-             |SELECT doc_id, n_ngrams, n_shared,
-             |  (n_ngrams - n_shared)::DOUBLE / n_ngrams AS novelty
-             |FROM j ORDER BY doc_id""".stripMargin)),
 
     // Leave-one-out KNN label eval: predict each vector's label by
     // majority vote of its 10 nearest neighbors (ties → lexically
@@ -192,7 +98,7 @@ object HybridQueries {
         val emb = Tables.embeddings(s, d)
         val q = emb.select(col("vec_id").as("q_id"),
           col("embedding").as("qvec"), col("label").as("true_label"))
-        // round 14 (r13 verdict #6): self-pairs drop BEFORE the bounded
+        // self-pairs drop BEFORE the bounded
         // TopK aggregation (knnBatchLoo), so the top-10-excluding-self
         // comes straight out of the aggregator — the k=11 → drop-self →
         // row_number re-rank window (one exchange + a whole-relation

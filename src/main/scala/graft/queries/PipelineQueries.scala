@@ -5,56 +5,14 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Fns
 
-/** Corpus-statistics diagnostics and training-data-pipeline operators
-  * (bitext mining, blocklist gating, agreement metrics, embedding outliers
-  * and coresets, hubness, recall curves, epoch planning). Every entry is
-  * DuckDB-oracle-checked.
+/** Training-data-pipeline operators (bitext mining, agreement metrics,
+  * embedding outliers and coresets, hubness, recall curves, epoch
+  * planning). Every entry is DuckDB-oracle-checked.
   */
 object PipelineQueries {
 
   def entries: Seq[Entry] = Seq(
 
-    // Zipf's-law fit over the token frequency distribution: OLS of
-    // ln(freq) on ln(rank) across the top-200 vocabulary. The standard
-    // corpus-health diagnostic (natural text fits slope ≈ −1; template or
-    // machine-generated text flattens or steepens it — compare per-source
-    // to catch synthetic contamination). One explode + one map-side-combined
-    // count; the top-200 cut is orderBy+limit (TakeOrderedAndProject — a
-    // distributed per-partition top-k, never a global sort), so the ONLY
-    // ordered window runs on the 200-row relation and the OLS sums are a
-    // single partial-aggregable pass. Slope/intercept/r² emitted float32
-    // (ln low bits and partition sum order are engine-dependent).
-    Entry("q229_zipf_fit",
-      (s, d) => {
-        val tf = Tables.documents(s, d)
-          .select(explode(Fns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0)
-          .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-        tf.orderBy(desc("cnt"), col("w")).limit(200)
-          .withColumn("rank",
-            row_number().over(Window.orderBy(desc("cnt"), col("w"))))
-          .agg(
-            count(lit(1)).as("n_terms"),
-            expr("regr_slope(ln(cnt), ln(rank))").cast("float").as("zipf_slope"),
-            expr("regr_intercept(ln(cnt), ln(rank))").cast("float")
-              .as("zipf_intercept"),
-            expr("regr_r2(ln(cnt), ln(rank))").cast("float").as("r2"))
-      },
-      Some("""WITH tf AS (
-             |  SELECT w, count(*) AS cnt FROM (
-             |    SELECT unnest(string_split(lower(text), ' ')) AS w
-             |    FROM documents)
-             |  WHERE length(w) > 0 GROUP BY w),
-             |ranked AS (
-             |  SELECT cnt, rank FROM (
-             |    SELECT cnt, row_number() OVER (ORDER BY cnt DESC, w) AS rank
-             |    FROM tf)
-             |  WHERE rank <= 200)
-             |SELECT count(*) AS n_terms,
-             |  CAST(regr_slope(ln(cnt), ln(rank)) AS REAL) AS zipf_slope,
-             |  CAST(regr_intercept(ln(cnt), ln(rank)) AS REAL) AS zipf_intercept,
-             |  CAST(regr_r2(ln(cnt), ln(rank)) AS REAL) AS r2
-             |FROM ranked""".stripMargin)),
 
     // Margin-based bitext mining (Artetxe & Schwenk): split the embedding
     // space into two "languages" (vec_id parity), and for each source
@@ -132,42 +90,6 @@ object PipelineQueries {
            |ORDER BY a_id""".stripMargin
       }),
 
-    // Blocklist gating report (the wordlist-filter step every web-scale
-    // curation pipeline runs before training): per source, how many docs
-    // contain a blocklisted term, total hit occurrences, and the flag
-    // rate. One token scan, map-side array intersection, one combinable
-    // aggregation — no shuffle beyond the per-source rollup. Rates are
-    // single divisions of exact integers (bit-identical across engines,
-    // per the no-rounding discipline).
-    Entry("q231_blocklist_rate",
-      (s, d) => {
-        val blocked = Seq("slow", "drop", "stale")
-        val toks = Fns.tokens(col("text"))
-        Tables.documents(s, d)
-          .withColumn("n_hits",
-            size(filter(toks, t =>
-              array_contains(array(blocked.map(lit): _*), t))).cast("long"))
-          .groupBy(col("source"))
-          .agg(
-            count(lit(1)).as("n_docs"),
-            sum(when(col("n_hits") > 0, 1L).otherwise(0L)).as("n_flagged"),
-            sum(col("n_hits")).as("total_hits"))
-          .withColumn("flag_rate", col("n_flagged") / col("n_docs"))
-          .orderBy(col("source"))
-      },
-      Some("""WITH f AS (
-             |  SELECT source,
-             |    CAST(len(list_filter(string_split(lower(text), ' '),
-             |      t -> list_contains(['slow', 'drop', 'stale'], t)))
-             |      AS BIGINT) AS n_hits
-             |  FROM documents)
-             |SELECT source, count(*) AS n_docs,
-             |  CAST(sum(CASE WHEN n_hits > 0 THEN 1 ELSE 0 END) AS BIGINT)
-             |    AS n_flagged,
-             |  CAST(sum(n_hits) AS BIGINT) AS total_hits,
-             |  CAST(sum(CASE WHEN n_hits > 0 THEN 1 ELSE 0 END) AS BIGINT)
-             |    ::DOUBLE / count(*) AS flag_rate
-             |FROM f GROUP BY source ORDER BY source""".stripMargin)),
 
     // Krippendorff's alpha (nominal, two raters: gold lang vs the n-gram
     // classifier) — the agreement coefficient that generalizes q217's
@@ -348,72 +270,6 @@ object PipelineQueries {
            |ORDER BY round""".stripMargin
       }),
 
-    // UniMax token-budget allocation: split a total token budget across
-    // sources by water-filling — every source below the water level τ is
-    // fully used, the rest are capped at τ, with Σ alloc = budget. The
-    // closed form needs one sort + one cumulative window (m = last source
-    // whose full use still fits), no iteration. Integer token counts; τ is
-    // the single division. The mixture-design step a multi-source training
-    // run does before sampling (cf. q133's temperature mixture, which
-    // weights; this BUDGETS).
-    Entry("q240_unimax_allocation",
-      (s, d) => {
-        val w = Window.orderBy(col("avail"), col("source"))
-        val wAll = Window.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)
-        val tok = Tables.documents(s, d)
-          .select(col("source"), size(Fns.tokens(col("text"))).cast("long")
-            .as("n_tokens"))
-          .groupBy(col("source")).agg(sum(col("n_tokens")).as("avail"))
-        tok
-          .withColumn("i", row_number().over(w).cast("long"))
-          .withColumn("cum", sum(col("avail")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .withColumn("n", count(lit(1)).over(wAll))
-          .withColumn("total", sum(col("avail")).over(wAll))
-          .withColumn("budget", floor(col("total") * 0.6).cast("long"))
-          .withColumn("fits",
-            col("cum") + (col("n") - col("i")) * col("avail") <= col("budget"))
-          .withColumn("m", max(when(col("fits"), col("i")).otherwise(0L))
-            .over(wAll))
-          .withColumn("cum_m", max(when(col("fits"), col("cum")).otherwise(0L))
-            .over(wAll))
-          .withColumn("allocated",
-            when(col("fits"), col("avail").cast("double"))
-              .otherwise((col("budget") - col("cum_m")) / (col("n") - col("m"))))
-          .select(col("source"), col("avail"), col("budget"),
-            col("fits").as("fully_used"), col("allocated"))
-          .orderBy(col("source"))
-      },
-      Some("""WITH tok AS (
-             |  SELECT source,
-             |    CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT)
-             |      AS avail
-             |  FROM documents GROUP BY source),
-             |r AS (
-             |  SELECT source, avail,
-             |    CAST(row_number() OVER (ORDER BY avail, source) AS BIGINT)
-             |      AS i,
-             |    CAST(sum(avail) OVER (ORDER BY avail, source
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS BIGINT) AS cum,
-             |    count(*) OVER () AS n,
-             |    CAST(sum(avail) OVER () AS BIGINT) AS total
-             |  FROM tok),
-             |f AS (
-             |  SELECT *, CAST(floor(total * 0.6) AS BIGINT) AS budget,
-             |    cum + (n - i) * avail <= CAST(floor(total * 0.6) AS BIGINT)
-             |      AS fits
-             |  FROM r),
-             |g AS (
-             |  SELECT *,
-             |    max(CASE WHEN fits THEN i ELSE 0 END) OVER () AS m,
-             |    max(CASE WHEN fits THEN cum ELSE 0 END) OVER () AS cum_m
-             |  FROM f)
-             |SELECT source, avail, budget, fits AS fully_used,
-             |  CASE WHEN fits THEN avail::DOUBLE
-             |       ELSE (budget - cum_m)::DOUBLE / (n - m) END AS allocated
-             |FROM g ORDER BY source""".stripMargin)),
 
     // Leave-one-source-out (jackknife) influence on the langid eval: for
     // each source, overall accuracy WITHOUT that source's docs — the
@@ -488,42 +344,6 @@ object PipelineQueries {
            |FROM tot ORDER BY source""".stripMargin
       }),
 
-    // Term-proximity scoring (the positional-index retrieval feature BM25
-    // lacks): for a two-term query, each doc's minimum token distance
-    // between occurrences — close co-occurrence ranks above scattered
-    // mentions. Positions are filtered to the query terms BEFORE the
-    // per-doc pair join, so the quadratic step is (tf_a × tf_b) per doc,
-    // never length². Top-50 by (min_dist, doc_id).
-    Entry("q244_term_proximity",
-      (s, d) => {
-        val toks = Tables.documents(s, d)
-          .select(col("doc_id"),
-            posexplode(Fns.tokens(col("text"))).as(Seq("i", "w")))
-        val a = toks.filter(col("w") === "hash")
-          .select(col("doc_id"), col("i").as("ia"))
-        val b = toks.filter(col("w") === "join")
-          .select(col("doc_id"), col("i").as("ib"))
-        a.join(b, "doc_id")
-          .groupBy(col("doc_id"))
-          .agg(min(abs(col("ia") - col("ib"))).cast("long").as("min_dist"),
-            count(lit(1)).as("n_pairs"))
-          .orderBy(col("min_dist"), col("doc_id"))
-          .limit(50)
-      },
-      Some("""WITH toks AS (
-             |  SELECT doc_id, string_split(lower(text), ' ') AS t
-             |  FROM documents),
-             |pos AS (
-             |  SELECT doc_id, i, t[i] AS w
-             |  FROM toks, UNNEST(generate_series(1, len(t))) AS u(i)),
-             |a AS (SELECT doc_id, i AS ia FROM pos WHERE w = 'hash'),
-             |b AS (SELECT doc_id, i AS ib FROM pos WHERE w = 'join')
-             |SELECT doc_id,
-             |  CAST(min(abs(ia - ib)) AS BIGINT) AS min_dist,
-             |  count(*) AS n_pairs
-             |FROM a JOIN b USING (doc_id)
-             |GROUP BY doc_id
-             |ORDER BY min_dist, doc_id LIMIT 50""".stripMargin)),
 
     // INT8 quantization recall eval: per query, recall@10 of the PURE
     // int8-ranked KNN (no exact rescore — this measures what quantization
@@ -826,49 +646,6 @@ object PipelineQueries {
            |GROUP BY vec_id ORDER BY n_k DESC, vec_id LIMIT 20""".stripMargin
       }),
 
-    // Loss-mask span extraction: maximal consecutive runs of blocklisted
-    // tokens per doc, as (start, end) token offsets — what a trainer needs
-    // to EXCLUDE from the loss (or a redactor needs to overwrite) rather
-    // than the per-doc counts q231 reports. Runs via the islands trick
-    // (position − dense rank is constant within a run) — one window over
-    // the ALREADY-FILTERED hit positions, never the full token stream.
-    Entry("q259_mask_spans",
-      (s, d) => {
-        val blocked = Seq("slow", "drop", "stale")
-        val hits = Tables.documents(s, d)
-          .select(col("doc_id"),
-            posexplode(Fns.tokens(col("text"))).as(Seq("i", "w")))
-          .filter(col("w").isin(blocked: _*))
-        hits
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("doc_id")).orderBy(col("i"))))
-          .withColumn("island", col("i") - col("rn"))
-          .groupBy(col("doc_id"), col("island"))
-          .agg(min(col("i")).cast("long").as("start_tok"),
-            max(col("i")).cast("long").as("end_tok"),
-            count(lit(1)).as("span_len"))
-          .filter(col("span_len") >= 2)
-          .select(col("doc_id"), col("start_tok"), col("end_tok"),
-            col("span_len"))
-          .orderBy(col("doc_id"), col("start_tok"))
-          .limit(100)
-      },
-      Some("""WITH pos AS (
-             |  SELECT doc_id, i - 1 AS i, t[i] AS w FROM (
-             |    SELECT doc_id, string_split(lower(text), ' ') AS t
-             |    FROM documents),
-             |    UNNEST(generate_series(1, len(t))) AS u(i)),
-             |hits AS (
-             |  SELECT doc_id, i,
-             |    row_number() OVER (PARTITION BY doc_id ORDER BY i) AS rn
-             |  FROM pos WHERE w IN ('slow', 'drop', 'stale')),
-             |spans AS (
-             |  SELECT doc_id, CAST(min(i) AS BIGINT) AS start_tok,
-             |    CAST(max(i) AS BIGINT) AS end_tok,
-             |    count(*) AS span_len
-             |  FROM hits GROUP BY doc_id, i - rn)
-             |SELECT * FROM spans WHERE span_len >= 2
-             |ORDER BY doc_id, start_tok LIMIT 100""".stripMargin)),
 
     // Epoch-aware mixing plan (Muennighoff data-constrained scaling): give
     // each source a QUALITY-proportional share of a budget that EXCEEDS
@@ -945,65 +722,6 @@ object PipelineQueries {
           graft.ops.TextAnalysis.langMarkers.values.flatten.toSeq
             .distinct.sorted.map(m => s"'$m'").mkString(", ")))),
 
-    // Greedy max-coverage selection: pick 5 documents that together cover
-    // the most distinct 3-shingles — the budgeted-coverage dual of q239's
-    // k-center (facility location picks SPREAD; max-coverage picks
-    // CONTENT). Each round scores marginal gain with one anti-join against
-    // the covered set (never rescans selected docs' shingles), argmax ties
-    // to the smaller doc_id; rounds localCheckpoint like every iterative
-    // op here. Oracle unrolls the same 5 rounds.
-    Entry("q266_greedy_coverage",
-      (s, d) => {
-        val sh = Tables.documents(s, d)
-          .select(col("doc_id"),
-            explode(array_distinct(Fns.shingles(Fns.tokens(col("text")), 3)))
-              .as("shingle"))
-          .localCheckpoint(true)
-        var covered = sh.filter(lit(false)).select(col("shingle"))
-          .localCheckpoint(true)
-        val picks = (1 to 5).map { r =>
-          // covered is ≤ |selected docs| × shingles-per-doc — broadcast it
-          // so the marginal-gain anti-join stays map-side over the corpus
-          val gain = sh.join(broadcast(covered), Seq("shingle"), "left_anti")
-            .groupBy(col("doc_id")).agg(count(lit(1)).as("gain"))
-            .orderBy(desc("gain"), col("doc_id")).limit(1)
-            .localCheckpoint(true)
-          covered = covered
-            .union(sh.join(gain.select(col("doc_id")), "doc_id")
-              .select(col("shingle")))
-            .distinct().localCheckpoint(true)
-          gain.select(lit(r).as("round"), col("doc_id"), col("gain"))
-        }
-        picks.reduce(_.union(_)).orderBy(col("round"))
-      },
-      Some {
-        val rounds = (1 to 5).map { r =>
-          val prev = s"cov${r - 1}"
-          s"""g$r AS (
-             |  SELECT doc_id, count(*) AS gain FROM sh
-             |  WHERE shingle NOT IN (SELECT shingle FROM $prev)
-             |  GROUP BY doc_id ORDER BY gain DESC, doc_id LIMIT 1),
-             |cov$r AS (
-             |  SELECT shingle FROM $prev
-             |  UNION
-             |  SELECT shingle FROM sh WHERE doc_id = (SELECT doc_id FROM g$r))""".stripMargin
-        }.mkString(",\n")
-        val out = (1 to 5)
-          .map(r => s"SELECT $r AS round, doc_id, gain FROM g$r")
-          .mkString("\nUNION ALL ")
-        s"""WITH toks AS (
-           |  SELECT doc_id, string_split(lower(text), ' ') AS t
-           |  FROM documents),
-           |sh AS (
-           |  SELECT DISTINCT doc_id,
-           |    unnest(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-           |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-           |  FROM toks),
-           |cov0 AS (SELECT shingle FROM sh WHERE 1 = 0),
-           |$rounds
-           |$out
-           |ORDER BY round""".stripMargin
-      }),
 
     // SimHash method eval: precision/recall of 16-bit SimHash (hamming ≤
     // 3, the q44 detector) against exact-Jaccard ≥ 0.5 ground truth (the
@@ -1183,78 +901,6 @@ object PipelineQueries {
            |  count(*)::DOUBLE / (k * 8) AS recall
            |FROM grid WHERE rank_e <= k AND rank_i <= k
            |GROUP BY k ORDER BY k""".stripMargin
-      }),
-
-    // Heaps' law fit: vocabulary-growth exponent β from V(N) = K·N^β,
-    // regressed over 8 cumulative corpus checkpoints (distinct 3-shingles
-    // vs tokens seen) — with q229's Zipf slope, the pair of exponents
-    // that characterizes whether a corpus grows like natural text (β ≈
-    // 0.5–0.7) or like templated output (β → 0). First-occurrence doc per
-    // shingle is ONE agg; each checkpoint is a conditional sum against the
-    // 8-row broadcast grid — no per-checkpoint rescan, no running window.
-    Entry("q271_heaps_fit",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), size(Fns.tokens(col("text"))).cast("long")
-            .as("n_tok"))
-          .localCheckpoint(true)
-        val sh = Tables.documents(s, d)
-          .select(col("doc_id"),
-            explode(array_distinct(Fns.shingles(Fns.tokens(col("text")), 3)))
-              .as("shingle"))
-          .groupBy(col("shingle")).agg(min(col("doc_id")).as("fd"))
-        val maxDoc = docs.agg(max(col("doc_id")).as("mx"))
-        val grid = maxDoc.select(explode(array((1 to 8).map(lit): _*)).as("k"),
-            col("mx"))
-          .select(col("k"), floor(col("mx") * col("k") / 8.0).cast("long")
-            .as("cp"))
-          .localCheckpoint(true)
-        // shrink to the fd histogram (≤ #docs rows) BEFORE the ×8 grid
-        // expansion — the corpus-sized shingle relation is touched once
-        val fdHist = sh.groupBy(col("fd")).agg(count(lit(1)).as("c"))
-        val vocab = fdHist.crossJoin(broadcast(grid))
-          .groupBy(col("cp"))
-          .agg(sum(when(col("fd") <= col("cp"), col("c")).otherwise(0L))
-            .as("v"))
-        val toks = docs.crossJoin(broadcast(grid))
-          .groupBy(col("cp"))
-          .agg(sum(when(col("doc_id") <= col("cp"), col("n_tok"))
-            .otherwise(0L)).as("t"))
-        vocab.join(toks, "cp")
-          .agg(count(lit(1)).as("n_points"),
-            expr("regr_slope(ln(v), ln(t))").cast("float").as("beta"),
-            exp(expr("regr_intercept(ln(v), ln(t))")).cast("float").as("k"))
-      },
-      Some("""WITH docs AS (
-             |  SELECT doc_id,
-             |    CAST(len(string_split(lower(text), ' ')) AS BIGINT)
-             |      AS n_tok
-             |  FROM documents),
-             |toks0 AS (
-             |  SELECT doc_id, string_split(lower(text), ' ') AS t
-             |  FROM documents),
-             |sh AS (
-             |  SELECT shingle, min(doc_id) AS fd FROM (
-             |    SELECT DISTINCT doc_id,
-             |      unnest(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-             |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-             |    FROM toks0)
-             |  GROUP BY shingle),
-             |grid AS (
-             |  SELECT k, CAST(floor((SELECT max(doc_id) FROM docs) * k / 8.0)
-             |      AS BIGINT) AS cp
-             |  FROM (SELECT unnest(generate_series(1, 8)) AS k)),
-             |vocab AS (
-             |  SELECT cp, CAST(sum(CASE WHEN fd <= cp THEN 1 ELSE 0 END)
-             |      AS BIGINT) AS v
-             |  FROM sh CROSS JOIN grid GROUP BY cp),
-             |tk AS (
-             |  SELECT cp, CAST(sum(CASE WHEN doc_id <= cp THEN n_tok
-             |      ELSE 0 END) AS BIGINT) AS t
-             |  FROM docs CROSS JOIN grid GROUP BY cp)
-             |SELECT count(*) AS n_points,
-             |  CAST(regr_slope(ln(v), ln(t)) AS REAL) AS beta,
-             |  CAST(exp(regr_intercept(ln(v), ln(t))) AS REAL) AS k
-             |FROM vocab JOIN tk USING (cp)""".stripMargin))
+      })
   )
 }

@@ -196,7 +196,7 @@ object RefinementQueries {
         val delta = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
         val state = Dedup.bands(Dedup.minhashSignatures(
           Dedup.shingleRaw(corpus, "doc_id", "text", 3), 16), 16, 4)
-        // round 14 (r13 verdict #4): the folded state is DISCARDED here —
+        // the folded state is DISCARDED here —
         // only the delta matters — so the fold runs lazy
         // (materializeState = false: no eager corpus-sized checkpoint)
         // and the delta-sized CANDIDATE set is materialized once instead,

@@ -159,8 +159,8 @@ object TextQueries {
     * maintenance sinks, then ONE `Sinks.lshIndexDelete` call purges every
     * `doc_id % 7 = 0` from ALL of them — `pairTables` carries both derived
     * pair tables, so the verified state is covered by the same pending
-    * markers as the candidate feed (the round-11 verdict's by-convention
-    * hole, closed). Post-delete the verified table must equal the one-shot
+    * markers as the candidate feed (no caller convention keeps it in
+    * step). Post-delete the verified table must equal the one-shot
     * verified pipeline over the SURVIVOR corpus, which is what q345's
     * oracle replays — a victim's verified pair resurfacing anywhere in the
     * lineage is a hash mismatch. */
@@ -189,10 +189,10 @@ object TextQueries {
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  /** q341's serving session (round 13: the MAINTAINED-feed probe — q344's
+  /** q341's serving session (the MAINTAINED-feed probe — q344's
     * serve-from-the-maintained-table pattern applied to the LSH point
-    * probe, r12 verdict #2 — plus the request payload, fetched once per
-    * JVM as a live serving tier holds it), keyed by corpus dir. */
+    * probe — plus the request payload, fetched once per JVM as a live
+    * serving tier holds it), keyed by corpus dir. */
   private val lshServing = scala.collection.concurrent.TrieMap
     .empty[String, (graft.engine.Serving.LshServedProbeSession, Seq[(Any, String)])]
 
@@ -290,14 +290,14 @@ object TextQueries {
       },
       Some(lshCandidatePairsSql)),
 
-    // The MAINTAINED answer to q334's whole-corpus candidate question
-    // (round 12): the standing candidate-pair FEED the partitioned sink
-    // keeps (`pairsPath`) is exactly the banded candidate set, maintained
+    // The MAINTAINED answer to q334's whole-corpus candidate question:
+    // the standing candidate-pair FEED the partitioned sink keeps
+    // (`pairsPath`) is exactly the banded candidate set, maintained
     // by per-batch deltas (union-of-deltas == from-scratch candidates
-    // below the stop cap — the r11 parity pin), so serving the report is
+    // below the stop cap, as DedupSpec pins), so serving the report is
     // a BARE SCAN — the q343 cost class — where q334 pays a
     // corpus-proportional posting aggregation per query (its band history
-    // 0.33→0.89 s tracks the r10 fixture's switch to the partitioned
+    // 0.33→0.89 s tracks the fixture's switch to the partitioned
     // clustered layout: more files + partition discovery per scan — the
     // cost that a maintained feed amortizes away). Same oracle as q334,
     // verbatim. GDPR: this feed is the FIRST pairTables member of the
@@ -422,10 +422,10 @@ object TextQueries {
 
     // PER-REQUEST serving probe (the reference's live-index lookup shape,
     // memory_graph.py:8047, vs q334's whole-corpus report): ONE document's
-    // near-dup candidates. Round 12 compiled the banded probe plan once
-    // per session (LshProbeSession); round 13 (r12 verdict #2) notices the
-    // probe doc is ALREADY INGESTED — its candidate pairs are sitting in
-    // the MAINTAINED candidate feed (q346's standing table), so the banded
+    // near-dup candidates. A compiled banded probe plan per session
+    // (LshProbeSession) is not enough here: the probe doc is ALREADY
+    // INGESTED — its candidate pairs are sitting in the MAINTAINED
+    // candidate feed (q346's standing table), so the banded
     // posting aggregation + pair join the compiled probe still ran per
     // request (the 2-shuffle ~130 ms warm floor) recomputes a maintained
     // answer. Serving.LshServedProbeSession answers it the q344 way: one
@@ -477,8 +477,8 @@ object TextQueries {
       },
       Some(pointProbeCandidatesSql())),
 
-    // LIVE-SESSION SURVIVOR PROBE (round 12 — the generation-refresh
-    // story lifted into the oracle-checked surface): a serving session
+    // LIVE-SESSION SURVIVOR PROBE (the generation-refresh story lifted
+    // into the oracle-checked surface): a serving session
     // compiles its probe plan against the standing band table and SERVES
     // A REQUEST; then the GDPR cascade purges every doc_id % 7 = 0 from
     // that same table; then the SAME LIVE SESSION — no rebuild, no new
@@ -486,9 +486,9 @@ object TextQueries {
     // answer, and the oracle replays the probe pipeline over the SURVIVOR
     // corpus only: a victim's pair surfacing from the session's stale
     // pre-delete file listing is a hash mismatch. This is the
-    // serving-after-delete defect class (VERDICT r10/r11's cascade
-    // conventions) closed at the SESSION layer: the session polls the
-    // table's generation marker per request (one driver-side probe, no
+    // serving-after-delete defect class (a cascade held together by
+    // caller conventions) closed at the SESSION layer: the session polls
+    // the table's generation marker per request (one driver-side probe, no
     // job) and recompiles its cached template from a non-destructive
     // snapshot read on the bump. Reference bar: deletes are immediately
     // invisible to the live search path (memory_graph.py:9200-9459 —
@@ -550,8 +550,8 @@ object TextQueries {
         shingleK = 3, numHashes = 16, numBands = 4, threshold = 0.5),
       Some(lshVerifiedPairsSql())),
 
-    // The maintained twin of q20 (round 11 — the last step of the dedup
-    // serving lifecycle): a standing VERIFIED near-dup table kept by the
+    // The maintained twin of q20 (the last step of the dedup serving
+    // lifecycle): a standing VERIFIED near-dup table kept by the
     // streaming maintenance pair (lshIndexAppendPartitioned delta →
     // verifiedPairsUpsert exact-Jaccard fold), built here from two
     // micro-batches (even/odd doc ids) and then only READ. Verification
@@ -574,9 +574,9 @@ object TextQueries {
       },
       Some(lshVerifiedPairsSql())),
 
-    // GDPR cascade across the WHOLE derived lineage (round 12, the r11
-    // verdict's top item): ONE lshIndexDelete purges doc_id % 7 = 0 from
-    // the band table AND every derived pair table (candidate feed +
+    // GDPR cascade across the WHOLE derived lineage: ONE lshIndexDelete
+    // purges doc_id % 7 = 0 from the band table AND every derived pair
+    // table (candidate feed +
     // verified near-dup table) under per-table pending markers — no
     // caller convention left anywhere in the maintained dedup state
     // (reference bar: delete fans out across every store,
@@ -598,10 +598,10 @@ object TextQueries {
       },
       Some(lshVerifiedPairsSql(docsWhere = " WHERE doc_id % 7 <> 0"))),
 
-    // Per-request VERIFIED probe (round 11; round 12 consults the
-    // MAINTAINED table first — VERDICT r11 #3 — and serves it through the
-    // compiled-plan session, Serving.VerifiedProbeSession): the full
-    // serving answer to "is THIS doc a near-dup, now". Both probe docs are
+    // Per-request VERIFIED probe (consulting the MAINTAINED table first
+    // and served through the compiled-plan session,
+    // Serving.VerifiedProbeSession): the full serving answer to "is THIS
+    // doc a near-dup, now". Both probe docs are
     // ALREADY INGESTED (present in the corpus with identical text), so the
     // request is answered from the standing verified table (q343's state)
     // by a bare pushed scan — a literal IN on doc_a/doc_b that reaches the
@@ -634,7 +634,7 @@ object TextQueries {
             "doc_id", "text", corpus.schema("doc_id").dataType,
             shingleK = 3, numHashes = 16, numBands = 4, threshold = 0.5,
             verifiedPath = Some(base + "/verified"),
-            // round 13: the novel-text fallback and the ingested-ness
+            // the novel-text fallback and the ingested-ness
             // check are generation-aware too — ALL the session's handles
             // refresh under maintenance, not just the verified fetch
             corpusPath = Some(d + "/documents.parquet"),
@@ -1128,38 +1128,6 @@ object TextQueries {
               |WHERE r.sample_rank <= q.q
               |ORDER BY r.domain, r.sample_rank""".stripMargin)),
 
-    // The first BPE merge round of tokenizer training: adjacent character
-    // pairs within words, weighted by corpus word frequency — top 20 merge
-    // candidates. Pair generation runs over DISTINCT words (the vocab,
-    // orders of magnitude smaller than the corpus), then weights by the
-    // word-count aggregate: two shuffles total, both on small keys.
-    Entry("q137_bpe_pairs",
-      (s, d) => {
-        import graft.functions.Fns
-        val words = Tables.documents(s, d)
-          .select(explode(Fns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) >= 2)
-          .groupBy("w").agg(count(lit(1)).as("c"))
-        words
-          .select(col("c"), explode(expr(
-            """transform(sequence(1, length(w) - 1),
-              |  i -> concat(substring(w, i, 1), substring(w, i + 1, 1)))"""
-              .stripMargin)).as("pair"))
-          .groupBy("pair").agg(sum(col("c")).as("n"))
-          .orderBy(desc("n"), col("pair"))
-          .limit(20)
-      },
-      Some("""WITH words AS (
-             |  SELECT w, count(*) AS c FROM (
-             |    SELECT unnest(string_split(lower(text), ' ')) AS w
-             |    FROM documents)
-             |  WHERE length(w) >= 2 GROUP BY w),
-             |pairs AS (
-             |  SELECT c, unnest(list_transform(generate_series(1, length(w) - 1),
-             |    i -> substr(w, i, 1) || substr(w, i + 1, 1))) AS pair
-             |  FROM words)
-             |SELECT pair, CAST(sum(c) AS BIGINT) AS n FROM pairs
-             |GROUP BY pair ORDER BY n DESC, pair LIMIT 20""".stripMargin)),
 
     // Curriculum phases: per source domain, quality quartiles (phase 1 =
     // cleanest) with a deterministic hash60 shuffle inside each phase —
@@ -1270,57 +1238,6 @@ object TextQueries {
              |FROM tk JOIN cnt USING (w)
              |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
-    // χ² keyness: the terms that CHARACTERIZE each source domain — the
-    // one-cell chi-squared (observed − expected)²/expected of each
-    // (domain, term) against independence, top 10 per domain. Corpus
-    // analysis for mixture/curation design. All arithmetic is products
-    // and divisions of exact counts (no transcendentals), so the doubles
-    // hash-match. Restricted to terms with ≥ 5 corpus occurrences (the
-    // textbook χ² validity floor, and it keeps the ranking stable).
-    Entry("q146_domain_keyness",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        import graft.functions.Fns
-        val tk = Tables.documents(s, d)
-          .select(col("source"), explode(Fns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0)
-          .localCheckpoint(true) // read by three aggregations below
-        val bySw = tk.groupBy(col("source"), col("w")).agg(count(lit(1)).as("n_sw"))
-        val byS = tk.groupBy(col("source")).agg(count(lit(1)).as("n_s"))
-        val byW = tk.groupBy(col("w")).agg(count(lit(1)).as("n_w"))
-          .filter(col("n_w") >= 5)
-        val total = tk.count().toDouble
-        val e = (col("n_s").cast("double") * col("n_w")) / lit(total)
-        val ranked = bySw.join(byW, "w").join(broadcast(byS), "source")
-          .withColumn("chi2", (col("n_sw") - e) * (col("n_sw") - e) / e)
-          .withColumn("rk", row_number().over(Window.partitionBy(col("source"))
-            .orderBy(desc("chi2"), col("w"))))
-          .filter(col("rk") <= 10)
-        ranked.select(col("source"), col("w"), col("n_sw"),
-            col("chi2"), col("rk").cast("int").as("rk"))
-          .orderBy(col("source"), col("rk"))
-      },
-      Some("""WITH tk AS (
-             |  SELECT source, w FROM (
-             |    SELECT source, unnest(string_split(lower(text), ' ')) AS w
-             |    FROM documents) WHERE length(w) > 0),
-             |by_sw AS (SELECT source, w, count(*) AS n_sw FROM tk GROUP BY 1, 2),
-             |by_s AS (SELECT source, count(*) AS n_s FROM tk GROUP BY 1),
-             |by_w AS (SELECT w, count(*) AS n_w FROM tk GROUP BY 1
-             |         HAVING count(*) >= 5),
-             |tot AS (SELECT count(*)::DOUBLE AS t FROM tk),
-             |scored AS (
-             |  SELECT sw.source, sw.w, sw.n_sw,
-             |    (sw.n_sw - (s.n_s::DOUBLE * w.n_w) / (SELECT t FROM tot))
-             |      * (sw.n_sw - (s.n_s::DOUBLE * w.n_w) / (SELECT t FROM tot))
-             |      / ((s.n_s::DOUBLE * w.n_w) / (SELECT t FROM tot)) AS chi2
-             |  FROM by_sw sw JOIN by_w w USING (w) JOIN by_s s USING (source))
-             |SELECT source, w, n_sw, chi2, rk FROM (
-             |  SELECT source, w, n_sw, chi2,
-             |    CAST(row_number() OVER (PARTITION BY source
-             |      ORDER BY chi2 DESC, w) AS INT) AS rk
-             |  FROM scored) WHERE rk <= 10
-             |ORDER BY source, rk""".stripMargin)),
 
     // BPE merge training, 3 rounds: the actual tokenizer-training loop —
     // count adjacent symbol pairs over the frequency-weighted vocab, merge

@@ -263,9 +263,9 @@ object VectorQueries {
     // cluster-mass stats refreshed) — the reference's delete removes
     // points from its vector collections as part of every memory delete
     // (memory_graph.py:9200-9459, :14079-14213). The post-delete probe
-    // routes through IvfIndex.probePoint (round 12 — VERDICT r11 #1: the
-    // point of this entry is the DELETE, so its probe must be the serving
-    // shape, not the superseded broadcast join): the nProbe centroid ids
+    // routes through IvfIndex.probePoint (the point of this entry is the
+    // DELETE, so its probe must be the serving shape, not a broadcast
+    // join): the nProbe centroid ids
     // reach the purged standing table as a pushed literal IN
     // (require()-pinned), file-skipping under the delete rewrite's
     // preserved centroid clustering. The oracle replays the full-corpus
@@ -328,9 +328,9 @@ object VectorQueries {
               |WHERE a.vec_id % 5 <> 0
               |ORDER BY score DESC, a.vec_id LIMIT 10""".stripMargin)),
 
-    // PER-REQUEST ANN point probe (the IVF twin of q341, VERDICT r10 #2;
-    // round 12 serves it through the compiled-plan session — VERDICT r11
-    // #2): the same multiprobe question as q336 answered by
+    // PER-REQUEST ANN point probe (the IVF twin of q341, served through
+    // the compiled-plan session): the same multiprobe question as q336
+    // answered by
     // graft.engine.Serving.IvfServeSession. The whole request shape —
     // pushed centroid IN on the standing assignment, broadcast of the
     // query vector, scoring, top-10 — is analyzed/optimized ONCE per

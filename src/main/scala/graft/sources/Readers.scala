@@ -79,8 +79,8 @@ object Readers {
     * snapshot. Earlier rounds HEALED here (renamed the orphan back),
     * which was only safe under a no-live-merge convention: a read racing
     * a live merge's retire-to-promote window would have promoted the
-    * retired copy back under the writer and aborted its promote (ADVICE
-    * r11 #1's second half) — the union read has no such window. Explicit
+    * retired copy back under the writer and aborted its promote — the
+    * union read has no such window. Explicit
     * recovery stays with [[Writers.healPartitions]]. The no-crash fast
     * path is one existence probe + a plain read, as before.
     *

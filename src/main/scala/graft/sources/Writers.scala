@@ -387,7 +387,7 @@ object Writers {
     * the same table — a heal observing the retire-to-promote window would
     * promote the retired copy back under the writer. READERS never need
     * this: [[Readers.table]] unions orphaned retired partitions in place
-    * without renaming (ADVICE r11 #1, closed). */
+    * without renaming. */
   def healPartitions(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -449,7 +449,7 @@ object Writers {
     * read-side of the swap contract — a reader that instead HEALED
     * (renamed `.swap.old` back) while a swap was live would yank the
     * retired copy out from under the writer's promote, aborting the
-    * maintenance write (ADVICE r11). All renames stay with the single
+    * maintenance write. All renames stay with the single
     * writer ([[swapWrite]] self-heals on its next call;
     * [[healSwap]] remains for explicit RECOVERY entry points that know no
     * writer is live). The returned path is a snapshot pin: a `.swap.old`
@@ -521,83 +521,6 @@ object Writers {
         val one = scoped.repartition(partitionCols.map(col): _*)
         if (sortCols.isEmpty) one
         else one.sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-    }
-  }
-
-  /** Versioned snapshot table — poor-man's time travel on plain parquet:
-    * every publish lands a complete new `v=N` directory, then flips the
-    * `_LATEST` pointer. Readers resolve the pointer (or pin an explicit
-    * version), so a publish is invisible until complete, historical
-    * versions stay queryable for audits (the difference of two pinned
-    * reads is the changelog), and `pruneVersions` bounds
-    * storage. A missing pointer (crash in the flip window) falls back to
-    * the highest complete version. */
-  object Versioned {
-    private def fs(spark: org.apache.spark.sql.SparkSession, path: String) =
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    def listVersions(spark: org.apache.spark.sql.SparkSession, path: String): Seq[Long] = {
-      val f = fs(spark, path)
-      val dir = new org.apache.hadoop.fs.Path(path)
-      if (!f.exists(dir)) Seq.empty
-      else f.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-        .map(_.getPath.getName.stripPrefix("v=").toLong).sorted
-    }
-
-    def latestVersion(spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] = {
-      val f = fs(spark, path)
-      val ptr = new org.apache.hadoop.fs.Path(path, "_LATEST")
-      val pointed =
-        if (!f.exists(ptr)) None
-        else {
-          val in = f.open(ptr)
-          try Some(new String(
-            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-          finally in.close()
-        }
-      // fall back to the newest complete directory if the pointer is
-      // missing (crash in the flip window) or stale-ahead (never happens
-      // in-order, but cheap to guard)
-      pointed.filter(v => f.exists(new org.apache.hadoop.fs.Path(path, s"v=$v")))
-        .orElse(listVersions(spark, path).lastOption)
-    }
-
-    /** Publish `df` as the next version; returns the version number. */
-    def publish(df: DataFrame, path: String): Long = {
-      val spark = df.sparkSession
-      val f = fs(spark, path)
-      val next = latestVersion(spark, path).getOrElse(0L) + 1L
-      df.write.mode(SaveMode.Overwrite).parquet(s"$path/v=$next")
-      val tmp = new org.apache.hadoop.fs.Path(path, s"_LATEST.tmp$next")
-      val out = f.create(tmp, true)
-      try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val ptr = new org.apache.hadoop.fs.Path(path, "_LATEST")
-      if (f.exists(ptr)) f.delete(ptr, false)
-      f.rename(tmp, ptr)
-      next
-    }
-
-    /** Read a pinned version, or the latest when `version` is None. */
-    def read(spark: org.apache.spark.sql.SparkSession, path: String,
-             version: Option[Long] = None): DataFrame = {
-      val v = version.orElse(latestVersion(spark, path)).getOrElse(
-        throw new IllegalArgumentException(s"no versions published at $path"))
-      spark.read.parquet(s"$path/v=$v")
-    }
-
-    /** Drop all but the newest `keep` versions (never the pointed-at one). */
-    def pruneVersions(spark: org.apache.spark.sql.SparkSession, path: String,
-                      keep: Int): Unit = {
-      require(keep >= 1, "must keep at least one version")
-      val f = fs(spark, path)
-      val current = latestVersion(spark, path)
-      listVersions(spark, path).dropRight(keep)
-        .filterNot(current.contains)
-        .foreach(v => f.delete(new org.apache.hadoop.fs.Path(path, s"v=$v"), true))
     }
   }
 

@@ -85,8 +85,8 @@ object Sinks {
     * `versionCol` wins with a content-hash tiebreaker, so a post-failure
     * replay of the same rows always picks the same row — two rows sharing
     * (key, version) would otherwise be ordered by partition layout.
-    * Hashes only hashable columns (xxhash64 rejects MapType — the
-    * metadata-map crash Skew.rowSalt guards against identically). */
+    * Hashes only hashable columns ([[graft.functions.Fns.hashableCols]]:
+    * xxhash64 rejects MapType, so a metadata-map column would crash it). */
   private def dedupBatch(batch: DataFrame, key: String,
                          versionCol: Option[String]): DataFrame =
     versionCol match {
@@ -281,7 +281,7 @@ object Sinks {
     // carry compact band-key ranges, so Dedup.probeNearDups' pushed
     // literal IN skips files/row groups instead of scanning the standing
     // table — the layout its contract documents, established BY the
-    // maintenance sink (VERDICT r10 #1)
+    // maintenance sink
     Writers.upsertPartitioned(spark, path, newBands, "doc_id", partitionCols,
       sortCols = Seq("band_idx", "band_key"))
     val standing = spark.read.schema(newBands.schema).parquet(path)
@@ -335,8 +335,8 @@ object Sinks {
     // coverage assert: a candidate doc ABSENT from `docs` (batch folded
     // into the band table but not yet into the corpus, or any
     // ingest-ordering skew) would be silently dropped by jaccardVerifySized's
-    // join, breaking the documented one-shot parity with no error
-    // (ADVICE r11) — fail loudly instead. Both counts are
+    // join, breaking the documented one-shot parity with no error — fail
+    // loudly instead. Both counts are
     // candidate-proportional (candTexts is the persisted semi-join).
     val nCand = candDocs.count()
     val nMatched = candTexts.select(col(idCol)).distinct().count()
@@ -406,7 +406,7 @@ object Sinks {
         // the unpartitioned rewrite restores the SAME clustered layout as
         // the partitioned path (range-disjoint, file-sorted) — a delete on
         // an unpartitioned standing table must not silently destroy the
-        // probe's file-skipping (ADVICE r11)
+        // probe's file-skipping
         Writers.swapWrite(
           if (layout.isEmpty) kept
           else kept.repartitionByRange(layout.map(col): _*)
@@ -436,9 +436,8 @@ object Sinks {
     * purge is atomic, but a crash between the band purge and the LAST
     * pair purge would leave some victims' pairs standing with only a
     * replay CONVENTION to fix it — for the GDPR path that must be a
-    * marker, not a convention (the round-11 verdict's exact defect class,
-    * one table further down the lineage). The victim snapshot — ONE
-    * materialized id set, so every table sees the SAME victims — is
+    * marker, not a convention. The victim snapshot — ONE materialized id
+    * set, so every table sees the SAME victims — is
     * published to EVERY pair table's `<table> + ".delete.pending"`
     * (atomic tmp→rename per table) BEFORE the band purge, and each
     * table's marker is cleared only after ITS purge: at any crash point

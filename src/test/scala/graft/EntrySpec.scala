@@ -165,7 +165,7 @@ class EntrySpec extends SparkSpec {
     assume(new java.io.File(s"$sf01/documents.parquet").exists())
     val MaxUnpartitionedRows = 500L
     val family = Set("q103_rrf_fusion", "q116_hybrid_search",
-      "q228_rank_agreement", "q229_zipf_fit", "q242_jackknife_source",
+      "q228_rank_agreement", "q242_jackknife_source",
       "q246_dataset_card", "q260_epoch_plan", "q307_split_stability")
     assert(family.subsetOf(SparkEntry.queries.keySet))
     val current = new java.util.concurrent.atomic.AtomicReference[String]("")

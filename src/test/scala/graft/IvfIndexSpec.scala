@@ -40,7 +40,7 @@ class IvfIndexSpec extends SparkSpec {
     val idx = IvfIndex.build(chunks, "chunk_id", "embedding", nCentroids = 8)
     val q = Seq(Tuple1(memsSeq.head.content)).toDF("t")
       .select(udf((t: String) => new graft.engine.HashEmbedder(64).embed(t)).apply($"t").as("qvec"))
-    val pruned = IvfIndex.prunedCorpus(idx, q, nProbe = 2)
+    val pruned = IvfIndex.probePoint(idx.assigned, idx.centroids, q, nProbe = 2)
     assert(pruned.count() > 0)
     assert(pruned.count() < chunks.count())
   }
@@ -69,7 +69,7 @@ class IvfIndexSpec extends SparkSpec {
     val late = memsSeq.last
     val q = Seq(Tuple1(late.content)).toDF("t")
       .select(udf((t: String) => new graft.engine.HashEmbedder(64).embed(t)).apply($"t").as("qvec"))
-    val pruned = IvfIndex.prunedCorpus(grown, q, nProbe = 8)
+    val pruned = IvfIndex.probePoint(grown.assigned, grown.centroids, q, nProbe = 8)
     assert(pruned.count() === n, "nProbe=all over grown index must cover every row")
     // upsert semantics: re-appending an already-indexed batch (at-least-once
     // redelivery) must not duplicate assignment rows

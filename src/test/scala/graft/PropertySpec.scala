@@ -186,32 +186,6 @@ class PropertySpec extends SparkSpec {
     }, minTests = 20)
   }
 
-  test("counter fold: ANY batch split and order == one batch (late-event algebra)") {
-    import java.sql.Timestamp
-    import graft.domain.Schemas.AccessEvent
-    import graft.streaming.Counters
-    val evGen = for {
-      n <- Gen.choose(1, 25)
-      evs <- Gen.listOfN(n, Gen.zip(Gen.choose(0, 200), Gen.choose(0.0, 1.0)))
-      cut1 <- Gen.choose(0, n)
-      cut2 <- Gen.choose(0, n)
-    } yield (evs.zipWithIndex.map { case ((day, c), i) =>
-      AccessEvent(s"e$i", "m", "u", "retrieval", 0.5, c,
-        new Timestamp(day.toLong * 86400000L)) }, cut1 min cut2, cut1 max cut2)
-    check(forAll(evGen) { case (evs, a, b) =>
-      // fold() requires non-empty batches — only exercise proper 3-way splits
-      if (a == 0 || b == a || b == evs.length) true
-      else {
-        val whole = Counters.fold(None, evs)
-        val s3 = Counters.fold(Some(Counters.fold(Some(Counters.fold(None,
-          evs.take(a))), evs.slice(a, b))), evs.drop(b))
-        math.abs(s3.ema30d - whole.ema30d) < 1e-9 &&
-          math.abs(s3.confWeighted30d - whole.confWeighted30d) < 1e-9 &&
-          s3.hitTotal == whole.hitTotal && s3.lastTs == whole.lastTs
-      }
-    }, minTests = 40)
-  }
-
   test("TopK aggregator == sort-take model under random data and partitioning") {
     val rowsGen = for {
       n <- Gen.choose(1, 300)

@@ -9,19 +9,12 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.domain.Schemas.Message
 import graft.streaming.Sessions
 
-/** Top-level so Spark can derive a product Encoder (local case classes
-  * inside a test body have no TypeTag the encoder machinery accepts).
-  */
-case class ParityEv(event_id: Long, user_id: Long, ts: Timestamp)
-
 /** Fixture-scale streaming↔batch parity (the gap the 5-row StreamingSpec
-  * fixtures can't close): the T2–T4 session pipeline and the left-outer
-  * interval join are driven over the sf0.1 tables in MemoryStream chunks
-  * and must reproduce their batch twins exactly — q48's declared batch
-  * computation for sessions, and a plain batch left join with the same
-  * lookback predicate for enrichment. This pins the cross-micro-batch
-  * state threading (rolling summary fold, join state retention) at
-  * thousands of groups / a hundred thousand events, not toy counts.
+  * fixtures can't close): the T2–T4 session pipeline is driven over the
+  * sf0.1 documents in MemoryStream chunks and must reproduce q48's declared
+  * batch computation exactly. This pins the cross-micro-batch state
+  * threading (the rolling summary fold) at thousands of groups, not toy
+  * counts.
   */
 class StreamingFixtureParitySpec extends SparkSpec {
   import spark.implicits._
@@ -75,79 +68,6 @@ class StreamingFixtureParitySpec extends SparkSpec {
       }
       assert(diverged.isEmpty,
         s"${diverged.size} session batches diverged, e.g. ${diverged.take(3)}")
-    } finally query.stop()
-  }
-
-  test("intervalJoinOuter purchases×views over sf0.1 events in ts-ordered " +
-    "chunks equals the batch left join") {
-    assume(new java.io.File(s"$sf01/events.parquet").exists())
-    implicit val sqlCtx = spark.sqlContext
-    def side(kind: String): Array[ParityEv] = Tables.events(spark, sf01)
-      .filter(col("event_type") === kind)
-      .select(col("event_id"), col("user_id"), col("ts"))
-      .orderBy(col("ts"), col("event_id"))
-      .as[ParityEv].collect()
-    val purchases = side("purchase")
-    val views = side("view")
-
-    val pIn = MemoryStream[ParityEv]
-    val vIn = MemoryStream[ParityEv]
-    val joined = graft.streaming.Enrichment.intervalJoinOuter(
-      pIn.toDF(), vIn.toDF(), keyCol = "user_id", tsCol = "ts",
-      lookback = "10 minutes", allowedLateness = "10 minutes")
-    val query = joined.writeStream.format("memory").queryName("parity_enrich")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // chunk BOTH streams on the same weekly time boundaries so the two
-      // watermarks advance together (a lopsided feed would stall the
-      // outer-side emission, not break correctness — but aligned chunks
-      // exercise the realistic co-advancing case)
-      val cuts = (1 to 4).map(w =>
-        Timestamp.valueOf(f"2024-01-${1 + w * 7}%02d 00:00:00"))
-      def chunksOf(evs: Array[ParityEv]): Seq[Seq[ParityEv]] = {
-        val bounds = cuts :+ Timestamp.valueOf("2025-01-01 00:00:00")
-        var rest = evs.toSeq
-        bounds.map { cut =>
-          val (in, out) = rest.span(_.ts.before(cut))
-          rest = out
-          in
-        }
-      }
-      chunksOf(purchases).zip(chunksOf(views)).foreach { case (pc, vc) =>
-        pIn.addData(pc); vIn.addData(vc)
-        query.processAllAvailable()
-      }
-      // sentinel far-future events on both streams close every join window
-      val sentinel = ParityEv(-1L, -1L, Timestamp.valueOf("2024-06-01 00:00:00"))
-      pIn.addData(sentinel); vIn.addData(sentinel)
-      query.processAllAvailable()
-      pIn.addData(sentinel.copy(ts = Timestamp.valueOf("2024-07-01 00:00:00")))
-      vIn.addData(sentinel.copy(ts = Timestamp.valueOf("2024-07-01 00:00:00")))
-      query.processAllAvailable()
-
-      val streamed = spark.table("parity_enrich")
-        .filter(col("user_id") =!= -1L)
-        .select(col("event_id"), col("r_event_id"))
-        .collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-        .toSet
-      // batch twin: same lookback predicate as a plain left-outer join
-      val p = purchases.toSeq.toDF("event_id", "user_id", "ts")
-      val v = views.toSeq.toDF("event_id", "user_id", "ts")
-        .select(col("event_id").as("r_event_id"), col("user_id").as("r_user_id"),
-          col("ts").as("r_ts"))
-      val batch = p.join(v,
-          col("user_id") === col("r_user_id") &&
-            col("r_ts") >= col("ts") - expr("INTERVAL 10 minutes") &&
-            col("r_ts") <= col("ts"),
-          "left_outer")
-        .select(col("event_id"), col("r_event_id"))
-        .collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-        .toSet
-      assert(streamed === batch,
-        s"streamed ${streamed.size} pairs vs batch ${batch.size}; " +
-          s"missing=${(batch -- streamed).take(5)} extra=${(streamed -- batch).take(5)}")
     } finally query.stop()
   }
 }

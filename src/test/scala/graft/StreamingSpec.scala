@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.domain.Fixtures
 import graft.domain.Schemas.{AccessEvent, Message}
 import graft.ops.Retrieval
-import graft.streaming.{Counters, Sessions}
+import graft.streaming.Sessions
 import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkSpec {
@@ -94,37 +94,6 @@ class StreamingSpec extends SparkSpec {
       assert(out(0).memory_candidates === Seq("m3 alpha beta gamma delta"))
       assert(out(1).memory_candidates === Seq("m20 epsilon zeta eta theta"))
       assert(out(2).memory_candidates.isEmpty)
-    } finally query.stop()
-  }
-
-  test("counter stream: decay-at-update equals batch decay-at-read") {
-    implicit val sqlCtx = spark.sqlContext
-    val events = Fixtures.accessEvents(spark, n = 100, memCount = 8).collect()
-    val input = MemoryStream[AccessEvent]
-    val query = Counters.counterStream(spark, input.toDS())
-      .writeStream.format("memory").queryName("counters_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      input.addData(events)
-      query.processAllAvailable()
-      val streamed = spark.table("counters_out")
-        .as[Counters.CounterUpdate].collect()
-        .groupBy(_.memory_id).map { case (k, v) => k -> v.last }.toMap
-
-      // batch twin: conf-weighted EMA decayed to each memory's LAST event time
-      val evDf = Fixtures.accessEvents(spark, n = 100, memCount = 8).toDF()
-      val lastTs = evDf.groupBy($"memory_id").agg(max($"ts").as("last_ts"))
-      val batch = evDf.join(lastTs, "memory_id")
-        .groupBy($"memory_id")
-        .agg(sum($"confidence" *
-          pow(lit(0.5), (unix_timestamp($"last_ts") - unix_timestamp($"ts")) /
-            86400.0 / 30.0)).as("conf_w"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-
-      streamed.foreach { case (mid, upd) =>
-        assert(math.abs(upd.conf_weighted_30d - batch(mid)) < 1e-6,
-          s"$mid: streamed ${upd.conf_weighted_30d} vs batch ${batch(mid)}")
-      }
     } finally query.stop()
   }
 
@@ -404,78 +373,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("stream-stream interval join: purchases pick up same-user views inside the lookback only") {
-    implicit val sqlCtx = spark.sqlContext
-    val purchases = MemoryStream[AccessEvent]
-    val views = MemoryStream[AccessEvent]
-    val joined = graft.streaming.Enrichment.intervalJoin(
-      purchases.toDF(), views.toDF(), keyCol = "user_id", tsCol = "ts",
-      lookback = "10 minutes", allowedLateness = "5 minutes")
-    val query = joined.writeStream.format("memory").queryName("enrich_out")
-      .outputMode("append").start()
-    try {
-      def ev(id: String, user: String, t: String) =
-        AccessEvent(id, "m0", user, "x", 0.5, 0.5, Timestamp.valueOf(t))
-      views.addData(
-        ev("v1", "alice", "2024-01-01 09:55:00"),  // in window for p1
-        ev("v2", "alice", "2024-01-01 09:40:00"),  // too old for p1
-        ev("v3", "bob", "2024-01-01 09:58:00"),    // other user
-        ev("v4", "alice", "2024-01-01 10:01:00"))  // after the purchase
-      purchases.addData(ev("p1", "alice", "2024-01-01 10:00:00"))
-      query.processAllAvailable()
-      // advance both watermarks far enough to close p1's window
-      views.addData(ev("v9", "carol", "2024-01-01 11:00:00"))
-      purchases.addData(ev("p9", "carol", "2024-01-01 11:00:00"))
-      query.processAllAvailable()
-      val out = spark.table("enrich_out")
-        .select("event_id", "r_event_id").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(out.contains(("p1", "v1")), s"in-window view not joined: $out")
-      assert(!out.exists(_._2 == "v2"), "view older than the lookback joined")
-      assert(!out.exists(_._2 == "v3"), "cross-user view joined")
-      assert(!out.exists(_._2 == "v4"), "future view joined")
-    } finally query.stop()
-  }
-
-  test("left-outer interval join: unmatched purchases emit with nulls " +
-       "once the watermark proves no view can arrive") {
-    implicit val sqlCtx = spark.sqlContext
-    val purchases = MemoryStream[AccessEvent]
-    val views = MemoryStream[AccessEvent]
-    val joined = graft.streaming.Enrichment.intervalJoinOuter(
-      purchases.toDF(), views.toDF(), keyCol = "user_id", tsCol = "ts",
-      lookback = "10 minutes", allowedLateness = "5 minutes")
-    val query = joined.writeStream.format("memory").queryName("outer_out")
-      .outputMode("append").start()
-    try {
-      def ev(id: String, user: String, t: String) =
-        AccessEvent(id, "m0", user, "x", 0.5, 0.5, Timestamp.valueOf(t))
-      views.addData(ev("v1", "alice", "2024-01-01 09:55:00"))
-      purchases.addData(
-        ev("p1", "alice", "2024-01-01 10:00:00"),   // matched by v1
-        ev("p2", "dave", "2024-01-01 10:00:00"))    // no view at all
-      query.processAllAvailable()
-      val early = spark.table("outer_out")
-        .select("event_id", "r_event_id").collect()
-        .map(r => (r.getString(0), Option(r.getString(1)))).toSet
-      assert(early.contains(("p1", Some("v1"))), s"match not emitted: $early")
-      assert(!early.exists(_._1 == "p2"),
-        s"unmatched row emitted BEFORE its window could be declared closed: $early")
-      // advance both watermarks past p2's horizon (ts + lookback + lateness)
-      views.addData(ev("v9", "carol", "2024-01-01 11:00:00"))
-      purchases.addData(ev("p9", "carol", "2024-01-01 11:00:00"))
-      query.processAllAvailable()
-      views.addData(ev("v10", "carol", "2024-01-01 12:00:00"))
-      purchases.addData(ev("p10", "carol", "2024-01-01 12:00:00"))
-      query.processAllAvailable()
-      val out = spark.table("outer_out")
-        .select("event_id", "r_event_id").collect()
-        .map(r => (r.getString(0), Option(r.getString(1)))).toSet
-      assert(out.contains(("p2", None)),
-        s"unmatched purchase never emitted with null enrichment: $out")
-    } finally query.stop()
-  }
-
   test("foreachBatch keyed-upsert sink: merges batches, batch replay is a no-op") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("sink").toFile
@@ -499,45 +396,6 @@ class StreamingSpec extends SparkSpec {
       val replay = Seq(("b", 20L), ("c", 3L)).toDF("k", "v")
       graft.streaming.Sinks.keyedUpsert(path, "k")(replay, batchId = 1L)
       assert(snap() === afterTwo)
-    } finally {
-      query.stop()
-      org.apache.commons.io.FileUtils.deleteDirectory(dir)
-    }
-  }
-
-  test("stream-static enrichment via foreachBatch picks up a swapped dimension without restart") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("dim").toFile
-    val dimPath = new java.io.File(dir, "dim").getPath
-    graft.sources.Writers.swapWrite(Seq(("u1", "bronze")).toDF("k", "tier"), dimPath)
-    val input = MemoryStream[(String, Long)]
-    val seen = new scala.collection.mutable.ArrayBuffer[((String, Long), Option[String])]
-    val query = input.toDS().toDF("k", "v")
-      .writeStream
-      // foreachBatch: each micro-batch re-plans the dimension read, so the
-      // atomic swap below lands mid-stream (an in-plan static join would
-      // pin stream-start file paths and fail after the swap)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.streaming.Enrichment.staticEnrich(batch, dimPath, "k")
-          .collect().foreach(r =>
-            seen.synchronized { seen += (((r.getString(0), r.getLong(1)),
-              Option(r.getString(2)))) })
-        ()
-      }
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(("u1", 1L), ("u2", 2L))
-      query.processAllAvailable()
-      // swap the dimension mid-stream: next batches must see the new tier
-      graft.sources.Writers.swapWrite(
-        Seq(("u1", "gold"), ("u2", "silver")).toDF("k", "tier"), dimPath)
-      input.addData(("u1", 3L), ("u2", 4L))
-      query.processAllAvailable()
-      val out = seen.synchronized(seen.toMap)
-      assert(out(("u1", 1L)) === Some("bronze"))
-      assert(out(("u2", 2L)) === None)          // not in dim v1 → left join null
-      assert(out(("u1", 3L)) === Some("gold"))  // dim v2 picked up, no restart
-      assert(out(("u2", 4L)) === Some("silver"))
     } finally {
       query.stop()
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
@@ -642,16 +500,5 @@ class StreamingSpec extends SparkSpec {
       "partitioned assignment diverged from the unpartitioned sink")
     partSink(b(b2aOnly), 1L) // replay converges
     assert(snap(part) === snap(flat))
-  }
-
-  test("counter fold is incremental: two folds equal one") {
-    val events = Fixtures.accessEvents(spark, n = 40, memCount = 1).collect()
-      .sortBy(e => (e.ts.getTime, e.event_id)).toSeq
-    val (a, b) = events.splitAt(17)
-    val once = Counters.fold(None, events)
-    val twice = Counters.fold(Some(Counters.fold(None, a)), b)
-    assert(math.abs(once.ema30d - twice.ema30d) < 1e-9)
-    assert(math.abs(once.confWeighted30d - twice.confWeighted30d) < 1e-9)
-    assert(once.hitTotal === twice.hitTotal)
   }
 }

@@ -402,32 +402,6 @@ class WritersSpec extends SparkSpec {
       spark, dir, Seq("tenant"), maxFilesPerPartition = 1) === Nil)
   }
 
-  test("versioned snapshots: publish, time travel, diff as changelog, prune") {
-    val path = java.nio.file.Files.createTempDirectory("versioned").toString + "/t"
-    val v1 = Writers.Versioned.publish(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), path)
-    val v2 = Writers.Versioned.publish(Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("k", "s"), path)
-    assert((v1, v2) === ((1L, 2L)))
-    // latest vs pinned time travel
-    assert(Writers.Versioned.read(spark, path).count() === 3)
-    assert(Writers.Versioned.read(spark, path, Some(1L)).count() === 2)
-    // changelog between versions: the rows v2 added or changed
-    val changes = Writers.Versioned.read(spark, path, Some(2L))
-      .except(Writers.Versioned.read(spark, path, Some(1L)))
-      .collect().map(_.getLong(0)).toSet
-    assert(changes === Set(2L, 3L))
-    // crash in the pointer flip: readers fall back to newest complete dir
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path, "_LATEST"), false)
-    assert(Writers.Versioned.latestVersion(spark, path) === Some(2L))
-    val v3 = Writers.Versioned.publish(Seq((9L, "z")).toDF("k", "s"), path)
-    assert(v3 === 3L)
-    // prune keeps the newest two
-    Writers.Versioned.pruneVersions(spark, path, keep = 2)
-    assert(Writers.Versioned.listVersions(spark, path) === Seq(2L, 3L))
-    assert(Writers.Versioned.read(spark, path).collect().head.getLong(0) === 9L)
-  }
-
   test("upsertPartitioned sortCols: every rewritten file is sorted and " +
     "files in one partition dir cover disjoint key ranges") {
     import org.apache.spark.sql.functions.{col, concat, lit, lpad, pmod, xxhash64}

@@ -51,35 +51,3 @@ final class HashEmbedder(val dim: Int = 64) extends Embedder {
     acc
   }
 }
-
-/** SIF-weighted pooling (Arora, Liang & Ma, ICLR 2017 "A Simple but
-  * Tough-to-Beat Baseline for Sentence Embeddings"): each token vector is
-  * scaled by a/(a + p(t)) before the fold, down-weighting frequent tokens
-  * the way IDF does for sparse vectors — so "the the the query" no longer
-  * drowns the informative terms. `freq` maps token → relative corpus
-  * frequency p(t) (tokens outside the map get p = 0 ⇒ full weight 1); in
-  * production the map is the broadcast top-V vocabulary (rare tails need
-  * no entry — their weight rounds to 1 anyway).
-  *
-  * Arithmetic contract (keeps a SQL mirror bit-exact, as
-  * `OracleSql.embedCtes` is for `HashEmbedder`): weight in double,
-  * per-element product cast to float32, float32 adds in token order, double L2 norm, float32 emit —
-  * exactly `HashEmbedder`'s discipline plus one weighted multiply. */
-final class SifEmbedder(val dim: Int, val a: Double,
-                        freq: Map[String, Double]) extends Embedder {
-  def embed(text: String): Array[Float] = {
-    val acc = new Array[Float](dim)
-    text.toLowerCase.split("\\s+").filter(_.nonEmpty).foreach { t =>
-      val v = TokenVectors.tokenVec(t, dim)
-      val w = freq.get(t) match {
-        case Some(p) => a / (a + p)
-        case None    => 1.0
-      }
-      var i = 0
-      while (i < dim) { acc(i) = acc(i) + (w * v(i)).toFloat; i += 1 }
-    }
-    val norm = math.sqrt(acc.map(x => x.toDouble * x).sum)
-    if (norm > 0) { var i = 0; while (i < dim) { acc(i) = (acc(i) / norm).toFloat; i += 1 } }
-    acc
-  }
-}

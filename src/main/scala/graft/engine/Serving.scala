@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference,
-  EqualTo, Expression, In, Literal, Or}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Cast, EqualTo,
+  Expression, In, Literal, Or}
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType, StructField, StructType}
@@ -29,12 +30,14 @@ import graft.sources.{Readers, Writers}
   * session here compiles the probe shape ONCE — through the normal
   * DataFrame path, so every optimization (filter pushdown, broadcast
   * selection, codegen) applies — and each request then only REBINDS
-  * ([[rebind]]) the two nodes of the cached optimized plan that carry
-  * request data:
+  * ([[rebind]]) the nodes of the cached optimized plan that carry request
+  * data:
   *
-  *  - the pushed predicate on the standing scan (`Filter` over the
+  *  - the pushed predicate on each standing scan (`Filter` over the
   *    relation) is rebuilt from the request's keys/ids,
-  *  - the probe-side `LocalRelation` gets the request's rows,
+  *  - the probe-side `LocalRelation` gets the request's rows (a one-row
+  *    one under a cross join is folded into literals — no join, no
+  *    broadcast),
   *
   * and nothing else changes — answer parity with the fresh path is
   * spec-pinned (ServingSpec). Execution tiers per request: the `…Df`
@@ -199,27 +202,37 @@ object Serving {
     path.fold(df)(Readers.table(df.sparkSession, _, Some(df.schema)))
 
   /** `df`'s optimized plan, checked to be a rebindable template: exactly
-    * `locals` probe-side LocalRelations and one Filter directly over the
+    * `locals` probe-side LocalRelations and one Filter directly over each
     * standing relation — the nodes [[rebind]] replaces. */
   private def compiled(df: DataFrame, who: String, locals: Int): LogicalPlan = {
     val plan = df.queryExecution.optimizedPlan
     val nLocal = plan.collect { case lr: LocalRelation => lr }.size
+    val nRel = plan.collect { case r: LogicalRelation => r }.size
     val nScan = plan.collect { case f @ Filter(_, _: LogicalRelation) => f }.size
-    require(nLocal == locals && nScan == 1,
+    require(nLocal == locals && nRel > 0 && nScan == nRel,
       s"$who: the template must contain exactly $locals probe-side " +
-        s"LocalRelation(s) and one pushed Filter over the standing scan " +
-        s"(found $nLocal/$nScan) — pass a BARE standing table handle " +
-        s"(Readers.table) and a literal-free build")
+        s"LocalRelation(s) and one pushed Filter over each standing scan " +
+        s"(found $nLocal, and $nScan Filters over $nRel scans) — pass BARE " +
+        s"standing table handles (Readers.table) and a literal-free build")
     plan
   }
 
-  /** A request's plan: the scan Filter's condition and the probe
-    * LocalRelation's rows replaced, each built from its node's output. */
+  /** A request's plan: each standing scan's Filter condition and each probe
+    * LocalRelation's rows replaced, each built from its node's output.
+    *
+    * A condition-less join with a ONE-row probe relation (the IVF query
+    * vector the build broadcasts) is folded away as the row is bound: the
+    * relation's columns become literals aliased with their own exprIds over
+    * the join's other side, so the request plan has no join and no
+    * broadcast — one Spark job, not a broadcast job and then the scan. */
   private def rebind(template: LogicalPlan, cond: Seq[Attribute] => Expression,
                      rows: Seq[Attribute] => Seq[InternalRow]): LogicalPlan =
     template.transformUp {
       case lr: LocalRelation => LocalRelation(lr.output, rows(lr.output), lr.isStreaming)
       case Filter(_, rel: LogicalRelation) => Filter(cond(rel.output), rel)
+      case Join(side, lr: LocalRelation, Cross | Inner, None, _) if lr.data.length == 1 =>
+        Project(side.output ++ lr.output.zipWithIndex.map { case (a, i) =>
+          Alias(Literal(lr.data.head.get(i, a.dataType), a.dataType), a.name)(a.exprId) }, side)
     }
 
   private def named(out: Seq[Attribute], name: String): Attribute =
@@ -318,115 +331,99 @@ object Serving {
       }
   }
 
-  /** Compiled-plan session for PURE-SCAN point probes — one pushed
-    * predicate over one standing table and nothing else: the maintained
-    * pair tables' per-request fetch and the corpus ingested-ness check. No
-    * probe-side relation, so the template is just `build(standing.filter(…))`
-    * compiled once; each request REBINDS the Filter's condition from a
-    * plain Column predicate, resolved by ONE analyzer pass over a bare
-    * `Filter(pred, standing)` plan (resolution and type coercion only, no
-    * optimizer, no physical planning, no file listing) and spliced into
-    * the cached template by attribute NAME — an unknown name fails
-    * loudly. */
-  private final class ScanProbeSession(standing: DataFrame, keyCol: String,
-                                       build: DataFrame => DataFrame,
-                                       standingPath: Option[String]) {
-    private val spark = standing.sparkSession
-
-    /** (standing handle, compiled template). The placeholder predicate is
-      * on a DATA column, so it survives optimization as a Filter directly
-      * over the relation. */
-    private val pinned = new Pinned(spark, standingPath.toSeq)({ () =>
-      val st = reread(standing, standingPath)
-      (st, compiled(build(st.filter(ColumnBridge.column(EqualTo(
-        UnresolvedAttribute(keyCol), Literal.default(st.schema(keyCol).dataType))))),
-        "ScanProbeSession", locals = 0))
-    })
-
-    private def rebound(st: DataFrame, template: LogicalPlan, pred: Column): LogicalPlan = {
-      val cond = st.filter(pred).queryExecution.analyzed
-        .collectFirst { case Filter(c, _) => c }
-        .getOrElse(throw new IllegalArgumentException(
-          "ScanProbeSession: the request predicate analyzed away"))
-      rebind(template, out => cond.transformUp {
-        case a: AttributeReference =>
-          out.find(_.name == a.name).getOrElse(throw new IllegalArgumentException(
-            s"ScanProbeSession: predicate names unknown column ${a.name} " +
-              s"(have ${out.map(_.name).mkString(", ")})"))
-      }, _ => Nil)
-    }
-
-    /** Per-request read as a DataFrame (plan pins inspectable). */
-    def df(pred: Column): DataFrame = {
-      val (st, template) = pinned.get
-      PlanBridge.ofRows(spark, rebound(st, template, pred))
-    }
-
-    /** The warm serving call — straight to physical planning. */
-    def rows(pred: Column): Array[Row] =
-      pinned.run { case (st, template) =>
-        PlanBridge.collectFromOptimized(spark, rebound(st, template, pred))
-      }
-  }
-
-  /** The served half of the maintained-table sessions, and the split that
-    * decides it. A probe is SERVED only when its id exists in the corpus
-    * with bit-identical text — one pushed literal IN through the cached
-    * ingested-ness scan — so a stale maintained answer can never serve a
-    * changed doc. Served probes are answered by one pushed endpoint-IN
-    * fetch of the maintained pair table, EXCLUDING pairs that touch any
-    * novel probe id (a changed doc's maintained pairs are stale for this
-    * request — the novel branch re-derives those from the request's
-    * text). */
+  /** The served half of the maintained-table sessions and the split that
+    * decides it, compiled as ONE union of two pushed scans, so a request is
+    * one Spark job:
+    *
+    *  - the corpus branch reads `idCol IN probeIds` as (id, text) — a probe
+    *    is SERVED only when its id exists with bit-identical text, so a
+    *    stale maintained answer never serves a changed doc;
+    *  - the pair branch reads `doc_a IN probeIds OR doc_b IN probeIds`.
+    *
+    * Each branch pads the other's columns with typed nulls, so a corpus row
+    * is one with a non-null id. The split runs on the driver: a pair is
+    * served when it touches a served id and no novel id (a changed doc's
+    * maintained pairs are stale; the novel branch re-derives them from the
+    * request's text). One [[Pinned]] covers both tables. */
   private final class MaintainedFetch(who: String, pairs: DataFrame,
                                       pairCols: Seq[String], pairsPath: Option[String],
                                       corpus: DataFrame, corpusPath: Option[String],
                                       idCol: String, textCol: String) {
-    private val corpusCheck = new ScanProbeSession(corpus, idCol,
-      _.select(col(idCol), col(textCol).cast("string")), corpusPath)
-    private val fetch = new ScanProbeSession(pairs, "doc_a",
-      _.select(pairCols.map(col): _*), pairsPath)
+    private val spark = pairs.sparkSession
 
-    /** (served docs, novel docs). */
-    private def split(probeDocs: Seq[(Any, String)])
-        : (Seq[(Any, String)], Seq[(Any, String)]) = {
+    /** A placeholder predicate on the DATA column `c`, so it survives
+      * optimization as a Filter directly over the relation. */
+    private def placeholder(st: DataFrame, c: String): Column =
+      ColumnBridge.column(EqualTo(UnresolvedAttribute(c), Literal.default(st.schema(c).dataType)))
+
+    /** (pair handle, exprIds of the corpus relations' columns, compiled
+      * union). */
+    private val pinned = new Pinned(spark, corpusPath.toSeq ++ pairsPath.toSeq)({ () =>
+      val (cst, pst) = (reread(corpus, corpusPath), reread(pairs, pairsPath))
+      val corpusSide = cst.filter(placeholder(cst, idCol)).select(
+        Seq(col(idCol), col(textCol).cast("string")) ++
+          pairCols.map(c => lit(null).cast(pst.schema(c).dataType).as(c)): _*)
+      val pairSide = pst.filter(placeholder(pst, "doc_a")).select(
+        Seq(lit(null).cast(cst.schema(idCol).dataType), lit(null).cast("string")) ++
+          pairCols.map(col): _*)
+      val corpusIds = cst.queryExecution.analyzed.collectLeaves()
+        .flatMap(_.output).map(_.exprId).toSet
+      (pst, corpusIds, compiled(corpusSide.union(pairSide), who, locals = 0))
+    })
+
+    /** `c IN ids` over a scan's output, the ids cast to the column's type. */
+    private def in(out: Seq[Attribute], c: String, ids: Seq[Any]): Expression = {
+      val a = named(out, c)
+      In(a, ids.map(v => Literal(Cast(Literal(v), a.dataType).eval(), a.dataType)))
+    }
+
+    /** One job: the pair handle it read, the (served, novel) split, and the
+      * pair rows touching any probe id. */
+    private def fetch(probeDocs: Seq[(Any, String)])
+        : (DataFrame, Seq[(Any, String)], Seq[(Any, String)], Array[Row]) = {
       require(probeDocs.length <= Dedup.PointProbeMaxDocs,
         s"$who is the POINT-probe path (${probeDocs.length} probe docs)")
-      val ingested = corpusCheck
-        .rows(col(idCol).isin(probeDocs.map(_._1): _*))
-        .map(r => (r.get(0), if (r.isNullAt(1)) null else r.getString(1)))
-        .toMap
-      probeDocs.partition { case (id, t) =>
+      val ids = probeDocs.map(_._1)
+      val (pst, rows) = pinned.run { case (pst, corpusIds, template) =>
+        (pst, PlanBridge.collectFromOptimized(spark, rebind(template, out =>
+          if (out.exists(a => corpusIds(a.exprId))) in(out, idCol, ids)
+          else Or(in(out, "doc_a", ids), in(out, "doc_b", ids)),
+          _ => Nil)))
+      }
+      val (hits, pairRows) = rows.partition(!_.isNullAt(0))
+      val ingested = hits.map(r => (r.get(0), if (r.isNullAt(1)) null else r.getString(1))).toMap
+      val (served, novel) = probeDocs.partition { case (id, t) =>
         t != null && ingested.get(id).contains(t) }
+      (pst, served, novel, pairRows)
     }
 
-    private def endpointPred(served: Seq[(Any, String)],
-                             novel: Seq[(Any, String)]): Column = {
-      val sIds = served.map(_._1)
-      val touch = col("doc_a").isin(sIds: _*) || col("doc_b").isin(sIds: _*)
-      if (novel.isEmpty) touch
-      else touch && !col("doc_a").isin(novel.map(_._1): _*) &&
-        !col("doc_b").isin(novel.map(_._1): _*)
-    }
-
-    /** The request as a DataFrame: the served fetch, unioned with
-      * `novelDf` of the novel docs when there are any. */
+    /** The request as a DataFrame: the served pairs as a pushed endpoint-IN
+      * scan of the pinned pair handle (the plan stays inspectable), unioned
+      * with `novelDf` of the novel docs when there are any. */
     def serveDf(probeDocs: Seq[(Any, String)])
                (novelDf: Seq[(Any, String)] => DataFrame): DataFrame = {
-      val (served, novel) = split(probeDocs)
-      val servedDf = fetch.df(
-        if (served.isEmpty) lit(false) else endpointPred(served, novel))
+      val (pst, served, novel, _) = fetch(probeDocs)
+      val sIds = served.map(_._1)
+      val touch = col("doc_a").isin(sIds: _*) || col("doc_b").isin(sIds: _*)
+      val pred =
+        if (served.isEmpty) lit(false)
+        else if (novel.isEmpty) touch
+        else touch && !col("doc_a").isin(novel.map(_._1): _*) &&
+          !col("doc_b").isin(novel.map(_._1): _*)
+      val servedDf = pst.filter(pred).select(pairCols.map(col): _*)
       if (novel.isEmpty) servedDf else servedDf.unionByName(novelDf(novel))
     }
 
-    /** The request's rows: the served fetch (no job when nothing is
-      * served), plus `novelRows` of the novel docs when there are any. */
+    /** The request's rows: the served pairs from the one job, plus
+      * `novelRows` of the novel docs when there are any. */
     def serveRows(probeDocs: Seq[(Any, String)])
                  (novelRows: Seq[(Any, String)] => Array[Row]): Array[Row] = {
-      val (served, novel) = split(probeDocs)
-      val servedRows =
-        if (served.isEmpty) Array.empty[Row]
-        else fetch.rows(endpointPred(served, novel))
+      val (_, served, novel, pairRows) = fetch(probeDocs)
+      val (sIds, nIds) = (served.map(_._1).toSet, novel.map(_._1).toSet)
+      def touches(r: Row, ids: Set[Any]) = ids(r.get(2)) || ids(r.get(3))
+      val servedRows = pairRows.collect {
+        case r if touches(r, sIds) && !touches(r, nIds) => Row.fromSeq(r.toSeq.drop(2))
+      }
       if (novel.isEmpty) servedRows else servedRows ++ novelRows(novel)
     }
   }
@@ -441,8 +438,9 @@ object Serving {
     * sessionless function by construction (spec-pinned), it just pays the
     * cold plan compile the maintained case no longer does.
     *
-    * Generation auto-refresh covers ALL FOUR handles: the two cached scans
-    * ride their own pins, and the novel-text fallback's `standing` band
+    * Generation auto-refresh covers ALL FOUR handles: the cached union of
+    * the corpus and verified scans rides one pin, and the novel-text
+    * fallback's `standing` band
     * table and `corpus` handles are pinned to their `bandsPath`/
     * `corpusPath` markers — a GDPR cascade or compaction rewriting the
     * band table under a live session is served at the very next request
@@ -475,8 +473,8 @@ object Serving {
     def serveDf(probeDocs: Seq[(Any, String)]): DataFrame =
       served.serveDf(probeDocs)(fresh(freshHandles.get, _))
 
-    /** The warm serving call — for an all-ingested request this is two
-      * pushed scans through cached plans, nothing else. */
+    /** The warm serving call — for an all-ingested request this is one
+      * Spark job, the cached union of the two pushed scans, nothing else. */
     def serveRows(probeDocs: Seq[(Any, String)]): Array[Row] =
       served.serveRows(probeDocs)(novel => freshHandles.run(fresh(_, novel).collect()))
   }
@@ -488,8 +486,8 @@ object Serving {
     * table) — the banded posting aggregation + pair join the fresh probe
     * re-runs per request (the 2-shuffle ~130 ms warm floor) is
     * recomputing a maintained answer. Here an ingested probe is answered
-    * by ONE pushed endpoint-IN scan of the feed through a
-    * [[MaintainedFetch]] — the verified-probe latency class; novel texts
+    * by a pushed endpoint-IN scan of the feed, in the same job as the
+    * corpus check ([[MaintainedFetch]]) — the verified-probe latency class; novel texts
     * fall back to the banded probe through a COMPILED [[LshProbeSession]]
     * (not a cold plan).
     *
@@ -518,8 +516,9 @@ object Serving {
     def serveDf(probeDocs: Seq[(Any, String)]): DataFrame =
       served.serveDf(probeDocs)(bandProbe.probeDf)
 
-    /** The warm serving call — one cached pushed feed scan (plus the
-      * compiled band probe for any novel texts). */
+    /** The warm serving call — one Spark job, the cached union of the
+      * corpus check and the feed scan (plus the compiled band probe for any
+      * novel texts). */
     def serveRows(probeDocs: Seq[(Any, String)]): Array[Row] =
       served.serveRows(probeDocs)(bandProbe.probeRows)
   }
@@ -530,9 +529,10 @@ object Serving {
     * `build(prunedAssigned, queryRelation)`). The centroid table is
     * collected ONCE per standing-state generation and the per-request
     * nProbe selection runs in plain JVM arithmetic — bit-identical to the
-    * cluster path's round-6 + centroid_id tie-break (spec-pinned), so a
-    * request costs ZERO jobs beyond the pushed scan of the probed
-    * clusters.
+    * cluster path's round-6 + centroid_id tie-break (spec-pinned), and a
+    * build that cross-joins the one-row query relation has it folded into
+    * literals ([[rebind]]), so a warm request is ONE Spark job: the pushed
+    * scan of the probed clusters, scored against the literal.
     *
     * Pass `statePaths = Some((assignedPath, centroidsPath))` to make the
     * session generation-aware: a drift rebuild or delete that replaces

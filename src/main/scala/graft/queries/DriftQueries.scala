@@ -5,8 +5,8 @@ import graft.Tables
 import graft.functions.Fns
 
 /** Statistics a training-data pipeline runs between corpus snapshots, over
-  * the engine's text, dedup, similarity and graph operators: sketch and
-  * quality diagnostics, split stability, and embedding and graph
+  * the engine's text, dedup, similarity and graph operators: quality
+  * diagnostics, split stability, and embedding and graph
   * diagnostics. Every entry is
   * DuckDB-oracle-checked; transcendental outputs (ln/exp) emit float32 per
   * the repo-wide discipline, while division/sqrt chains over exact
@@ -92,66 +92,6 @@ object DriftQueries {
              |  sum(ne)::DOUBLE / sum(s * (s - 1) // 2) AS edge_density
              |FROM cl JOIN pe USING (cluster)
              |GROUP BY s ORDER BY s""".stripMargin)),
-
-    // Count-min sketch audit: a 4×64 CMS over the token stream (seeded
-    // md5 row hashes — bit-identical in any engine), read back for the
-    // ten heaviest tokens against their true counts. The one-sided error
-    // (est ≥ true, bounded by collisions) is the planning input for
-    // sizing sketch width vs an exact heavy-hitter pass. Sketch
-    // cells are ONE map-side-combinable agg (d·w cells total); estimates
-    // are a broadcast-size join. All exact integers.
-    Entry("q293_countmin",
-      (s, d) => {
-        val cnt = Tables.documents(s, d)
-          .select(explode(Fns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0)
-          .groupBy(col("w")).agg(count(lit(1)).as("c"))
-          .localCheckpoint(true) // feeds the cells, the top-10 and the probe
-        val hashed = cnt.select(col("w"), col("c"),
-            explode(sequence(lit(0), lit(3))).as("r"))
-          .withColumn("bucket",
-            pmod(Fns.hash60(concat(col("w"), lit("#"), col("r"))), lit(64L)))
-        val cells = hashed.groupBy(col("r"), col("bucket"))
-          .agg(sum(col("c")).as("cell"))
-        val top = cnt.orderBy(desc("c"), col("w")).limit(10)
-          .select(col("w").as("tw"), col("c").as("true_c"))
-        val probes = top
-          .withColumn("r", explode(sequence(lit(0), lit(3))))
-          .withColumn("bucket",
-            pmod(Fns.hash60(concat(col("tw"), lit("#"), col("r"))), lit(64L)))
-          .join(cells, Seq("r", "bucket"))
-        probes.groupBy(col("tw").as("w"))
-          .agg(max(col("true_c")).as("true_c"), min(col("cell")).as("est"))
-          .withColumn("err", col("est") - col("true_c"))
-          .orderBy(desc("true_c"), col("w"))
-      },
-      Some {
-        val h = (e: String) => s"CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT)"
-        s"""WITH cnt AS (
-           |  SELECT w, CAST(count(*) AS BIGINT) AS c FROM (
-           |    SELECT unnest(string_split(lower(text), ' ')) AS w
-           |    FROM documents)
-           |  WHERE length(w) > 0 GROUP BY w),
-           |hashed AS (
-           |  SELECT w, c, r,
-           |    ${h("w || '#' || CAST(r AS VARCHAR)")} % 64 AS bucket
-           |  FROM cnt, unnest(generate_series(0, 3)) AS t(r)),
-           |cells AS (
-           |  SELECT r, bucket, CAST(sum(c) AS BIGINT) AS cell
-           |  FROM hashed GROUP BY 1, 2),
-           |top AS (
-           |  SELECT w AS tw, c AS true_c FROM cnt
-           |  ORDER BY c DESC, w LIMIT 10),
-           |probes AS (
-           |  SELECT tw, true_c, cells.cell
-           |  FROM top, unnest(generate_series(0, 3)) AS t(r)
-           |  JOIN cells ON cells.r = t.r
-           |    AND cells.bucket = ${h("tw || '#' || CAST(t.r AS VARCHAR)")} % 64)
-           |SELECT tw AS w, max(true_c) AS true_c,
-           |  CAST(min(cell) AS BIGINT) AS est,
-           |  CAST(min(cell) - max(true_c) AS BIGINT) AS err
-           |FROM probes GROUP BY tw ORDER BY true_c DESC, w""".stripMargin
-      }),
 
     // Quality ~ ln(length) regression per source — the confound audit
     // before using either signal for curation (a high slope means the

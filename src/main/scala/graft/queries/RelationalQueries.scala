@@ -6,8 +6,8 @@ import graft.functions.Fns._
 import graft.ops.Retrieval
 
 /** Retrieval-counter and ranking operators on the test-data tables:
-  * time-decayed EMA counters (A4), tier-1 ranking (A5), the portable hash60
-  * scalar surface (§2.9) and chunk rollup (J2).
+  * time-decayed EMA counters (A4), tier-1 ranking (A5) and chunk rollup
+  * (J2).
   */
 object RelationalQueries {
 
@@ -47,31 +47,6 @@ object RelationalQueries {
              |      + 0.2 * (avg(value) / 200.0), 4) AS score
              |  FROM events GROUP BY user_id)
              |ORDER BY score DESC, user_id LIMIT 10""".stripMargin)),
-
-    // §2.9 scalar kernel: chunk-suffix strip, split, sha2, portable hash60,
-    // levenshtein — all codegen'd builtins.
-    Entry("q13_scalar_funcs",
-      (s, d) => Tables.part(s, d)
-        .select(
-          col("p_partkey"),
-          regexp_replace(
-            concat(col("p_name"), lit("_"), (col("p_partkey") % 10).cast("string")),
-            "_[0-9]+$", "").as("base_id"),
-          split(col("p_name"), " ").getItem(0).as("first_word"),
-          sha2(col("p_name"), 256).as("name_sha"),
-          length(col("p_name")).cast("long").as("name_len"),
-          hash60(col("p_name")).as("name_hash"),
-          levenshtein(col("p_name"), col("p_brand")).cast("long").as("lev_to_brand"))
-        .orderBy(col("p_partkey")),
-      Some("""SELECT p_partkey,
-             |  regexp_replace(p_name || '_' || CAST(p_partkey % 10 AS VARCHAR),
-             |    '_[0-9]+$', '') AS base_id,
-             |  string_split(p_name, ' ')[1] AS first_word,
-             |  sha256(p_name) AS name_sha,
-             |  CAST(length(p_name) AS BIGINT) AS name_len,
-             |  CAST(('0x' || substr(md5(p_name), 1, 15)) AS BIGINT) AS name_hash,
-             |  CAST(levenshtein(p_name, p_brand) AS BIGINT) AS lev_to_brand
-             |FROM part ORDER BY p_partkey""".stripMargin)),
 
     // J2: chunk→memory rollup keeping best chunk score
     // (memory_graph.py:6553-6560) — suffix algebra + one groupBy.

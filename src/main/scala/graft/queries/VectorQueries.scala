@@ -332,14 +332,15 @@ object VectorQueries {
     // the compiled-plan session): the same multiprobe question as q336
     // answered by
     // graft.engine.Serving.IvfServeSession. The whole request shape —
-    // pushed centroid IN on the standing assignment, broadcast of the
-    // query vector, scoring, top-10 — is analyzed/optimized ONCE per
-    // session; each request rebinds the centroid-id literals and the
-    // query-vector relation inside the cached plan. The nProbe selection
-    // runs in plain JVM arithmetic against the once-collected centroid
-    // table, bit-identical to the cluster path's round-6 + tie-break
-    // (ServingSpec parity pins), so a warm request costs ZERO jobs beyond
-    // the pushed scan of the probed clusters. Under the maintenance
+    // pushed centroid IN on the standing assignment, the query vector,
+    // scoring, top-10 — is analyzed/optimized ONCE per session, with the
+    // build's cross join of the one-row query relation folded into a
+    // literal slot (no join, no broadcast); each request rebinds the
+    // centroid-id literals and the query-vector literal inside the cached
+    // plan. The nProbe selection runs in plain JVM arithmetic against the
+    // once-collected centroid table, bit-identical to the cluster path's
+    // round-6 + tie-break (ServingSpec parity pins), so a warm request is
+    // ONE job: the pushed scan of the probed clusters. Under the maintenance
     // sink's centroid-clustered layout that scan skips every file/row
     // group outside the probed clusters (no test pins the skipped
     // fraction) — the reference bar: the point lookup never scans the

@@ -18,6 +18,55 @@ class ServingSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** The service's maintained dedup state over `docsDf`: the corpus
+    * (partitioned by source), the band table with its candidate-pair feed,
+    * and the verified pair table. Returns (corpus, bands, pairs, verified)
+    * paths. */
+  private def maintained(prefix: String): (String, String, String, String) = {
+    val base = tmp(prefix)
+    val Seq(memPath, bandPath, pairPath, verPath) =
+      Seq("memories", "bands", "pairs", "verified").map(base + "/" + _)
+    Writers.swapWrite(docsDf, memPath, Seq("source"))
+    val delta = Sinks.lshIndexAppendPartitioned(bandPath, "doc_id", "text",
+      shingleK = 2, numHashes = 16, numBands = 4,
+      partitionCols = Seq("source"), pairsPath = Some(pairPath))(
+      Readers.table(spark, memPath), 0L)
+    Sinks.verifiedPairsUpsert(verPath, Readers.table(spark, memPath),
+      "doc_id", "text", shingleK = 2, threshold = 0.5)(delta, 0L)
+    (memPath, bandPath, pairPath, verPath)
+  }
+
+  /** The LSH-served and verified sessions over [[maintained]] state, built
+    * as the service builds them: bare table handles plus every path pin. */
+  private def maintainedSessions(memPath: String, bandPath: String, pairPath: String,
+                                 verPath: String)
+      : (Serving.LshServedProbeSession, Serving.VerifiedProbeSession) = (
+    new Serving.LshServedProbeSession(Readers.table(spark, pairPath),
+      Readers.table(spark, bandPath), Readers.table(spark, memPath),
+      "doc_id", "text", StringType, shingleK = 2, numHashes = 16, numBands = 4,
+      feedPath = Some(pairPath), corpusPath = Some(memPath),
+      bandsPath = Some(bandPath)),
+    new Serving.VerifiedProbeSession(
+      Readers.table(spark, verPath), Readers.table(spark, bandPath),
+      Readers.table(spark, memPath), "doc_id", "text", StringType,
+      shingleK = 2, numHashes = 16, numBands = 4, threshold = 0.5,
+      verifiedPath = Some(verPath), corpusPath = Some(memPath),
+      bandsPath = Some(bandPath)))
+
+  /** The Spark jobs `body` starts. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drainListenerBus(spark); started.get() }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   private def docsDf = Seq(
     ("d1", "alpha beta gamma delta epsilon zeta", "web"),
     ("d2", "alpha beta gamma delta epsilon zeta", "web"),
@@ -567,19 +616,10 @@ class ServingSpec extends SparkSpec {
   test("a warm request on path-pinned parquet sessions starts a fixed " +
     "number of Spark jobs; a centroid bump adds exactly one, the centroid " +
     "re-collect") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.functions.VectorFunctions.cosineSim
-    val base = tmp("serving-jobs")
-    val Seq(memPath, bandPath, pairPath, verPath, apath, cpath) =
-      Seq("memories", "bands", "pairs", "verified", "assigned", "centroids")
-        .map(base + "/" + _)
-    Writers.swapWrite(docsDf, memPath, Seq("source"))
-    val delta = Sinks.lshIndexAppendPartitioned(bandPath, "doc_id", "text",
-      shingleK = 2, numHashes = 16, numBands = 4,
-      partitionCols = Seq("source"), pairsPath = Some(pairPath))(
-      Readers.table(spark, memPath), 0L)
-    Sinks.verifiedPairsUpsert(verPath, Readers.table(spark, memPath),
-      "doc_id", "text", shingleK = 2, threshold = 0.5)(delta, 0L)
+    val (memPath, bandPath, pairPath, verPath) = maintained("serving-jobs")
+    val base = tmp("serving-jobs-ivf")
+    val (apath, cpath) = (base + "/assigned", base + "/centroids")
     val rnd = new scala.util.Random(5)
     val vecs = (0 until 120).map { i =>
       (i.toLong, Array.fill(8)(rnd.nextFloat()), i % 2)
@@ -598,55 +638,179 @@ class ServingSpec extends SparkSpec {
         .select(col("vec_id"), col("score"))
         .orderBy(desc("score"), col("vec_id")).limit(10),
       statePaths = Some((apath, cpath)))
-    val lsh = new Serving.LshServedProbeSession(Readers.table(spark, pairPath),
-      Readers.table(spark, bandPath), Readers.table(spark, memPath),
-      "doc_id", "text", StringType, shingleK = 2, numHashes = 16, numBands = 4,
-      feedPath = Some(pairPath), corpusPath = Some(memPath),
-      bandsPath = Some(bandPath))
-    val verified = new Serving.VerifiedProbeSession(
-      Readers.table(spark, verPath), Readers.table(spark, bandPath),
-      Readers.table(spark, memPath), "doc_id", "text", StringType,
-      shingleK = 2, numHashes = 16, numBands = 4, threshold = 0.5,
-      verifiedPath = Some(verPath), corpusPath = Some(memPath),
-      bandsPath = Some(bandPath))
+    val (lsh, verified) = maintainedSessions(memPath, bandPath, pairPath, verPath)
     val q = Array.fill(8)(0.5f)
     val probe: Seq[(Any, String)] =
       Seq(("d1": Any) -> "alpha beta gamma delta epsilon zeta")
 
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
-      started.set(0)
-      body
-      org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark)
-      started.get()
-    }
     // warm every session once (codegen, first reads)
     assert(ivf.serveRows(q, 2).nonEmpty)
     assert(lsh.serveRows(probe).nonEmpty)
     assert(verified.serveRows(probe).nonEmpty)
-    // the jobs a warm request starts: two for the IVF probe, and for each
-    // served probe the ingested-ness check plus the pair fetch
-    val (ivfWarm, lshWarm, verifiedWarm) = (2, 2, 2)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val ivfJobs = jobsOf(ivf.serveRows(q, 2))
-      val lshJobs = jobsOf(lsh.serveRows(probe))
-      val verifiedJobs = jobsOf(verified.serveRows(probe))
-      assert((ivfJobs, lshJobs, verifiedJobs) === ((ivfWarm, lshWarm,
-        verifiedWarm)), "warm-request job counts (ivf, lsh, verified)")
-      // a moved centroid marker rebuilds the IVF state once: one centroid
-      // re-collect, then the same pushed scan as any warm request
-      Writers.Generation.bump(spark, cpath)
-      assert(jobsOf(ivf.serveRows(q, 2)) === ivfWarm + 1,
-        "the request after a centroid bump")
-      assert(jobsOf(ivf.serveRows(q, 2)) === ivfWarm,
-        "the request after the rebuild")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // a warm request is one job each: the IVF scan scored against the
+    // folded query literal, and for a served probe the union of the
+    // ingested-ness check and the pair fetch
+    val (ivfWarm, lshWarm, verifiedWarm) = (1, 1, 1)
+    val ivfJobs = jobsOf(ivf.serveRows(q, 2))
+    val lshJobs = jobsOf(lsh.serveRows(probe))
+    val verifiedJobs = jobsOf(verified.serveRows(probe))
+    assert((ivfJobs, lshJobs, verifiedJobs) === ((ivfWarm, lshWarm,
+      verifiedWarm)), "warm-request job counts (ivf, lsh, verified)")
+    // a moved centroid marker rebuilds the IVF state once: one centroid
+    // re-collect, then the same pushed scan as any warm request
+    Writers.Generation.bump(spark, cpath)
+    assert(jobsOf(ivf.serveRows(q, 2)) === ivfWarm + 1,
+      "the request after a centroid bump")
+    assert(jobsOf(ivf.serveRows(q, 2)) === ivfWarm,
+      "the request after the rebuild")
+  }
+
+  /** Checks both sessions over [[maintained]] state against the answers the
+    * sessionless paths give on the tables' current contents, on both tiers.
+    * The LSH-served expectation is the served/novel split written out: the
+    * feed's pairs that touch a served id and no novel id, plus the banded
+    * probe of the novel docs. */
+  private def checkMaintained(lsh: Serving.LshServedProbeSession,
+                              verified: Serving.VerifiedProbeSession,
+                              memPath: String, bandPath: String, pairPath: String,
+                              verPath: String, req: Seq[(Any, String)], label: String)
+      : (Set[(String, String)], Set[(String, String, Double)]) = {
+    val corpus = Readers.table(spark, memPath)
+    val ingested = corpus.select("doc_id", "text").as[(String, String)].collect().toMap
+    val (served, novel) = req.partition { case (id, t) => ingested.get(id.toString).contains(t) }
+    val (sIds, nIds) = (served.map(_._1), novel.map(_._1))
+    val lshExpect = Readers.table(spark, pairPath)
+      .filter((col("doc_a").isin(sIds: _*) || col("doc_b").isin(sIds: _*)) &&
+        !col("doc_a").isin(nIds: _*) && !col("doc_b").isin(nIds: _*))
+      .select("doc_a", "doc_b").as[(String, String)].collect().toSet ++
+      Dedup.probeNearDupsLocal(Readers.table(spark, bandPath), novel, StringType,
+        shingleK = 2, numHashes = 16, numBands = 4).as[(String, String)].collect().toSet
+    val verifiedExpect = Dedup.probeNearDupsVerifiedServed(
+      Readers.table(spark, verPath), Readers.table(spark, bandPath), corpus,
+      req.map { case (id, t) => (id.toString, t) }.toDF("doc_id", "text"),
+      "doc_id", "text", shingleK = 2, numHashes = 16, numBands = 4, threshold = 0.5)
+      .as[(String, String, Double)].collect().toSet
+    assert(lsh.serveRows(req).map(r => (r.getString(0), r.getString(1))).toSet === lshExpect,
+      s"$label: LSH serveRows diverged")
+    assert(lsh.serveDf(req).as[(String, String)].collect().toSet === lshExpect,
+      s"$label: LSH serveDf diverged")
+    assert(verified.serveRows(req)
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet === verifiedExpect,
+      s"$label: verified serveRows diverged")
+    assert(verified.serveDf(req).as[(String, String, Double)].collect().toSet ===
+      verifiedExpect, s"$label: verified serveDf diverged")
+    (lshExpect, verifiedExpect)
+  }
+
+  test("a mixed request whose served probe's maintained pair touches a " +
+    "changed (novel) probe id drops that pair from the served half, exactly " +
+    "as the sessionless split does, on both endpoint orders") {
+    val (memPath, bandPath, pairPath, verPath) = maintained("serving-mixed")
+    val (lsh, verified) = maintainedSessions(memPath, bandPath, pairPath, verPath)
+    val texts = docsDf.select("doc_id", "text").as[(String, String)].collect().toMap
+    assert(Readers.table(spark, pairPath).select("doc_a", "doc_b").as[(String, String)].collect()
+      .contains(("d1", "d2")), "fixture: the feed should hold the pair (d1, d2)")
+    val changed = "kappa lambda mu nu xi omicron"
+    // d1 served with d2 changed (the novel id is the pair's doc_b), then
+    // d2 served with d1 changed (the novel id is its doc_a)
+    Seq(("d1", "d2"), ("d2", "d1")).foreach { case (s, n) =>
+      val (lshGot, verifiedGot) = checkMaintained(lsh, verified, memPath, bandPath,
+        pairPath, verPath, Seq((s: Any) -> texts(s), (n: Any) -> changed), s"$s served, $n changed")
+      assert(!lshGot.contains(("d1", "d2")) && !verifiedGot.exists(p => (p._1, p._2) == (("d1", "d2"))),
+        s"a pair touching the changed probe $n was served: $lshGot / $verifiedGot")
+      assert(lshGot.exists(p => p._1 == s || p._2 == s),
+        s"fixture: $s should keep a served pair that avoids $n: $lshGot")
+    }
+  }
+
+  test("a change to the corpus alone, under live LSH-served and verified " +
+    "sessions, is served at the next request: a rewrite behind the marker " +
+    "through the stale-listing retry, a written change through the marker") {
+    val (memPath, bandPath, pairPath, verPath) = maintained("serving-corpus")
+    val (lsh, verified) = maintainedSessions(memPath, bandPath, pairPath, verPath)
+    val texts = docsDf.select("doc_id", "text").as[(String, String)].collect().toMap
+    def check(req: Seq[(Any, String)], label: String) =
+      checkMaintained(lsh, verified, memPath, bandPath, pairPath, verPath, req, label)
+    val req: Seq[(Any, String)] = Seq(("d1": Any) -> texts("d1"))
+    val before = check(req, "before")
+    assert(before._1.contains(("d1", "d2")))
+
+    // the corpus files rewritten with NO marker bump: the pinned listing of
+    // the union's corpus branch is stale, and only the retry can serve this
+    val snapshot = spark.read.parquet(memPath).localCheckpoint(true)
+    val fs = new org.apache.hadoop.fs.Path(memPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(memPath), true)
+    snapshot.write.partitionBy("source").parquet(memPath)
+    assert(check(req, "after the unannounced rewrite") === before)
+
+    // d1's text changed through the writer (the corpus marker alone moves):
+    // the new text is now the ingested one and is served from the
+    // maintained tables, while the old text has become novel
+    val changed = "kappa lambda mu nu xi omicron"
+    Writers.swapWrite(docsDf.withColumn("text",
+      when(col("doc_id") === "d1", lit(changed)).otherwise(col("text"))), memPath, Seq("source"))
+    // the marker, not the retry, refreshes the union: the request is its one
+    // job, with no failed read of the retired listing before it
+    assert((jobsOf(lsh.serveRows(Seq(("d1": Any) -> changed))),
+      jobsOf(verified.serveRows(Seq(("d1": Any) -> changed)))) === ((1, 1)),
+      "the request after a corpus bump (lsh, verified)")
+    val served = check(Seq(("d1": Any) -> changed), "the new text")
+    assert(served === before, "the new ingested text must be served from the maintained tables")
+    val novel = check(req, "the old text")
+    assert(novel._1.contains(("d1", "d2")) && novel._2.exists(p => (p._1, p._2) == (("d1", "d2"))),
+      s"the old text, now novel, should re-derive its pairs: $novel")
+  }
+
+  test("IvfServeSession folds the broadcast one-row query relation into " +
+    "literals: the served plan has no Join and no LocalRelation, and the " +
+    "centroid ids still reach the reader") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
+    import graft.functions.VectorFunctions.cosineSim
+    val base = tmp("serving-ivf-fold")
+    val (apath, cpath) = (base + "/assigned", base + "/centroids")
+    val rnd = new scala.util.Random(13)
+    val corpus = (0 until 120).map { i =>
+      (i.toLong, Array.fill(8)(rnd.nextFloat()), i % 2)
+    }.toDF("vec_id", "embedding", "label")
+    val idx = IvfIndex.build(corpus, "vec_id", "embedding", nCentroids = 4)
+    Writers.swapWrite(idx.centroids, cpath)
+    Sinks.indexAppendPartitioned(apath, idx.centroids, "vec_id", "embedding",
+      Seq("label"))(corpus, 0L)
+    val (assigned, centroids) = (Readers.table(spark, apath), Readers.table(spark, cpath))
+    // the build keeps the query vector in its output, so the slot's value
+    // is checked directly as well as through the score
+    def downstream(pruned: org.apache.spark.sql.DataFrame,
+                   qRel: org.apache.spark.sql.DataFrame) =
+      pruned.crossJoin(broadcast(qRel))
+        .withColumn("score", round(cosineSim(col("embedding"), col("qvec")), 4))
+        .select(col("vec_id"), col("score"), col("qvec"))
+        .orderBy(desc("score"), col("vec_id"))
+        .limit(5)
+    val session = new Serving.IvfServeSession(assigned, centroids, downstream)
+    def answer(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Float](2))).toSeq
+
+    (0 until 3).foreach { t =>
+      val q = Array.fill(8)(rnd.nextFloat())
+      val qDf = Seq(Tuple1(q)).toDF("qvec")
+      val fresh = answer(downstream(
+        IvfIndex.probePoint(assigned, centroids, qDf, nProbe = 2), qDf).collect())
+      val df = session.serveDf(q, 2)
+      assert(answer(df.collect()) === fresh, s"serveDf diverged at trial $t")
+      assert(answer(session.serveRows(q, 2)) === fresh, s"serveRows diverged at trial $t")
+      assert(fresh.nonEmpty && fresh.forall(_._3 == q.toSeq))
+      val optimized = df.queryExecution.optimizedPlan
+      assert(optimized.collect { case j: Join => j }.isEmpty &&
+          optimized.collect { case l: LocalRelation => l }.isEmpty,
+        s"the query vector was not folded into a literal:\n$optimized")
+      val physical = df.queryExecution.executedPlan.toString
+      assert(!physical.contains("Broadcast") && !physical.contains("Cartesian"),
+        s"the served plan still joins the query relation:\n$physical")
+      assert(physical.linesIterator.exists(l =>
+          l.contains("PushedFilters:") && l.contains("In(centroid_id")),
+        s"rebound centroid ids not pushed:\n$physical")
+    }
   }
 
   test("round6 matches Spark's round(_, 6) on doubles (HALF_UP on the " +
